@@ -56,8 +56,10 @@ Notes:
 STAGED_HEADER = """
 ## STAGED-PLANS — build chains behind the checkpoint boundary
 
-The relations `graft.Staged` materializes once per (session, corpus).
-These are the plans that EXECUTE at materialization time — invisible to
+The relations `graft.Staged` materializes once per (session, corpus),
+one row per registry entry. These are the plans that EXECUTE at
+materialization time — each build over its staged inputs (a Lloyd
+chain: its last round over the staged previous round) — invisible to
 the per-query rows above, so they get their own audited rows (same
 counting rules; PlanSpec drift-gates both tables).
 

@@ -206,14 +206,7 @@ object AmplifyCorpus {
     // optional fuzz salt (scripts/fuzz_parity.sh): a per-seed corpus
     // mutation that keeps every structural invariant of the tier
     val salt = args.lift(3).getOrElse("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus("8"))
 
     val (nd, ne) = amplify(spark, sfDir, outDir, k, salt)
     println(s"""{"metric":"amplify","k":$k,"base":"$sfDir","out":"$outDir",""" +

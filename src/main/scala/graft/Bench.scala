@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Failed queries are
   * reported explicitly in "failed" (and excluded from the total)
@@ -10,21 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The default whole-stage-codegen class cache holds 100 entries;
-      // a 300-query suite compiles thousands of distinct codegen units,
-      // so every bench pass was re-paying Janino compilation for every
-      // stage (measured: catalog_stats_sketch 15.3s -> 10.4s from this
-      // alone). Size the cache to the workload, not to local[32] — any
-      // deployment running this whole registry wants it.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus("4"))
 
     val failed = scala.collection.mutable.ListBuffer[String]()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run — local iteration aid
@@ -58,22 +42,14 @@ object Bench {
     // measuring the cache instead of the machine. With staging paid up
     // front, min-of-2 compares two steady-state passes and the total
     // still carries the true cold-start cost (total + staged_sec).
-    val stagedSec = {
+    // Relations are forced in registry (dependency) order, so each
+    // one's seconds are its own cost, its inputs already materialized.
+    val stagedRel = Staged.names.map { n =>
       val t0 = System.nanoTime()
-      val d = Staged.dedup(spark, sfDir)
-      val t = Staged.tokens(spark, sfDir)
-      val a = Staged.ann(spark, sfDir)
-      val i = Staged.images(spark, sfDir)
-      val h = Staged.catalog(spark, sfDir)
-      val b = Staged.baskets(spark, sfDir)
-      (Seq(d.sh, d.sigs, d.verified, d.simPairs,
-        t.tokens, t.freq, t.skipgrams, t.gopher, t.winnow,
-        a.sub, a.l2truth, a.cosTruth, a.assign, a.opqPerm, a.opqSub,
-        i.imgs, i.fps, h, b)
-        ++ a.chain ++ a.opqChain)
-        .foreach(_.count())
-      (System.nanoTime() - t0) / 1e9
+      Staged.rounds(spark, sfDir, n).foreach(_.count())
+      n -> (System.nanoTime() - t0) / 1e9
     }
+    val stagedSec = stagedRel.map(_._2).sum
     // Two INTERLEAVED end-to-end passes, per-query min across passes
     // (round-4 lesson: 2× back-to-back per query leaves both samples
     // inside the same multi-minute host-throttling window — ordered_
@@ -125,12 +101,13 @@ object Bench {
     // round-3 parsed:null). So the stdout line carries the top
     // TailTopK slowest queries (the ones per-round perf comparison
     // actually reads) plus n_queries/other_sec so the total still
-    // reconciles; the COMPLETE per-query map goes to BENCH_LOCAL.json
-    // in the repo, committed every round for machine diffing.
+    // reconciles; the COMPLETE per-query map and the per-relation
+    // staging seconds ("staged") go to BENCH_LOCAL.json only, in the
+    // repo, committed every round for machine diffing.
     val TailTopK = 70
     val byCost = timings.toSeq.sortBy(-_._2)
-    val fullQs = timings.map { case (k, v) => s"${q(k)}:${cs(v)}" }
-      .mkString("{", ",", "}")
+    def obj(kv: Iterable[(String, Double)]): String =
+      kv.map { case (k, v) => s"${q(k)}:${cs(v)}" }.mkString("{", ",", "}")
     // anchor the artifact at the repo root: SPARK_GRAFT_REPO_ROOT when
     // set (a bench launched from inside some OTHER sbt project must not
     // silently write to that project's root), else the nearest ancestor
@@ -146,9 +123,8 @@ object Bench {
     }
     System.err.println(s"[bench] writing full per-query map to $benchLocal")
     java.nio.file.Files.writeString(benchLocal,
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"noise_ratio":${cs(noiseRatio)},"queries":$fullQs,"failed":$fs,"sf":${q(sfDir)}}""")
-    val topQs = byCost.take(TailTopK)
-      .map { case (k, v) => s"${q(k)}:${cs(v)}" }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"staged":${obj(stagedRel)},"noise_ratio":${cs(noiseRatio)},"queries":${obj(timings)},"failed":$fs,"sf":${q(sfDir)}}""")
+    val topQs = obj(byCost.take(TailTopK))
     val otherSec = byCost.drop(TailTopK).map(_._2).sum
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"noise_ratio":${cs(noiseRatio)},"queries":$topQs,"n_queries":${timings.size},"other_sec":${cs(otherSec)},"failed":$fs,"sf":${q(sfDir)}}""")
     spark.stop()

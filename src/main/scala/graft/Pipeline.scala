@@ -29,14 +29,13 @@ object Pipeline {
   /** Runnable: one JSON summary line of a full sync pass. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus("4"))
+    println(summary(spark, sfDir))
+    spark.stop()
+  }
+
+  /** One full sync pass over `sfDir`, summarized as one JSON line. */
+  def summary(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.functions._
     val r = run(spark, sfDir)
     // one job over the applied plan, not three
@@ -45,7 +44,6 @@ object Pipeline {
       count(when(col("apply_op") === "INSERT", 1)).as("inserts"),
       count(when(col("apply_op") === "UPDATE", 1)).as("updates")).collect().head
     val alerts = r.alerts.where(col("alert") =!= "HEALTHY").count()
-    println(s"""{"pipeline":"sync_pass","applied_rows":${s.getLong(0)},"inserts":${s.getLong(1)},"updates":${s.getLong(2)},"active_alerts":$alerts}""")
-    spark.stop()
+    s"""{"pipeline":"sync_pass","applied_rows":${s.getLong(0)},"inserts":${s.getLong(1)},"updates":${s.getLong(2)},"active_alerts":$alerts}"""
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Prints formatted physical plans for the named queries (all by
   * default) so shuffle counts / broadcast / pushdown can be audited.
@@ -11,35 +11,23 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      println(s"\n================= $n =================")
-      try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      } catch {
+    // local[4], not SPARK_GRAFT_CPUS: PlanSpec diffs these plans against
+    // its local[4] test session, and Spread decides from the core count
+    val spark = GraftSession.local("4")
+    def dump(name: String, df: => DataFrame): Unit = {
+      println(s"\n================= $name =================")
+      try println(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+      catch {
         case e: Throwable => println(s"(failed to plan: ${e.getMessage})")
       }
     }
-    // full dumps also audit the Staged BUILD chains — the plans that
+    names.foreach(n => dump(n, SparkEntry.queries(n)(spark, sfDir)))
+    // full dumps also audit the Staged BUILD plans — the plans that
     // execute at materialization, hidden from every consumer query's
     // own plan by the checkpoint boundary
     if (args.length <= 1)
-      Staged.buildPlans(spark, sfDir).foreach { case (n, _, build) =>
-        println(s"\n================= $n =================")
-        try println(build().queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        catch {
-          case e: Throwable => println(s"(failed to plan: ${e.getMessage})")
-        }
-      }
+      Staged.auditPlans(spark, sfDir).foreach { case (n, _, df) => dump(n, df) }
     spark.stop()
   }
 }

@@ -3,7 +3,6 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiling harness: runs the named queries once (after one
   * warmup) and prints a per-stage wall/task breakdown from a
@@ -19,16 +18,7 @@ object ProfileQ {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: codegen class cache sized to the suite
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus("32"))
 
     val stages = TrieMap.empty[Int, StageRec]
     val taskTime = TrieMap.empty[Int, Long]

@@ -143,15 +143,9 @@ object ScaleProbe {
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     require(k >= 2, s"k must be >= 2 (got $k): a 1x/1x ratio is meaningless")
     val workDir = args.lift(2).getOrElse("/tmp/graft_scaleprobe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val partitions = args.lift(3).getOrElse(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus("32")
+    val spark = GraftSession.local(cpus,
+      "spark.sql.shuffle.partitions" -> args.lift(3).getOrElse(cpus))
 
     val docs0 = Tables.documents(spark, sfDir)
     val ev0 = Tables.events(spark, sfDir)

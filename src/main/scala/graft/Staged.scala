@@ -4,39 +4,34 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
+  Spread, TextAnalysis}
 
 /** Session-scoped staged relations — the production shape of "the
-  * signature table is a staged table" (Dedup scaladoc), applied to the
-  * two families whose queries share expensive corpus passes:
+  * signature table is a staged table" (Dedup scaladoc): the expensive
+  * corpus intermediates that several consumer queries share are built
+  * ONCE per (session, corpus dir) and every consumer reads the staged
+  * copy. At 100 TB this is the difference between one corpus shuffle
+  * feeding ten reports and ten corpus shuffles.
   *
-  *  - [[dedup]]: the corpus scan, the shingle explode, the 64-wide
-  *    minhash aggregate, the LSH candidate+verify chain, and the
-  *    SimHash fingerprint pass run ONCE per (session, corpus dir);
-  *    every composed consumer (sweep, apply, clusters, overlap,
-  *    agreement, estimator gate, band sweep, incremental) reads the
-  *    same staged copies.
-  *  - [[tokens]]: the (doc_id, token) corpus tokenization, the
-  *    vocabulary-sized frequency table, the skip-gram relation, the
-  *    gopher-quality verdicts, and the winnow fingerprints run ONCE
-  *    and feed the whole token family (top-k, BPE merge/apply, vocab
-  *    coverage, PMI, co-occurrence, rarity, drift, LM scoring, TF-IDF,
-  *    classifier+calibration, rollup, budget, winnow stats,
-  *    contamination).
-  *  - [[ann]]: the subvector explode, the PQ Lloyd training chain,
-  *    the exact L2/cosine ground truths and the IVF list assignment
-  *    run ONCE and feed the index-eval family (pq_train, the four
-  *    pq recall gates/curves, ivf_recall + its probe curve, ann_topk,
-  *    ann_ivf, ivf_assign, semantic_dedup).
+  * The registry contract: [[registry]] declares every staged relation
+  * exactly once, as (name, nestedLoopOk, build). A build returns the
+  * relation's plan; every input it reads through the registry
+  * (`in("sh")`) is that relation's staged copy, so a dependency IS a
+  * registry lookup and there is no separate dependency list to drift.
+  * A Lloyd training chain is one entry whose build runs `rounds` times,
+  * each round over the staged previous round (`in.prev`). Everything
+  * else derives from the list: the lazy per-relation cache, eviction at
+  * application end, [[invalidate]], the audit plans ([[auditPlans]] →
+  * PlanAudit, PlanSpec, PLANS.md's STAGED-PLANS table) and Bench's
+  * per-relation materialization. The family views below ([[dedup]],
+  * [[tokens]], [[ann]], [[images]], [[catalog]], [[baskets]]) are named
+  * lookups into the same registry.
   *
-  * At 100 TB this is the difference between one corpus shuffle feeding
-  * ten reports and ten corpus shuffles; locally it removes the rebuilt
-  * chains from ~25 of the bench's queries.
-  *
-  * Staging is lazy (`localCheckpoint(eager = false)`): nothing runs at
-  * lookup; the first ACTION on any consumer materializes the staged
-  * relation into the block manager (memory+disk), later consumers read
-  * the materialized copy. Results are identical to the standalone
+  * Staging is lazy (`localCheckpoint(eager = false)`): a relation is
+  * built on its first lookup and materialized into the block manager
+  * (memory+disk) by the first ACTION on any consumer; later consumers
+  * read the materialized copy. Results are identical to the standalone
   * operator forms — the staged relations are the very intermediates
   * those forms build internally, so the DuckDB oracles are unchanged.
   *
@@ -46,78 +41,95 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
   * for the rest of the session. For long-lived multi-tenant cluster
   * deployments set `spark.graft.staged.reliable=true` (and a
   * `SparkContext.setCheckpointDir` on HDFS/object store): every staged
-  * relation then uses reliable `checkpoint()` at the same call sites —
-  * the plan shape and the consumers are unchanged, executor loss costs
-  * a re-read instead of the session.
+  * relation then uses reliable `checkpoint()` — the plan shape and the
+  * consumers are unchanged, executor loss costs a re-read instead of
+  * the session.
   *
-  * Keyed by (session, dir): a new session or a different corpus path
-  * stages fresh; re-writing parquet UNDER an already-staged dir within
-  * one session serves stale data (same contract as any staged table —
-  * call [[invalidate]] after in-place rewrites; AmplifyCorpus does so
-  * in its write path).
+  * Keyed by (session, dir, name): a new session or a different corpus
+  * path stages fresh; re-writing parquet UNDER an already-staged dir
+  * within one session serves stale data (same contract as any staged
+  * table — call [[invalidate]] after in-place rewrites; AmplifyCorpus
+  * does so in its write path).
   */
 object Staged {
 
-  /** The staged dedup relations of one (session, corpus) pair.
-    * All four are lazily-checkpointed; `dups` is a cheap filter view
-    * over `verified` (no extra copy). */
-  final case class DedupRels(sh: DataFrame, sigs: DataFrame,
-                             verified: DataFrame, simPairs: DataFrame) {
-    /** Confirmed near-dup pairs ([[Dedup.minhashDedup]] shape). */
-    def dups: DataFrame = Dedup.minhashDedupFrom(verified)
+  /** The registry as seen from one (session, dir) — a build's inputs
+    * and the family views' lookups: `apply` is a relation's staged copy
+    * (a chain's last round), `chain` all its rounds, and `prev` the
+    * previous staged round of the chain being built (None in round 1,
+    * for plain relations and for the views). */
+  final class Inputs private[Staged] (val spark: SparkSession,
+                                      val dir: String,
+                                      val prev: Option[DataFrame]) {
+    def apply(name: String): DataFrame = rounds(spark, dir, name).last
+    def chain(name: String): Seq[DataFrame] = rounds(spark, dir, name)
   }
 
-  /** The staged token-family relations of one (session, corpus) pair:
-    * the (doc_id, lang, source, token) explode, the (token, tf)
-    * frequency table, the (doc_id, w1, w2, d) skip-grams, the
-    * gopher-quality verdicts, and the (doc_id, source, fp) winnow
-    * fingerprints. */
-  final case class TokenRels(tokens: DataFrame, freq: DataFrame,
-                             skipgrams: DataFrame, gopher: DataFrame,
-                             winnow: DataFrame)
+  private final case class Rel(name: String, nestedLoopOk: Boolean,
+                               build: Inputs => DataFrame, rounds: Int = 1)
 
-  /** The staged ANN/index-eval relations of one (session, corpus):
-    * the (vec_id, m, sv6) subvector explode, the Lloyd training chain
-    * over it (element i = codebook after i+1 rounds; each round is
-    * checkpointed by the chain builder itself), the exact-L2 and
-    * exact-cosine ground truths, the IVF list assignment, and the OPQ
-    * lane (the 1-row variance-snake permutation array, the permuted
-    * subvector explode and ITS Lloyd chain). One trainer + one truth
-    * pass feed the whole recall-gate family; the OPQ trainer is a
-    * second chain over the same corpus, staged once for the same
-    * reason. The OPQ lane is LAZY: constructing the permutation array
-    * runs the Dim-row means collect (one small job), which non-OPQ
-    * consumers — most of the gate family — must not pay, so the
-    * builder stays zero-job until the first opq* access. */
-  final class AnnRels(val sub: DataFrame, val chain: Seq[DataFrame],
-                      val l2truth: DataFrame, val cosTruth: DataFrame,
-                      val assign: DataFrame,
-                      opqPermT: () => DataFrame,
-                      opqSubT: () => DataFrame,
-                      opqChainT: () => Seq[DataFrame]) {
-    lazy val opqPerm: DataFrame = opqPermT()
-    lazy val opqSub: DataFrame = opqSubT()
-    lazy val opqChain: Seq[DataFrame] = opqChainT()
-  }
+  // the (locally single-split) corpus scan, spread before the explode /
+  // md5 / tokenizer passes that would otherwise run on one core (Spread
+  // is a no-op when the scan already has enough splits)
+  private def docs(in: Inputs): DataFrame =
+    Spread.byKey(Tables.documents(in.spark, in.dir), "doc_id")
 
-  /** The staged image-lane relations of one (session, corpus): the
-    * synthesized PPM payload table (one payload construction feeds the
-    * codec, the native decoder AND the dedup) and the aHash
-    * fingerprints (doc_id, bands) — staged because the banded-hamming
-    * dedup references them three times, and because the nested-HOF
-    * hash expression must evaluate once per row, not once per plan
-    * reference. */
-  final case class ImageRels(imgs: DataFrame, fps: DataFrame)
+  private def emb(in: Inputs): DataFrame = Tables.embeddings(in.spark, in.dir)
 
-  private val cache = TrieMap.empty[(SparkSession, String), DedupRels]
-  private val tokenCache = TrieMap.empty[(SparkSession, String), TokenRels]
-  private val annCache = TrieMap.empty[(SparkSession, String), AnnRels]
-  private val imageCache = TrieMap.empty[(SparkSession, String), ImageRels]
-  private val catalogCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val basketCache = TrieMap.empty[(SparkSession, String), DataFrame]
+  /** Every staged relation, in dependency order. `nestedLoopOk` marks
+    * builds whose DECLARED shape includes a tiny-broadcast nested-loop
+    * (the 8-query / 16-centroid ANN fan-outs and the OPQ lane's 1-row
+    * permutation cross — same allowance as ann_topk/ivf_assign); all
+    * others must be nested-loop-free (PlanSpec). */
+  private val registry: Seq[Rel] = Seq(
+    // dedup: shingles, 64-wide minhash, LSH candidates+verify, SimHash
+    Rel("sh", false, in => Dedup.shingleHashes(docs(in))),
+    Rel("sigs", false, in => Dedup.signaturesFromHashes(in("sh"))),
+    Rel("verified", false, in => Dedup.ngramJaccardFrom(in("sh"), in("sigs"))),
+    Rel("simPairs", false, in => Dedup.simhashDedup(docs(in))),
+    // tokens: explode, frequency table, skip-grams, gopher, winnow
+    Rel("tokens", false, in => TextAnalysis.tokensRel(docs(in))),
+    Rel("freq", false, in => TextAnalysis.tokenFreqFrom(in("tokens"))),
+    Rel("skipgrams", false, in => TextAnalysis.skipgramsRel(docs(in))),
+    Rel("gopher", false,
+      in => TextAnalysis.gopherQualityFrom(docs(in), in("tokens"))),
+    Rel("winnow", false, in => TextAnalysis.winnowSelectedSrc(docs(in))),
+    // ann: subvectors + PQ Lloyd chain, exact truths, IVF assignment,
+    // and the OPQ lane (permutation, permuted subvectors, its chain)
+    Rel("annSub", false, in => Similarity.annSubvectors(emb(in))),
+    Rel("annChain", false,
+      in => Similarity.annLloydRound(in("annSub"), in.prev),
+      Similarity.PqTrainIters),
+    Rel("l2truth", true, in => Similarity.annL2Truth(emb(in))),
+    Rel("cosTruth", true, in => Similarity.bruteTopK(emb(in))),
+    Rel("assign", true, in => Similarity.ivfAssign(emb(in))),
+    Rel("opqPerm", true, in => Similarity.opqPermArray(emb(in))),
+    Rel("opqSub", true,
+      in => Similarity.opqSubvectorsFrom(emb(in), in("opqPerm"))),
+    Rel("opqChain", false,
+      in => Similarity.annLloydRound(in("opqSub"), in.prev),
+      Similarity.PqTrainIters),
+    // images: the PPM payload table and its aHash fingerprints
+    Rel("images", false,
+      in => Multimodal.imageTable(Tables.documents(in.spark, in.dir))),
+    Rel("imageFps", false, in => Multimodal.imageFingerprints(in("images"))),
+    // the ANALYZE histogram of the audited catalog grid
+    Rel("catalogHist", false,
+      in => Snapshot.catalogHistogram(catalogGrid(in.spark, in.dir))),
+    // per-order brand baskets of the brand-graph family
+    Rel("baskets", false, in => Analytics.basketsRel(
+      Tables.part(in.spark, in.dir), Tables.lineitem(in.spark, in.dir))))
 
-  /** Sessions whose application-end listener is installed. The caches
-    * key by session object, which would otherwise strongly retain the
+  private val byName: Map[String, Rel] = registry.map(r => r.name -> r).toMap
+
+  /** Every registered relation's name, in dependency order. */
+  val names: Seq[String] = registry.map(_.name)
+
+  private val cache =
+    TrieMap.empty[(SparkSession, String, String), Seq[DataFrame]]
+
+  /** Sessions whose application-end listener is installed. The cache
+    * keys by session object, which would otherwise strongly retain the
     * session and its checkpointed blocks for process lifetime in a
     * long-lived multi-session JVM — evict a session's entries when its
     * context ends. */
@@ -143,182 +155,129 @@ object Staged {
           override def onApplicationEnd(
               e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
               : Unit = {
-            cache.filterInPlace { case ((s, _), _) => s ne spark }
-            tokenCache.filterInPlace { case ((s, _), _) => s ne spark }
-            annCache.filterInPlace { case ((s, _), _) => s ne spark }
-            imageCache.filterInPlace { case ((s, _), _) => s ne spark }
-            catalogCache.filterInPlace { case ((s, _), _) => s ne spark }
-            basketCache.filterInPlace { case ((s, _), _) => s ne spark }
+            cache.filterInPlace { case ((s, _, _), _) => s ne spark }
             hooked.remove(spark)
           }
         })
     })
 
-  /** The staged dedup relations for the documents table under `sfDir`,
-    * built on first request per (session, dir). */
-  def dedup(spark: SparkSession, sfDir: String): DedupRels =
-    cache.getOrElseUpdate((spark, sfDir), {
+  /** The staged copies of relation `name` under (session, dir), one per
+    * round (a plain relation has one), built on first request. */
+  def rounds(spark: SparkSession, sfDir: String, name: String)
+  : Seq[DataFrame] =
+    cache.getOrElseUpdate((spark, sfDir, name), {
       hookEviction(spark)
-      // spread the (locally single-split) corpus scan before the
-      // shingle/fingerprint builds — the staged materialization
-      // otherwise runs its explode+md5 passes on one core (Spread is a
-      // no-op when the scan already has enough splits)
-      val docs = graft.operators.Spread.byKey(
-        Tables.documents(spark, sfDir), "doc_id")
-      val sh = stage(Dedup.shingleHashes(docs))
-      val sigs = stage(Dedup.signaturesFromHashes(sh))
-      val verified = stage(Dedup.ngramJaccardFrom(sh, sigs))
-      val simPairs = stage(Dedup.simhashDedup(docs))
-      DedupRels(sh, sigs, verified, simPairs)
+      val r = byName(name)
+      (1 to r.rounds).scanLeft(Option.empty[DataFrame]) { (prev, _) =>
+        Some(stage(r.build(new Inputs(spark, sfDir, prev))))
+      }.flatten
     })
 
-  /** The staged token-family relations for the documents table under
-    * `sfDir`, built on first request per (session, dir). */
-  def tokens(spark: SparkSession, sfDir: String): TokenRels =
-    tokenCache.getOrElseUpdate((spark, sfDir), {
-      hookEviction(spark)
-      // spread before the token/skip-gram/gopher builds (see dedup)
-      val docs = graft.operators.Spread.byKey(
-        Tables.documents(spark, sfDir), "doc_id")
-      val toks = stage(TextAnalysis.tokensRel(docs))
-      val freq = stage(TextAnalysis.tokenFreqFrom(toks))
-      val skip = stage(TextAnalysis.skipgramsRel(docs))
-      val gopher = stage(TextAnalysis.gopherQualityFrom(docs, toks))
-      val winnow = stage(TextAnalysis.winnowSelectedSrc(docs))
-      TokenRels(toks, freq, skip, gopher, winnow)
-    })
-
-  /** The staged ANN relations for the embeddings table under `sfDir`,
-    * built on first request per (session, dir). */
-  def ann(spark: SparkSession, sfDir: String): AnnRels =
-    annCache.getOrElseUpdate((spark, sfDir), {
-      hookEviction(spark)
-      val emb = Tables.embeddings(spark, sfDir)
-      val sub = stage(Similarity.annSubvectors(emb))
-      val chain = Similarity.annLloydChain(sub) // rounds self-checkpoint
-      val l2truth = stage(Similarity.annL2Truth(emb))
-      val cosTruth = stage(Similarity.bruteTopK(emb))
-      val assign = stage(Similarity.ivfAssign(emb))
-      // the OPQ lane is deferred: opqPermArray's construction runs the
-      // Dim-row means collect (one small job), paid only by the first
-      // opq* consumer; the lazy vals memoize so it still runs once
-      lazy val opqPerm = stage(Similarity.opqPermArray(emb))
-      lazy val opqSub = stage(Similarity.opqSubvectorsFrom(emb, opqPerm))
-      lazy val opqChain = Similarity.annLloydChain(opqSub)
-      new AnnRels(sub, chain, l2truth, cosTruth, assign,
-        () => opqPerm, () => opqSub, () => opqChain)
-    })
-
-  /** The staged image-lane relations for the documents table under
-    * `sfDir`, built on first request per (session, dir). */
-  def images(spark: SparkSession, sfDir: String): ImageRels =
-    imageCache.getOrElseUpdate((spark, sfDir), {
-      hookEviction(spark)
-      val docs = Tables.documents(spark, sfDir)
-      val imgs = stage(Multimodal.imageTable(docs))
-      val fps = stage(Multimodal.imageFingerprints(imgs))
-      ImageRels(imgs, fps)
-    })
-
-  /** The audited (table, column) grid as (name, projected table) pairs
-    * — shared by the staged histogram and the sketch side of the gate. */
-  def catalogGrid(spark: SparkSession, sfDir: String)
-  : Seq[(String, org.apache.spark.sql.DataFrame)] =
-    graft.operators.Snapshot.CatalogColumns.map { case (t, cols) =>
-      t -> Tables.table(spark, sfDir, t)
-        .select(cols.map(org.apache.spark.sql.functions.col): _*)
-    }
-
-  /** The staged ANALYZE histogram (table, column, value, cnt) for the
-    * audited catalog grid under `sfDir` — the per-column value
-    * histogram an ANALYZE pass persists, built on first request per
-    * (session, dir). Feeds catalog_stats' exact rollup and the exact
-    * side of the sketch gate; the sketch side always recomputes from
-    * raw rows. */
-  def catalog(spark: SparkSession, sfDir: String): DataFrame =
-    catalogCache.getOrElseUpdate((spark, sfDir), {
-      hookEviction(spark)
-      stage(graft.operators.Snapshot.catalogHistogram(
-        catalogGrid(spark, sfDir)))
-    })
-
-  /** The staged per-order brand-basket relation (okey, sorted brand
-    * array) for the star schema under `sfDir` — the one corpus-sized
-    * pass of the brand-graph family (market_basket, brand_pagerank,
-    * brand_triangles), built on first request per (session, dir). */
-  def baskets(spark: SparkSession, sfDir: String): DataFrame =
-    basketCache.getOrElseUpdate((spark, sfDir), {
-      hookEviction(spark)
-      stage(graft.operators.Analytics.basketsRel(
-        Tables.part(spark, sfDir), Tables.lineitem(spark, sfDir)))
-    })
+  /** ("staged:" + name, nestedLoopOk, plan) per registered relation:
+    * the plan its build runs at materialization — the build applied to
+    * its staged inputs (a chain: its last round over the staged previous
+    * round). The checkpoint boundary hides these plans from every
+    * consumer query's own plan, so they are audited on their own. */
+  def auditPlans(spark: SparkSession, sfDir: String)
+  : Seq[(String, Boolean, DataFrame)] = registry.map { r =>
+    val prev =
+      if (r.rounds > 1) Some(rounds(spark, sfDir, r.name).init.last) else None
+    (s"staged:${r.name}", r.nestedLoopOk, r.build(new Inputs(spark, sfDir, prev)))
+  }
 
   /** Drop all staged entries (block-manager copies are reclaimed by the
     * context cleaner once unreferenced). For in-place corpus rewrites
     * within a session — tests and the amplify lane. */
-  def invalidate(): Unit = {
-    cache.clear(); tokenCache.clear(); annCache.clear(); imageCache.clear()
-    catalogCache.clear(); basketCache.clear()
+  def invalidate(): Unit = cache.clear()
+
+  /** The dedup family: the shingle hashes, minhash signatures, verified
+    * LSH pairs and SimHash pairs. `dups` is a cheap filter view over
+    * `verified` (no extra copy). */
+  final class DedupRels private[Staged] (in: Inputs) {
+    def sh: DataFrame = in("sh")
+    def sigs: DataFrame = in("sigs")
+    def verified: DataFrame = in("verified")
+    def simPairs: DataFrame = in("simPairs")
+    /** Confirmed near-dup pairs ([[Dedup.minhashDedup]] shape). */
+    def dups: DataFrame = Dedup.minhashDedupFrom(verified)
   }
 
-  /** The UNSTAGED build expressions of every relation this object
-    * materializes — the plans that actually EXECUTE at materialization
-    * time, which the checkpoint boundary hides from every consumer
-    * query's own plan. One registry feeds both the audit dump
-    * (PlanAudit's `staged:*` blocks → PLANS.md's STAGED-PLANS table)
-    * and the CI shape gate (PlanSpec), so a build chain cannot go
-    * unaudited. The boolean marks builds whose DECLARED shape includes
-    * a tiny-broadcast nested-loop (the 8-query / 16-centroid ANN
-    * fan-outs — same allowance as ann_topk/ivf_assign); all others
-    * must be nested-loop-free. NOTE: constructing `annChain` runs the
-    * chain builder's own per-round checkpoints (cheap at audit scale).
-    */
-  def buildPlans(spark: SparkSession, sfDir: String)
-  : Seq[(String, Boolean, () => DataFrame)] = {
-    // same scan spread as the dedup/tokens builders above — the audit
-    // must show the plans that actually execute at materialization
-    val docs = graft.operators.Spread.byKey(
-      Tables.documents(spark, sfDir), "doc_id")
-    lazy val sh = Dedup.shingleHashes(docs)
-    lazy val sigs = Dedup.signaturesFromHashes(sh)
-    lazy val toks = TextAnalysis.tokensRel(docs)
-    val emb = Tables.embeddings(spark, sfDir)
-    lazy val annSub = Similarity.annSubvectors(emb)
-    Seq(
-      ("staged:sh", false, () => sh),
-      ("staged:sigs", false, () => sigs),
-      ("staged:verified", false, () => Dedup.ngramJaccardFrom(sh, sigs)),
-      ("staged:simPairs", false, () => Dedup.simhashDedup(docs)),
-      ("staged:tokens", false, () => toks),
-      ("staged:freq", false, () => TextAnalysis.tokenFreqFrom(toks)),
-      ("staged:skipgrams", false, () => TextAnalysis.skipgramsRel(docs)),
-      ("staged:gopher", false,
-        () => TextAnalysis.gopherQualityFrom(docs, toks)),
-      ("staged:winnow", false, () => TextAnalysis.winnowSelectedSrc(docs)),
-      ("staged:annSub", false, () => annSub),
-      // the chain's own rounds checkpoint at construction (stub plans),
-      // so the audited row is ONE un-checkpointed round — the shape
-      // every round executes
-      ("staged:annRound", false,
-        () => Similarity.annLloydRoundPlan(annSub)),
-      ("staged:l2truth", true, () => Similarity.annL2Truth(emb)),
-      ("staged:cosTruth", true, () => Similarity.bruteTopK(emb)),
-      ("staged:assign", true, () => Similarity.ivfAssign(emb)),
-      // the OPQ lane: the 1-row permutation build (its triangular
-      // rank join is a broadcast nested-loop over the Dim-row grid)
-      // and the permuted subvector explode (1-row broadcast cross)
-      ("staged:opqPerm", true, () => Similarity.opqPermArray(emb)),
-      ("staged:opqSub", true,
-        () => Similarity.opqSubvectorsFrom(emb,
-          Similarity.opqPermArray(emb))),
-      ("staged:images", false, () => Multimodal.imageTable(docs)),
-      ("staged:imageFps", false,
-        () => Multimodal.imageFingerprints(Multimodal.imageTable(docs))),
-      ("staged:catalogHist", false,
-        () => graft.operators.Snapshot.catalogHistogram(
-          catalogGrid(spark, sfDir))),
-      ("staged:baskets", false,
-        () => graft.operators.Analytics.basketsRel(
-          Tables.part(spark, sfDir), Tables.lineitem(spark, sfDir))))
+  /** The token family: the (doc_id, lang, source, token) explode, the
+    * (token, tf) frequency table, the (doc_id, w1, w2, d) skip-grams,
+    * the gopher-quality verdicts, and the (doc_id, source, fp) winnow
+    * fingerprints. */
+  final class TokenRels private[Staged] (in: Inputs) {
+    def tokens: DataFrame = in("tokens")
+    def freq: DataFrame = in("freq")
+    def skipgrams: DataFrame = in("skipgrams")
+    def gopher: DataFrame = in("gopher")
+    def winnow: DataFrame = in("winnow")
   }
+
+  /** The ANN/index-eval family: the (vec_id, m, sv6) subvector explode,
+    * the Lloyd training chain over it (element i = codebook after i+1
+    * rounds), the exact-L2 and exact-cosine ground truths, the IVF list
+    * assignment, and the OPQ lane (the 1-row variance-snake permutation
+    * array, the permuted subvector explode and ITS Lloyd chain). Each
+    * relation builds on first access, so non-OPQ consumers never pay the
+    * permutation's Dim-row means collect. */
+  final class AnnRels private[Staged] (in: Inputs) {
+    def sub: DataFrame = in("annSub")
+    def chain: Seq[DataFrame] = in.chain("annChain")
+    def l2truth: DataFrame = in("l2truth")
+    def cosTruth: DataFrame = in("cosTruth")
+    def assign: DataFrame = in("assign")
+    def opqPerm: DataFrame = in("opqPerm")
+    def opqSub: DataFrame = in("opqSub")
+    def opqChain: Seq[DataFrame] = in.chain("opqChain")
+  }
+
+  /** The image lane: the synthesized PPM payload table (one payload
+    * construction feeds the codec, the native decoder AND the dedup)
+    * and the aHash fingerprints (doc_id, bands) — staged because the
+    * banded-hamming dedup references them three times, and because the
+    * nested-HOF hash expression must evaluate once per row, not once
+    * per plan reference. */
+  final class ImageRels private[Staged] (in: Inputs) {
+    def imgs: DataFrame = in("images")
+    def fps: DataFrame = in("imageFps")
+  }
+
+  private def inputs(spark: SparkSession, sfDir: String): Inputs =
+    new Inputs(spark, sfDir, None)
+
+  def dedup(spark: SparkSession, sfDir: String): DedupRels =
+    new DedupRels(inputs(spark, sfDir))
+
+  def tokens(spark: SparkSession, sfDir: String): TokenRels =
+    new TokenRels(inputs(spark, sfDir))
+
+  def ann(spark: SparkSession, sfDir: String): AnnRels =
+    new AnnRels(inputs(spark, sfDir))
+
+  def images(spark: SparkSession, sfDir: String): ImageRels =
+    new ImageRels(inputs(spark, sfDir))
+
+  /** The staged ANALYZE histogram (table, column, value, cnt) for the
+    * audited catalog grid — the per-column value histogram an ANALYZE
+    * pass persists. Feeds catalog_stats' exact rollup and the exact
+    * side of the sketch gate; the sketch side always recomputes from
+    * raw rows. */
+  def catalog(spark: SparkSession, sfDir: String): DataFrame =
+    inputs(spark, sfDir)("catalogHist")
+
+  /** The staged per-order brand-basket relation (okey, sorted brand
+    * array) — the one corpus-sized pass of the brand-graph family
+    * (market_basket, brand_pagerank, brand_triangles). */
+  def baskets(spark: SparkSession, sfDir: String): DataFrame =
+    inputs(spark, sfDir)("baskets")
+
+  /** The audited (table, column) grid as (name, projected table) pairs
+    * — shared by the staged histogram and the sketch side of the gate. */
+  def catalogGrid(spark: SparkSession, sfDir: String)
+  : Seq[(String, DataFrame)] =
+    Snapshot.CatalogColumns.map { case (t, cols) =>
+      t -> Tables.table(spark, sfDir, t)
+        .select(cols.map(org.apache.spark.sql.functions.col): _*)
+    }
 }

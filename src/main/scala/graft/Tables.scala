@@ -25,9 +25,21 @@ object Tables {
     * long. All engine reads go through this object, so the flag is
     * uniform by construction.
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    eventsFrom(rawEvents(spark, sfDir))
+
+  /** events.parquet as stored, with nanosAsLong set first (see
+    * [[events]]) — the schema a streaming read of events files needs. */
+  def rawEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(spark, sfDir, "events")
+    table(spark, sfDir, "events")
+  }
+
+  /** The one `ts` decode over a raw events DataFrame, batch or
+    * streaming: whichever of the three stored encodings `ts` has
+    * (ns-long, µs NTZ, µs LTZ), the result carries exact `ts_ns` and a
+    * µs TimestampType `ts`. */
+  def eventsFrom(raw: DataFrame): DataFrame = {
     val base = Seq(col("event_id"), col("user_id"), col("event_type"),
       col("value"), col("props"))
     raw.schema("ts").dataType match {

@@ -1751,6 +1751,13 @@ object Similarity {
   def annLloydChain(sub: DataFrame): Seq[DataFrame] =
     lloydChain(sub, pqSeedCb(sub))
 
+  /** One Lloyd round over a (staged) subvector relation: from the
+    * Forgy seed codebook when `prev` is None, else from the (staged)
+    * previous round — [[graft.Staged]]'s chain entries stage each round
+    * and feed it to the next; the last round is the trained codebook. */
+  def annLloydRound(sub: DataFrame, prev: Option[DataFrame]): DataFrame =
+    pqLloydStep(sub, prev.fold(pqSeedCb(sub))(cbArrays))
+
   /** Exact L2 top-[[TopK]] ground truth (q_id, cand_id). */
   def annL2Truth(embeddings: DataFrame): DataFrame =
     l2Truth(embeddings, TopK)
@@ -1774,15 +1781,6 @@ object Similarity {
   /** [[PqTrainIters]] Lloyd rounds from `seed` over any (vec_id, m,
     * sv6) subvector relation — shared by the raw-vector trainer and the
     * residual trainer. */
-  /** ONE un-checkpointed Lloyd round over the seed codebook — the plan
-    * each chain round executes at materialization. [[annLloydChain]]'s
-    * own elements checkpoint at construction (their visible plans are
-    * stubs), so the plan audit (Staged.buildPlans → PLANS.md
-    * STAGED-PLANS) reads the round SHAPE from this expression; every
-    * round's shape is identical, only the codebook relation differs. */
-  def annLloydRoundPlan(sub: DataFrame): DataFrame =
-    pqLloydStep(sub, pqSeedCb(sub))
-
   private def lloydChain(sub: DataFrame, seed: DataFrame): Seq[DataFrame] = {
     val rels = Seq.newBuilder[DataFrame]
     var cb = seed

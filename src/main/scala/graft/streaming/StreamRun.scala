@@ -13,16 +13,14 @@ import graft.Tables
 object StreamRun {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus("4"))
+    println(run(spark, sfDir))
+    spark.stop()
+  }
 
+  /** Drains the events of `sfDir` through the windowed-throughput
+    * stream and returns the job's one-line JSON summary. */
+  def run(spark: SparkSession, sfDir: String): String = {
     // The file source streams a *directory* of arriving files — stage the
     // events file into one (this is the real drop-dir deployment shape).
     val stageDir = java.nio.file.Files.createTempDirectory("graft-stream")
@@ -30,18 +28,12 @@ object StreamRun {
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       stageDir.resolve("events.parquet"))
 
-    // file streaming source needs an explicit schema: reuse the batch one
-    val schema = Tables.table(spark, sfDir, "events").schema
-    val raw = spark.readStream.schema(schema)
+    // file streaming source needs an explicit schema: reuse the batch one,
+    // and decode ts exactly as the batch loader does
+    val raw = spark.readStream.schema(Tables.rawEvents(spark, sfDir).schema)
       .parquet(stageDir.toString)
-    // mirror Tables.events' dual handling: ts arrives as ns-long under
-    // nanosAsLong, or as a native timestamp otherwise
-    val tsCol =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts")
-    val events = raw.select(
-      tsCol.as("ts"),
+    val events = Tables.eventsFrom(raw).select(
+      col("ts"),
       col("event_type"),
       round(col("value") * 100).cast("long").as("value_cents"))
 
@@ -66,7 +58,6 @@ object StreamRun {
       graft.config.SyncConfigs.parse(graft.config.SyncConfigs.DemoYaml).sys
     val nextWaitMs = CdcStream.backoffMs(events_total, sysCfg.batch.toLong,
       sysCfg.maxPollWait.toLong)
-    println(s"""{"stream":"windowed_throughput","windows":$rows,"events":$events_total,"next_poll_wait_ms":$nextWaitMs}""")
-    spark.stop()
+    s"""{"stream":"windowed_throughput","windows":$rows,"events":$events_total,"next_poll_wait_ms":$nextWaitMs}"""
   }
 }

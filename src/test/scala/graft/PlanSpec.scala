@@ -373,13 +373,11 @@ class PlanSpec extends AnyFunSuite {
     assert(sawCollect, "vacuous: no collect_list aggregate found at all")
   }
 
-  // the Staged BUILD chains — the plans that execute at materialization,
+  // the Staged BUILD plans — the plans that execute at materialization,
   // which the checkpoint boundary hides from every consumer query's
-  // plan. ONE registry (Staged.buildPlans) feeds this gate, the PlanAudit
-  // dump and PLANS.md's STAGED-PLANS table. Memoized: annChain's
-  // construction runs the chain's own checkpoints.
-  private lazy val stagedBuilds = Staged.buildPlans(spark, Sf)
-    .map { case (name, tinyBcastOk, build) => (name, tinyBcastOk, build()) }
+  // plan. ONE registry (Staged.auditPlans) feeds this gate, the PlanAudit
+  // dump and PLANS.md's STAGED-PLANS table.
+  private lazy val stagedBuilds = Staged.auditPlans(spark, Sf)
 
   test("staged build chains: no cartesians, no unpartitioned windows — " +
     "these are the plans that actually execute at materialization") {
@@ -428,7 +426,7 @@ class PlanSpec extends AnyFunSuite {
         s"stale=${committed.keySet -- SparkEntry.queries.keySet}")
     val stagedNames = stagedBuilds.map(_._1).toSet
     assert(stagedRows.keySet === stagedNames,
-      "PLANS.md STAGED-PLANS row set drifted from Staged.buildPlans: " +
+      "PLANS.md STAGED-PLANS row set drifted from Staged.auditPlans: " +
         s"missing=${stagedNames -- stagedRows.keySet} " +
         s"stale=${stagedRows.keySet -- stagedNames}")
     def summarize(f: String): (String, String, String) = {

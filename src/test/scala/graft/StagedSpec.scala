@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the [[Staged]] invalidation contract at the one call site that
@@ -9,10 +10,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * below would serve the k=2 corpus (localCheckpoint blocks outlive the
   * files they were built from) and the distinct-doc count would not
   * move — i.e. the amplify lane's parity run would silently verify
-  * stale data unless launched in a fresh JVM.
+  * stale data unless launched in a fresh JVM. The invalidation and
+  * eviction tests run over every registered relation.
   */
 class StagedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** Every registered relation's staged copies under `dir`. */
+  private def all(dir: String): Map[String, Seq[DataFrame]] =
+    Staged.names.map(n => n -> Staged.rounds(spark, dir, n)).toMap
+
+  /** The relations `after` still serves as the same instances as `before`. */
+  private def reused(before: Map[String, Seq[DataFrame]],
+                     after: Map[String, Seq[DataFrame]]): Seq[String] =
+    Staged.names.filter(n =>
+      before(n).zip(after(n)).exists { case (a, b) => a eq b })
 
   test("in-place re-amplify invalidates staged relations (no fresh JVM)") {
     val out = java.nio.file.Files.createTempDirectory("graft-amp").toString
@@ -22,9 +34,13 @@ class StagedSpec extends AnyFunSuite {
     val docs2 = Staged.tokens(spark, out).tokens
       .select("doc_id").distinct().count()
     val sh2 = Staged.dedup(spark, out).sh.count()
+    val k2 = all(out)
+    assert(reused(k2, all(out)) === Staged.names, "cache miss?")
 
     // in-place rewrite of the SAME dir at a larger k
     AmplifyCorpus.amplify(spark, base, out, 3)
+    assert(reused(k2, all(out)).isEmpty,
+      "relations served across the rewrite's invalidate()")
     val docs3 = Staged.tokens(spark, out).tokens
       .select("doc_id").distinct().count()
     val sh3 = Staged.dedup(spark, out).sh.count()
@@ -58,17 +74,17 @@ class StagedSpec extends AnyFunSuite {
 
   test("application end evicts a session's staged entries (no pinned " +
     "block-manager memory past the session's life)") {
-    // same (session, dir) lookup twice → the cached instance; after the
-    // application-end listener fires, the next lookup must REBUILD
+    // same (session, dir) lookup twice → the cached instances; after the
+    // application-end listener fires, every next lookup must REBUILD
     // (fresh instance), proving the cache no longer retains the session
-    val first = Staged.tokens(spark, TestSpark.Sf)
-    assert(Staged.tokens(spark, TestSpark.Sf) eq first, "cache miss?")
+    val first = all(TestSpark.Sf)
+    assert(reused(first, all(TestSpark.Sf)) === Staged.names, "cache miss?")
     org.apache.spark.GraftTestBridge.post(spark.sparkContext,
       org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
     org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
-    val rebuilt = Staged.tokens(spark, TestSpark.Sf)
-    assert(!(rebuilt eq first),
-      "staged entries survived application end — session retained")
+    val kept = reused(first, all(TestSpark.Sf))
+    assert(kept.isEmpty,
+      s"staged entries survived application end — session retained: $kept")
     Staged.invalidate() // leave a clean slate for peer suites
   }
 }
