@@ -10,7 +10,22 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(GraftSession.cpus("4"))
 
-    val failed = scala.collection.mutable.ListBuffer[String]()
+    // failed query or flow -> "Class: message"; a failed name is not
+    // run again
+    val causes = scala.collection.mutable.LinkedHashMap[String, String]()
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    def timed(name: String)(body: => Unit): Option[Double] =
+      try {
+        val t0 = System.nanoTime()
+        body
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${JsonOut.cause(e)}")
+          causes(name) = e.toString
+          None
+      }
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run — local iteration aid
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -30,7 +45,7 @@ object Bench {
     }
     warmDir.foreach { wd =>
       names.foreach { case (_, fn) =>
-        try fn(spark, wd).write.format("noop").mode("overwrite").save()
+        try noop(fn(spark, wd))
         catch { case _: Throwable => () }
       }
     }
@@ -55,25 +70,24 @@ object Bench {
     // inside the same multi-minute host-throttling window — ordered_
     // apply logged 16.08s against a real 0.62s; a window now corrupts
     // at most one pass of a query and the other pass's min wins).
+    // The whole sync pass is timed as a flow in each pass too: the
+    // pipeline_e2e query executes only its `applied` output.
+    val syncPass = scala.collection.mutable.ListBuffer[Double]()
     val passes = (1 to 2).map { _ =>
       val t = scala.collection.mutable.LinkedHashMap[String, Double]()
       names.foreach { case (name, fn) =>
-        if (!failed.contains(name)) {
-          try {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            t(name) = (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              failed += name
-          }
-        }
+        if (!causes.contains(name))
+          timed(name)(noop(fn(spark, sfDir))).foreach(t(name) = _)
       }
+      if (!causes.contains("sync_pass"))
+        syncPass ++= timed("sync_pass") {
+          val r = Pipeline.run(spark, sfDir)
+          Seq(r.applied, r.state, r.acks, r.alerts).foreach(noop)
+        }
       t
     }
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
-    names.map(_._1).filterNot(failed.contains).foreach { n =>
+    names.map(_._1).filterNot(causes.contains).foreach { n =>
       val samples = passes.flatMap(_.get(n))
       if (samples.nonEmpty) timings(n) = samples.min
     }
@@ -93,7 +107,8 @@ object Bench {
     // would corrupt the JSON line
     def ms(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val fs = failed.map(q).mkString("[", ",", "]")
+    val fs = names.map(_._1).filter(causes.contains)
+      .map(q).mkString("[", ",", "]")
     val total = timings.values.sum
     // The driver records only the LAST ~2000 chars of stdout and
     // parses the JSON line out of that tail — a full 130+-query map
@@ -102,8 +117,9 @@ object Bench {
     // TailTopK slowest queries (the ones per-round perf comparison
     // actually reads) plus n_queries/other_sec so the total still
     // reconciles; the COMPLETE per-query map and the per-relation
-    // staging seconds ("staged") go to BENCH_LOCAL.json only, in the
-    // repo, committed every round for machine diffing.
+    // staging seconds ("staged"), the flow timings ("flows") and the
+    // failed queries' causes ("failed_causes") go to BENCH_LOCAL.json
+    // only, in the repo, committed every round for machine diffing.
     val TailTopK = 70
     val byCost = timings.toSeq.sortBy(-_._2)
     def obj(kv: Iterable[(String, Double)]): String =
@@ -122,8 +138,10 @@ object Bench {
         .resolve("BENCH_LOCAL.json")
     }
     System.err.println(s"[bench] writing full per-query map to $benchLocal")
+    val causesJson =
+      causes.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(benchLocal,
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"staged":${obj(stagedRel)},"noise_ratio":${cs(noiseRatio)},"queries":${obj(timings)},"failed":$fs,"sf":${q(sfDir)}}""")
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"staged":${obj(stagedRel)},"noise_ratio":${cs(noiseRatio)},"queries":${obj(timings)},"flows":${obj(syncPass.minOption.map("sync_pass" -> _))},"failed":$fs,"failed_causes":$causesJson,"sf":${q(sfDir)}}""")
     val topQs = obj(byCost.take(TailTopK))
     val otherSec = byCost.drop(TailTopK).map(_._2).sum
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"noise_ratio":${cs(noiseRatio)},"queries":$topQs,"n_queries":${timings.size},"other_sec":${cs(otherSec)},"failed":$fs,"sf":${q(sfDir)}}""")

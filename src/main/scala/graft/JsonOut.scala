@@ -21,4 +21,10 @@ object JsonOut {
     * would format 34.123 as "34,123" and corrupt the line. */
   def cs(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
+  /** A failed query's cause for the Bench and Verify logs: the
+    * exception's class and message (`Throwable.toString`) and its top
+    * stack frames. */
+  def cause(e: Throwable): String =
+    (e.toString +: e.getStackTrace.take(8).map(f => s"  at $f")).mkString("\n")
 }

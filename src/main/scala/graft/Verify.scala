@@ -18,7 +18,7 @@ object Verify {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] $name failed: ${JsonOut.cause(e)}")
         }
       }
     import JsonOut.q

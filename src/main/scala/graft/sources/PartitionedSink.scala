@@ -68,15 +68,11 @@ object PartitionedSink {
           coalesce(target("part"), col("ch_part")).as("part"))
         .persist()
       try {
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try applied.write.mode(SaveMode.Overwrite).partitionBy("part").parquet(path)
-        finally prev match {
-          case Some(v) =>
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None =>
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+        // the write option, not the session conf: the caller's session
+        // keeps its own partitionOverwriteMode
+        applied.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("part").parquet(path)
         val present = applied.select("part").distinct()
           .collect().map(_.getLong(0)).toSet
         val emptied = affected.filterNot(present)

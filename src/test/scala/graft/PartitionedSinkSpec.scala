@@ -33,7 +33,14 @@ class PartitionedSinkSpec extends AnyFunSuite {
         .toMap
     val before = listFiles()
 
+    // a static session conf (Spark's default, so other suites are
+    // unaffected): dynamic overwrite must come from the write option
+    // alone — the untouched-partition check below proves it — and the
+    // caller's conf must be left as it was
+    val ModeKey = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(ModeKey, "static")
     val affected = PartitionedSink.applyChanges(spark, cl, dir)
+    assert(spark.conf.get(ModeKey) === "static", "caller's session conf changed")
     assert(affected === (0L to 3L))
 
     val after = listFiles()

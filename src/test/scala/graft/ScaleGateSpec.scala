@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CI scale gate: every operator in ScaleProbe.probeOps — the bench's
-  * top-cost dedup/merge/sessionize family — is timed at 1× and k× on a
-  * structure-preserving amplification of sf0.01 and must stay
-  * SUB-QUADRATIC: wall-time ratio ≤ GateRatio = 2.5·k (the 30× manual
-  * probe measures ≤ 0.72·k on every op, SURVEY §5; a quadratic pair
-  * blowup at k=8 reads ≳ 4·k even with fixed costs amortized). A
-  * super-linear plan regression in any probed operator fails HERE
-  * instead of waiting for the next manual runMain probe.
+/** CI scale gate: every registry query in [[ScaleProbe.Gated]] — the
+  * bench's top-cost dedup/merge/sessionize family plus the training,
+  * ANN and image lanes, run exactly as `SparkEntry.queries` ships them
+  * — is timed by [[ScaleProbe.ratios]] on a 1× and a k× copy of sf0.01
+  * written by [[AmplifyCorpus.amplify]], and must stay SUB-QUADRATIC:
+  * wall-time ratio ≤ GateRatio = 2.5·k (the 30× manual probe measures
+  * ≤ 0.72·k on every op, SURVEY §5; a quadratic pair blowup at k=8
+  * reads ≳ 4·k even with fixed costs amortized). A super-linear plan
+  * regression in any gated query fails HERE instead of waiting for the
+  * next manual runMain probe.
   *
   * The bound is deliberately loose (≈ 3.5× headroom over measured) so
   * host throttling can't flake the suite — the gate exists to catch
@@ -23,49 +26,22 @@ class ScaleGateSpec extends AnyFunSuite {
   private val GateRatio: Double = 2.5 * K
   private val Sf = "/root/testdata/sf0.01"
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
   test(s"scale gate: probed operator family stays sub-quadratic at ${K}x " +
     s"(wall-time ratio <= $GateRatio)") {
-    val docs0 = Tables.documents(spark, Sf)
-    val ev0 = Tables.events(spark, Sf)
-    ScaleProbe.requireIdHeadroom(docs0, ev0)
-    // materialize both scales through the SAME amplification so the
-    // per-row copy suffix hits numerator and denominator identically
-    // (ScaleProbe's unbiased-baseline rule)
-    def stage(df: DataFrame): DataFrame = df.localCheckpoint()
-    val docs1 = stage(ScaleProbe.amplifyDocuments(docs0, 1))
-    val docsK = stage(ScaleProbe.amplifyDocuments(docs0, K))
-    val ev1 = stage(ScaleProbe.amplifyEvents(ev0, 1))
-    val evK = stage(ScaleProbe.amplifyEvents(ev0, K))
-    val emb0 = Tables.embeddings(spark, Sf)
-    val emb1 = stage(ScaleProbe.amplifyEmbeddings(emb0, 1))
-    val embK = stage(ScaleProbe.amplifyEmbeddings(emb0, K))
-    val failures = (ScaleProbe.probeOps(docs1, ev1)
-      ++ ScaleProbe.probeAnnOps(emb1)
-      ++ ScaleProbe.probeImageOps(docs1))
-      .zip(ScaleProbe.probeOps(docsK, evK)
-        ++ ScaleProbe.probeAnnOps(embK)
-        ++ ScaleProbe.probeImageOps(docsK)).flatMap {
-        case ((name, base), (_, big)) =>
-          base() // warm codegen/JIT on the small side
-          val t1 = math.min(time(base()), time(base()))
-          // min-of-2 on the xK sample too: with a single xK sample the
-          // gate's noise sensitivity was asymmetric (a throttle window
-          // during the one big-side run always pushes the ratio in the
-          // failing direction — the round-13 driver's red suite at
-          // noise 2.06 while a quiet re-run passes every probe at
-          // ratio ≤ 4.6 against the bound of 20)
-          val tk = math.min(time(big()), time(big()))
-          val ratio = tk / t1
-          info(f"$name%-18s x1=$t1%6.2fs x$K=$tk%6.2fs ratio=$ratio%6.2f")
-          if (ratio > GateRatio)
-            Some(f"$name: ratio $ratio%.1f > $GateRatio (x1=$t1%.2fs x$K=$tk%.2fs)")
-          else None
+    // both scales through the SAME amplification so the per-row copy
+    // suffix hits numerator and denominator identically (ScaleProbe's
+    // unbiased-baseline rule)
+    val dir1 = Files.createTempDirectory("graft-gate-x1").toString
+    val dirK = Files.createTempDirectory(s"graft-gate-x$K").toString
+    AmplifyCorpus.amplify(spark, Sf, dir1, 1)
+    AmplifyCorpus.amplify(spark, Sf, dirK, K)
+    val failures = ScaleProbe.ratios(spark, dir1, dirK, ScaleProbe.Gated)
+      .flatMap { case (name, t1, tk) =>
+        val ratio = tk / t1
+        info(f"$name%-18s x1=$t1%6.2fs x$K=$tk%6.2fs ratio=$ratio%6.2f")
+        if (ratio > GateRatio)
+          Some(f"$name: ratio $ratio%.1f > $GateRatio (x1=$t1%.2fs x$K=$tk%.2fs)")
+        else None
       }
     assert(failures.isEmpty,
       "super-linear scale regression:\n" + failures.mkString("\n"))

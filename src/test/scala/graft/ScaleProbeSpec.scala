@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +12,8 @@ import graft.operators.Dedup
   * candidate pair stays within one copy (disjoint shingle sets across
   * copies) and the pair count scales exactly k× — otherwise the probe's
   * "linear in rows" verdict measures amplification artifacts, not plans
-  * (the bug the first one-tag-per-doc cut had).
+  * (the bug the first one-tag-per-doc cut had). At k = 1 the copy must
+  * equal the base, since it is the scale gate's 1× baseline.
   */
 class ScaleProbeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -24,7 +28,7 @@ class ScaleProbeSpec extends AnyFunSuite {
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
     val basePairs = Dedup.minhashCandidates(base).count()
     assert(basePairs >= 1L)
-    val amp = ScaleProbe.amplifyDocuments(base, k)
+    val amp = AmplifyCorpus.amplifyDocuments(base, k)
     assert(amp.count() === base.count() * k)
     val pairs = Dedup.minhashCandidates(amp).collect()
     assert(pairs.length.toLong === basePairs * k, "pair count must scale kx")
@@ -38,10 +42,25 @@ class ScaleProbeSpec extends AnyFunSuite {
   test("amplifyEvents: volume and key cardinality both scale kx") {
     val k = 3
     val ev = Tables.events(spark, TestSpark.Sf).limit(200)
-    val amp = ScaleProbe.amplifyEvents(ev, k)
+    val amp = AmplifyCorpus.amplifyEvents(ev, k)
     assert(amp.count() === ev.count() * k)
     assert(amp.select("user_id").distinct().count() ===
       ev.select("user_id").distinct().count() * k)
     assert(amp.select("event_id").distinct().count() === amp.count())
+  }
+
+  test("amplify k=1: events, embeddings and fact tables equal the base") {
+    val out = Files.createTempDirectory("graft-amp-x1").toString
+    AmplifyCorpus.amplify(spark, TestSpark.Sf, out, 1)
+    def same(base: DataFrame, amp: DataFrame, what: String): Unit = {
+      assert(base.exceptAll(amp).isEmpty, s"$what: base rows missing")
+      assert(amp.exceptAll(base).isEmpty, s"$what: extra rows")
+    }
+    same(Tables.events(spark, TestSpark.Sf), Tables.events(spark, out),
+      "events")
+    for (t <- "embeddings" +: AmplifyCorpus.FactKeys.map(_._1))
+      same(Tables.table(spark, TestSpark.Sf, t), Tables.table(spark, out, t), t)
+    def ids(dir: String) = Tables.documents(spark, dir).select("doc_id")
+    same(ids(TestSpark.Sf), ids(out), "documents.doc_id")
   }
 }
