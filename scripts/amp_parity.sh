@@ -15,13 +15,28 @@
 #    the same oracle SQL on the same amplified parquet,
 # and the JSON verdict lands in $outJson at the repo root.
 #
-# With no subset argument the FULL query registry runs — every operator
-# family, including the OLAP/ledger queries whose volume now scales with
-# the amplified fact tables. Pass an explicit comma-separated subset for
-# targeted lanes (e.g. the 30x vector run):
+# The subset argument is a comma-separated list of query names or one of
+# the named presets:
 #
-#   scripts/amp_parity.sh /root/testdata/sf0.01 30 /tmp/graft_amp30 \
-#     "ann_topk,ann_lsh,ann_ivf,ivf_train,..." CORRECTNESS_AMP30.json
+#   full          the whole query registry (also the default)
+#   no-quadratic  the registry minus the five declared-quadratic kNN truth
+#                 gates (knn_recall, knn_graph, knn_components, nn_descent,
+#                 hubness_audit) -- the 100x tier
+#   lane300       the linear-oracle document/event families (dedup chain,
+#                 text quality, attribution/funnel/session and their
+#                 streaming parities) -- the 300x tier
+#
+# The registry's names are read from PLANS.md's query table, whose row set
+# PlanSpec pins to SparkEntry.queries. GRAFT_DUCK_MEM (read by parity.py)
+# sets DuckDB's memory cap. The amplified tiers, one command each:
+#
+#   scripts/amp_parity.sh /root/testdata/sf0.01 10 /tmp/graft_amp10
+#   scripts/amp_parity.sh /root/testdata/sf0.01 30 /tmp/graft_amp30 full \
+#     CORRECTNESS_AMP30.json
+#   GRAFT_DUCK_MEM=48GB scripts/amp_parity.sh /root/testdata/sf0.01 100 \
+#     /tmp/graft_amp100 no-quadratic CORRECTNESS_AMP100.json
+#   GRAFT_DUCK_MEM=48GB scripts/amp_parity.sh /root/testdata/sf0.01 300 \
+#     /tmp/graft_amp300 lane300 CORRECTNESS_AMP300.json
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -31,6 +46,31 @@ WORK="${3:-/tmp/graft_amp10}"
 SUBSET="${4:-}"
 OUTJSON="${5:-CORRECTNESS_AMP.json}"
 OUT="$WORK.out"
+
+QUADRATIC="knn_recall knn_graph knn_components nn_descent hubness_audit"
+LANE300="dedup_exact,dedup_minhash,dedup_ngram_jaccard,dedup_simhash,\
+dedup_apply,dedup_incremental,dup_cluster,soft_dedup_weights,\
+cluster_size_hist,cross_source_overlap,dup_token_share,dedup_sweep,\
+span_dedup,substring_dedup,quality_filter,quality_gopher,text_stats,\
+token_count,lang_id,doc_fingerprint,blocklist_filter,corpus_sample,\
+split_assign,mix_weights,training_pipeline,attribution_last_touch,\
+attribution_linear,attribution_position,funnel_conversion,sessionize,\
+event_transitions,event_paths,cdc_merge,stream_linear_parity,\
+stream_position_parity,stream_funnel_parity,stream_sessionize_parity,\
+image_dedup"
+
+# the query registry, one name a line, from PLANS.md's query table
+registry() {
+  awk -F'|' '/^## /{if (seen) exit} /^\| query \|/{seen = 1; next}
+    seen && /^\| [a-z0-9_]+ \|/{gsub(/ /, "", $2); print $2}' PLANS.md
+}
+
+case "$SUBSET" in
+  full) SUBSET="" ;;
+  no-quadratic)
+    SUBSET=$(registry | grep -vxF $(printf -- '-e %s ' $QUADRATIC) | paste -sd, -) ;;
+  lane300) SUBSET="$LANE300" ;;
+esac
 
 echo "== amplify $BASE x$K -> $WORK"
 sbt -batch "runMain graft.AmplifyCorpus $BASE $WORK $K"

@@ -203,7 +203,7 @@ object AmplifyCorpus {
       s"$outDir/embeddings.parquet")
 
     for ((t, keys) <- FactKeys) {
-      val base = spark.read.parquet(s"$sfDir/$t.parquet")
+      val base = Tables.table(spark, sfDir, t)
       val maxKey = keys.toSeq.map(c =>
         base.agg(max(col(c).cast("long"))).collect()(0).getLong(0)).max
       require(maxKey < CopyOffset,
@@ -220,8 +220,8 @@ object AmplifyCorpus {
         Paths.get(sfDir, s"$t.parquet").toAbsolutePath)
     }
     Staged.invalidate()
-    (spark.read.parquet(s"$outDir/documents.parquet").count(),
-      spark.read.parquet(s"$outDir/events.parquet").count())
+    (Tables.documents(spark, outDir).count(),
+      Tables.rawEvents(spark, outDir).count())
   }
 
   // ------------------------------------------------------------------

@@ -58,12 +58,18 @@ object Bench {
     // front, min-of-2 compares two steady-state passes and the total
     // still carries the true cold-start cost (total + staged_sec).
     // Relations are forced in registry (dependency) order, so each
-    // one's seconds are its own cost, its inputs already materialized.
-    val stagedRel = Staged.names.map { n =>
+    // one's seconds and stored bytes (block-manager memory + disk) are
+    // its own cost, its inputs already materialized. The bytes are the
+    // change around the force: blocks the context cleaner drops in that
+    // window count against it, so a small relation can read negative.
+    def storedBytes(): Long =
+      spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+    val (stagedRel, stagedBytes) = Staged.names.map { n =>
+      val b0 = storedBytes()
       val t0 = System.nanoTime()
       Staged.rounds(spark, sfDir, n).foreach(_.count())
-      n -> (System.nanoTime() - t0) / 1e9
-    }
+      (n -> (System.nanoTime() - t0) / 1e9, n -> (storedBytes() - b0))
+    }.unzip
     val stagedSec = stagedRel.map(_._2).sum
     // Two INTERLEAVED end-to-end passes, per-query min across passes
     // (round-4 lesson: 2× back-to-back per query leaves both samples
@@ -117,9 +123,10 @@ object Bench {
     // TailTopK slowest queries (the ones per-round perf comparison
     // actually reads) plus n_queries/other_sec so the total still
     // reconciles; the COMPLETE per-query map and the per-relation
-    // staging seconds ("staged"), the flow timings ("flows") and the
-    // failed queries' causes ("failed_causes") go to BENCH_LOCAL.json
-    // only, in the repo, committed every round for machine diffing.
+    // staging seconds ("staged") and bytes ("staged_bytes"), the flow
+    // timings ("flows") and the failed queries' causes ("failed_causes")
+    // go to BENCH_LOCAL.json only, in the repo, committed every round
+    // for machine diffing.
     val TailTopK = 70
     val byCost = timings.toSeq.sortBy(-_._2)
     def obj(kv: Iterable[(String, Double)]): String =
@@ -138,10 +145,12 @@ object Bench {
         .resolve("BENCH_LOCAL.json")
     }
     System.err.println(s"[bench] writing full per-query map to $benchLocal")
+    val bytesJson =
+      stagedBytes.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
     val causesJson =
       causes.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(benchLocal,
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"staged":${obj(stagedRel)},"noise_ratio":${cs(noiseRatio)},"queries":${obj(timings)},"flows":${obj(syncPass.minOption.map("sync_pass" -> _))},"failed":$fs,"failed_causes":$causesJson,"sf":${q(sfDir)}}""")
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"staged":${obj(stagedRel)},"staged_bytes":$bytesJson,"noise_ratio":${cs(noiseRatio)},"queries":${obj(timings)},"flows":${obj(syncPass.minOption.map("sync_pass" -> _))},"failed":$fs,"failed_causes":$causesJson,"sf":${q(sfDir)}}""")
     val topQs = obj(byCost.take(TailTopK))
     val otherSec = byCost.drop(TailTopK).map(_._2).sum
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"noise_ratio":${cs(noiseRatio)},"queries":$topQs,"n_queries":${timings.size},"other_sec":${cs(otherSec)},"failed":$fs,"sf":${q(sfDir)}}""")

@@ -49,7 +49,9 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   * path stages fresh; re-writing parquet UNDER an already-staged dir
   * within one session serves stale data (same contract as any staged
   * table — call [[invalidate]] after in-place rewrites; AmplifyCorpus
-  * does so in its write path).
+  * does so in its write path). The same contract covers the tables
+  * [[Tables]] resolves once per session: [[invalidate]] and the
+  * application-end eviction drop them with the staged relations.
   */
 object Staged {
 
@@ -129,10 +131,10 @@ object Staged {
     TrieMap.empty[(SparkSession, String, String), Seq[DataFrame]]
 
   /** Sessions whose application-end listener is installed. The cache
-    * keys by session object, which would otherwise strongly retain the
-    * session and its checkpointed blocks for process lifetime in a
-    * long-lived multi-session JVM — evict a session's entries when its
-    * context ends. */
+    * (and [[Tables]]' resolved tables) key by session object, which
+    * would otherwise strongly retain the session and its checkpointed
+    * blocks for process lifetime in a long-lived multi-session JVM —
+    * evict a session's entries when its context ends. */
   private val hooked = TrieMap.empty[SparkSession, Unit]
 
   /** Conf key selecting reliable (fault-tolerant) staging. */
@@ -148,7 +150,7 @@ object Staged {
       df.checkpoint(eager = false)
     else df.localCheckpoint(eager = false)
 
-  private def hookEviction(spark: SparkSession): Unit =
+  private[graft] def hookEviction(spark: SparkSession): Unit =
     hooked.getOrElseUpdate(spark, {
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
@@ -156,6 +158,7 @@ object Staged {
               e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
               : Unit = {
             cache.filterInPlace { case ((s, _, _), _) => s ne spark }
+            Tables.resolved.filterInPlace { case ((s, _), _) => s ne spark }
             hooked.remove(spark)
           }
         })
@@ -186,9 +189,11 @@ object Staged {
   }
 
   /** Drop all staged entries (block-manager copies are reclaimed by the
-    * context cleaner once unreferenced). For in-place corpus rewrites
-    * within a session — tests and the amplify lane. */
-  def invalidate(): Unit = cache.clear()
+    * context cleaner once unreferenced) and every resolved table
+    * ([[Tables]]), so the next read lists the files and infers the
+    * schema again. For in-place corpus rewrites within a session —
+    * tests and the amplify lane. */
+  def invalidate(): Unit = { cache.clear(); Tables.resolved.clear() }
 
   /** The dedup family: the shingle hashes, minhash signatures, verified
     * LSH pairs and SimHash pairs. `dups` is a cheap filter view over

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -8,10 +11,37 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * touches storage so column pruning / filter pushdown stay auditable:
   * every operator selects columns immediately after these reads, which
   * Catalyst pushes into the parquet scan (`ReadSchema`).
+  *
+  * Resolve once: the first read of a table in a session lists its
+  * files and infers its schema (`spark.read.parquet`, which may run a
+  * Spark job), and the resolved `LogicalRelation` — the
+  * `HadoopFsRelation` with its file index and schema — is kept per
+  * (session, path). Every call returns a fresh DataFrame over
+  * `relation.newInstance()`: new attribute ids per call, so a
+  * self-join of two reads and `df("col")` references resolve exactly
+  * as over two separate `spark.read.parquet` calls. Only metadata is
+  * kept, never rows: each query still scans the files.
+  *
+  * The invalidate contract is [[Staged]]'s: re-writing parquet UNDER an
+  * already-read path within one session serves the old file listing
+  * and schema until [[Staged.invalidate]], which drops the resolved
+  * tables with the staged relations (AmplifyCorpus calls it in its
+  * write path). A session's entries are evicted by the same
+  * application-end hook that evicts its staged relations.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private[graft] val resolved =
+    TrieMap.empty[(SparkSession, String), LogicalRelation]
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val rel = resolved.getOrElseUpdate((spark, path), {
+      Staged.hookEviction(spark)
+      spark.read.parquet(path).queryExecution.analyzed
+        .asInstanceOf[LogicalRelation]
+    })
+    GraftBridge.ofRows(spark, rel.newInstance())
+  }
 
   /** events.parquet stores ts as parquet TIMESTAMP(NANOS), which Spark 4
     * refuses by default. Read it as an exact ns-since-epoch long
@@ -23,7 +53,10 @@ object Tables {
     * option for it) — a deliberate global: after the first events()
     * call, any other parquet nanos column in the session also reads as
     * long. All engine reads go through this object, so the flag is
-    * uniform by construction.
+    * uniform by construction. It stays a session setting even though
+    * the relation is resolved once: schema inference reads it at the
+    * first resolve, and the parquet reader reads it again when each
+    * query executes, so every call sets it before returning.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame =
     eventsFrom(rawEvents(spark, sfDir))

@@ -76,12 +76,17 @@ class StagedSpec extends AnyFunSuite {
     "block-manager memory past the session's life)") {
     // same (session, dir) lookup twice → the cached instances; after the
     // application-end listener fires, every next lookup must REBUILD
-    // (fresh instance), proving the cache no longer retains the session
+    // (fresh instance), proving the cache no longer retains the session,
+    // and the session's resolved tables must be gone too
     val first = all(TestSpark.Sf)
     assert(reused(first, all(TestSpark.Sf)) === Staged.names, "cache miss?")
+    def tables = Tables.resolved.keys.filter(_._1 eq spark).map(_._2)
+    assert(tables.nonEmpty, "no resolved table to evict?")
     org.apache.spark.GraftTestBridge.post(spark.sparkContext,
       org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
     org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
+    assert(tables.isEmpty,
+      s"resolved tables survived application end: $tables")
     val kept = reused(first, all(TestSpark.Sf))
     assert(kept.isEmpty,
       s"staged entries survived application end — session retained: $kept")

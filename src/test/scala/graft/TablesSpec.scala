@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (nanosAsLong), TIMESTAMP(MICROS) with tz (TIMESTAMP_LTZ), and
   * TIMESTAMP(MICROS) without tz (TIMESTAMP_NTZ — the round-6 regeneration
   * that broke 54 queries). A re-encoded events.parquet must fail HERE,
-  * not at 36% of the query registry.
+  * not at 36% of the query registry. Also pins the resolve-once
+  * contract: a repeated read launches no job, every read has its own
+  * attribute ids, and `Staged.invalidate()` re-resolves a rewritten
+  * table.
   */
 class TablesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -111,5 +118,64 @@ class TablesSpec extends AnyFunSuite {
     assert(bad.getLong(0) === 0L)
     assert(bad.getLong(1) === 0L)
     assert(ev.count() > 0)
+  }
+
+  /** Spark jobs launched while `body` runs (listener bus drained). */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a second read of a table in the same session launches no Spark job") {
+    val sf = java.nio.file.Files.createTempDirectory("graft-sf-once").toString
+    Seq((1L, "a"), (2L, "b")).toDF("c_custkey", "c_name")
+      .write.parquet(s"$sf/customer.parquet")
+    // the first read lists the files and runs the schema-inference job
+    assert(jobsDuring(Tables.customer(spark, sf)) >= 1)
+    assert(jobsDuring(Tables.customer(spark, sf)) === 0)
+  }
+
+  test("a self-join of two reads on c_custkey resolves and returns the rows of two plain reads") {
+    def selfJoin(a: DataFrame, b: DataFrame): Seq[String] =
+      a.join(b, a("c_custkey") === b("c_custkey"))
+        .select(a("c_custkey"), a("c_name"), b("c_nationkey"))
+        .collect().map(_.toString).toSeq.sorted
+    val (a, b) = (Tables.customer(spark, TestSpark.Sf),
+      Tables.customer(spark, TestSpark.Sf))
+    // each read carries its own attribute ids
+    assert(a.queryExecution.analyzed.outputSet
+      .intersect(b.queryExecution.analyzed.outputSet).isEmpty)
+    val path = s"${TestSpark.Sf}/customer.parquet"
+    val got = selfJoin(a, b)
+    assert(got.nonEmpty)
+    assert(got === selfJoin(spark.read.parquet(path), spark.read.parquet(path)))
+  }
+
+  test("an in-place overwrite is read after Staged.invalidate(): new rows and schema") {
+    val sf = java.nio.file.Files.createTempDirectory("graft-sf-rw").toString
+    val path = s"$sf/customer.parquet"
+    Seq((1L, "a")).toDF("c_custkey", "c_name").write.parquet(path)
+    assert(Tables.customer(spark, sf).count() === 1)
+    Seq((1L, "a", 7L), (2L, "b", 8L)).toDF("c_custkey", "c_name", "c_nationkey")
+      .write.mode("overwrite").parquet(path)
+    // resolved once: the session still serves the old schema ...
+    assert(Tables.customer(spark, sf).columns.length === 2)
+    Staged.invalidate()
+    // ... until invalidate() drops the resolved table
+    val after = Tables.customer(spark, sf)
+    assert(after.columns.toSeq === Seq("c_custkey", "c_name", "c_nationkey"))
+    assert(after.orderBy("c_custkey").collect().map(_.toString).toSeq ===
+      Seq("[1,a,7]", "[2,b,8]"))
   }
 }
