@@ -247,7 +247,8 @@ object SparkEntry {
       TextAnalysis.splitKfold(Tables.documents(s, dir))),
     "training_pipeline"   -> ((s, dir) => {
       val d = Staged.dedup(s, dir)
-      TrainingPipeline.runFrom(Tables.documents(s, dir), d.sh, d.sigs)
+      TrainingPipeline.runFrom(Tables.documents(s, dir), d.sh, d.verified,
+        d.overfull)
     }),
     "dup_cluster"         -> ((s, dir) =>
       Dedup.dupClustersFrom(Staged.dedup(s, dir).dups)),

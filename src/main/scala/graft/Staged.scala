@@ -84,10 +84,16 @@ object Staged {
     * permutation cross — same allowance as ann_topk/ivf_assign); all
     * others must be nested-loop-free (PlanSpec). */
   private val registry: Seq[Rel] = Seq(
-    // dedup: shingles, 64-wide minhash, LSH candidates+verify, SimHash
+    // dedup: shingles, 64-wide minhash, the LSH bucket profile and its
+    // over-full buckets' members (both read by the verify build; the
+    // members also by training_pipeline), LSH candidates+verify, SimHash
     Rel("sh", false, in => Dedup.shingleHashes(docs(in))),
     Rel("sigs", false, in => Dedup.signaturesFromHashes(in("sh"))),
-    Rel("verified", false, in => Dedup.ngramJaccardFrom(in("sh"), in("sigs"))),
+    Rel("buckets", false, in => Dedup.bucketStats(in("sigs"))),
+    Rel("overfull", false,
+      in => Dedup.overfullMembers(in("sigs"), in("buckets"))),
+    Rel("verified", false, in => Dedup.ngramJaccardFrom(in("sh"), in("sigs"),
+      in("buckets"), in("overfull"))),
     Rel("simPairs", false, in => Dedup.simhashDedup(docs(in))),
     // tokens: explode, frequency table, skip-grams, gopher, winnow
     Rel("tokens", false, in => TextAnalysis.tokensRel(docs(in))),
@@ -195,12 +201,16 @@ object Staged {
     * tests and the amplify lane. */
   def invalidate(): Unit = { cache.clear(); Tables.resolved.clear() }
 
-  /** The dedup family: the shingle hashes, minhash signatures, verified
-    * LSH pairs and SimHash pairs. `dups` is a cheap filter view over
-    * `verified` (no extra copy). */
+  /** The dedup family: the shingle hashes, minhash signatures, the
+    * members of the over-full LSH buckets, the verified LSH pairs and
+    * the SimHash pairs. `dups` is a cheap filter view over `verified`
+    * (no extra copy). `verified` and `overfull` together answer a
+    * corpus subset's near-dup pairs ([[TrainingPipeline.corpusFrom]])
+    * without re-running the LSH chain over the subset. */
   final class DedupRels private[Staged] (in: Inputs) {
     def sh: DataFrame = in("sh")
     def sigs: DataFrame = in("sigs")
+    def overfull: DataFrame = in("overfull")
     def verified: DataFrame = in("verified")
     def simPairs: DataFrame = in("simPairs")
     /** Confirmed near-dup pairs ([[Dedup.minhashDedup]] shape). */

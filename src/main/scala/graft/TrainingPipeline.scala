@@ -13,70 +13,80 @@ import graft.operators.{Dedup, TextAnalysis}
   * corpus manifest a training run consumes.
   *
   * Every stage is the SAME operator the standalone queries use (shared
-  * predicates/hashes — keepCol, dedupExact, minhashDedup,
-  * stratifiedSample, splitCol), so the composition cannot drift from
-  * the parts; the DuckDB oracle rebuilds the whole chain in SQL over
-  * the identical hash constants.
+  * predicates/hashes — keepCol, dedupExact, the MinHash-LSH pairing
+  * and verify, stratifiedSample, splitCol), so the composition cannot
+  * drift from the parts; the DuckDB oracle rebuilds the whole chain in
+  * SQL over the identical hash constants, running the LSH chain over
+  * the gated survivors.
   *
-  * Scale shape: the gate and sample are narrow filters; dedup stages
-  * shuffle on digest/band keys only; the final rollup is a
-  * map-side-combined aggregate on a tiny (lang, split) key space.
+  * The staged form ([[runFrom]], the `training_pipeline` query) does
+  * not re-run that chain over the survivors: it reads the full corpus's
+  * verified pairs and the members of its over-full LSH buckets (staged
+  * once per session by [[Staged]] and shared with the dedup family),
+  * which determine the survivors' pairs exactly ([[corpusFrom]]).
+  *
+  * Scale shape: the gate and sample are narrow filters; exact dedup
+  * shuffles on the digest; staged near-dup removal semi-joins the
+  * verified pair relation and re-pairs only the over-full buckets'
+  * survivors; the final rollup is a map-side-combined aggregate on a
+  * tiny (lang, split) key space.
   */
 object TrainingPipeline {
 
   /** The surviving corpus after quality gate → exact dedup → near-dup
-    * removal (full document rows). */
+    * removal (full document rows): the MinHash-LSH chain run over the
+    * gated, exact-deduplicated survivors themselves, the composition
+    * the oracle SQL spells out. */
   def corpus(documents: DataFrame): DataFrame = {
-    val sh = Dedup.shingleHashes(documents)
-    corpusFrom(documents, sh,
-      Dedup.signaturesFromHashes(sh).localCheckpoint(false))
+    val quality = documents.where(TextAnalysis.keepCol)
+    // read by both the LSH chain and the final anti-join
+    val uniq = quality.join(TextAnalysis.dedupExact(quality)
+      .select(col("keeper_doc_id").as("doc_id")), Seq("doc_id"))
+      .localCheckpoint(false)
+    uniq.join(Dedup.minhashDedup(uniq).select(col("dup_doc_id").as("doc_id")),
+      Seq("doc_id"), "left_anti")
   }
 
-  /** [[corpus]] over the already-staged full-corpus shingle-hash and
-    * signature relations: shingling and the 64-wide minhash aggregate
-    * are strictly PER-DOCUMENT, so filtering commutes with both —
-    * semi-joining the staged relations to the quality-gated
-    * exact-deduped survivor ids yields bit-identical shingles and
-    * signatures to re-deriving them from the survivors' text, and the
-    * banding/verify chain then runs on the filtered copies exactly as
-    * the oracle's subset chain does. One corpus shingle pass + one
-    * signature aggregate feed the standalone dedup family AND this
-    * composed pass, instead of the composition re-paying both. */
-  def corpusFrom(documents: DataFrame, sh: DataFrame,
-                 sigs: DataFrame): DataFrame = {
+  /** [[corpus]] from the full corpus's shingle hashes, verified LSH
+    * pairs and over-full bucket members ([[Staged.DedupRels]]), without
+    * re-running the LSH chain. With U
+    * the gated, exact-deduplicated survivors, U's near-dups are the
+    * `doc_b` sides of
+    *   - the verified pairs whose `doc_a` is in U (a `doc_b` outside U
+    *     removes nothing from U), and
+    *   - the pairs U's members of the over-full buckets form among
+    *     themselves ([[Dedup.subsetOverfullJaccard]]),
+    * with j_milli ≥ JaccardMilli — the same set the LSH chain run over
+    * U finds. U stays one plan: its references share their exchanges. */
+  def corpusFrom(documents: DataFrame, sh: DataFrame, verified: DataFrame,
+                 overfull: DataFrame): DataFrame = {
     val quality = documents.where(TextAnalysis.keepCol)
-    val canonical = TextAnalysis.dedupExact(quality)
+    // U's ids are the exact-dedup keepers: every keeper is a gated doc
+    val ids = TextAnalysis.dedupExact(quality)
       .select(col("keeper_doc_id").as("doc_id"))
-    // lazy checkpoint: consumed by BOTH the minhash chain and the final
-    // anti-join — staging runs the gate + exact-dedup join once
-    val uniq = quality.join(canonical, Seq("doc_id")).localCheckpoint(false)
-    // the filtered copies are staged like the full-corpus originals:
-    // the banding chain references the signature relation three times
-    // and the verify references the shingle table twice — without the
-    // checkpoint each reference re-runs the semi-join
-    val ids = uniq.select("doc_id")
-    val shU = sh.join(ids, Seq("doc_id"), "left_semi")
-      .localCheckpoint(false)
-    val sigsU = sigs.join(ids, Seq("doc_id"), "left_semi")
-      .localCheckpoint(false)
-    val dupIds = Dedup.minhashDedupFrom(Dedup.ngramJaccardFrom(shU, sigsU))
-      .select(col("dup_doc_id").as("doc_id")).distinct()
-    uniq.join(dupIds, Seq("doc_id"), "left_anti")
+    val fromCorpus = Dedup.minhashDedupFrom(verified)
+      .join(ids.select(col("doc_id").as("keeper_doc_id")),
+        Seq("keeper_doc_id"), "left_semi")
+    val fromOverfull = Dedup.minhashDedupFrom(
+      Dedup.subsetOverfullJaccard(sh, overfull, ids))
+    val dupIds = fromCorpus.unionByName(fromOverfull)
+      .select(col("dup_doc_id").as("doc_id"))
+    quality.join(ids, Seq("doc_id"), "left_semi")
+      .join(dupIds, Seq("doc_id"), "left_anti")
   }
 
   /** Per-(lang, split) manifest of the sampled training corpus:
     * document and whitespace-token counts. */
-  def run(documents: DataFrame): DataFrame = {
-    val sh = Dedup.shingleHashes(documents)
-    runFrom(documents, sh,
-      Dedup.signaturesFromHashes(sh).localCheckpoint(false))
-  }
+  def run(documents: DataFrame): DataFrame = manifest(corpus(documents))
 
-  /** [[run]] over staged shingle-hash/signature relations (the
-    * [[corpusFrom]] convention). */
-  def runFrom(documents: DataFrame, sh: DataFrame,
-              sigs: DataFrame): DataFrame =
-    corpusFrom(documents, sh, sigs)
+  /** [[run]] over the staged dedup relations (the [[corpusFrom]]
+    * convention). */
+  def runFrom(documents: DataFrame, sh: DataFrame, verified: DataFrame,
+              overfull: DataFrame): DataFrame =
+    manifest(corpusFrom(documents, sh, verified, overfull))
+
+  private def manifest(corpus: DataFrame): DataFrame =
+    corpus
       .where(TextAnalysis.sampledCol)
       .select(col("lang"), TextAnalysis.splitCol.as("split"),
         size(TextAnalysis.tokensCol).cast("long").as("toks"))

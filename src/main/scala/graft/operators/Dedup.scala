@@ -95,25 +95,50 @@ object Dedup {
     * columns (a subset of `keys` — e.g. the sweep's geometry id). */
   private def bucketPairs(banded: DataFrame, keys: Seq[String],
                           carry: Seq[String] = Nil): DataFrame = {
-    val kc = keys.map(col)
-    val cc = carry.map(col)
-    val stats = banded.groupBy(kc: _*)
+    val stats = bucketProfile(banded, keys)
+    allPairs(smallOf(banded, stats, keys), keys, carry)
+      .unionByName(starPairs(overfullOf(banded, stats, keys), carry))
+  }
+
+  /** Phase 1 of [[bucketPairs]]: the (keys, bn, keeper) profile of
+    * every bucket with at least two members. */
+  private def bucketProfile(banded: DataFrame, keys: Seq[String]): DataFrame =
+    banded.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bn"), min(col("m")).as("keeper"))
       .where(col("bn") > 1)
-    val small = banded
-      .join(stats.where(col("bn") <= MaxQuadraticBucket).select(kc: _*), keys)
-      .groupBy(kc: _*)
+
+  /** The members of the profiled buckets of at most MaxQuadraticBucket
+    * members. */
+  private def smallOf(banded: DataFrame, stats: DataFrame,
+                      keys: Seq[String]): DataFrame =
+    banded.join(stats.where(col("bn") <= MaxQuadraticBucket)
+      .select(keys.map(col): _*), keys)
+
+  /** The all-pairs branch: every pair of each bucket of `small`
+    * (bounded by MaxQuadraticBucket members), sorted so a.doc_id <
+    * b.doc_id. */
+  private def allPairs(small: DataFrame, keys: Seq[String],
+                       carry: Seq[String]): DataFrame =
+    small
+      .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(col("m"))).as("ds"))
-      .select(cc :+ explode(expr(
+      .select(carry.map(col) :+ explode(expr(
         "flatten(transform(ds, (a, i) -> " +
           "transform(slice(ds, i + 2, size(ds)), b -> struct(a, b))))")).as("p"): _*)
-    val big = banded
-      .join(stats.where(col("bn") > MaxQuadraticBucket)
-        .select(kc :+ col("keeper"): _*), keys)
-      .where(col("m") =!= col("keeper"))
-      .select(cc :+ struct(col("keeper").as("a"), col("m").as("b")).as("p"): _*)
-    small.unionByName(big)
-  }
+
+  /** The members of the over-full buckets (more than MaxQuadraticBucket
+    * members), each row carrying its bucket's keeper. */
+  private def overfullOf(banded: DataFrame, stats: DataFrame,
+                         keys: Seq[String]): DataFrame =
+    banded.join(stats.where(col("bn") > MaxQuadraticBucket)
+      .select(keys.map(col) :+ col("keeper"): _*), keys)
+
+  /** The star branch: (keeper ↔ member) pairs of the over-full buckets;
+    * the keeper is its bucket's minimum, so a.doc_id < b.doc_id here
+    * too. */
+  private def starPairs(overfull: DataFrame, carry: Seq[String]): DataFrame =
+    overfull.where(col("m") =!= col("keeper"))
+      .select(carry.map(col) :+ struct(col("keeper").as("a"), col("m").as("b")).as("p"): _*)
 
   /** One (doc_id, n, band, sig) row per LSH band of each signature —
     * the single definition of banding, shared by the intra-corpus and
@@ -176,11 +201,8 @@ object Dedup {
         col("p.b.doc_id").as("doc_b"), col("p.b.n").as("nb"))
       .distinct()
     val union = allPairs.select("doc_a", "na", "doc_b", "nb").distinct()
-    val truth = union
-      .join(pairIntersections(union, sh, "doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("c"))
-      .where(expr("(c * 1000) div (na + nb - c)") >= JaccardMilli)
+    val truth = pairJaccard(union, sh)
+      .where(col("j_milli") >= JaccardMilli)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("is_dup"))
     allPairs
       .join(truth, Seq("doc_a", "doc_b"), "left")
@@ -203,15 +225,44 @@ object Dedup {
     * relation — callers that also consume the signatures themselves
     * (minhashEstError's per-side joins) stage once and pass it here,
     * avoiding a second checkpoint copy of the widest relation. */
-  private def candidatesFromStaged(sigs: DataFrame): DataFrame = {
-    bucketPairs(
-      banded(sigs).select(col("band"), col("sig"),
-        struct(col("doc_id"), col("n")).as("m")),
-      Seq("band", "sig"))
-      .select(col("p.a.doc_id").as("doc_a"), col("p.a.n").as("na"),
+  private def candidatesFromStaged(sigs: DataFrame): DataFrame =
+    pairColumns(bucketPairs(bandMembers(sigs), LshKeys))
+
+  /** The LSH bucket key: (band, 4-minhash fold). */
+  private val LshKeys = Seq("band", "sig")
+
+  /** (band, sig, m = struct(doc_id, n)): one row per LSH band of each
+    * signature, the member shape [[bucketPairs]] takes. */
+  private def bandMembers(sigs: DataFrame): DataFrame =
+    banded(sigs).select(col("band"), col("sig"),
+      struct(col("doc_id"), col("n")).as("m"))
+
+  /** The corpus's LSH bucket profile: one (band, sig, bn, keeper) row
+    * per bucket of at least two members — the one bucket shuffle, staged
+    * ([[graft.Staged]]) for the verify build and [[overfullMembers]]. */
+  private[graft] def bucketStats(sigs: DataFrame): DataFrame =
+    bucketProfile(bandMembers(sigs), LshKeys)
+
+  /** (band, sig, m, keeper) for every member of the corpus's over-full
+    * LSH buckets (more than MaxQuadraticBucket members), from the
+    * [[bucketStats]] profile: the star branch of the verify build, and
+    * the only buckets in which a subset of the corpus can pair
+    * differently ([[subsetOverfullJaccard]]). */
+  private[graft] def overfullMembers(sigs: DataFrame,
+                                     stats: DataFrame): DataFrame =
+    overfullOf(bandMembers(sigs), stats, LshKeys)
+
+  /** Distinct (doc_a, na, doc_b, nb) candidates: the all-pairs branch
+    * over `stats`' small buckets plus the `overfull` members' stars. */
+  private def candidatesFrom(banded: DataFrame, stats: DataFrame,
+                             overfull: DataFrame): DataFrame =
+    pairColumns(allPairs(smallOf(banded, stats, LshKeys), LshKeys, Nil)
+      .unionByName(starPairs(overfull, Nil)))
+
+  private def pairColumns(p: DataFrame): DataFrame =
+    p.select(col("p.a.doc_id").as("doc_a"), col("p.a.n").as("na"),
         col("p.b.doc_id").as("doc_b"), col("p.b.n").as("nb"))
       .distinct()
-  }
 
   /** Per-doc signature relation: one plain column per minhash (the
     * banding consumes the columns directly; packing them into an array
@@ -246,6 +297,37 @@ object Dedup {
       .groupBy(aCol, bCol)
       .agg(count(lit(1)).as("c"))
 
+  /** (doc_a, na, doc_b, nb, c) for (doc_a, na, doc_b, nb) candidate
+    * pairs, c = the number of shared shingle hashes: the
+    * [[pairIntersections]] scan with the pair's sizes carried along,
+    * reading `pairs` once. Every document has at least one shingle hash
+    * ([[shingleHashes]]), so a pair sharing none still arrives, with
+    * c = 0, and no join back to `pairs` is needed. */
+  private def pairShared(pairs: DataFrame, sh: DataFrame): DataFrame = {
+    val keys = Seq("doc_a", "na", "doc_b", "nb").map(col)
+    pairs
+      .select(keys :+ explode(array(col("doc_a"), col("doc_b"))).as("doc_id"): _*)
+      .join(sh, "doc_id")
+      .groupBy(keys :+ col("h"): _*)
+      .agg(count(lit(1)).as("k"))
+      .groupBy(keys: _*)
+      .agg(count(when(col("k") === 2, 1)).as("c"))
+  }
+
+  /** (doc_a, doc_b, j_milli) for (doc_a, na, doc_b, nb) candidate
+    * pairs: the exact shingle-set Jaccard, j_milli = ⌊1000·J⌋ — the
+    * verify step every MinHash consumer shares. */
+  private def pairJaccard(pairs: DataFrame, sh: DataFrame): DataFrame =
+    pairShared(pairs, sh)
+      .select(col("doc_a"), col("doc_b"),
+        expr("(c * 1000) div (na + nb - c)").as("j_milli"))
+
+  /** [[pairJaccard]] plus the is_dup verdict — the [[ngramJaccard]]
+    * output shape. */
+  private def verify(pairs: DataFrame, sh: DataFrame): DataFrame =
+    pairJaccard(pairs, sh)
+      .withColumn("is_dup", (col("j_milli") >= JaccardMilli).cast("string"))
+
   /** Exact n-gram Jaccard over the LSH candidate pairs only (the
     * verification stage of MinHash dedup). The expensive 64-wide
     * signature aggregate runs ONCE (for candidates); the intersection
@@ -256,26 +338,40 @@ object Dedup {
     * recompute). j_milli = ⌊1000·J⌋. */
   def ngramJaccard(documents: DataFrame): DataFrame = {
     val sh = shingleHashes(documents)
-    ngramJaccardFrom(sh, signaturesFromHashes(sh).localCheckpoint(false))
+    verify(candidatesFromStaged(
+      signaturesFromHashes(sh).localCheckpoint(false)), sh)
   }
 
-  /** [[ngramJaccard]] over an ALREADY-staged shingle-hash table and
-    * signature relation — the session-scoped staged shape
-    * ([[graft.Staged]]): a pipeline that stages the two relations once
-    * feeds every dedup-family consumer from the same copies instead of
-    * re-running the corpus scan + 64-wide aggregate per query. `sigs`
-    * must be materialization-safe to re-read (checkpointed/staged);
-    * results are identical to the standalone form. */
-  private[graft] def ngramJaccardFrom(sh: DataFrame,
-                                      sigs: DataFrame): DataFrame = {
-    val pairs = candidatesFromStaged(sigs)
-    pairs
-      .join(pairIntersections(pairs, sh, "doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("c"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("(c * 1000) div (na + nb - c)").as("j_milli"))
-      .withColumn("is_dup", (col("j_milli") >= JaccardMilli).cast("string"))
+  /** [[ngramJaccard]] over the ALREADY-staged shingle-hash table,
+    * signature relation, bucket profile and over-full members — the
+    * session-scoped staged shape ([[graft.Staged]]): a pipeline that
+    * stages them once feeds every dedup-family consumer from the same
+    * copies instead of re-running the corpus scan, the 64-wide
+    * aggregate and the bucket shuffle per query. Results are identical
+    * to the standalone form. */
+  private[graft] def ngramJaccardFrom(sh: DataFrame, sigs: DataFrame,
+                                      stats: DataFrame,
+                                      overfull: DataFrame): DataFrame =
+    verify(candidatesFrom(bandMembers(sigs), stats, overfull), sh)
+
+  /** (doc_a, doc_b, j_milli) for the LSH pairs of the corpus subset
+    * `ids` that the corpus's own pairs, restricted to the subset, may
+    * lack. Only the corpus's over-full buckets can pair a subset
+    * differently: a bucket of at most MaxQuadraticBucket members emits
+    * all its pairs, so its restriction is the subset's bucket; and a
+    * subset keeping an over-full bucket's keeper keeps it as its own
+    * keeper. Pairing the subset's members of the over-full buckets
+    * again by [[bucketPairs]] (all pairs once a bucket shrinks to
+    * MaxQuadraticBucket, else a star on the subset's keeper) therefore
+    * yields every missing pair; shingles, and so j_milli, are per
+    * document. */
+  private[graft] def subsetOverfullJaccard(sh: DataFrame, overfull: DataFrame,
+                                           ids: DataFrame): DataFrame = {
+    val members = overfull
+      .select(col("band"), col("sig"), col("m"), col("m.doc_id").as("doc_id"))
+      .join(ids, Seq("doc_id"), "left_semi")
+      .select("band", "sig", "m")
+    pairJaccard(pairColumns(bucketPairs(members, LshKeys)), sh)
   }
 
   /** Containment threshold in milli-units (0.8) for [[containmentFrom]]. */
@@ -304,11 +400,7 @@ object Dedup {
     * on the candidate rows. */
   private[graft] def containmentFrom(sh: DataFrame,
                                      sigs: DataFrame): DataFrame = {
-    val pairs = candidatesFromStaged(sigs)
-    pairs
-      .join(pairIntersections(pairs, sh, "doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("c"))
+    pairShared(candidatesFromStaged(sigs), sh)
       .select(col("doc_a"), col("doc_b"),
         expr("(c * 1000) div (na + nb - c)").as("j_milli"),
         expr("(c * 1000) div least(na, nb)").as("cont_milli"))
@@ -775,13 +867,7 @@ object Dedup {
     * signature relations ([[graft.Staged]]). */
   private[graft] def minhashEstErrorFrom(sh: DataFrame,
                                          sigs: DataFrame): DataFrame = {
-    val pairs = candidatesFromStaged(sigs)
-    val exact = pairs
-      .join(pairIntersections(pairs, sh, "doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("c"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("(c * 1000) div (na + nb - c)").as("j_milli"))
+    val exact = pairJaccard(candidatesFromStaged(sigs), sh)
     val agree = (0 until NumHashes)
       .map(s => when(col(s"sa.m$s") === col(s"sb.m$s"), 1L).otherwise(0L))
       .reduce(_ + _)
@@ -809,13 +895,7 @@ object Dedup {
     * on the SAME two signature joins the full-width gate pays. */
   private[graft] def bbitMinhashFrom(sh: DataFrame,
                                      sigs: DataFrame): DataFrame = {
-    val pairs = candidatesFromStaged(sigs)
-    val exact = pairs
-      .join(pairIntersections(pairs, sh, "doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("c"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("(c * 1000) div (na + nb - c)").as("j_milli"))
+    val exact = pairJaccard(candidatesFromStaged(sigs), sh)
     val agree64 = (0 until NumHashes)
       .map(s => when(col(s"sa.m$s") === col(s"sb.m$s"), 1L).otherwise(0L))
       .reduce(_ + _)
@@ -865,13 +945,7 @@ object Dedup {
     * beside [[bbitMinhashFrom]]'s 1-bit rung. */
   private[graft] def minhashWidthSweepFrom(sh: DataFrame,
                                            sigs: DataFrame): DataFrame = {
-    val pairs = candidatesFromStaged(sigs)
-    val exact = pairs
-      .join(pairIntersections(pairs, sh, "doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("c"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("(c * 1000) div (na + nb - c)").as("j_milli"))
+    val exact = pairJaccard(candidatesFromStaged(sigs), sh)
     def agree(w: Int) = (0 until w)
       .map(s => when(col(s"sa.m$s") === col(s"sb.m$s"), 1L).otherwise(0L))
       .reduce(_ + _)

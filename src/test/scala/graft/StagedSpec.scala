@@ -84,7 +84,7 @@ class StagedSpec extends AnyFunSuite {
     assert(tables.nonEmpty, "no resolved table to evict?")
     org.apache.spark.GraftTestBridge.post(spark.sparkContext,
       org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
-    org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
+    org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
     assert(tables.isEmpty,
       s"resolved tables survived application end: $tables")
     val kept = reused(first, all(TestSpark.Sf))

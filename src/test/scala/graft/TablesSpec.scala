@@ -1,11 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark.jobsDuring
 
 /** Pins `Tables.events` against the three ts encodings the testdata has
   * shipped with so far: parquet TIMESTAMP(NANOS) read as long
@@ -118,23 +117,6 @@ class TablesSpec extends AnyFunSuite {
     assert(bad.getLong(0) === 0L)
     assert(bad.getLong(1) === 0L)
     assert(ev.count() > 0)
-  }
-
-  /** Spark jobs launched while `body` runs (listener bus drained). */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("a second read of a table in the same session launches no Spark job") {

@@ -10,8 +10,4 @@ import org.apache.spark.scheduler.SparkListenerEvent
 object GraftTestBridge {
   def post(sc: SparkContext, e: SparkListenerEvent): Unit =
     sc.listenerBus.post(e)
-
-  /** Blocks until every queued listener event has been delivered. */
-  def drain(sc: SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
 }
