@@ -248,7 +248,7 @@ object SparkEntry {
     "training_pipeline"   -> ((s, dir) => {
       val d = Staged.dedup(s, dir)
       TrainingPipeline.runFrom(Tables.documents(s, dir), d.sh, d.verified,
-        d.overfull)
+        d.overfullIfAny)
     }),
     "dup_cluster"         -> ((s, dir) =>
       Dedup.dupClustersFrom(Staged.dedup(s, dir).dups)),

@@ -45,6 +45,11 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   * consumers are unchanged, executor loss costs a re-read instead of
   * the session.
   *
+  * [[rows]] is a relation's exact row count, taken once per (session,
+  * dir) and kept beside the staged copy: a build may choose its plan by
+  * it (training_pipeline drops its over-full re-pairing when the staged
+  * `overfull` is empty) without a job on every call.
+  *
   * Keyed by (session, dir, name): a new session or a different corpus
   * path stages fresh; re-writing parquet UNDER an already-staged dir
   * within one session serves stale data (same contract as any staged
@@ -133,8 +138,13 @@ object Staged {
   /** Every registered relation's name, in dependency order. */
   val names: Seq[String] = registry.map(_.name)
 
-  private val cache =
-    TrieMap.empty[(SparkSession, String, String), Seq[DataFrame]]
+  /** One relation's cache entry under (session, dir): its staged
+    * copies, one per round, and the [[rows]] count of the last. */
+  private final class Entry(val rounds: Seq[DataFrame]) {
+    lazy val rows: Long = rounds.last.count()
+  }
+
+  private val cache = TrieMap.empty[(SparkSession, String, String), Entry]
 
   /** Sessions whose application-end listener is installed. The cache
     * (and [[Tables]]' resolved tables) key by session object, which
@@ -170,17 +180,33 @@ object Staged {
         })
     })
 
-  /** The staged copies of relation `name` under (session, dir), one per
-    * round (a plain relation has one), built on first request. */
-  def rounds(spark: SparkSession, sfDir: String, name: String)
-  : Seq[DataFrame] =
+  private def entry(spark: SparkSession, sfDir: String, name: String)
+  : Entry =
     cache.getOrElseUpdate((spark, sfDir, name), {
       hookEviction(spark)
       val r = byName(name)
-      (1 to r.rounds).scanLeft(Option.empty[DataFrame]) { (prev, _) =>
-        Some(stage(r.build(new Inputs(spark, sfDir, prev))))
-      }.flatten
+      new Entry((1 to r.rounds).scanLeft(Option.empty[DataFrame]) {
+        (prev, _) => Some(stage(r.build(new Inputs(spark, sfDir, prev))))
+      }.flatten)
     })
+
+  /** The staged copies of relation `name` under (session, dir), one per
+    * round (a plain relation has one), built on first request. */
+  def rounds(spark: SparkSession, sfDir: String, name: String)
+  : Seq[DataFrame] = entry(spark, sfDir, name).rounds
+
+  /** The exact row count of relation `name`'s staged copy under
+    * (session, dir). The first request counts it: that count is the
+    * action that materializes the relation and every staged input it
+    * reads, so forcing a relation through `rows` stages it and counts
+    * it in one pass. Later requests run no job. The count is kept in
+    * the relation's cache entry, so [[invalidate]] and the
+    * application-end eviction drop it with the relation. A query build
+    * that asks for a count in a session where nothing is staged yet
+    * runs that job while it is built — work its execution would do
+    * anyway. */
+  def rows(spark: SparkSession, sfDir: String, name: String): Long =
+    entry(spark, sfDir, name).rows
 
   /** ("staged:" + name, nestedLoopOk, plan) per registered relation:
     * the plan its build runs at materialization — the build applied to
@@ -206,11 +232,15 @@ object Staged {
     * the SimHash pairs. `dups` is a cheap filter view over `verified`
     * (no extra copy). `verified` and `overfull` together answer a
     * corpus subset's near-dup pairs ([[TrainingPipeline.corpusFrom]])
-    * without re-running the LSH chain over the subset. */
+    * without re-running the LSH chain over the subset;
+    * `overfullIfAny` is `overfull` when its staged [[rows]] count is
+    * above 0, else None. */
   final class DedupRels private[Staged] (in: Inputs) {
     def sh: DataFrame = in("sh")
     def sigs: DataFrame = in("sigs")
     def overfull: DataFrame = in("overfull")
+    def overfullIfAny: Option[DataFrame] =
+      Option.when(rows(in.spark, in.dir, "overfull") > 0)(overfull)
     def verified: DataFrame = in("verified")
     def simPairs: DataFrame = in("simPairs")
     /** Confirmed near-dup pairs ([[Dedup.minhashDedup]] shape). */

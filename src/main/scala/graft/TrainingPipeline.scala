@@ -23,13 +23,18 @@ import graft.operators.{Dedup, TextAnalysis}
   * not re-run that chain over the survivors: it reads the full corpus's
   * verified pairs and the members of its over-full LSH buckets (staged
   * once per session by [[Staged]] and shared with the dedup family),
-  * which determine the survivors' pairs exactly ([[corpusFrom]]).
+  * which determine the survivors' pairs exactly ([[corpusFrom]]). The
+  * over-full re-pairing is built only when the staged `overfull` has
+  * rows ([[Staged.rows]], counted once per session; the first build in
+  * a session where nothing is staged yet stages the dedup family to
+  * count it). Without over-full buckets the plan is the survivors minus
+  * the verified pairs' `doc_b`s and reads neither `sh` nor `overfull`.
   *
   * Scale shape: the gate and sample are narrow filters; exact dedup
   * shuffles on the digest; staged near-dup removal semi-joins the
-  * verified pair relation and re-pairs only the over-full buckets'
-  * survivors; the final rollup is a map-side-combined aggregate on a
-  * tiny (lang, split) key space.
+  * verified pair relation and, when the corpus has over-full buckets,
+  * re-pairs only their survivors; the final rollup is a
+  * map-side-combined aggregate on a tiny (lang, split) key space.
   */
 object TrainingPipeline {
 
@@ -57,9 +62,13 @@ object TrainingPipeline {
     *   - the pairs U's members of the over-full buckets form among
     *     themselves ([[Dedup.subsetOverfullJaccard]]),
     * with j_milli ≥ JaccardMilli — the same set the LSH chain run over
-    * U finds. U stays one plan: its references share their exchanges. */
+    * U finds. U stays one plan: its references share their exchanges.
+    *
+    * `overfull` is None when the corpus has no over-full bucket: the
+    * second set is then empty (it semi-joins the members), so the plan
+    * leaves it out and does not read `sh`. */
   def corpusFrom(documents: DataFrame, sh: DataFrame, verified: DataFrame,
-                 overfull: DataFrame): DataFrame = {
+                 overfull: Option[DataFrame]): DataFrame = {
     val quality = documents.where(TextAnalysis.keepCol)
     // U's ids are the exact-dedup keepers: every keeper is a gated doc
     val ids = TextAnalysis.dedupExact(quality)
@@ -67,10 +76,9 @@ object TrainingPipeline {
     val fromCorpus = Dedup.minhashDedupFrom(verified)
       .join(ids.select(col("doc_id").as("keeper_doc_id")),
         Seq("keeper_doc_id"), "left_semi")
-    val fromOverfull = Dedup.minhashDedupFrom(
-      Dedup.subsetOverfullJaccard(sh, overfull, ids))
-    val dupIds = fromCorpus.unionByName(fromOverfull)
-      .select(col("dup_doc_id").as("doc_id"))
+    val pairs = overfull.fold(fromCorpus)(members => fromCorpus.unionByName(
+      Dedup.minhashDedupFrom(Dedup.subsetOverfullJaccard(sh, members, ids))))
+    val dupIds = pairs.select(col("dup_doc_id").as("doc_id"))
     quality.join(ids, Seq("doc_id"), "left_semi")
       .join(dupIds, Seq("doc_id"), "left_anti")
   }
@@ -82,7 +90,7 @@ object TrainingPipeline {
   /** [[run]] over the staged dedup relations (the [[corpusFrom]]
     * convention). */
   def runFrom(documents: DataFrame, sh: DataFrame, verified: DataFrame,
-              overfull: DataFrame): DataFrame =
+              overfull: Option[DataFrame]): DataFrame =
     manifest(corpusFrom(documents, sh, verified, overfull))
 
   private def manifest(corpus: DataFrame): DataFrame =

@@ -24,16 +24,18 @@ object CdcMerge {
     * partial aggregation collapses each key map-side, so the single
     * hash shuffle carries ~|keys| rows instead of |events| — and a hot
     * key is reduced before it ever concentrates on one reducer (no
-    * salting needed; the combiner is the skew handling).
+    * salting needed; the combiner is the skew handling). The changelog's
+    * `k` is not carried: no consumer reads it, and leaving it out keeps
+    * the props JSON parse and the `props` column out of every LWW scan.
     */
   def lastPerKey(changelog: DataFrame): DataFrame =
     changelog
       .groupBy("user_id")
       .agg(max(struct(
         col("ems"), col("event_id"), col("op"), col("epoch_s"),
-        col("value_cents"), col("k"), col("part"))).as("s"))
+        col("value_cents"), col("part"))).as("s"))
       .select(col("user_id"), col("s.event_id"), col("s.op"), col("s.ems"),
-        col("s.epoch_s"), col("s.value_cents"), col("s.k"), col("s.part"))
+        col("s.epoch_s"), col("s.value_cents"), col("s.part"))
 
   /** Merged live state: latest change per key, with deleted keys dropped.
     * This is the "materialized target table" view of the changelog.

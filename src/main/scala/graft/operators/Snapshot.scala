@@ -230,7 +230,7 @@ object Snapshot {
     * the 2-value bounds row. */
   def handoffAudit(changelog: DataFrame): DataFrame = {
     val cols = Seq("event_id", "user_id", "op", "ems", "epoch_s",
-      "value_cents", "k", "part")
+      "value_cents", "part")
     val b = changelog.agg(min("ems"), max("ems")).collect()(0)
     val t = if (b.isNullAt(0)) 0L else (b.getLong(0) + b.getLong(1)) / 2
     val snap = CdcMerge.lastPerKey(changelog.where(col("ems") <= t))

@@ -42,6 +42,18 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("LWW consumers read no props: the cdc_merge and ordered_apply " +
+    "parquet scans leave it out of their ReadSchema") {
+    for (q <- Seq("cdc_merge", "ordered_apply")) {
+      val scans = qe(q).sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      assert(scans.nonEmpty, s"$q has no parquet scan")
+      scans.foreach(s => assert(!s.requiredSchema.fieldNames.contains("props"),
+        s"$q reads props: ${s.requiredSchema.simpleString}"))
+    }
+  }
+
   test("narrow projections are shuffle-free") {
     for (q <- Seq("changelog_normalize", "quality_filter", "doc_fingerprint",
       "multimodal_features", "multimodal_resize", "doc_chunk",

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.jobsDuring
+
 /** Pins the [[Staged]] invalidation contract at the one call site that
   * rewrites parquet in-place within a session: [[AmplifyCorpus.amplify]]
   * over an output dir that may already be staged. Without the
@@ -11,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * files they were built from) and the distinct-doc count would not
   * move — i.e. the amplify lane's parity run would silently verify
   * stale data unless launched in a fresh JVM. The invalidation and
-  * eviction tests run over every registered relation.
+  * eviction tests run over every registered relation; the row-count
+  * test pins that [[Staged.rows]] counts once and is dropped with its
+  * relation.
   */
 class StagedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -70,6 +74,23 @@ class StagedSpec extends AnyFunSuite {
       spark.conf.set(Staged.ReliableKey, "false")
       Staged.invalidate() // don't leak reliable relations to other suites
     }
+  }
+
+  test("rows counts a staged relation once: a second request launches " +
+    "no job, and invalidate() and application end each drop the count") {
+    def rows = Staged.rows(spark, TestSpark.Sf, "buckets")
+    val n = rows
+    assert(n === Staged.rounds(spark, TestSpark.Sf, "buckets").last.count())
+    assert(jobsDuring(assert(rows === n)) === 0, "counted twice")
+    Staged.invalidate()
+    assert(jobsDuring(assert(rows === n)) > 0, "count survived invalidate()")
+    assert(jobsDuring(rows) === 0)
+    org.apache.spark.GraftTestBridge.post(spark.sparkContext,
+      org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
+    org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
+    assert(jobsDuring(assert(rows === n)) > 0,
+      "count survived application end")
+    Staged.invalidate() // leave a clean slate for peer suites
   }
 
   test("application end evicts a session's staged entries (no pinned " +

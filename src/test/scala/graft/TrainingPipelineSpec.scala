@@ -17,7 +17,9 @@ import graft.operators.Dedup
   * their signatures, and so their 16 LSH buckets, are identical. A
   * family of more than MaxQuadraticBucket members fills over-full
   * buckets in every band; its texts of at most 16 two-letter tokens are
-  * under 50 characters and fail the quality gate.
+  * under 50 characters and fail the quality gate. A corpus without
+  * over-full buckets goes through the pruned build (no re-pairing), the
+  * two with them through the re-pairing branch.
   */
 class TrainingPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -42,14 +44,23 @@ class TrainingPipelineSpec extends AnyFunSuite {
       .withColumn("doc_id", col("doc_id") + 100000L)
 
   /** `corpusFrom` over the full corpus's dedup relations, built as
-    * `Staged` builds them. */
-  private def fromCorpusPairs(documents: DataFrame): DataFrame = {
+    * `Staged` builds them, with the over-full members passed only when
+    * they have rows (as `Staged.DedupRels.overfullIfAny` passes them).
+    * `branch` is whether the corpus must take the over-full re-pairing;
+    * `both` also builds the other path, which must agree. */
+  private def fromCorpusPairs(documents: DataFrame, branch: Boolean,
+                              both: Boolean = false): Seq[String] = {
     val sh = Dedup.shingleHashes(documents)
     val sigs = Dedup.signaturesFromHashes(sh).localCheckpoint(false)
     val stats = Dedup.bucketStats(sigs)
-    val overfull = Dedup.overfullMembers(sigs, stats)
-    TrainingPipeline.corpusFrom(documents, sh,
-      Dedup.ngramJaccardFrom(sh, sigs, stats, overfull), overfull)
+    val overfull = Dedup.overfullMembers(sigs, stats).localCheckpoint(false)
+    val verified = Dedup.ngramJaccardFrom(sh, sigs, stats, overfull)
+    assert((overfull.count() > 0) === branch)
+    def build(members: Option[DataFrame]): Seq[String] =
+      rows(TrainingPipeline.corpusFrom(documents, sh, verified, members))
+    val got = build(Option.when(branch)(overfull))
+    if (both) assert(build(Option.unless(branch)(overfull)) === got)
+    got
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -63,8 +74,9 @@ class TrainingPipelineSpec extends AnyFunSuite {
       .select("bn").as[Long].collect().toSeq
   }
 
-  private def assertExact(documents: DataFrame): Seq[String] = {
-    val got = rows(fromCorpusPairs(documents))
+  private def assertExact(documents: DataFrame, branch: Boolean,
+                          both: Boolean = false): Seq[String] = {
+    val got = fromCorpusPairs(documents, branch, both)
     assert(got === rows(TrainingPipeline.corpus(documents)))
     got
   }
@@ -74,7 +86,8 @@ class TrainingPipelineSpec extends AnyFunSuite {
       Seq((5L, familyText(0, 20)), (6L, familyText(0, 12)))
     val documents = docs(family).unionByName(background)
     assert(overfullSizes(documents).isEmpty)
-    val got = assertExact(documents)
+    // the re-pairing over the empty members adds nothing either
+    val got = assertExact(documents, branch = false, both = true)
     // one member of the near-dup family is left
     assert(got.count(_.contains("ta tb")) === 1)
   }
@@ -86,7 +99,7 @@ class TrainingPipelineSpec extends AnyFunSuite {
       yield ((copy * 10 + t).toLong, familyText(t, 20 + t))
     val documents = docs(family).unionByName(background)
     assert(overfullSizes(documents).toSet === Set(70L))
-    val got = assertExact(documents)
+    val got = assertExact(documents, branch = true)
     assert(got.count(_.contains("ta tb")) === 1)
   }
 
@@ -99,8 +112,28 @@ class TrainingPipelineSpec extends AnyFunSuite {
         familyText(i % cycle.size, lengths(i / cycle.size))))
     val documents = docs(family).unionByName(background)
     assert(overfullSizes(documents).toSet === Set(71L))
-    val got = assertExact(documents)
+    val got = assertExact(documents, branch = true)
     assert(got.filter(_.contains("ta tb")).map(_.takeWhile(_ != ','))
       === Seq("[1"))
   }
+
+  test("with Staged forced, the training_pipeline plan reads neither the " +
+    "staged sh nor overfull") {
+    val sf = TestSpark.Sf
+    val read = Seq("sh", "overfull", "verified").map { n =>
+      Staged.rows(spark, sf, n) // forces the relation and its inputs
+      n -> rdds(Staged.rounds(spark, sf, n).last)
+    }.toMap
+    assert(Staged.rows(spark, sf, "overfull") === 0)
+    val plan = rdds(SparkEntry.queries("training_pipeline")(spark, sf))
+    assert(read("verified").subsetOf(plan), "staged verified not read?")
+    assert(plan.intersect(read("sh") ++ read("overfull")).isEmpty,
+      "the pruned build reads the staged sh or overfull")
+  }
+
+  /** The ids of the RDDs a plan's staged (checkpointed) leaves read. */
+  private def rdds(df: DataFrame): Set[Int] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
 }
