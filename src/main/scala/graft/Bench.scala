@@ -82,30 +82,19 @@ object Bench {
     // The whole sync pass is timed as a flow in each pass too: the
     // pipeline_e2e query executes only its `applied` output.
     // Pass 2 also counts the Spark jobs each query launches while its
-    // DataFrame is BUILT: construction runs under a local property that
-    // every job submitted meanwhile carries, so the count adds no wait
-    // to the timed body.
-    val ConstructKey = "graft.bench.construct"
-    val constructJobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(ConstructKey)))
-          .foreach(constructJobs.merge(_, 1, (a: Integer, b: Integer) => Int.box(a + b)))
-    })
+    // DataFrame is BUILT (ConstructJobs: a local property that every
+    // job submitted meanwhile carries, so the count adds no wait to the
+    // timed body). A query whose plan SparkEntry.queries keeps reads 0
+    // there; the others are listed with their reason in "uncached".
+    val sc = spark.sparkContext
     val syncPass = scala.collection.mutable.ListBuffer[Double]()
     val passes = (1 to 2).map { pass =>
       val t = scala.collection.mutable.LinkedHashMap[String, Double]()
       names.foreach { case (name, fn) =>
         if (!causes.contains(name))
           timed(name) {
-            if (pass == 2) {
-              constructJobs.putIfAbsent(name, 0)
-              spark.sparkContext.setLocalProperty(ConstructKey, name)
-            }
-            val df = try fn(spark, sfDir)
-              finally spark.sparkContext.setLocalProperty(ConstructKey, null)
-            noop(df)
+            noop(if (pass == 2) ConstructJobs.tagged(sc, name)(fn(spark, sfDir))
+              else fn(spark, sfDir))
           }.foreach(t(name) = _)
       }
       if (!causes.contains("sync_pass"))
@@ -148,7 +137,9 @@ object Bench {
     // reconciles; the COMPLETE per-query map and the per-relation
     // staging seconds ("staged") and bytes ("staged_bytes"), the flow
     // timings ("flows"), the pass-2 construction job counts
-    // ("construct_jobs") and the failed queries' causes ("failed_causes")
+    // ("construct_jobs"), why each query that is built on every call
+    // was not kept ("uncached") and the failed queries' causes
+    // ("failed_causes")
     // go to BENCH_LOCAL.json only, in the repo, committed every round
     // for machine diffing.
     val TailTopK = 70
@@ -171,13 +162,17 @@ object Bench {
     System.err.println(s"[bench] writing full per-query map to $benchLocal")
     val bytesJson =
       stagedBytes.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
-    val constructJson = names.map(_._1).filter(constructJobs.containsKey)
-      .map(n => s"${q(n)}:${constructJobs.get(n)}").mkString("{", ",", "}")
+    // -1: the listener bus did not deliver the count in time
+    val constructJson = names.map(_._1).filterNot(causes.contains)
+      .map(n => s"${q(n)}:${ConstructJobs.take(sc, n).getOrElse(-1)}")
+      .mkString("{", ",", "}")
+    val uncachedJson = names.flatMap { case (n, _) =>
+      Staged.kept(spark, sfDir, n).flatMap(_.swap.toOption).map(n -> _)
+    }.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val causesJson =
       causes.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(benchLocal,
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"staged":${obj(stagedRel)},"staged_bytes":$bytesJson,"noise_ratio":${cs(noiseRatio)},"queries":${obj(timings)},"flows":${obj(syncPass.minOption.map("sync_pass" -> _))},"construct_jobs":$constructJson,"failed":$fs,"failed_causes":$causesJson,"sf":${q(sfDir)}}""")
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"staged":${obj(stagedRel)},"staged_bytes":$bytesJson,"noise_ratio":${cs(noiseRatio)},"queries":${obj(timings)},"flows":${obj(syncPass.minOption.map("sync_pass" -> _))},"construct_jobs":$constructJson,"uncached":$uncachedJson,"failed":$fs,"failed_causes":$causesJson,"sf":${q(sfDir)}}""")
     val topQs = obj(byCost.take(TailTopK))
     val otherSec = byCost.drop(TailTopK).map(_._2).sum
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","staged_sec":${ms(stagedSec)},"noise_ratio":${cs(noiseRatio)},"queries":$topQs,"n_queries":${timings.size},"other_sec":${cs(otherSec)},"failed":$fs,"sf":${q(sfDir)}}""")

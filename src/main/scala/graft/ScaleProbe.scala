@@ -111,8 +111,10 @@ object ScaleProbe {
     * it times the staged builds the query reads instead of a filter over
     * a relation the previous run cached — without it the gate would stop
     * covering the staged chains (the minhash chain behind
-    * `dedup_minhash`, the images behind `image_dedup`) — and each
-    * table's file listing and schema inference. Min-of-2 on the
+    * `dedup_minhash`, the images behind `image_dedup`) — each
+    * table's file listing and schema inference, and the query's
+    * DataFrame construction (the plan [[Staged.query]] keeps is dropped
+    * with them). Min-of-2 on the
     * k× side too: with a single k× sample the noise sensitivity is
     * asymmetric (a throttle window during the one big-side run always
     * pushes the ratio in the failing direction — a red gate at noise

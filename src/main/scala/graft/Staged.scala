@@ -2,7 +2,9 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   Spread, TextAnalysis}
@@ -50,13 +52,18 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   * it (training_pipeline drops its over-full re-pairing when the staged
   * `overfull` is empty) without a job on every call.
   *
+  * [[query]] keeps each registry query's analyzed plan beside the
+  * staged relations it reads, so a repeat call skips DataFrame
+  * construction (see there).
+  *
   * Keyed by (session, dir, name): a new session or a different corpus
   * path stages fresh; re-writing parquet UNDER an already-staged dir
   * within one session serves stale data (same contract as any staged
   * table — call [[invalidate]] after in-place rewrites; AmplifyCorpus
   * does so in its write path). The same contract covers the tables
-  * [[Tables]] resolves once per session: [[invalidate]] and the
-  * application-end eviction drop them with the staged relations.
+  * [[Tables]] resolves once per session and the query plans:
+  * [[invalidate]] and the application-end eviction drop them with the
+  * staged relations.
   */
 object Staged {
 
@@ -139,14 +146,27 @@ object Staged {
   val names: Seq[String] = registry.map(_.name)
 
   /** One relation's cache entry under (session, dir): its staged
-    * copies, one per round, and the [[rows]] count of the last. */
+    * copies, one per round, the [[rows]] count of the last, and the ids
+    * of the copies' RDDs (the `LogicalRDD` leaves of a consumer's
+    * plan). */
   private final class Entry(val rounds: Seq[DataFrame]) {
     lazy val rows: Long = rounds.last.count()
+    val rddIds: Seq[Int] = rounds.flatMap(_.queryExecution.analyzed
+      .collect { case r: LogicalRDD => r.rdd.id })
   }
 
   private val cache = TrieMap.empty[(SparkSession, String, String), Entry]
 
-  /** Sessions whose application-end listener is installed. The cache
+  /** [[query]]'s plans per (session, dir, query name, session conf):
+    * the analyzed plan of a kept build, or why the last build was not
+    * kept. */
+  private val plans = TrieMap.empty[
+    (SparkSession, String, String, Map[String, String]),
+    Either[String, LogicalPlan]]
+
+  private val buildTags = new java.util.concurrent.atomic.AtomicLong
+
+  /** Sessions whose application-end listener is installed. The caches
     * (and [[Tables]]' resolved tables) key by session object, which
     * would otherwise strongly retain the session and its checkpointed
     * blocks for process lifetime in a long-lived multi-session JVM —
@@ -174,6 +194,7 @@ object Staged {
               e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
               : Unit = {
             cache.filterInPlace { case ((s, _, _), _) => s ne spark }
+            plans.filterInPlace { case ((s, _, _, _), _) => s ne spark }
             Tables.resolved.filterInPlace { case ((s, _), _) => s ne spark }
             hooked.remove(spark)
           }
@@ -220,12 +241,67 @@ object Staged {
     (s"staged:${r.name}", r.nestedLoopOk, r.build(new Inputs(spark, sfDir, prev)))
   }
 
+  /** Registry query `name` over (session, dir), as `build` makes it —
+    * [[SparkEntry.queries]] calls every registry build through here.
+    *
+    * A build's analyzed plan is kept under (session, dir, name, session
+    * conf), and a later call with the same key gets a fresh DataFrame
+    * over it: the analyzer returns an analyzed plan as it is, and each
+    * call gets its own QueryExecution (physical plan, AQE state,
+    * shuffles), so a hit is the plan a fresh build returns and runs as
+    * one. The conf is the snapshot `spark.conf.getAll` taken after the
+    * build: a conf change is a miss, and a hit leaves the conf as a
+    * fresh build does (the `nanosAsLong` that [[Tables.rawEvents]]
+    * sets is already set).
+    *
+    * A plan is kept only when its build launched no Spark job (counted
+    * per building thread, [[ConstructJobs]]) and every `LogicalRDD`
+    * leaf of the plan is a staged relation's copy; otherwise the
+    * reason is recorded ([[kept]]) and the next call builds again.
+    * So no kept plan holds data computed while it was built, or an
+    * in-query checkpoint, outside the staged relations. A kept plan
+    * lives as long as the staged relations: [[invalidate]] and the
+    * application-end eviction drop both. */
+  private[graft] def query(spark: SparkSession, sfDir: String, name: String)
+                          (build: => DataFrame): DataFrame =
+    kept(spark, sfDir, name) match {
+      case Some(Right(plan)) => GraftBridge.ofAnalyzed(spark, plan)
+      case _ =>
+        hookEviction(spark)
+        val sc = spark.sparkContext
+        val tag = s"$name#${buildTags.incrementAndGet()}"
+        val df = ConstructJobs.tagged(sc, tag)(build)
+        val plan = df.queryExecution.analyzed
+        plans((spark, sfDir, name, spark.conf.getAll)) =
+          if (!ConstructJobs.take(sc, tag).contains(0))
+            Left("job during build")
+          else {
+            val staged = cache.collect {
+              case ((s, _, _), e) if s eq spark => e.rddIds
+            }.flatten.toSet
+            if (plan.collectWithSubqueries { case r: LogicalRDD => r.rdd.id }
+                .forall(staged)) Right(plan)
+            else Left("non-staged checkpoint")
+          }
+        df
+    }
+
+  /** [[query]]'s entry for (session, dir, name) under the session's
+    * current conf: Right(the kept plan), Left(why the last build was
+    * not kept: "job during build" or "non-staged checkpoint"), or None
+    * when there was no build. */
+  private[graft] def kept(spark: SparkSession, sfDir: String, name: String)
+  : Option[Either[String, LogicalPlan]] =
+    plans.get((spark, sfDir, name, spark.conf.getAll))
+
   /** Drop all staged entries (block-manager copies are reclaimed by the
-    * context cleaner once unreferenced) and every resolved table
-    * ([[Tables]]), so the next read lists the files and infers the
-    * schema again. For in-place corpus rewrites within a session —
-    * tests and the amplify lane. */
-  def invalidate(): Unit = { cache.clear(); Tables.resolved.clear() }
+    * context cleaner once unreferenced), every kept query plan
+    * ([[query]]) and every resolved table ([[Tables]]), so the next
+    * read lists the files and infers the schema again. For in-place
+    * corpus rewrites within a session — tests and the amplify lane. */
+  def invalidate(): Unit = {
+    cache.clear(); plans.clear(); Tables.resolved.clear()
+  }
 
   /** The dedup family: the shingle hashes, minhash signatures, the
     * members of the over-full LSH buckets, the verified LSH pairs and

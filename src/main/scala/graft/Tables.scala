@@ -56,7 +56,11 @@ object Tables {
     * uniform by construction. It stays a session setting even though
     * the relation is resolved once: schema inference reads it at the
     * first resolve, and the parquet reader reads it again when each
-    * query executes, so every call sets it before returning.
+    * query executes, so every call sets it before returning. A
+    * registry query's kept plan ([[Staged.query]]) does not call this
+    * again: it is keyed by the session conf its build left, so it is
+    * served only while nanosAsLong is set, and a session where it was
+    * unset misses and builds afresh.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame =
     eventsFrom(rawEvents(spark, sfDir))

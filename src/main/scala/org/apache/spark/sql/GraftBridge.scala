@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
@@ -7,8 +8,9 @@ import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 /** Minimal bridge into `private[sql]` API: convert between the public
   * Column and a Catalyst Expression (Spark 4 removed the public
   * `new Column(expr)` path), make a DataFrame over a logical plan, and
-  * wait for the listener bus. Lives in the org.apache.spark.sql package
-  * solely for visibility; no Spark internals are modified.
+  * wait for or post to the listener bus. Lives in the
+  * org.apache.spark.sql package solely for visibility; no Spark
+  * internals are modified.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -16,7 +18,32 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark, plan)
 
+  /** A DataFrame over `plan`, an analyzed plan shared between calls:
+    * the analyzer returns an analyzed plan as it is, and each call gets
+    * its own QueryExecution. The root node is copied because a Dataset
+    * records its id in a mutable set tagged on its plan's root
+    * (`Dataset.DATASET_ID_TAG`): a shared root would collect the id of
+    * every DataFrame ever made over it, from every thread. */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    val root =
+      plan.makeCopy(plan.productIterator.map(_.asInstanceOf[AnyRef]).toArray)
+    root.unsetTagValue(classic.Dataset.DATASET_ID_TAG)
+    root.setAnalyzed()
+    ofRows(spark, root)
+  }
+
   /** Blocks until every queued listener event has been delivered. */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** A listener-bus event that carries no data: a listener that
+    * receives it has received every event posted before it (a queue
+    * delivers in order). Not written to the event log. */
+  final class BusMark extends SparkListenerEvent {
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    override protected[spark] def logEvent: Boolean = false
+  }
+
+  def post(sc: org.apache.spark.SparkContext, e: SparkListenerEvent): Unit =
+    sc.listenerBus.post(e)
 }

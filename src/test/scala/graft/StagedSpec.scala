@@ -13,9 +13,10 @@ import graft.TestSpark.jobsDuring
   * files they were built from) and the distinct-doc count would not
   * move — i.e. the amplify lane's parity run would silently verify
   * stale data unless launched in a fresh JVM. The invalidation and
-  * eviction tests run over every registered relation; the row-count
-  * test pins that [[Staged.rows]] counts once and is dropped with its
-  * relation.
+  * eviction tests run over every registered relation and also pin that
+  * the query plans [[Staged.query]] keeps are dropped with them; the
+  * row-count test pins that [[Staged.rows]] counts once and is dropped
+  * with its relation.
   */
 class StagedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -23,6 +24,14 @@ class StagedSpec extends AnyFunSuite {
   /** Every registered relation's staged copies under `dir`. */
   private def all(dir: String): Map[String, Seq[DataFrame]] =
     Staged.names.map(n => n -> Staged.rounds(spark, dir, n)).toMap
+
+  /** Builds registry query `name` over `dir` twice and returns whether
+    * its plan is kept. */
+  private def keptAfterTwoCalls(dir: String, name: String): Boolean = {
+    SparkEntry.queries(name)(spark, dir)
+    SparkEntry.queries(name)(spark, dir)
+    Staged.kept(spark, dir, name).exists(_.isRight)
+  }
 
   /** The relations `after` still serves as the same instances as `before`. */
   private def reused(before: Map[String, Seq[DataFrame]],
@@ -40,9 +49,12 @@ class StagedSpec extends AnyFunSuite {
     val sh2 = Staged.dedup(spark, out).sh.count()
     val k2 = all(out)
     assert(reused(k2, all(out)) === Staged.names, "cache miss?")
+    assert(keptAfterTwoCalls(out, "token_topk"), "query plan not kept?")
 
     // in-place rewrite of the SAME dir at a larger k
     AmplifyCorpus.amplify(spark, base, out, 3)
+    assert(Staged.kept(spark, out, "token_topk").isEmpty,
+      "query plan kept across the rewrite's invalidate()")
     assert(reused(k2, all(out)).isEmpty,
       "relations served across the rewrite's invalidate()")
     val docs3 = Staged.tokens(spark, out).tokens
@@ -103,11 +115,15 @@ class StagedSpec extends AnyFunSuite {
     assert(reused(first, all(TestSpark.Sf)) === Staged.names, "cache miss?")
     def tables = Tables.resolved.keys.filter(_._1 eq spark).map(_._2)
     assert(tables.nonEmpty, "no resolved table to evict?")
+    assert(keptAfterTwoCalls(TestSpark.Sf, "token_topk"),
+      "query plan not kept?")
     org.apache.spark.GraftTestBridge.post(spark.sparkContext,
       org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
     org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
     assert(tables.isEmpty,
       s"resolved tables survived application end: $tables")
+    assert(Staged.kept(spark, TestSpark.Sf, "token_topk").isEmpty,
+      "query plan survived application end")
     val kept = reused(first, all(TestSpark.Sf))
     assert(kept.isEmpty,
       s"staged entries survived application end — session retained: $kept")
