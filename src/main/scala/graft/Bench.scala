@@ -70,7 +70,7 @@ object Bench {
     val (stagedRel, stagedBytes) = Staged.names.map { n =>
       val b0 = storedBytes()
       val t0 = System.nanoTime()
-      Staged.rows(spark, sfDir, n)
+      Staged.rows(Corpus(spark, sfDir), n)
       (n -> (System.nanoTime() - t0) / 1e9, n -> (storedBytes() - b0))
     }.unzip
     val stagedSec = stagedRel.map(_._2).sum
@@ -167,7 +167,7 @@ object Bench {
       .map(n => s"${q(n)}:${ConstructJobs.take(sc, n).getOrElse(-1)}")
       .mkString("{", ",", "}")
     val uncachedJson = names.flatMap { case (n, _) =>
-      Staged.kept(spark, sfDir, n).flatMap(_.swap.toOption).map(n -> _)
+      Staged.kept(Corpus(spark, sfDir), n).flatMap(_.swap.toOption).map(n -> _)
     }.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val causesJson =
       causes.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")

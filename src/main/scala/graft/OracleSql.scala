@@ -45,7 +45,7 @@ object OracleSql {
       .map(i => s"(qv[$i] - cv[$i]) * (qv[$i] - cv[$i])")
       .mkString(" + ")
 
-  /** Trained-PQ CTE chain — the SQL twin of Similarity.pqTrain's
+  /** Trained-PQ CTE chain — the SQL twin of Similarity.pqTrainFrom's
     * integer Lloyd rounds (Forgy seeds from vec_ids CentroidLo..+15,
     * e6 coordinates, truncated integer means, empty codewords keep
     * position). Ends at pt_r{Iters} (m, k, dim, c6_e6, n_members) and
@@ -754,7 +754,7 @@ object OracleSql {
 
   /** brand_pagerank's staged oracle: the co-purchase edges (the
     * market_basket SQL verbatim) symmetrized, then the SAME damped
-    * integer PageRank rounds as Analytics.brandPagerank, one TEMP
+    * integer PageRank rounds as Analytics.brandPagerankFrom, one TEMP
     * TABLE per round; per-edge contributions divide before summing so
     * both engines are edge-order-free. */
   private lazy val BrandPagerankTempSql: String = {
@@ -965,7 +965,7 @@ object OracleSql {
   private lazy val MinhashCtes: String = minhashCtes("documents")
 
   /** Gopher repetition-rule CTE chain — twin of TextAnalysis
-    * .gopherQuality; ends in `gq(doc_id, n_tokens, distinct_milli,
+    * .gopherQualityFrom; ends in `gq(doc_id, n_tokens, distinct_milli,
     * mean_len_milli, top2gram_milli, keep_b)`, shared by
     * quality_gopher and source_rollup. */
   private lazy val GopherCtes: String =
@@ -4058,7 +4058,7 @@ object OracleSql {
          |FROM wsel GROUP BY doc_id""".stripMargin,
 
     // two independent winnow chains (train vs eval shard) joined on the
-    // fingerprint — the SQL twin of TextAnalysis.contaminationCheck
+    // fingerprint — the SQL twin of TextAnalysis.contaminationCheckFrom
     "contamination_check" ->
       s"""WITH ${winnowCtes(
              s"(SELECT * FROM documents WHERE source <> '${TextAnalysis.EvalSource}')", "t")},

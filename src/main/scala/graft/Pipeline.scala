@@ -17,10 +17,13 @@ object Pipeline {
   final case class Result(applied: DataFrame, state: DataFrame,
                           acks: DataFrame, alerts: DataFrame)
 
-  def run(spark: SparkSession, sfDir: String): Result = {
-    val cl = ChangeLog.normalize(Tables.events(spark, sfDir))
+  def run(spark: SparkSession, sfDir: String): Result =
+    run(Corpus(spark, sfDir))
+
+  def run(c: Corpus): Result = {
+    val cl = ChangeLog.normalize(c.events)
     Result(
-      applied = CdcMerge.upsertApply(cl, Tables.customer(spark, sfDir)),
+      applied = CdcMerge.upsertApply(cl, c.customer),
       state = Ledger.syncState(cl),
       acks = Ledger.batchAck(cl),
       alerts = Ledger.monitorAlerts(cl))

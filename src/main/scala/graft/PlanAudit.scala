@@ -27,7 +27,7 @@ object PlanAudit {
     // execute at materialization, hidden from every consumer query's
     // own plan by the checkpoint boundary
     if (args.length <= 1)
-      Staged.auditPlans(spark, sfDir).foreach { case (n, _, df) => dump(n, df) }
+      Staged.auditPlans(Corpus(spark, sfDir)).foreach { case (n, _, df) => dump(n, df) }
     spark.stop()
   }
 }

@@ -11,741 +11,744 @@ import graft.operators._
   */
 object SparkEntry {
 
-  /** Normalized changelog for a scale-factor dir. */
-  private def cl(s: SparkSession, dir: String): DataFrame =
-    ChangeLog.normalize(Tables.events(s, dir))
+  /** The corpus's normalized changelog. */
+  private def cl(c: Corpus): DataFrame = ChangeLog.normalize(c.events)
+  private def cl(s: SparkSession, dir: String): DataFrame = cl(Corpus(s, dir))
 
   /** The catalog passes' (table, columns) inputs — driven by the SAME
     * [[Snapshot.CatalogColumns]] grid the DuckDB oracles are generated
     * from, so neither side can drift alone. */
-  private def catalogGrid(s: SparkSession, dir: String)
-  : Seq[(String, DataFrame)] = Staged.catalogGrid(s, dir)
+  private def catalogGrid(c: Corpus): Seq[(String, DataFrame)] =
+    Staged.catalogGrid(c)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     CdcMerge.merge(cl(spark, "/root/testdata/sf0.001"))
 
-  /** One entry per implemented operator from SURVEY.md §2, built
-    * through [[Staged.query]]: a repeat call over the same (session,
-    * dir, session conf) gets a new DataFrame over the plan the first
-    * build analyzed — the plan a fresh build returns — unless that
+  /** One entry per implemented operator from SURVEY.md §2 over the
+    * parquet corpus in a dir: [[builds]] run over that dir's
+    * [[Corpus]] through [[Staged.query]]. A repeat call over the same
+    * (session, dir, session conf) gets a new DataFrame over the plan the
+    * first build analyzed — the plan a fresh build returns — unless that
     * build launched a Spark job or holds a checkpoint outside the
     * staged relations; such a query is built on every call. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     builds.map { case (name, build) =>
-      name -> ((s: SparkSession, dir: String) =>
-        Staged.query(s, dir, name)(build(s, dir)))
+      name -> ((s: SparkSession, dir: String) => {
+        val c = Corpus(s, dir); Staged.query(c, name)(build(c)) })
     }
 
-  /** The registry's builds, uncached: every call constructs the
-    * DataFrame anew. */
-  private[graft] val builds
-  : Map[String, (SparkSession, String) => DataFrame] = Map(
-    "changelog_normalize" -> ((s, dir) => cl(s, dir)),
-    "poll_batch"          -> ((s, dir) =>
-      ChangeLog.pollBatch(cl(s, dir)).select("event_id", "user_id", "op", "part")),
-    "cdc_merge"           -> ((s, dir) => CdcMerge.merge(cl(s, dir))),
-    "cdc_upsert_apply"    -> ((s, dir) =>
-      CdcMerge.upsertApply(cl(s, dir), Tables.customer(s, dir))),
-    "idempotence_gate"    -> ((s, dir) =>
-      CdcMerge.idempotenceGate(cl(s, dir), Tables.customer(s, dir))),
-    "cdc_delete_apply"    -> ((s, dir) =>
-      CdcMerge.deleteApply(cl(s, dir), Tables.customer(s, dir))),
-    "incremental_agg"     -> ((s, dir) =>
-      CdcMerge.incrementalAgg(cl(s, dir), Tables.customer(s, dir))),
-    "ordered_apply"       -> ((s, dir) => ChangeLog.orderedApply(cl(s, dir))),
-    "route_fanout"        -> ((s, dir) => ChangeLog.routeFanout(cl(s, dir))),
-    "conditional_capture" -> ((s, dir) =>
-      ChangeLog.conditionalCapture(cl(s, dir))),
-    "batch_ack"           -> ((s, dir) => Ledger.batchAck(cl(s, dir))),
-    "sync_state"          -> ((s, dir) => Ledger.syncState(cl(s, dir))),
-    "monitor_alerts"      -> ((s, dir) => Ledger.monitorAlerts(cl(s, dir))),
-    "error_retry"         -> ((s, dir) => Ledger.errorRetry(cl(s, dir))),
-    "blocked_chain"       -> ((s, dir) => Ledger.blockedChain(cl(s, dir))),
-    "heartbeat_state"     -> ((s, dir) => Ledger.heartbeatState(cl(s, dir))),
-    "component_lifecycle" -> ((s, dir) =>
-      Ledger.componentLifecycle(cl(s, dir))),
-    "retention_sweep"     -> ((s, dir) =>
-      Ledger.retentionSweep(cl(s, dir))),
-    "clean_retention"     -> ((s, dir) => Ledger.cleanRetention(cl(s, dir))),
-    "queue_depth"         -> ((s, dir) => Ledger.queueDepth(cl(s, dir))),
-    "approx_distinct"     -> ((s, dir) => Ledger.approxDistinct(cl(s, dir))),
-    "log_compact"         -> ((s, dir) => Ledger.logCompact(cl(s, dir))),
-    "compaction_plan"     -> ((s, dir) =>
-      Ledger.compactionPlan(cl(s, dir))),
-    "value_median"        -> ((s, dir) => Ledger.valueMedian(cl(s, dir))),
-    "status_rollup"       -> ((s, dir) => Ledger.statusRollup(cl(s, dir))),
-    "endpoint_status"     -> ((s, dir) => Endpoints.statusJson(s, cl(s, dir))),
-    "alert_payloads"      -> ((s, dir) => Endpoints.alertPayloads(cl(s, dir))),
-    "scd2_history"        -> ((s, dir) => Temporal.scd2History(cl(s, dir))),
-    "tier_history"        -> ((s, dir) => Temporal.tierHistory(cl(s, dir))),
-    "event_gaps"          -> ((s, dir) => Temporal.eventGaps(cl(s, dir))),
-    "sessionize"          -> ((s, dir) => Temporal.sessionize(cl(s, dir))),
-    "bounce_rate"         -> ((s, dir) => Temporal.bounceRate(cl(s, dir))),
-    "asof_enrich"         -> ((s, dir) =>
-      Joins.asofEnrich(cl(s, dir), Tables.orders(s, dir))),
-    "pit_snapshot"        -> ((s, dir) => Joins.pitSnapshot(cl(s, dir))),
-    "range_join_events"   -> ((s, dir) =>
-      Joins.rangeJoinEvents(cl(s, dir), Tables.orders(s, dir))),
-    "skew_salted_join"    -> ((s, dir) =>
-      Joins.skewSaltedEnrich(cl(s, dir), Tables.customer(s, dir))),
-    "pause_filter"        -> ((s, dir) => Ledger.pauseFilter(cl(s, dir))),
-    "olap_pricing_summary" -> ((s, dir) =>
-      Analytics.pricingSummary(Tables.lineitem(s, dir))),
-    "olap_top_revenue"    -> ((s, dir) =>
-      Analytics.topRevenueOrders(Tables.customer(s, dir),
-        Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "olap_supplier_nation" -> ((s, dir) =>
-      Analytics.supplierNationRevenue(Tables.supplier(s, dir),
-        Tables.nation(s, dir), Tables.lineitem(s, dir))),
-    "initial_sync"        -> ((s, dir) =>
-      Snapshot.initialSync(Tables.customer(s, dir), Tables.nation(s, dir),
-        Tables.region(s, dir))),
-    "delta_detect"        -> ((s, dir) =>
-      Snapshot.deltaDetect(Tables.customer(s, dir))),
-    "sync_conflicts"      -> ((s, dir) =>
-      Snapshot.syncConflicts(Tables.customer(s, dir))),
-    "handoff_audit"       -> ((s, dir) => Snapshot.handoffAudit(cl(s, dir))),
-    "source_partition_plan" -> ((s, dir) =>
-      Snapshot.sourcePartitionPlan(Tables.customer(s, dir))),
-    "config_matrix"       -> ((s, _) => SyncConfigs.configMatrix(s)),
-    "config_lint"         -> ((s, _) => SyncConfigs.configLint(s)),
-    "trigger_specs"       -> ((s, _) => SyncConfigs.triggerSpecs(s)),
-    "sync_reconcile"      -> ((s, _) => SyncConfigs.syncReconcile(s)),
-    "datasource_status"   -> ((s, _) => SyncConfigs.datasourceStatus(s)),
-    "sync_topology"       -> ((s, _) => SyncConfigs.syncTopology(s)),
-    "blocked_replay"      -> ((s, dir) => Ledger.blockedReplay(cl(s, dir))),
-    "poll_backoff"        -> ((s, dir) => {
+  /** The registry's builds over any [[Corpus]], uncached: every call
+    * constructs the DataFrame anew. A library caller (or a test) runs
+    * one by name over its own tables, e.g.
+    * `builds("dedup_apply")(Corpus("documents" -> docs))`. */
+  val builds
+  : Map[String, Corpus => DataFrame] = Map(
+    "changelog_normalize" -> (c => cl(c)),
+    "poll_batch"          -> (c =>
+      ChangeLog.pollBatch(cl(c)).select("event_id", "user_id", "op", "part")),
+    "cdc_merge"           -> (c => CdcMerge.merge(cl(c))),
+    "cdc_upsert_apply"    -> (c =>
+      CdcMerge.upsertApply(cl(c), c.customer)),
+    "idempotence_gate"    -> (c =>
+      CdcMerge.idempotenceGate(cl(c), c.customer)),
+    "cdc_delete_apply"    -> (c =>
+      CdcMerge.deleteApply(cl(c), c.customer)),
+    "incremental_agg"     -> (c =>
+      CdcMerge.incrementalAgg(cl(c), c.customer)),
+    "ordered_apply"       -> (c => ChangeLog.orderedApply(cl(c))),
+    "route_fanout"        -> (c => ChangeLog.routeFanout(cl(c))),
+    "conditional_capture" -> (c =>
+      ChangeLog.conditionalCapture(cl(c))),
+    "batch_ack"           -> (c => Ledger.batchAck(cl(c))),
+    "sync_state"          -> (c => Ledger.syncState(cl(c))),
+    "monitor_alerts"      -> (c => Ledger.monitorAlerts(cl(c))),
+    "error_retry"         -> (c => Ledger.errorRetry(cl(c))),
+    "blocked_chain"       -> (c => Ledger.blockedChain(cl(c))),
+    "heartbeat_state"     -> (c => Ledger.heartbeatState(cl(c))),
+    "component_lifecycle" -> (c =>
+      Ledger.componentLifecycle(cl(c))),
+    "retention_sweep"     -> (c =>
+      Ledger.retentionSweep(cl(c))),
+    "clean_retention"     -> (c => Ledger.cleanRetention(cl(c))),
+    "queue_depth"         -> (c => Ledger.queueDepth(cl(c))),
+    "approx_distinct"     -> (c => Ledger.approxDistinct(cl(c))),
+    "log_compact"         -> (c => Ledger.logCompact(cl(c))),
+    "compaction_plan"     -> (c =>
+      Ledger.compactionPlan(cl(c))),
+    "value_median"        -> (c => Ledger.valueMedian(cl(c))),
+    "status_rollup"       -> (c => Ledger.statusRollup(cl(c))),
+    "endpoint_status"     -> (c => Endpoints.statusJson(c.spark, cl(c))),
+    "alert_payloads"      -> (c => Endpoints.alertPayloads(cl(c))),
+    "scd2_history"        -> (c => Temporal.scd2History(cl(c))),
+    "tier_history"        -> (c => Temporal.tierHistory(cl(c))),
+    "event_gaps"          -> (c => Temporal.eventGaps(cl(c))),
+    "sessionize"          -> (c => Temporal.sessionize(cl(c))),
+    "bounce_rate"         -> (c => Temporal.bounceRate(cl(c))),
+    "asof_enrich"         -> (c =>
+      Joins.asofEnrich(cl(c), c.orders)),
+    "pit_snapshot"        -> (c => Joins.pitSnapshot(cl(c))),
+    "range_join_events"   -> (c =>
+      Joins.rangeJoinEvents(cl(c), c.orders)),
+    "skew_salted_join"    -> (c =>
+      Joins.skewSaltedEnrich(cl(c), c.customer)),
+    "pause_filter"        -> (c => Ledger.pauseFilter(cl(c))),
+    "olap_pricing_summary" -> (c =>
+      Analytics.pricingSummary(c.lineitem)),
+    "olap_top_revenue"    -> (c =>
+      Analytics.topRevenueOrders(c.customer,
+        c.orders, c.lineitem)),
+    "olap_supplier_nation" -> (c =>
+      Analytics.supplierNationRevenue(c.supplier,
+        c.nation, c.lineitem)),
+    "initial_sync"        -> (c =>
+      Snapshot.initialSync(c.customer, c.nation,
+        c.region)),
+    "delta_detect"        -> (c =>
+      Snapshot.deltaDetect(c.customer)),
+    "sync_conflicts"      -> (c =>
+      Snapshot.syncConflicts(c.customer)),
+    "handoff_audit"       -> (c => Snapshot.handoffAudit(cl(c))),
+    "source_partition_plan" -> (c =>
+      Snapshot.sourcePartitionPlan(c.customer)),
+    "config_matrix"       -> (c => SyncConfigs.configMatrix(c.spark)),
+    "config_lint"         -> (c => SyncConfigs.configLint(c.spark)),
+    "trigger_specs"       -> (c => SyncConfigs.triggerSpecs(c.spark)),
+    "sync_reconcile"      -> (c => SyncConfigs.syncReconcile(c.spark)),
+    "datasource_status"   -> (c => SyncConfigs.datasourceStatus(c.spark)),
+    "sync_topology"       -> (c => SyncConfigs.syncTopology(c.spark)),
+    "blocked_replay"      -> (c => Ledger.blockedReplay(cl(c))),
+    "poll_backoff"        -> (c => {
       val sys = SyncConfigs.parse(SyncConfigs.DemoYaml).sys
-      Ledger.pollBackoff(cl(s, dir), sys.batch.toLong, sys.maxPollWait.toLong)
+      Ledger.pollBackoff(cl(c), sys.batch.toLong, sys.maxPollWait.toLong)
     }),
-    "stream_window_agg"   -> ((s, dir) => streamWindowAgg(s, dir)),
-    "stream_merge_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.mergeParity(s, cl(s, dir))),
-    "stream_sessionize_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.sessionizeParity(s, cl(s, dir))),
-    "stream_dedup_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.dedupParity(s, Tables.events(s, dir))),
-    "stream_window_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.windowParity(s, Tables.events(s, dir))),
-    "stream_late_parity"  -> ((s, dir) =>
-      graft.streaming.CdcStream.lateParity(s, Tables.events(s, dir))),
-    "stream_attribution_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.attributionParity(s, Tables.events(s, dir))),
-    "stream_transitions_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.transitionsParity(s, Tables.events(s, dir))),
-    "stream_funnel_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.funnelParity(s, Tables.events(s, dir))),
-    "stream_queue_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.queueParity(s, cl(s, dir))),
-    "stream_balance_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.balanceParity(s, cl(s, dir))),
-    "stream_tier_parity"  -> ((s, dir) =>
-      graft.streaming.CdcStream.tierParity(s, cl(s, dir))),
-    "pipeline_e2e"        -> ((s, dir) => Pipeline.run(s, dir).applied),
+    "stream_window_agg"   -> (c => streamWindowAgg(c)),
+    "stream_merge_parity" -> (c =>
+      graft.streaming.CdcStream.mergeParity(c.spark, cl(c))),
+    "stream_sessionize_parity" -> (c =>
+      graft.streaming.CdcStream.sessionizeParity(c.spark, cl(c))),
+    "stream_dedup_parity" -> (c =>
+      graft.streaming.CdcStream.dedupParity(c.spark, c.events)),
+    "stream_window_parity" -> (c =>
+      graft.streaming.CdcStream.windowParity(c.spark, c.events)),
+    "stream_late_parity"  -> (c =>
+      graft.streaming.CdcStream.lateParity(c.spark, c.events)),
+    "stream_attribution_parity" -> (c =>
+      graft.streaming.CdcStream.attributionParity(c.spark, c.events)),
+    "stream_transitions_parity" -> (c =>
+      graft.streaming.CdcStream.transitionsParity(c.spark, c.events)),
+    "stream_funnel_parity" -> (c =>
+      graft.streaming.CdcStream.funnelParity(c.spark, c.events)),
+    "stream_queue_parity" -> (c =>
+      graft.streaming.CdcStream.queueParity(c.spark, cl(c))),
+    "stream_balance_parity" -> (c =>
+      graft.streaming.CdcStream.balanceParity(c.spark, cl(c))),
+    "stream_tier_parity"  -> (c =>
+      graft.streaming.CdcStream.tierParity(c.spark, cl(c))),
+    "pipeline_e2e"        -> (c => Pipeline.run(c).applied),
     // LLM-data-pipeline operators (SURVEY.md §2 #23-34)
-    "dedup_exact"         -> ((s, dir) =>
-      TextAnalysis.dedupExact(Tables.documents(s, dir))),
-    "text_stats"          -> ((s, dir) =>
-      TextAnalysis.textStats(Tables.documents(s, dir))),
-    "readability_score"   -> ((s, dir) =>
-      TextAnalysis.readabilityScore(Tables.documents(s, dir))),
-    "lang_id"             -> ((s, dir) =>
-      TextAnalysis.langId(Tables.documents(s, dir))),
-    "token_count"         -> ((s, dir) =>
-      TextAnalysis.tokenCount(Tables.documents(s, dir))),
-    "doc_fingerprint"     -> ((s, dir) =>
-      TextAnalysis.docFingerprint(Tables.documents(s, dir))),
-    "doc_winnow"          -> ((s, dir) =>
-      TextAnalysis.winnowStatsFrom(Staged.tokens(s, dir).winnow)),
-    "contamination_check" -> ((s, dir) =>
-      TextAnalysis.contaminationCheckFrom(Staged.tokens(s, dir).winnow)),
-    "token_topk"          -> ((s, dir) =>
-      TextAnalysis.tokenTopKFrom(Staged.tokens(s, dir).freq)),
-    "pii_scrub"           -> ((s, dir) =>
-      TextAnalysis.piiScrub(Tables.documents(s, dir))),
-    "multimodal_features" -> ((s, dir) =>
-      Multimodal.features(Tables.documents(s, dir))),
-    "multimodal_decode"   -> ((s, dir) =>
-      Multimodal.decodeFeatures(s, Staged.images(s, dir).imgs).toDF()),
-    "image_decode"        -> ((s, dir) =>
-      Multimodal.imageDecode(Staged.images(s, dir).imgs)),
-    "image_dedup"         -> ((s, dir) =>
-      Multimodal.imageDedupFrom(Staged.images(s, dir).fps)),
-    "multimodal_frames"   -> ((s, dir) =>
-      Multimodal.frameSample(s,
-        Multimodal.mediaTable(Tables.documents(s, dir))).toDF()
+    "dedup_exact"         -> (c =>
+      TextAnalysis.dedupExact(c.documents)),
+    "text_stats"          -> (c =>
+      TextAnalysis.textStats(c.documents)),
+    "readability_score"   -> (c =>
+      TextAnalysis.readabilityScore(c.documents)),
+    "lang_id"             -> (c =>
+      TextAnalysis.langId(c.documents)),
+    "token_count"         -> (c =>
+      TextAnalysis.tokenCount(c.documents)),
+    "doc_fingerprint"     -> (c =>
+      TextAnalysis.docFingerprint(c.documents)),
+    "doc_winnow"          -> (c =>
+      TextAnalysis.winnowStatsFrom(Staged.tokens(c).winnow)),
+    "contamination_check" -> (c =>
+      TextAnalysis.contaminationCheckFrom(Staged.tokens(c).winnow)),
+    "token_topk"          -> (c =>
+      TextAnalysis.tokenTopKFrom(Staged.tokens(c).freq)),
+    "pii_scrub"           -> (c =>
+      TextAnalysis.piiScrub(c.documents)),
+    "multimodal_features" -> (c =>
+      Multimodal.features(c.documents)),
+    "multimodal_decode"   -> (c =>
+      Multimodal.decodeFeatures(c.spark, Staged.images(c).imgs).toDF()),
+    "image_decode"        -> (c =>
+      Multimodal.imageDecode(Staged.images(c).imgs)),
+    "image_dedup"         -> (c =>
+      Multimodal.imageDedupFrom(Staged.images(c).fps)),
+    "multimodal_frames"   -> (c =>
+      Multimodal.frameSample(c.spark,
+        Multimodal.mediaTable(c.documents)).toDF()
         .select(col("doc_id"), col("frame_idx"),
           octet_length(col("frame_bytes")).cast("long").as("frame_len"),
           col("width"), col("height"))),
-    "multimodal_resize"   -> ((s, dir) =>
+    "multimodal_resize"   -> (c =>
       Multimodal.resizeMeta(
-        Multimodal.mediaTable(Tables.documents(s, dir)))
+        Multimodal.mediaTable(c.documents))
         .select("doc_id", "width", "height", "out_width", "out_height")),
-    "ann_topk"            -> ((s, dir) => Staged.ann(s, dir).cosTruth),
-    "ann_lsh"             -> ((s, dir) =>
-      Similarity.lshTopK(Tables.embeddings(s, dir))),
-    "lsh_multiprobe"      -> ((s, dir) =>
-      Similarity.lshMultiprobe(Tables.embeddings(s, dir))),
-    "embed_quantize"      -> ((s, dir) =>
-      Similarity.quantizeStats(Tables.embeddings(s, dir))),
-    "ivf_assign"          -> ((s, dir) => Staged.ann(s, dir).assign),
-    "ann_ivf"             -> ((s, dir) =>
-      Similarity.ivfTopKFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "dedup_embedding"     -> ((s, dir) =>
-      Similarity.embeddingNearDup(Tables.embeddings(s, dir))),
-    "cross_lang_pairs"    -> ((s, dir) =>
-      Similarity.crossLangPairs(Tables.embeddings(s, dir),
-        Tables.documents(s, dir))),
-    "semantic_contamination" -> ((s, dir) =>
-      Similarity.semanticContamination(Tables.embeddings(s, dir))),
-    "dedup_minhash"       -> ((s, dir) => Staged.dedup(s, dir).dups),
-    "dedup_ngram_jaccard" -> ((s, dir) => Staged.dedup(s, dir).verified),
-    "dedup_simhash"       -> ((s, dir) => Staged.dedup(s, dir).simPairs),
-    "dedup_apply"         -> ((s, dir) =>
-      Dedup.dedupApply(Tables.documents(s, dir), Staged.dedup(s, dir).dups)),
-    "dedup_incremental"   -> ((s, dir) => {
-      val st = Staged.dedup(s, dir)
+    "ann_topk"            -> (c => Staged.ann(c).cosTruth),
+    "ann_lsh"             -> (c =>
+      Similarity.lshTopK(c.embeddings)),
+    "lsh_multiprobe"      -> (c =>
+      Similarity.lshMultiprobe(c.embeddings)),
+    "embed_quantize"      -> (c =>
+      Similarity.quantizeStats(c.embeddings)),
+    "ivf_assign"          -> (c => Staged.ann(c).assign),
+    "ann_ivf"             -> (c =>
+      Similarity.ivfTopKFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "dedup_embedding"     -> (c =>
+      Similarity.embeddingNearDup(c.embeddings)),
+    "cross_lang_pairs"    -> (c =>
+      Similarity.crossLangPairs(c.embeddings,
+        c.documents)),
+    "semantic_contamination" -> (c =>
+      Similarity.semanticContamination(c.embeddings)),
+    "dedup_minhash"       -> (c => Staged.dedup(c).dups),
+    "dedup_ngram_jaccard" -> (c => Staged.dedup(c).verified),
+    "dedup_simhash"       -> (c => Staged.dedup(c).simPairs),
+    "dedup_apply"         -> (c =>
+      Dedup.dedupApply(c.documents, Staged.dedup(c).dups)),
+    "dedup_incremental"   -> (c => {
+      val st = Staged.dedup(c)
       Dedup.incrementalDedupFrom(st.sh, st.sigs)
     }),
-    "ivf_train"           -> ((s, dir) =>
-      Similarity.ivfTrainStep(Tables.embeddings(s, dir))),
-    "ivf_incremental"     -> ((s, dir) =>
-      Similarity.ivfIncrementalFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "knn_graph"           -> ((s, dir) =>
-      Similarity.knnGraphFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "hubness_audit"       -> ((s, dir) =>
-      Similarity.hubnessAuditFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "knn_components"      -> ((s, dir) =>
-      Similarity.knnComponentsFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "nn_descent"          -> ((s, dir) =>
-      Similarity.nnDescentFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "knn_recall"          -> ((s, dir) =>
-      Similarity.knnRecallFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "knn_recall_probe"    -> ((s, dir) =>
-      Similarity.knnRecallProbeFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "knn_graph_probe"     -> ((s, dir) =>
-      Similarity.knnGraphProbeFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "knn_components_probe" -> ((s, dir) =>
-      Similarity.knnComponentsProbeFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "nn_descent_probe"    -> ((s, dir) =>
-      Similarity.nnDescentProbeFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "hubness_audit_probe" -> ((s, dir) =>
-      Similarity.hubnessAuditProbeFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "ann_index_card"      -> ((s, dir) =>
-      Similarity.annIndexCardFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "ivf_balance"         -> ((s, dir) =>
-      Similarity.ivfBalanceFrom(Staged.ann(s, dir).assign)),
-    "embed_drift"         -> ((s, dir) =>
-      Similarity.embedDrift(Tables.embeddings(s, dir))),
-    "quality_filter"      -> ((s, dir) =>
-      TextAnalysis.qualityFilter(Tables.documents(s, dir))),
-    "corpus_sample"       -> ((s, dir) =>
-      TextAnalysis.stratifiedSample(Tables.documents(s, dir))),
-    "split_assign"        -> ((s, dir) =>
-      TextAnalysis.splitAssign(Tables.documents(s, dir))),
-    "split_kfold"         -> ((s, dir) =>
-      TextAnalysis.splitKfold(Tables.documents(s, dir))),
-    "training_pipeline"   -> ((s, dir) => {
-      val d = Staged.dedup(s, dir)
-      TrainingPipeline.runFrom(Tables.documents(s, dir), d.sh, d.verified,
+    "ivf_train"           -> (c =>
+      Similarity.ivfTrainStep(c.embeddings)),
+    "ivf_incremental"     -> (c =>
+      Similarity.ivfIncrementalFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "knn_graph"           -> (c =>
+      Similarity.knnGraphFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "hubness_audit"       -> (c =>
+      Similarity.hubnessAuditFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "knn_components"      -> (c =>
+      Similarity.knnComponentsFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "nn_descent"          -> (c =>
+      Similarity.nnDescentFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "knn_recall"          -> (c =>
+      Similarity.knnRecallFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "knn_recall_probe"    -> (c =>
+      Similarity.knnRecallProbeFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "knn_graph_probe"     -> (c =>
+      Similarity.knnGraphProbeFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "knn_components_probe" -> (c =>
+      Similarity.knnComponentsProbeFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "nn_descent_probe"    -> (c =>
+      Similarity.nnDescentProbeFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "hubness_audit_probe" -> (c =>
+      Similarity.hubnessAuditProbeFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "ann_index_card"      -> (c =>
+      Similarity.annIndexCardFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "ivf_balance"         -> (c =>
+      Similarity.ivfBalanceFrom(Staged.ann(c).assign)),
+    "embed_drift"         -> (c =>
+      Similarity.embedDrift(c.embeddings)),
+    "quality_filter"      -> (c =>
+      TextAnalysis.qualityFilter(c.documents)),
+    "corpus_sample"       -> (c =>
+      TextAnalysis.stratifiedSample(c.documents)),
+    "split_assign"        -> (c =>
+      TextAnalysis.splitAssign(c.documents)),
+    "split_kfold"         -> (c =>
+      TextAnalysis.splitKfold(c.documents)),
+    "training_pipeline"   -> (c => {
+      val d = Staged.dedup(c)
+      TrainingPipeline.runFrom(c.documents, d.sh, d.verified,
         d.overfullIfAny)
     }),
-    "dup_cluster"         -> ((s, dir) =>
-      Dedup.dupClustersFrom(Staged.dedup(s, dir).dups)),
-    "soft_dedup_weights"  -> ((s, dir) =>
-      Dedup.softDedupWeights(Tables.documents(s, dir),
-        Staged.dedup(s, dir).dups)),
-    "contrastive_triplets" -> ((s, dir) =>
-      Similarity.contrastiveTriplets(Staged.dedup(s, dir).dups,
-        Tables.embeddings(s, dir))),
-    "quality_gopher"      -> ((s, dir) => Staged.tokens(s, dir).gopher),
-    "repeat_plan"         -> ((s, dir) =>
-      Curation.repeatPlanFrom(Tables.documents(s, dir),
-        Staged.tokens(s, dir).gopher)),
-    "doc_rarity"          -> ((s, dir) => {
-      val st = Staged.tokens(s, dir)
+    "dup_cluster"         -> (c =>
+      Dedup.dupClustersFrom(Staged.dedup(c).dups)),
+    "soft_dedup_weights"  -> (c =>
+      Dedup.softDedupWeights(c.documents,
+        Staged.dedup(c).dups)),
+    "contrastive_triplets" -> (c =>
+      Similarity.contrastiveTriplets(Staged.dedup(c).dups,
+        c.embeddings)),
+    "quality_gopher"      -> (c => Staged.tokens(c).gopher),
+    "repeat_plan"         -> (c =>
+      Curation.repeatPlanFrom(c.documents,
+        Staged.tokens(c).gopher)),
+    "doc_rarity"          -> (c => {
+      val st = Staged.tokens(c)
       TextAnalysis.docRarityFrom(st.tokens, st.freq)
     }),
-    "mix_weights"         -> ((s, dir) =>
-      TextAnalysis.mixWeights(Tables.documents(s, dir))),
-    "mix_temperature"     -> ((s, dir) =>
-      TextAnalysis.mixTemperature(Tables.documents(s, dir))),
-    "blocklist_filter"    -> ((s, dir) =>
-      TextAnalysis.blocklistFilter(Tables.documents(s, dir))),
-    "doc_chunk"           -> ((s, dir) =>
-      TextAnalysis.docChunks(Tables.documents(s, dir))),
-    "pack_sequences"      -> ((s, dir) =>
-      TextAnalysis.packSequences(Tables.documents(s, dir))),
-    "pack_efficiency"     -> ((s, dir) =>
-      TextAnalysis.packEfficiency(Tables.documents(s, dir))),
-    "padding_plan"        -> ((s, dir) =>
-      TextAnalysis.paddingPlan(Tables.documents(s, dir))),
-    "dist_drift"          -> ((s, dir) =>
-      TextAnalysis.distDriftFrom(Staged.tokens(s, dir).tokens)),
-    "source_rollup"       -> ((s, dir) =>
-      TextAnalysis.sourceRollupFrom(Tables.documents(s, dir),
-        Staged.tokens(s, dir).gopher)),
-    "span_dedup"          -> ((s, dir) =>
-      TextAnalysis.spanDedup(Tables.documents(s, dir))),
-    "span_corruption"     -> ((s, dir) =>
-      TextAnalysis.spanCorruptionPlan(Tables.documents(s, dir))),
-    "bpe_merge"           -> ((s, dir) =>
-      TextAnalysis.bpeMergeStepFrom(Staged.tokens(s, dir).freq)),
-    "token_budget"        -> ((s, dir) =>
-      TextAnalysis.tokenBudgetFrom(Tables.documents(s, dir),
-        Staged.tokens(s, dir).gopher)),
-    "epoch_shuffle"       -> ((s, dir) =>
-      TextAnalysis.epochShuffle(Tables.documents(s, dir))),
-    "curriculum_order"    -> ((s, dir) =>
-      TextAnalysis.curriculumOrderFrom(Staged.tokens(s, dir).gopher)),
-    "vocab_coverage"      -> ((s, dir) => {
-      val st = Staged.tokens(s, dir)
+    "mix_weights"         -> (c =>
+      TextAnalysis.mixWeights(c.documents)),
+    "mix_temperature"     -> (c =>
+      TextAnalysis.mixTemperature(c.documents)),
+    "blocklist_filter"    -> (c =>
+      TextAnalysis.blocklistFilter(c.documents)),
+    "doc_chunk"           -> (c =>
+      TextAnalysis.docChunks(c.documents)),
+    "pack_sequences"      -> (c =>
+      TextAnalysis.packSequences(c.documents)),
+    "pack_efficiency"     -> (c =>
+      TextAnalysis.packEfficiency(c.documents)),
+    "padding_plan"        -> (c =>
+      TextAnalysis.paddingPlan(c.documents)),
+    "dist_drift"          -> (c =>
+      TextAnalysis.distDriftFrom(Staged.tokens(c).tokens)),
+    "source_rollup"       -> (c =>
+      TextAnalysis.sourceRollupFrom(c.documents,
+        Staged.tokens(c).gopher)),
+    "span_dedup"          -> (c =>
+      TextAnalysis.spanDedup(c.documents)),
+    "span_corruption"     -> (c =>
+      TextAnalysis.spanCorruptionPlan(c.documents)),
+    "bpe_merge"           -> (c =>
+      TextAnalysis.bpeMergeStepFrom(Staged.tokens(c).freq)),
+    "token_budget"        -> (c =>
+      TextAnalysis.tokenBudgetFrom(c.documents,
+        Staged.tokens(c).gopher)),
+    "epoch_shuffle"       -> (c =>
+      TextAnalysis.epochShuffle(c.documents)),
+    "curriculum_order"    -> (c =>
+      TextAnalysis.curriculumOrderFrom(Staged.tokens(c).gopher)),
+    "vocab_coverage"      -> (c => {
+      val st = Staged.tokens(c)
       TextAnalysis.vocabCoverageFrom(st.tokens, st.freq)
     }),
-    "vocab_coverage_curve" -> ((s, dir) => {
-      val st = Staged.tokens(s, dir)
+    "vocab_coverage_curve" -> (c => {
+      val st = Staged.tokens(c)
       TextAnalysis.vocabCoverageCurveFrom(st.tokens, st.freq)
     }),
-    "vocab_growth"        -> ((s, dir) =>
-      TextAnalysis.vocabGrowthFrom(Staged.tokens(s, dir).tokens)),
-    "semantic_dedup"      -> ((s, dir) =>
-      Similarity.semanticDedupFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "ngram_lm_score"      -> ((s, dir) =>
-      TextAnalysis.ngramLmScoreFrom(Staged.tokens(s, dir).skipgrams)),
-    "quality_classify"    -> ((s, dir) =>
-      TextAnalysis.qualityClassifyFrom(Staged.tokens(s, dir).tokens)),
-    "dataset_card"        -> ((s, dir) =>
-      TextAnalysis.datasetCard(Tables.documents(s, dir))),
-    "substring_dedup"     -> ((s, dir) =>
-      Dedup.substringDedup(Tables.documents(s, dir))),
-    "pq_encode"           -> ((s, dir) =>
-      Similarity.pqEncode(Tables.embeddings(s, dir))),
-    "pq_search"           -> ((s, dir) =>
-      Similarity.pqSearch(Tables.embeddings(s, dir))),
-    "pq_recall"           -> ((s, dir) =>
-      Similarity.pqRecallFrom(Staged.ann(s, dir).l2truth,
-        Tables.embeddings(s, dir))),
-    "pq_train"            -> ((s, dir) =>
-      Similarity.pqTrainFrom(Staged.ann(s, dir).chain)),
-    "ann_hard_negatives"  -> ((s, dir) =>
-      Similarity.hardNegatives(Tables.embeddings(s, dir))),
-    "pq_recall_trained"   -> ((s, dir) => {
-      val a = Staged.ann(s, dir)
+    "vocab_growth"        -> (c =>
+      TextAnalysis.vocabGrowthFrom(Staged.tokens(c).tokens)),
+    "semantic_dedup"      -> (c =>
+      Similarity.semanticDedupFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "ngram_lm_score"      -> (c =>
+      TextAnalysis.ngramLmScoreFrom(Staged.tokens(c).skipgrams)),
+    "quality_classify"    -> (c =>
+      TextAnalysis.qualityClassifyFrom(Staged.tokens(c).tokens)),
+    "dataset_card"        -> (c =>
+      TextAnalysis.datasetCard(c.documents)),
+    "substring_dedup"     -> (c =>
+      Dedup.substringDedup(c.documents)),
+    "pq_encode"           -> (c =>
+      Similarity.pqEncode(c.embeddings)),
+    "pq_search"           -> (c =>
+      Similarity.pqSearch(c.embeddings)),
+    "pq_recall"           -> (c =>
+      Similarity.pqRecallFrom(Staged.ann(c).l2truth,
+        c.embeddings)),
+    "pq_train"            -> (c =>
+      Similarity.pqTrainFrom(Staged.ann(c).chain)),
+    "ann_hard_negatives"  -> (c =>
+      Similarity.hardNegatives(c.embeddings)),
+    "pq_recall_trained"   -> (c => {
+      val a = Staged.ann(c)
       Similarity.pqRecallTrainedFrom(a.chain, a.sub, a.l2truth,
-        Tables.embeddings(s, dir))
+        c.embeddings)
     }),
-    "pq_recall_curve"     -> ((s, dir) => {
-      val a = Staged.ann(s, dir)
+    "pq_recall_curve"     -> (c => {
+      val a = Staged.ann(c)
       Similarity.pqRecallCurveFrom(a.chain, a.sub, a.l2truth,
-        Tables.embeddings(s, dir))
+        c.embeddings)
     }),
-    "pq_recall_opq"       -> ((s, dir) => {
-      val a = Staged.ann(s, dir)
+    "pq_recall_opq"       -> (c => {
+      val a = Staged.ann(c)
       Similarity.pqRecallOpqFrom(a.opqChain, a.opqSub,
-        Similarity.opqQSubFrom(Tables.embeddings(s, dir), a.opqPerm),
+        Similarity.opqQSubFrom(c.embeddings, a.opqPerm),
         a.l2truth)
     }),
-    "pq_opq_balance"      -> ((s, dir) =>
-      Similarity.opqSubspaceBalance(Tables.embeddings(s, dir))),
-    "pq_recall_residual"  -> ((s, dir) =>
-      Similarity.pqRecallResidualFrom(Tables.embeddings(s, dir),
-        Staged.ann(s, dir).l2truth)),
-    "pq_rerank_curve"     -> ((s, dir) => {
-      val a = Staged.ann(s, dir)
+    "pq_opq_balance"      -> (c =>
+      Similarity.opqSubspaceBalance(c.embeddings)),
+    "pq_recall_residual"  -> (c =>
+      Similarity.pqRecallResidualFrom(c.embeddings,
+        Staged.ann(c).l2truth)),
+    "pq_rerank_curve"     -> (c => {
+      val a = Staged.ann(c)
       Similarity.pqRerankCurveFrom(a.chain, a.sub, a.l2truth,
-        Tables.embeddings(s, dir))
+        c.embeddings)
     }),
-    "bpe_train_curve"     -> ((s, dir) =>
-      TextAnalysis.bpeTrainCurveFrom(Staged.tokens(s, dir).freq)),
-    "tfidf_topk"          -> ((s, dir) =>
-      TextAnalysis.tfidfTopKFrom(Staged.tokens(s, dir).tokens)),
-    "value_quantiles"     -> ((s, dir) => Ledger.valueQuantiles(cl(s, dir))),
-    "quantile_sketch_error" -> ((s, dir) =>
-      Ledger.quantileSketchError(cl(s, dir))),
-    "value_concentration" -> ((s, dir) =>
-      Ledger.valueConcentration(cl(s, dir))),
-    "slo_burn"            -> ((s, dir) => Ledger.sloBurn(cl(s, dir))),
-    "migration_plan"      -> ((s, dir) =>
-      Snapshot.migrationPlan(s, Seq(
-        "region" -> Tables.region(s, dir),
-        "nation" -> Tables.nation(s, dir),
-        "customer" -> Tables.customer(s, dir),
-        "supplier" -> Tables.supplier(s, dir),
-        "part" -> Tables.part(s, dir),
-        "orders" -> Tables.orders(s, dir),
-        "lineitem" -> Tables.lineitem(s, dir),
-        "documents" -> Tables.documents(s, dir),
-        "embeddings" -> Tables.embeddings(s, dir)))),
-    "key_skew_report"     -> ((s, dir) => Ledger.keySkewReport(cl(s, dir))),
-    "sync_lag"            -> ((s, dir) => Ledger.syncLag(cl(s, dir))),
-    "sq_recall"           -> ((s, dir) =>
-      Similarity.sqRecallFrom(Staged.ann(s, dir).cosTruth,
-        Tables.embeddings(s, dir))),
-    "rp_recall"           -> ((s, dir) =>
-      Similarity.rpRecallFrom(Staged.ann(s, dir).cosTruth,
-        Tables.embeddings(s, dir))),
-    "ivf_sq_recall"       -> ((s, dir) =>
-      Similarity.ivfSqRecallFrom(Staged.ann(s, dir).cosTruth,
-        Staged.ann(s, dir).assign, Tables.embeddings(s, dir))),
-    "mrl_recall"          -> ((s, dir) =>
-      Similarity.mrlRecallCurveFrom(Staged.ann(s, dir).cosTruth,
-        Tables.embeddings(s, dir))),
-    "bq_recall"           -> ((s, dir) =>
-      Similarity.bqRecallFrom(Staged.ann(s, dir).cosTruth,
-        Tables.embeddings(s, dir))),
-    "ivf_recall"          -> ((s, dir) => {
-      val a = Staged.ann(s, dir)
+    "bpe_train_curve"     -> (c =>
+      TextAnalysis.bpeTrainCurveFrom(Staged.tokens(c).freq)),
+    "tfidf_topk"          -> (c =>
+      TextAnalysis.tfidfTopKFrom(Staged.tokens(c).tokens)),
+    "value_quantiles"     -> (c => Ledger.valueQuantiles(cl(c))),
+    "quantile_sketch_error" -> (c =>
+      Ledger.quantileSketchError(cl(c))),
+    "value_concentration" -> (c =>
+      Ledger.valueConcentration(cl(c))),
+    "slo_burn"            -> (c => Ledger.sloBurn(cl(c))),
+    "migration_plan"      -> (c =>
+      Snapshot.migrationPlan(c.spark, Seq(
+        "region" -> c.region,
+        "nation" -> c.nation,
+        "customer" -> c.customer,
+        "supplier" -> c.supplier,
+        "part" -> c.part,
+        "orders" -> c.orders,
+        "lineitem" -> c.lineitem,
+        "documents" -> c.documents,
+        "embeddings" -> c.embeddings))),
+    "key_skew_report"     -> (c => Ledger.keySkewReport(cl(c))),
+    "sync_lag"            -> (c => Ledger.syncLag(cl(c))),
+    "sq_recall"           -> (c =>
+      Similarity.sqRecallFrom(Staged.ann(c).cosTruth,
+        c.embeddings)),
+    "rp_recall"           -> (c =>
+      Similarity.rpRecallFrom(Staged.ann(c).cosTruth,
+        c.embeddings)),
+    "ivf_sq_recall"       -> (c =>
+      Similarity.ivfSqRecallFrom(Staged.ann(c).cosTruth,
+        Staged.ann(c).assign, c.embeddings)),
+    "mrl_recall"          -> (c =>
+      Similarity.mrlRecallCurveFrom(Staged.ann(c).cosTruth,
+        c.embeddings)),
+    "bq_recall"           -> (c =>
+      Similarity.bqRecallFrom(Staged.ann(c).cosTruth,
+        c.embeddings)),
+    "ivf_recall"          -> (c => {
+      val a = Staged.ann(c)
       Similarity.ivfRecallFrom(a.cosTruth, a.assign,
-        Tables.embeddings(s, dir))
+        c.embeddings)
     }),
-    "ivf_recall_curve"    -> ((s, dir) => {
-      val a = Staged.ann(s, dir)
+    "ivf_recall_curve"    -> (c => {
+      val a = Staged.ann(c)
       Similarity.ivfRecallCurveFrom(a.cosTruth, a.assign,
-        Tables.embeddings(s, dir))
+        c.embeddings)
     }),
-    "shard_balance"       -> ((s, dir) =>
-      TextAnalysis.shardBalance(Tables.documents(s, dir))),
-    "ring_rebalance"      -> ((s, dir) =>
-      TextAnalysis.ringRebalance(Tables.documents(s, dir))),
-    "backfill_plan"       -> ((s, dir) =>
-      Snapshot.backfillPlan(Tables.customer(s, dir))),
-    "ingest_parity"       -> ((s, dir) =>
-      TextAnalysis.ingestParity(Tables.documents(s, dir))),
-    "pmi_pairs"           -> ((s, dir) => {
-      val st = Staged.tokens(s, dir)
+    "shard_balance"       -> (c =>
+      TextAnalysis.shardBalance(c.documents)),
+    "ring_rebalance"      -> (c =>
+      TextAnalysis.ringRebalance(c.documents)),
+    "backfill_plan"       -> (c =>
+      Snapshot.backfillPlan(c.customer)),
+    "ingest_parity"       -> (c =>
+      TextAnalysis.ingestParity(c.documents)),
+    "pmi_pairs"           -> (c => {
+      val st = Staged.tokens(c)
       TextAnalysis.pmiPairsFrom(st.skipgrams, st.freq)
     }),
-    "bpe_apply"           -> ((s, dir) =>
-      TextAnalysis.bpeApplyStepFrom(Staged.tokens(s, dir).freq)),
-    "apply_batch_plan"    -> ((s, dir) =>
-      ChangeLog.applyBatchPlan(cl(s, dir))),
-    "props_census"        -> ((s, dir) =>
-      ChangeLog.propsCensus(Tables.events(s, dir))),
-    "funnel_conversion"   -> ((s, dir) =>
-      Analytics.funnelConversion(Tables.events(s, dir))),
-    "attribution_last_touch" -> ((s, dir) =>
-      Analytics.attributionLastTouch(Tables.events(s, dir))),
-    "attribution_linear"  -> ((s, dir) =>
-      Analytics.attributionLinear(Tables.events(s, dir))),
-    "stream_linear_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.linearParity(s, Tables.events(s, dir))),
-    "attribution_position" -> ((s, dir) =>
-      Analytics.attributionPosition(Tables.events(s, dir))),
-    "stream_position_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.positionParity(s, Tables.events(s, dir))),
-    "event_transitions"   -> ((s, dir) =>
-      Analytics.eventTransitions(Tables.events(s, dir))),
-    "event_paths"         -> ((s, dir) =>
-      Analytics.eventPaths(Tables.events(s, dir))),
-    "rate_changepoint"    -> ((s, dir) =>
-      Temporal.rateChangepoint(Tables.events(s, dir))),
-    "rfm_segments"        -> ((s, dir) =>
-      Analytics.rfmSegments(Tables.events(s, dir))),
-    "retention_cohorts"   -> ((s, dir) =>
-      Analytics.retentionCohorts(Tables.events(s, dir))),
-    "cohort_ltv"          -> ((s, dir) =>
-      Analytics.cohortLtv(Tables.events(s, dir))),
-    "value_histogram"     -> ((s, dir) =>
-      Analytics.valueHistogram(cl(s, dir))),
-    "minhash_est_error"   -> ((s, dir) => {
-      val st = Staged.dedup(s, dir)
+    "bpe_apply"           -> (c =>
+      TextAnalysis.bpeApplyStepFrom(Staged.tokens(c).freq)),
+    "apply_batch_plan"    -> (c =>
+      ChangeLog.applyBatchPlan(cl(c))),
+    "props_census"        -> (c =>
+      ChangeLog.propsCensus(c.events)),
+    "funnel_conversion"   -> (c =>
+      Analytics.funnelConversion(c.events)),
+    "attribution_last_touch" -> (c =>
+      Analytics.attributionLastTouch(c.events)),
+    "attribution_linear"  -> (c =>
+      Analytics.attributionLinear(c.events)),
+    "stream_linear_parity" -> (c =>
+      graft.streaming.CdcStream.linearParity(c.spark, c.events)),
+    "attribution_position" -> (c =>
+      Analytics.attributionPosition(c.events)),
+    "stream_position_parity" -> (c =>
+      graft.streaming.CdcStream.positionParity(c.spark, c.events)),
+    "event_transitions"   -> (c =>
+      Analytics.eventTransitions(c.events)),
+    "event_paths"         -> (c =>
+      Analytics.eventPaths(c.events)),
+    "rate_changepoint"    -> (c =>
+      Temporal.rateChangepoint(c.events)),
+    "rfm_segments"        -> (c =>
+      Analytics.rfmSegments(c.events)),
+    "retention_cohorts"   -> (c =>
+      Analytics.retentionCohorts(c.events)),
+    "cohort_ltv"          -> (c =>
+      Analytics.cohortLtv(c.events)),
+    "value_histogram"     -> (c =>
+      Analytics.valueHistogram(cl(c))),
+    "minhash_est_error"   -> (c => {
+      val st = Staged.dedup(c)
       Dedup.minhashEstErrorFrom(st.sh, st.sigs)
     }),
-    "dedup_agreement"     -> ((s, dir) => {
-      val st = Staged.dedup(s, dir)
+    "dedup_agreement"     -> (c => {
+      val st = Staged.dedup(c)
       Dedup.dedupMethodAgreementFrom(st.dups, st.simPairs)
     }),
-    "doclen_histogram"    -> ((s, dir) =>
-      TextAnalysis.docLenHistogram(Tables.documents(s, dir))),
-    "ngram_novelty"       -> ((s, dir) =>
-      TextAnalysis.ngramNovelty(Tables.documents(s, dir))),
-    "embed_norm_stats"    -> ((s, dir) =>
-      Similarity.embedNormStats(Tables.embeddings(s, dir))),
-    "checksum_compare"    -> ((s, dir) =>
-      Snapshot.checksumCompare(Tables.customer(s, dir))),
-    "benford_audit"       -> ((s, dir) =>
-      Snapshot.benfordAudit(Tables.orders(s, dir))),
-    "mad_outliers"        -> ((s, dir) =>
-      Snapshot.madOutliers(Tables.orders(s, dir),
-        Tables.customer(s, dir))),
-    "order_reconcile"     -> ((s, dir) =>
-      Snapshot.orderReconcile(Tables.orders(s, dir),
-        Tables.lineitem(s, dir))),
-    "access_export"       -> ((s, dir) =>
-      Snapshot.accessExport(cl(s, dir), Tables.customer(s, dir),
-        Tables.orders(s, dir))),
-    "fk_integrity"        -> ((s, dir) =>
-      Snapshot.fkIntegrityFrom(Staged.catalog(s, dir))),
-    "kmeans_shift"        -> ((s, dir) =>
-      Similarity.kmeansShift(Tables.embeddings(s, dir))),
-    "cluster_cohesion"    -> ((s, dir) =>
-      Similarity.clusterCohesion(Tables.embeddings(s, dir))),
-    "ann_tombstones"      -> ((s, dir) =>
-      Similarity.annTombstones(Tables.embeddings(s, dir))),
-    "kmeans_stability"    -> ((s, dir) =>
-      Similarity.kmeansStability(Tables.embeddings(s, dir))),
-    "seasonal_anomaly"    -> ((s, dir) =>
-      Temporal.seasonalAnomaly(cl(s, dir))),
-    "queue_wait_audit"    -> ((s, dir) =>
-      Temporal.queueWaitAudit(cl(s, dir))),
-    "bot_detection"       -> ((s, dir) =>
-      Temporal.botDetection(cl(s, dir))),
-    "acf_profile"         -> ((s, dir) =>
-      Temporal.acfProfile(cl(s, dir))),
-    "fano_burstiness"     -> ((s, dir) =>
-      Temporal.fanoBurstiness(cl(s, dir))),
-    "watermark_sweep"     -> ((s, dir) =>
-      Temporal.watermarkSweep(cl(s, dir))),
-    "sequence_gap_audit"  -> ((s, dir) =>
-      Ledger.sequenceGapAudit(cl(s, dir))),
-    "stream_gap_parity"   -> ((s, dir) =>
-      graft.streaming.CdcStream.gapParity(s, cl(s, dir))),
-    "stream_compaction_parity" -> ((s, dir) =>
-      graft.streaming.CdcStream.compactionParity(s, cl(s, dir))),
-    "view_refresh_plan"   -> ((s, dir) =>
-      CdcMerge.viewRefreshPlan(Tables.orders(s, dir),
-        Tables.lineitem(s, dir))),
-    "ops_dashboard"       -> ((s, dir) => Ledger.opsDashboard(cl(s, dir))),
-    "data_skipping_audit" -> ((s, dir) =>
-      Snapshot.dataSkippingAudit(Tables.lineitem(s, dir))),
-    "cooccur_topk"        -> ((s, dir) =>
-      TextAnalysis.cooccurTopKFrom(Staged.tokens(s, dir).skipgrams)),
-    "olap_order_priority" -> ((s, dir) =>
-      Analytics.orderPriority(Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "quality_calibration" -> ((s, dir) => {
-      val st = Staged.tokens(s, dir)
+    "doclen_histogram"    -> (c =>
+      TextAnalysis.docLenHistogram(c.documents)),
+    "ngram_novelty"       -> (c =>
+      TextAnalysis.ngramNovelty(c.documents)),
+    "embed_norm_stats"    -> (c =>
+      Similarity.embedNormStats(c.embeddings)),
+    "checksum_compare"    -> (c =>
+      Snapshot.checksumCompare(c.customer)),
+    "benford_audit"       -> (c =>
+      Snapshot.benfordAudit(c.orders)),
+    "mad_outliers"        -> (c =>
+      Snapshot.madOutliers(c.orders,
+        c.customer)),
+    "order_reconcile"     -> (c =>
+      Snapshot.orderReconcile(c.orders,
+        c.lineitem)),
+    "access_export"       -> (c =>
+      Snapshot.accessExport(cl(c), c.customer,
+        c.orders)),
+    "fk_integrity"        -> (c =>
+      Snapshot.fkIntegrityFrom(Staged.catalog(c))),
+    "kmeans_shift"        -> (c =>
+      Similarity.kmeansShift(c.embeddings)),
+    "cluster_cohesion"    -> (c =>
+      Similarity.clusterCohesion(c.embeddings)),
+    "ann_tombstones"      -> (c =>
+      Similarity.annTombstones(c.embeddings)),
+    "kmeans_stability"    -> (c =>
+      Similarity.kmeansStability(c.embeddings)),
+    "seasonal_anomaly"    -> (c =>
+      Temporal.seasonalAnomaly(cl(c))),
+    "queue_wait_audit"    -> (c =>
+      Temporal.queueWaitAudit(cl(c))),
+    "bot_detection"       -> (c =>
+      Temporal.botDetection(cl(c))),
+    "acf_profile"         -> (c =>
+      Temporal.acfProfile(cl(c))),
+    "fano_burstiness"     -> (c =>
+      Temporal.fanoBurstiness(cl(c))),
+    "watermark_sweep"     -> (c =>
+      Temporal.watermarkSweep(cl(c))),
+    "sequence_gap_audit"  -> (c =>
+      Ledger.sequenceGapAudit(cl(c))),
+    "stream_gap_parity"   -> (c =>
+      graft.streaming.CdcStream.gapParity(c.spark, cl(c))),
+    "stream_compaction_parity" -> (c =>
+      graft.streaming.CdcStream.compactionParity(c.spark, cl(c))),
+    "view_refresh_plan"   -> (c =>
+      CdcMerge.viewRefreshPlan(c.orders,
+        c.lineitem)),
+    "ops_dashboard"       -> (c => Ledger.opsDashboard(cl(c))),
+    "data_skipping_audit" -> (c =>
+      Snapshot.dataSkippingAudit(c.lineitem)),
+    "cooccur_topk"        -> (c =>
+      TextAnalysis.cooccurTopKFrom(Staged.tokens(c).skipgrams)),
+    "olap_order_priority" -> (c =>
+      Analytics.orderPriority(c.orders, c.lineitem)),
+    "quality_calibration" -> (c => {
+      val st = Staged.tokens(c)
       TextAnalysis.qualityCalibrationFrom(
         TextAnalysis.qualityClassifyFrom(st.tokens), st.gopher)
     }),
-    "cluster_size_hist"   -> ((s, dir) => Dedup.clusterSizeHistFrom(
-      Dedup.dupClustersFrom(Staged.dedup(s, dir).dups))),
-    "user_profile"        -> ((s, dir) => Temporal.userProfile(cl(s, dir))),
-    "arrival_monitor"     -> ((s, dir) => Temporal.arrivalMonitor(cl(s, dir))),
-    "arrival_anomaly"     -> ((s, dir) => Temporal.arrivalAnomaly(cl(s, dir))),
-    "olap_promo_revenue"  -> ((s, dir) =>
-      Analytics.promoRevenue(Tables.part(s, dir), Tables.lineitem(s, dir))),
-    "load_profile"        -> ((s, dir) => Analytics.loadProfile(cl(s, dir))),
-    "table_manifest"      -> ((s, dir) =>
-      Snapshot.tableManifest(Tables.region(s, dir), Tables.nation(s, dir),
-        Tables.customer(s, dir), Tables.supplier(s, dir), Tables.part(s, dir),
-        Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "catalog_stats"       -> ((s, dir) =>
-      Snapshot.catalogStatsFrom(Staged.catalog(s, dir),
+    "cluster_size_hist"   -> (c => Dedup.clusterSizeHistFrom(
+      Dedup.dupClustersFrom(Staged.dedup(c).dups))),
+    "user_profile"        -> (c => Temporal.userProfile(cl(c))),
+    "arrival_monitor"     -> (c => Temporal.arrivalMonitor(cl(c))),
+    "arrival_anomaly"     -> (c => Temporal.arrivalAnomaly(cl(c))),
+    "olap_promo_revenue"  -> (c =>
+      Analytics.promoRevenue(c.part, c.lineitem)),
+    "load_profile"        -> (c => Analytics.loadProfile(cl(c))),
+    "table_manifest"      -> (c =>
+      Snapshot.tableManifest(c.region, c.nation,
+        c.customer, c.supplier, c.part,
+        c.orders, c.lineitem)),
+    "catalog_stats"       -> (c =>
+      Snapshot.catalogStatsFrom(Staged.catalog(c),
         Snapshot.CatalogColumns)),
-    "partition_advisor"   -> ((s, dir) =>
-      Snapshot.partitionAdvisor(catalogGrid(s, dir))),
-    "catalog_stats_sketch" -> ((s, dir) =>
-      Snapshot.catalogStatsSketchGateFrom(Staged.catalog(s, dir),
-        Snapshot.CatalogColumns, catalogGrid(s, dir))),
-    "join_size_estimate"  -> ((s, dir) =>
-      Snapshot.joinSizeEstimateFrom(Staged.catalog(s, dir))),
-    "anisotropy_audit"    -> ((s, dir) =>
-      Similarity.anisotropyAudit(Tables.embeddings(s, dir))),
-    "mmr_diversify"       -> ((s, dir) =>
-      Similarity.mmrDiversify(Tables.embeddings(s, dir))),
-    "modal_align"         -> ((s, dir) =>
-      Multimodal.modalAlign(Tables.documents(s, dir),
-        Tables.embeddings(s, dir))),
-    "bloom_prune"         -> ((s, dir) => Sketches.bloomPrune(cl(s, dir))),
-    "cms_error"           -> ((s, dir) =>
-      Sketches.cmsError(Tables.documents(s, dir))),
-    "olap_rollup"         -> ((s, dir) =>
-      Analytics.pricingRollup(Tables.lineitem(s, dir))),
-    "olap_moving_revenue" -> ((s, dir) =>
-      Analytics.movingRevenue(Tables.lineitem(s, dir))),
-    "op_mix_pivot"        -> ((s, dir) => Analytics.opMixPivot(cl(s, dir))),
-    "repair_plan"         -> ((s, dir) =>
-      Snapshot.repairPlan(Tables.customer(s, dir))),
-    "dedup_sweep"         -> ((s, dir) =>
-      Dedup.dedupSweepFrom(Staged.dedup(s, dir).verified)),
-    "ngram_containment"   -> ((s, dir) => {
-      val st = Staged.dedup(s, dir)
+    "partition_advisor"   -> (c =>
+      Snapshot.partitionAdvisor(catalogGrid(c))),
+    "catalog_stats_sketch" -> (c =>
+      Snapshot.catalogStatsSketchGateFrom(Staged.catalog(c),
+        Snapshot.CatalogColumns, catalogGrid(c))),
+    "join_size_estimate"  -> (c =>
+      Snapshot.joinSizeEstimateFrom(Staged.catalog(c))),
+    "anisotropy_audit"    -> (c =>
+      Similarity.anisotropyAudit(c.embeddings)),
+    "mmr_diversify"       -> (c =>
+      Similarity.mmrDiversify(c.embeddings)),
+    "modal_align"         -> (c =>
+      Multimodal.modalAlign(c.documents,
+        c.embeddings)),
+    "bloom_prune"         -> (c => Sketches.bloomPrune(cl(c))),
+    "cms_error"           -> (c =>
+      Sketches.cmsError(c.documents)),
+    "olap_rollup"         -> (c =>
+      Analytics.pricingRollup(c.lineitem)),
+    "olap_moving_revenue" -> (c =>
+      Analytics.movingRevenue(c.lineitem)),
+    "op_mix_pivot"        -> (c => Analytics.opMixPivot(cl(c))),
+    "repair_plan"         -> (c =>
+      Snapshot.repairPlan(c.customer)),
+    "dedup_sweep"         -> (c =>
+      Dedup.dedupSweepFrom(Staged.dedup(c).verified)),
+    "ngram_containment"   -> (c => {
+      val st = Staged.dedup(c)
       Dedup.containmentFrom(st.sh, st.sigs)
     }),
-    "bbit_minhash"        -> ((s, dir) => {
-      val st = Staged.dedup(s, dir)
+    "bbit_minhash"        -> (c => {
+      val st = Staged.dedup(c)
       Dedup.bbitMinhashFrom(st.sh, st.sigs)
     }),
-    "minhash_width_sweep" -> ((s, dir) => {
-      val st = Staged.dedup(s, dir)
+    "minhash_width_sweep" -> (c => {
+      val st = Staged.dedup(c)
       Dedup.minhashWidthSweepFrom(st.sh, st.sigs)
     }),
-    "dedup_editdist"      -> ((s, dir) => Dedup.dedupEditDistFrom(
-      Tables.documents(s, dir), Staged.dedup(s, dir).verified)),
-    "cross_source_overlap" -> ((s, dir) => Dedup.crossSourceOverlapFrom(
-      Tables.documents(s, dir), Staged.dedup(s, dir).dups)),
-    "dup_token_share"     -> ((s, dir) => Dedup.dupTokenShareFrom(
-      Tables.documents(s, dir), Staged.dedup(s, dir).dups)),
-    "forget_audit"        -> ((s, dir) =>
-      Snapshot.forgetAudit(cl(s, dir), Tables.customer(s, dir),
-        Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "lsh_band_sweep"      -> ((s, dir) => {
-      val st = Staged.dedup(s, dir)
+    "dedup_editdist"      -> (c => Dedup.dedupEditDistFrom(
+      c.documents, Staged.dedup(c).verified)),
+    "cross_source_overlap" -> (c => Dedup.crossSourceOverlapFrom(
+      c.documents, Staged.dedup(c).dups)),
+    "dup_token_share"     -> (c => Dedup.dupTokenShareFrom(
+      c.documents, Staged.dedup(c).dups)),
+    "forget_audit"        -> (c =>
+      Snapshot.forgetAudit(cl(c), c.customer,
+        c.orders, c.lineitem)),
+    "lsh_band_sweep"      -> (c => {
+      val st = Staged.dedup(c)
       Dedup.lshBandSweepFrom(st.sh, st.sigs)
     }),
-    "conversion_lag"      -> ((s, dir) =>
-      Analytics.conversionLag(Tables.events(s, dir))),
-    "session_quantiles"   -> ((s, dir) =>
-      Temporal.sessionQuantiles(cl(s, dir))),
-    "active_users"        -> ((s, dir) =>
-      Temporal.activeUsersRolling(cl(s, dir))),
-    "olap_q6_discount"    -> ((s, dir) =>
-      Analytics.revenueFromDiscount(Tables.lineitem(s, dir))),
-    "olap_top_supplier"   -> ((s, dir) =>
-      Analytics.topSupplier(Tables.supplier(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_large_orders"   -> ((s, dir) =>
-      Analytics.largeOrders(Tables.customer(s, dir), Tables.orders(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_returned_top"   -> ((s, dir) =>
-      Analytics.returnedTop(Tables.customer(s, dir), Tables.nation(s, dir),
-        Tables.lineitem(s, dir), Tables.orders(s, dir))),
-    "olap_trade_matrix"   -> ((s, dir) =>
-      Analytics.tradeMatrix(Tables.supplier(s, dir), Tables.customer(s, dir),
-        Tables.nation(s, dir), Tables.orders(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_market_share"   -> ((s, dir) =>
-      Analytics.marketShare(Tables.part(s, dir), Tables.supplier(s, dir),
-        Tables.customer(s, dir), Tables.nation(s, dir),
-        Tables.region(s, dir), Tables.orders(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_product_profit" -> ((s, dir) =>
-      Analytics.productProfit(Tables.part(s, dir), Tables.supplier(s, dir),
-        Tables.nation(s, dir), Tables.orders(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_order_dist"     -> ((s, dir) =>
-      Analytics.orderCountDist(Tables.customer(s, dir),
-        Tables.orders(s, dir))),
-    "olap_parts_suppliers" -> ((s, dir) =>
-      Analytics.partsSuppliers(Tables.part(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_small_qty"      -> ((s, dir) =>
-      Analytics.smallQtyRevenue(Tables.part(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_bulk_discount"  -> ((s, dir) =>
-      Analytics.bulkDiscount(Tables.part(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_sales_opportunity" -> ((s, dir) =>
-      Analytics.salesOpportunity(Tables.customer(s, dir),
-        Tables.orders(s, dir))),
-    "supplier_returns"    -> ((s, dir) =>
-      Analytics.supplierReturns(Tables.supplier(s, dir),
-        Tables.lineitem(s, dir))),
-    "discount_qty_corr"   -> ((s, dir) =>
-      Analytics.discountQuantityCorr(Tables.part(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_ship_delay"     -> ((s, dir) =>
-      Analytics.shipDelayProfile(Tables.orders(s, dir),
-        Tables.lineitem(s, dir))),
-    "olap_late_suppliers" -> ((s, dir) =>
-      Analytics.lateSuppliers(Tables.supplier(s, dir),
-        Tables.orders(s, dir), Tables.lineitem(s, dir))),
-    "olap_min_cost_supplier" -> ((s, dir) =>
-      Analytics.minCostSupplier(Tables.part(s, dir),
-        Tables.supplier(s, dir), Tables.nation(s, dir),
-        Tables.region(s, dir), Tables.lineitem(s, dir))),
-    "olap_important_stock" -> ((s, dir) =>
-      Analytics.importantStock(Tables.supplier(s, dir),
-        Tables.nation(s, dir), Tables.lineitem(s, dir))),
-    "olap_dominant_shippers" -> ((s, dir) =>
-      Analytics.dominantShippers(Tables.part(s, dir),
-        Tables.supplier(s, dir), Tables.lineitem(s, dir))),
-    "market_basket"       -> ((s, dir) =>
-      Analytics.marketBasketFrom(Staged.baskets(s, dir))),
-    "brand_pagerank"      -> ((s, dir) =>
-      Analytics.brandPagerankFrom(Staged.baskets(s, dir))),
-    "weighted_sample"     -> ((s, dir) =>
-      TextAnalysis.weightedSample(Tables.documents(s, dir))),
-    "rrf_fusion"          -> ((s, dir) =>
-      Similarity.rrfFusion(Tables.embeddings(s, dir))),
-    "pq_subspace_balance" -> ((s, dir) =>
-      Similarity.pqSubspaceBalance(Tables.embeddings(s, dir))),
-    "char_diversity"      -> ((s, dir) =>
-      TextAnalysis.charDiversity(Tables.documents(s, dir))),
-    "rpo_audit"           -> ((s, dir) => Ledger.rpoAudit(cl(s, dir))),
-    "session_gap_sweep"   -> ((s, dir) =>
-      Temporal.sessionGapSweep(cl(s, dir))),
-    "balance_audit"       -> ((s, dir) => Ledger.balanceAudit(cl(s, dir))),
-    "join_advisor"        -> ((s, dir) =>
-      Snapshot.joinAdvisorFrom(Staged.catalog(s, dir))),
-    "embed_covariance"    -> ((s, dir) =>
-      Similarity.embedCovariance(Tables.embeddings(s, dir))),
-    "domain_caps"         -> ((s, dir) =>
-      Curation.domainCaps(Tables.documents(s, dir))),
-    "ccnet_buckets"       -> ((s, dir) =>
-      Curation.ccnetBucketsFrom(Tables.documents(s, dir),
-        Staged.tokens(s, dir).skipgrams)),
-    "dsir_weights"        -> ((s, dir) =>
-      Curation.dsirWeightsFrom(Tables.documents(s, dir),
-        Staged.tokens(s, dir).skipgrams)),
-    "token_fertility"     -> ((s, dir) =>
-      Curation.tokenFertilityFrom(Tables.documents(s, dir),
-        Staged.tokens(s, dir).tokens)),
-    "late_data_audit"     -> ((s, dir) => Temporal.lateDataAudit(cl(s, dir))),
-    "cluster_representative" -> ((s, dir) =>
+    "conversion_lag"      -> (c =>
+      Analytics.conversionLag(c.events)),
+    "session_quantiles"   -> (c =>
+      Temporal.sessionQuantiles(cl(c))),
+    "active_users"        -> (c =>
+      Temporal.activeUsersRolling(cl(c))),
+    "olap_q6_discount"    -> (c =>
+      Analytics.revenueFromDiscount(c.lineitem)),
+    "olap_top_supplier"   -> (c =>
+      Analytics.topSupplier(c.supplier,
+        c.lineitem)),
+    "olap_large_orders"   -> (c =>
+      Analytics.largeOrders(c.customer, c.orders,
+        c.lineitem)),
+    "olap_returned_top"   -> (c =>
+      Analytics.returnedTop(c.customer, c.nation,
+        c.lineitem, c.orders)),
+    "olap_trade_matrix"   -> (c =>
+      Analytics.tradeMatrix(c.supplier, c.customer,
+        c.nation, c.orders,
+        c.lineitem)),
+    "olap_market_share"   -> (c =>
+      Analytics.marketShare(c.part, c.supplier,
+        c.customer, c.nation,
+        c.region, c.orders,
+        c.lineitem)),
+    "olap_product_profit" -> (c =>
+      Analytics.productProfit(c.part, c.supplier,
+        c.nation, c.orders,
+        c.lineitem)),
+    "olap_order_dist"     -> (c =>
+      Analytics.orderCountDist(c.customer,
+        c.orders)),
+    "olap_parts_suppliers" -> (c =>
+      Analytics.partsSuppliers(c.part,
+        c.lineitem)),
+    "olap_small_qty"      -> (c =>
+      Analytics.smallQtyRevenue(c.part,
+        c.lineitem)),
+    "olap_bulk_discount"  -> (c =>
+      Analytics.bulkDiscount(c.part,
+        c.lineitem)),
+    "olap_sales_opportunity" -> (c =>
+      Analytics.salesOpportunity(c.customer,
+        c.orders)),
+    "supplier_returns"    -> (c =>
+      Analytics.supplierReturns(c.supplier,
+        c.lineitem)),
+    "discount_qty_corr"   -> (c =>
+      Analytics.discountQuantityCorr(c.part,
+        c.lineitem)),
+    "olap_ship_delay"     -> (c =>
+      Analytics.shipDelayProfile(c.orders,
+        c.lineitem)),
+    "olap_late_suppliers" -> (c =>
+      Analytics.lateSuppliers(c.supplier,
+        c.orders, c.lineitem)),
+    "olap_min_cost_supplier" -> (c =>
+      Analytics.minCostSupplier(c.part,
+        c.supplier, c.nation,
+        c.region, c.lineitem)),
+    "olap_important_stock" -> (c =>
+      Analytics.importantStock(c.supplier,
+        c.nation, c.lineitem)),
+    "olap_dominant_shippers" -> (c =>
+      Analytics.dominantShippers(c.part,
+        c.supplier, c.lineitem)),
+    "market_basket"       -> (c =>
+      Analytics.marketBasketFrom(Staged.baskets(c))),
+    "brand_pagerank"      -> (c =>
+      Analytics.brandPagerankFrom(Staged.baskets(c))),
+    "weighted_sample"     -> (c =>
+      TextAnalysis.weightedSample(c.documents)),
+    "rrf_fusion"          -> (c =>
+      Similarity.rrfFusion(c.embeddings)),
+    "pq_subspace_balance" -> (c =>
+      Similarity.pqSubspaceBalance(c.embeddings)),
+    "char_diversity"      -> (c =>
+      TextAnalysis.charDiversity(c.documents)),
+    "rpo_audit"           -> (c => Ledger.rpoAudit(cl(c))),
+    "session_gap_sweep"   -> (c =>
+      Temporal.sessionGapSweep(cl(c))),
+    "balance_audit"       -> (c => Ledger.balanceAudit(cl(c))),
+    "join_advisor"        -> (c =>
+      Snapshot.joinAdvisorFrom(Staged.catalog(c))),
+    "embed_covariance"    -> (c =>
+      Similarity.embedCovariance(c.embeddings)),
+    "domain_caps"         -> (c =>
+      Curation.domainCaps(c.documents)),
+    "ccnet_buckets"       -> (c =>
+      Curation.ccnetBucketsFrom(c.documents,
+        Staged.tokens(c).skipgrams)),
+    "dsir_weights"        -> (c =>
+      Curation.dsirWeightsFrom(c.documents,
+        Staged.tokens(c).skipgrams)),
+    "token_fertility"     -> (c =>
+      Curation.tokenFertilityFrom(c.documents,
+        Staged.tokens(c).tokens)),
+    "late_data_audit"     -> (c => Temporal.lateDataAudit(cl(c))),
+    "cluster_representative" -> (c =>
       Dedup.clusterRepresentativesFrom(
-        Dedup.dupClustersFrom(Staged.dedup(s, dir).dups),
-        Staged.tokens(s, dir).gopher)),
-    "topic_clusters"      -> ((s, dir) =>
-      Similarity.topicClustersFrom(Staged.ann(s, dir).assign,
-        Tables.documents(s, dir), Staged.tokens(s, dir).tokens)),
-    "sample_coverage"     -> ((s, dir) =>
-      Similarity.sampleCoverageFrom(Staged.ann(s, dir).assign,
-        Tables.documents(s, dir))),
-    "incontext_order"     -> ((s, dir) =>
-      Similarity.incontextOrderFrom(Staged.ann(s, dir).assign,
-        Tables.embeddings(s, dir))),
-    "unimax_alloc"        -> ((s, dir) =>
-      Curation.unimaxAlloc(Tables.documents(s, dir))),
-    "curation_pipeline"   -> ((s, dir) => {
-      val st = Staged.tokens(s, dir)
-      Curation.curationPipelineFrom(Tables.documents(s, dir),
+        Dedup.dupClustersFrom(Staged.dedup(c).dups),
+        Staged.tokens(c).gopher)),
+    "topic_clusters"      -> (c =>
+      Similarity.topicClustersFrom(Staged.ann(c).assign,
+        c.documents, Staged.tokens(c).tokens)),
+    "sample_coverage"     -> (c =>
+      Similarity.sampleCoverageFrom(Staged.ann(c).assign,
+        c.documents)),
+    "incontext_order"     -> (c =>
+      Similarity.incontextOrderFrom(Staged.ann(c).assign,
+        c.embeddings)),
+    "unimax_alloc"        -> (c =>
+      Curation.unimaxAlloc(c.documents)),
+    "curation_pipeline"   -> (c => {
+      val st = Staged.tokens(c)
+      Curation.curationPipelineFrom(c.documents,
         TextAnalysis.qualitySignalsFrom(st.gopher,
           TextAnalysis.qualityClassifyFrom(st.tokens),
           TextAnalysis.ngramLmScoreFrom(st.skipgrams),
           TextAnalysis.docRarityFrom(st.tokens, st.freq)),
-        Dedup.dupClustersFrom(Staged.dedup(s, dir).dups), st.gopher)
+        Dedup.dupClustersFrom(Staged.dedup(c).dups), st.gopher)
     }),
-    "k_anonymity"         -> ((s, dir) =>
-      TextAnalysis.kAnonymity(Tables.documents(s, dir))),
-    "anon_generalize"     -> ((s, dir) =>
-      TextAnalysis.anonGeneralize(Tables.documents(s, dir))),
-    "zipf_fit"            -> ((s, dir) =>
-      TextAnalysis.zipfFitFrom(Staged.tokens(s, dir).freq)),
-    "negative_sampling"   -> ((s, dir) =>
-      TextAnalysis.negativeSamplingFrom(Staged.tokens(s, dir).freq)),
-    "brand_triangles"     -> ((s, dir) =>
-      Analytics.brandTrianglesFrom(Staged.baskets(s, dir))),
-    "l_diversity"         -> ((s, dir) =>
-      TextAnalysis.lDiversity(Tables.documents(s, dir))),
-    "t_closeness"         -> ((s, dir) =>
-      TextAnalysis.tCloseness(Tables.documents(s, dir))),
-    "corpus_diversity"    -> ((s, dir) =>
-      TextAnalysis.corpusDiversity(Tables.documents(s, dir))),
-    "schema_drift"        -> ((s, dir) =>
+    "k_anonymity"         -> (c =>
+      TextAnalysis.kAnonymity(c.documents)),
+    "anon_generalize"     -> (c =>
+      TextAnalysis.anonGeneralize(c.documents)),
+    "zipf_fit"            -> (c =>
+      TextAnalysis.zipfFitFrom(Staged.tokens(c).freq)),
+    "negative_sampling"   -> (c =>
+      TextAnalysis.negativeSamplingFrom(Staged.tokens(c).freq)),
+    "brand_triangles"     -> (c =>
+      Analytics.brandTrianglesFrom(Staged.baskets(c))),
+    "l_diversity"         -> (c =>
+      TextAnalysis.lDiversity(c.documents)),
+    "t_closeness"         -> (c =>
+      TextAnalysis.tCloseness(c.documents)),
+    "corpus_diversity"    -> (c =>
+      TextAnalysis.corpusDiversity(c.documents)),
+    "schema_drift"        -> (c =>
       Snapshot.schemaDrift(Snapshot.CatalogColumns.map { case (t, _) =>
-        t -> Tables.table(s, dir, t)
+        t -> c.table(t)
       })),
-    "split_audit"         -> ((s, dir) =>
-      TextAnalysis.splitAuditFrom(Tables.documents(s, dir),
-        Staged.tokens(s, dir).gopher)),
-    "quality_ensemble"    -> ((s, dir) => {
-      val st = Staged.tokens(s, dir)
+    "split_audit"         -> (c =>
+      TextAnalysis.splitAuditFrom(c.documents,
+        Staged.tokens(c).gopher)),
+    "quality_ensemble"    -> (c => {
+      val st = Staged.tokens(c)
       TextAnalysis.qualityEnsembleFrom(st.gopher,
         TextAnalysis.qualityClassifyFrom(st.tokens),
         TextAnalysis.ngramLmScoreFrom(st.skipgrams),
@@ -755,8 +758,8 @@ object SparkEntry {
 
   /** Tumbling 1-hour window × event_type throughput — the batch twin of
     * streaming.CdcStream's windowed aggregation. */
-  private def streamWindowAgg(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
+  private def streamWindowAgg(c: Corpus): DataFrame =
+    c.events
       .select(col("ts"), col("event_type"),
         round(col("value") * 100).cast("long").as("value_cents"))
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))

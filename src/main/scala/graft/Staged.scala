@@ -12,7 +12,7 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
 /** Session-scoped staged relations — the production shape of "the
   * signature table is a staged table" (Dedup scaladoc): the expensive
   * corpus intermediates that several consumer queries share are built
-  * ONCE per (session, corpus dir) and every consumer reads the staged
+  * ONCE per [[Corpus]] and every consumer reads the staged
   * copy. At 100 TB this is the difference between one corpus shuffle
   * feeding ten reports and ten corpus shuffles.
   *
@@ -47,8 +47,8 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   * consumers are unchanged, executor loss costs a re-read instead of
   * the session.
   *
-  * [[rows]] is a relation's exact row count, taken once per (session,
-  * dir) and kept beside the staged copy: a build may choose its plan by
+  * [[rows]] is a relation's exact row count, taken once per corpus
+  * and kept beside the staged copy: a build may choose its plan by
   * it (training_pipeline drops its over-full re-pairing when the staged
   * `overfull` is empty) without a job on every call.
   *
@@ -56,8 +56,11 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   * staged relations it reads, so a repeat call skips DataFrame
   * construction (see there).
   *
-  * Keyed by (session, dir, name): a new session or a different corpus
-  * path stages fresh; re-writing parquet UNDER an already-staged dir
+  * Keyed by ([[Corpus]], name). Two [[Corpus.Dir]] values over the same
+  * (session, dir) are one key, so the (session, dir) family views below
+  * and [[SparkEntry.queries]] share the staged copies; a new session, a
+  * different corpus path or another in-memory corpus stages fresh.
+  * Re-writing parquet UNDER an already-staged dir
   * within one session serves stale data (same contract as any staged
   * table — call [[invalidate]] after in-place rewrites; AmplifyCorpus
   * does so in its write path). The same contract covers the tables
@@ -67,16 +70,15 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   */
 object Staged {
 
-  /** The registry as seen from one (session, dir) — a build's inputs
-    * and the family views' lookups: `apply` is a relation's staged copy
-    * (a chain's last round), `chain` all its rounds, and `prev` the
+  /** The registry as seen from one corpus — a build's inputs and the
+    * family views' lookups: `apply` is a relation's staged copy (a
+    * chain's last round), `chain` all its rounds, and `prev` the
     * previous staged round of the chain being built (None in round 1,
     * for plain relations and for the views). */
-  final class Inputs private[Staged] (val spark: SparkSession,
-                                      val dir: String,
+  final class Inputs private[Staged] (val corpus: Corpus,
                                       val prev: Option[DataFrame]) {
-    def apply(name: String): DataFrame = rounds(spark, dir, name).last
-    def chain(name: String): Seq[DataFrame] = rounds(spark, dir, name)
+    def apply(name: String): DataFrame = rounds(corpus, name).last
+    def chain(name: String): Seq[DataFrame] = rounds(corpus, name)
   }
 
   private final case class Rel(name: String, nestedLoopOk: Boolean,
@@ -86,9 +88,9 @@ object Staged {
   // md5 / tokenizer passes that would otherwise run on one core (Spread
   // is a no-op when the scan already has enough splits)
   private def docs(in: Inputs): DataFrame =
-    Spread.byKey(Tables.documents(in.spark, in.dir), "doc_id")
+    Spread.byKey(in.corpus.documents, "doc_id")
 
-  private def emb(in: Inputs): DataFrame = Tables.embeddings(in.spark, in.dir)
+  private def emb(in: Inputs): DataFrame = in.corpus.embeddings
 
   /** Every staged relation, in dependency order. `nestedLoopOk` marks
     * builds whose DECLARED shape includes a tiny-broadcast nested-loop
@@ -131,21 +133,21 @@ object Staged {
       Similarity.PqTrainIters),
     // images: the PPM payload table and its aHash fingerprints
     Rel("images", false,
-      in => Multimodal.imageTable(Tables.documents(in.spark, in.dir))),
+      in => Multimodal.imageTable(in.corpus.documents)),
     Rel("imageFps", false, in => Multimodal.imageFingerprints(in("images"))),
     // the ANALYZE histogram of the audited catalog grid
     Rel("catalogHist", false,
-      in => Snapshot.catalogHistogram(catalogGrid(in.spark, in.dir))),
+      in => Snapshot.catalogHistogram(catalogGrid(in.corpus))),
     // per-order brand baskets of the brand-graph family
-    Rel("baskets", false, in => Analytics.basketsRel(
-      Tables.part(in.spark, in.dir), Tables.lineitem(in.spark, in.dir))))
+    Rel("baskets", false,
+      in => Analytics.basketsRel(in.corpus.part, in.corpus.lineitem)))
 
   private val byName: Map[String, Rel] = registry.map(r => r.name -> r).toMap
 
   /** Every registered relation's name, in dependency order. */
   val names: Seq[String] = registry.map(_.name)
 
-  /** One relation's cache entry under (session, dir): its staged
+  /** One relation's cache entry under a corpus: its staged
     * copies, one per round, the [[rows]] count of the last, and the ids
     * of the copies' RDDs (the `LogicalRDD` leaves of a consumer's
     * plan). */
@@ -155,13 +157,12 @@ object Staged {
       .collect { case r: LogicalRDD => r.rdd.id })
   }
 
-  private val cache = TrieMap.empty[(SparkSession, String, String), Entry]
+  private val cache = TrieMap.empty[(Corpus, String), Entry]
 
-  /** [[query]]'s plans per (session, dir, query name, session conf):
-    * the analyzed plan of a kept build, or why the last build was not
+  /** [[query]]'s plans per (corpus, query name, session conf): the
+    * analyzed plan of a kept build, or why the last build was not
     * kept. */
-  private val plans = TrieMap.empty[
-    (SparkSession, String, String, Map[String, String]),
+  private val plans = TrieMap.empty[(Corpus, String, Map[String, String]),
     Either[String, LogicalPlan]]
 
   private val buildTags = new java.util.concurrent.atomic.AtomicLong
@@ -193,31 +194,29 @@ object Staged {
           override def onApplicationEnd(
               e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
               : Unit = {
-            cache.filterInPlace { case ((s, _, _), _) => s ne spark }
-            plans.filterInPlace { case ((s, _, _, _), _) => s ne spark }
+            cache.filterInPlace { case ((c, _), _) => c.spark ne spark }
+            plans.filterInPlace { case ((c, _, _), _) => c.spark ne spark }
             Tables.resolved.filterInPlace { case ((s, _), _) => s ne spark }
             hooked.remove(spark)
           }
         })
     })
 
-  private def entry(spark: SparkSession, sfDir: String, name: String)
-  : Entry =
-    cache.getOrElseUpdate((spark, sfDir, name), {
-      hookEviction(spark)
+  private def entry(c: Corpus, name: String): Entry =
+    cache.getOrElseUpdate((c, name), {
+      hookEviction(c.spark)
       val r = byName(name)
       new Entry((1 to r.rounds).scanLeft(Option.empty[DataFrame]) {
-        (prev, _) => Some(stage(r.build(new Inputs(spark, sfDir, prev))))
+        (prev, _) => Some(stage(r.build(new Inputs(c, prev))))
       }.flatten)
     })
 
-  /** The staged copies of relation `name` under (session, dir), one per
+  /** The staged copies of relation `name` over corpus `c`, one per
     * round (a plain relation has one), built on first request. */
-  def rounds(spark: SparkSession, sfDir: String, name: String)
-  : Seq[DataFrame] = entry(spark, sfDir, name).rounds
+  def rounds(c: Corpus, name: String): Seq[DataFrame] = entry(c, name).rounds
 
-  /** The exact row count of relation `name`'s staged copy under
-    * (session, dir). The first request counts it: that count is the
+  /** The exact row count of relation `name`'s staged copy over corpus
+    * `c`. The first request counts it: that count is the
     * action that materializes the relation and every staged input it
     * reads, so forcing a relation through `rows` stages it and counts
     * it in one pass. Later requests run no job. The count is kept in
@@ -226,25 +225,23 @@ object Staged {
     * that asks for a count in a session where nothing is staged yet
     * runs that job while it is built — work its execution would do
     * anyway. */
-  def rows(spark: SparkSession, sfDir: String, name: String): Long =
-    entry(spark, sfDir, name).rows
+  def rows(c: Corpus, name: String): Long = entry(c, name).rows
 
   /** ("staged:" + name, nestedLoopOk, plan) per registered relation:
     * the plan its build runs at materialization — the build applied to
     * its staged inputs (a chain: its last round over the staged previous
     * round). The checkpoint boundary hides these plans from every
     * consumer query's own plan, so they are audited on their own. */
-  def auditPlans(spark: SparkSession, sfDir: String)
-  : Seq[(String, Boolean, DataFrame)] = registry.map { r =>
-    val prev =
-      if (r.rounds > 1) Some(rounds(spark, sfDir, r.name).init.last) else None
-    (s"staged:${r.name}", r.nestedLoopOk, r.build(new Inputs(spark, sfDir, prev)))
-  }
+  def auditPlans(c: Corpus): Seq[(String, Boolean, DataFrame)] =
+    registry.map { r =>
+      val prev = if (r.rounds > 1) Some(rounds(c, r.name).init.last) else None
+      (s"staged:${r.name}", r.nestedLoopOk, r.build(new Inputs(c, prev)))
+    }
 
-  /** Registry query `name` over (session, dir), as `build` makes it —
+  /** Registry query `name` over corpus `c`, as `build` makes it —
     * [[SparkEntry.queries]] calls every registry build through here.
     *
-    * A build's analyzed plan is kept under (session, dir, name, session
+    * A build's analyzed plan is kept under (corpus, name, session
     * conf), and a later call with the same key gets a fresh DataFrame
     * over it: the analyzer returns an analyzed plan as it is, and each
     * call gets its own QueryExecution (physical plan, AQE state,
@@ -262,9 +259,10 @@ object Staged {
     * in-query checkpoint, outside the staged relations. A kept plan
     * lives as long as the staged relations: [[invalidate]] and the
     * application-end eviction drop both. */
-  private[graft] def query(spark: SparkSession, sfDir: String, name: String)
-                          (build: => DataFrame): DataFrame =
-    kept(spark, sfDir, name) match {
+  private[graft] def query(c: Corpus, name: String)(build: => DataFrame)
+  : DataFrame = {
+    val spark = c.spark
+    kept(c, name) match {
       case Some(Right(plan)) => GraftBridge.ofAnalyzed(spark, plan)
       case _ =>
         hookEviction(spark)
@@ -272,12 +270,12 @@ object Staged {
         val tag = s"$name#${buildTags.incrementAndGet()}"
         val df = ConstructJobs.tagged(sc, tag)(build)
         val plan = df.queryExecution.analyzed
-        plans((spark, sfDir, name, spark.conf.getAll)) =
+        plans((c, name, spark.conf.getAll)) =
           if (!ConstructJobs.take(sc, tag).contains(0))
             Left("job during build")
           else {
             val staged = cache.collect {
-              case ((s, _, _), e) if s eq spark => e.rddIds
+              case ((k, _), e) if k.spark eq spark => e.rddIds
             }.flatten.toSet
             if (plan.collectWithSubqueries { case r: LogicalRDD => r.rdd.id }
                 .forall(staged)) Right(plan)
@@ -285,14 +283,15 @@ object Staged {
           }
         df
     }
+  }
 
-  /** [[query]]'s entry for (session, dir, name) under the session's
-    * current conf: Right(the kept plan), Left(why the last build was
-    * not kept: "job during build" or "non-staged checkpoint"), or None
-    * when there was no build. */
-  private[graft] def kept(spark: SparkSession, sfDir: String, name: String)
+  /** [[query]]'s entry for (corpus, name) under the session's current
+    * conf: Right(the kept plan), Left(why the last build was not kept:
+    * "job during build" or "non-staged checkpoint"), or None when there
+    * was no build. */
+  private[graft] def kept(c: Corpus, name: String)
   : Option[Either[String, LogicalPlan]] =
-    plans.get((spark, sfDir, name, spark.conf.getAll))
+    plans.get((c, name, c.spark.conf.getAll))
 
   /** Drop all staged entries (block-manager copies are reclaimed by the
     * context cleaner once unreferenced), every kept query plan
@@ -316,7 +315,7 @@ object Staged {
     def sigs: DataFrame = in("sigs")
     def overfull: DataFrame = in("overfull")
     def overfullIfAny: Option[DataFrame] =
-      Option.when(rows(in.spark, in.dir, "overfull") > 0)(overfull)
+      Option.when(rows(in.corpus, "overfull") > 0)(overfull)
     def verified: DataFrame = in("verified")
     def simPairs: DataFrame = in("simPairs")
     /** Confirmed near-dup pairs ([[Dedup.minhashDedup]] shape). */
@@ -364,41 +363,44 @@ object Staged {
     def fps: DataFrame = in("imageFps")
   }
 
-  private def inputs(spark: SparkSession, sfDir: String): Inputs =
-    new Inputs(spark, sfDir, None)
+  private def inputs(c: Corpus): Inputs = new Inputs(c, None)
 
+  def dedup(c: Corpus): DedupRels = new DedupRels(inputs(c))
+  def tokens(c: Corpus): TokenRels = new TokenRels(inputs(c))
+  def ann(c: Corpus): AnnRels = new AnnRels(inputs(c))
+  def images(c: Corpus): ImageRels = new ImageRels(inputs(c))
+
+  // the family views over a parquet dir: the cache entries that
+  // SparkEntry.queries(q)(spark, sfDir) reads
   def dedup(spark: SparkSession, sfDir: String): DedupRels =
-    new DedupRels(inputs(spark, sfDir))
-
+    dedup(Corpus(spark, sfDir))
   def tokens(spark: SparkSession, sfDir: String): TokenRels =
-    new TokenRels(inputs(spark, sfDir))
-
+    tokens(Corpus(spark, sfDir))
   def ann(spark: SparkSession, sfDir: String): AnnRels =
-    new AnnRels(inputs(spark, sfDir))
-
+    ann(Corpus(spark, sfDir))
   def images(spark: SparkSession, sfDir: String): ImageRels =
-    new ImageRels(inputs(spark, sfDir))
+    images(Corpus(spark, sfDir))
 
   /** The staged ANALYZE histogram (table, column, value, cnt) for the
     * audited catalog grid — the per-column value histogram an ANALYZE
     * pass persists. Feeds catalog_stats' exact rollup and the exact
     * side of the sketch gate; the sketch side always recomputes from
     * raw rows. */
+  def catalog(c: Corpus): DataFrame = inputs(c)("catalogHist")
   def catalog(spark: SparkSession, sfDir: String): DataFrame =
-    inputs(spark, sfDir)("catalogHist")
+    catalog(Corpus(spark, sfDir))
 
   /** The staged per-order brand-basket relation (okey, sorted brand
     * array) — the one corpus-sized pass of the brand-graph family
     * (market_basket, brand_pagerank, brand_triangles). */
+  def baskets(c: Corpus): DataFrame = inputs(c)("baskets")
   def baskets(spark: SparkSession, sfDir: String): DataFrame =
-    inputs(spark, sfDir)("baskets")
+    baskets(Corpus(spark, sfDir))
 
   /** The audited (table, column) grid as (name, projected table) pairs
     * — shared by the staged histogram and the sketch side of the gate. */
-  def catalogGrid(spark: SparkSession, sfDir: String)
-  : Seq[(String, DataFrame)] =
+  def catalogGrid(c: Corpus): Seq[(String, DataFrame)] =
     Snapshot.CatalogColumns.map { case (t, cols) =>
-      t -> Tables.table(spark, sfDir, t)
-        .select(cols.map(org.apache.spark.sql.functions.col): _*)
+      t -> c.table(t).select(cols.map(org.apache.spark.sql.functions.col): _*)
     }
 }

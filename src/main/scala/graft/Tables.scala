@@ -10,7 +10,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 /** Parquet-backed table loaders (TESTDATA.md tables). Single place that
   * touches storage so column pruning / filter pushdown stay auditable:
   * every operator selects columns immediately after these reads, which
-  * Catalyst pushes into the parquet scan (`ReadSchema`).
+  * Catalyst pushes into the parquet scan (`ReadSchema`). A directory
+  * [[Corpus]] (`Corpus.Dir`) reads its tables through here; the
+  * registry builds and [[Staged]] see only the corpus, so the same
+  * builds run over in-memory tables.
   *
   * Resolve once: the first read of a table in a session lists its
   * files and infers its schema (`spark.read.parquet`, which may run a
@@ -100,12 +103,6 @@ object Tables {
     }
   }
   def customer(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "customer")
-  def orders(spark: SparkSession, sfDir: String): DataFrame     = table(spark, sfDir, "orders")
-  def lineitem(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "lineitem")
-  def nation(spark: SparkSession, sfDir: String): DataFrame     = table(spark, sfDir, "nation")
-  def region(spark: SparkSession, sfDir: String): DataFrame     = table(spark, sfDir, "region")
-  def supplier(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "supplier")
-  def part(spark: SparkSession, sfDir: String): DataFrame       = table(spark, sfDir, "part")
   def documents(spark: SparkSession, sfDir: String): DataFrame  = table(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "embeddings")
 }

@@ -1151,35 +1151,10 @@ object Analytics {
       .select(col("s_suppkey"), col("s_name"),
         col("n_dominated_parts"), col("qty_moved_c"))
 
-  /** Market-basket brand affinity — the cross-sell report a sync
-    * target's BI layer runs over landed order data. An order's basket
-    * is its DISTINCT part brands; every unordered brand pair sharing
-    * an order is one co-occurrence. Per pair: support (co-order
-    * count), each brand's own order count, directional confidence
-    * a→b, and lift — all exact integer ppm (lift computed as
-    * ((support·1e6 div cnt_a)·n_orders) div cnt_b, so the widest
-    * intermediate is 1e6·n_orders: headroom to ~9e12 orders, vs
-    * overflow at 3e6 orders for the naive support·n_orders·1e6).
-    *
-    * Shapes for 100 TB: the part dim joins the fact on partkey (AQE
-    * broadcasts only while part genuinely fits); each order's basket
-    * is grouped ONCE into a sorted brand array (one shuffle on the
-    * order key — there is no okey self-join anywhere), and the pair,
-    * per-brand, and order counts are three aggregates over that one
-    * reused exchange. Pair generation is a map-side explode of each
-    * array against its own tail (sorted ⇒ brand_a < brand_b for
-    * free), and the pair space is bounded by the brand vocabulary
-    * (25 brands ⇒ ≤300 pairs), so the final count is a map-side-
-    * combined aggregate into a constant-size group space; the brand
-    * counts riding into the result are true broadcasts (vocabulary-
-    * sized, not data-sized). */
-  def marketBasket(part: DataFrame, lineitem: DataFrame): DataFrame =
-    marketBasketFrom(basketsRel(part, lineitem))
-
   /** The per-order brand-basket relation (okey, sorted brand array) —
     * the ONE corpus-sized pass of the whole brand-graph family
     * (co-purchase support, PageRank, triangles). Staged once per
-    * (session, dir) by [[graft.Staged.baskets]]: the three consumers
+    * corpus by [[graft.Staged.baskets]]: the three consumers
     * each re-derived this identical part⋈lineitem + orderkey
     * aggregate from scratch (and the triangle census referenced its
     * edge relation five times), so the fact-table scan + shuffle ran
@@ -1193,7 +1168,25 @@ object Analytics {
       .groupBy(col("l_orderkey").as("okey"))
       .agg(sort_array(collect_set(col("p_brand"))).as("brands"))
 
-  /** [[marketBasket]] over an already-staged basket relation. */
+  /** Market-basket brand affinity — the cross-sell report a sync
+    * target's BI layer runs over landed order data — over an
+    * already-staged basket relation ([[basketsRel]]). An order's basket
+    * is its DISTINCT part brands; every unordered brand pair sharing
+    * an order is one co-occurrence. Per pair: support (co-order
+    * count), each brand's own order count, directional confidence
+    * a→b, and lift — all exact integer ppm (lift computed as
+    * ((support·1e6 div cnt_a)·n_orders) div cnt_b, so the widest
+    * intermediate is 1e6·n_orders: headroom to ~9e12 orders, vs
+    * overflow at 3e6 orders for the naive support·n_orders·1e6).
+    *
+    * Shapes for 100 TB: the pair, per-brand, and order counts are three
+    * aggregates over the one reused basket relation. Pair generation is
+    * a map-side explode of each sorted array against its own tail
+    * (sorted ⇒ brand_a < brand_b for free), and the pair space is
+    * bounded by the brand vocabulary (25 brands ⇒ ≤300 pairs), so the
+    * final count is a map-side-combined aggregate into a constant-size
+    * group space; the brand counts riding into the result are true
+    * broadcasts (vocabulary-sized, not data-sized). */
   def marketBasketFrom(baskets: DataFrame): DataFrame = {
     val brandCnt = baskets
       .select(explode(col("brands")).as("brand"))
@@ -1223,13 +1216,13 @@ object Analytics {
   val PrDampPpm = 150000L
 
   /** Weighted PageRank over the brand co-purchase graph — graph
-    * centrality of the [[marketBasket]] relation (which brand anchors
+    * centrality of the [[marketBasketFrom]] relation (which brand anchors
     * the most cross-sell traffic, weighted by co-order support): 8
     * damped rounds, d = 0.85, everything in integer ppm so both
     * engines produce identical ranks.
     *
     * Scale split (the anisotropy_audit convention): the corpus-sized
-    * work is basket-pair extraction — marketBasket's one orderkey
+    * work is basket-pair extraction — marketBasketFrom's one orderkey
     * shuffle + vocabulary-bounded aggregate; the graph itself is
     * brand-vocabulary-sized (≤300 edges at 25 brands), so the
     * iteration runs on the collected edge list like any other
@@ -1238,10 +1231,6 @@ object Analytics {
     * the result is independent of edge order. Isolated brands (never
     * co-purchased) have no edges and are absent, as in any
     * adjacency-driven rank. */
-  def brandPagerank(part: DataFrame, lineitem: DataFrame): DataFrame =
-    brandPagerankFrom(basketsRel(part, lineitem))
-
-  /** [[brandPagerank]] over an already-staged basket relation. */
   def brandPagerankFrom(baskets: DataFrame): DataFrame = {
     val spark = baskets.sparkSession
     val edges = marketBasketFrom(baskets)
@@ -1272,32 +1261,27 @@ object Analytics {
       .toDF("brand", "pagerank_ppm", "out_weight", "rank")
   }
 
-  /** Edge-keep threshold for [[brandTriangles]]: a co-purchase edge
+  /** Edge-keep threshold for [[brandTrianglesFrom]]: a co-purchase edge
     * survives when its support clears this share of all orders (ppm) —
     * support scales with order volume, so the SAME graph shape emerges
     * at every sf (≈ the median edge at this corpus's basket mix). */
   val TriSupportPpm = 22000L
 
   /** Triangle census of the brand co-purchase graph — the cohesion
-    * measure ([[brandPagerank]] gives centrality) that separates
+    * measure ([[brandPagerankFrom]] gives centrality) that separates
     * genuine product communities (high local clustering) from hub
     * brands that merely co-occur with everything: per brand, degree,
     * triangle membership count, and the local clustering coefficient
-    * 2·t·10⁶/(d·(d−1)) over the support-thresholded graph.
+    * 2·t·10⁶/(d·(d−1)) over the support-thresholded graph, from an
+    * already-staged basket relation.
     *
     * Scale split (the brandPagerank convention): the corpus-sized work
-    * is basket-pair extraction — one orderkey-keyed shuffle + a
-    * map-side-combined pair count; the triangle join runs on the
-    * thresholded EDGE relation, bounded by the brand vocabulary
-    * (≤ |brands|²/2 rows), with the a<b<c orientation giving each
-    * triangle exactly once — the standard distributed-triangle
-    * discipline (orient, then one wedge join + one closing join),
-    * never an unoriented 6× overcount. */
-  def brandTriangles(part: DataFrame, lineitem: DataFrame): DataFrame =
-    brandTrianglesFrom(basketsRel(part, lineitem))
-
-  /** [[brandTriangles]] over an already-staged basket relation. The
-    * thresholded edge relation is lazily checkpointed: it is
+    * is the basket build; the triangle join runs on the thresholded
+    * EDGE relation, bounded by the brand vocabulary (≤ |brands|²/2
+    * rows), with the a<b<c orientation giving each triangle exactly
+    * once — the standard distributed-triangle discipline (orient, then
+    * one wedge join + one closing join), never an unoriented 6×
+    * overcount. The thresholded edge relation is lazily checkpointed: it is
     * vocabulary-sized (≤ |brands|²/2 ≈ 300 rows) but referenced FIVE
     * times downstream (the three triangle-join arms and both degree
     * union sides), each of which previously re-derived the full

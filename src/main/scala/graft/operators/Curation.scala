@@ -15,15 +15,15 @@ import graft.functions.PortableHash
   *    "no domain may dominate the mix" rule), decided by a
   *    deterministic hash priority so the kept set is reproducible and
   *    auditable, never rand().
-  *  - [[ccnetBuckets]]: CCNet-style head/middle/tail partitioning of
+  *  - [[ccnetBucketsFrom]]: CCNet-style head/middle/tail partitioning of
   *    each language by LM score (the bigram-LM surrogate from
   *    [[TextAnalysis.ngramLmScoreFrom]]) — the standard
   *    quality-stratification step before mixing.
-  *  - [[dsirWeights]]: data selection via importance resampling
+  *  - [[dsirWeightsFrom]]: data selection via importance resampling
   *    (Xie et al. 2023) — per-document importance of the raw corpus
   *    against a target domain, from hashed bigram features, in the
   *    integer-exact surrogate form the cross-engine oracle can verify.
-  *  - [[tokenFertility]]: tokenizer QA per (lang, source) — chars per
+  *  - [[tokenFertilityFrom]]: tokenizer QA per (lang, source) — chars per
   *    token and type-token ratio, the fertility numbers a tokenizer
   *    rollout is judged by.
   *
@@ -83,10 +83,6 @@ object Curation {
     * (≤ one row per distinct score), never over raw docs, and the
     * resulting ≤ |langs| threshold rows broadcast back onto the scored
     * corpus. Lower tertile at 1-based rank ⌈n/3⌉ (crank·3 ≥ n). */
-  def ccnetBuckets(documents: DataFrame): DataFrame =
-    ccnetBucketsFrom(documents, TextAnalysis.skipgramsRel(documents))
-
-  /** [[ccnetBuckets]] over a staged skip-gram relation. */
   def ccnetBucketsFrom(documents: DataFrame, skipgrams: DataFrame): DataFrame = {
     val scored = TextAnalysis.ngramLmScoreFrom(skipgrams)
       .select(col("doc_id"), col("n_bigrams"), col("mean_p_ppm"))
@@ -116,7 +112,7 @@ object Curation {
 
   // --- DSIR importance weights ---------------------------------------------
 
-  /** Hashed-feature space size for [[dsirWeights]]. */
+  /** Hashed-feature space size for [[dsirWeightsFrom]]. */
   val DsirBuckets = 1024L
 
   /** DSIR importance scoring: hash each adjacent bigram into
@@ -137,10 +133,6 @@ object Curation {
     *
     * Scale shape: one bigram pass; the per-feature ratio table is
     * [[DsirBuckets]] rows and broadcasts; totals are a 1-row broadcast. */
-  def dsirWeights(documents: DataFrame): DataFrame =
-    dsirWeightsFrom(documents, TextAnalysis.skipgramsRel(documents))
-
-  /** [[dsirWeights]] over a staged skip-gram relation. */
   def dsirWeightsFrom(documents: DataFrame, skipgrams: DataFrame,
                       targetSource: String = TextAnalysis.EvalSource)
   : DataFrame = {
@@ -177,10 +169,6 @@ object Curation {
     * by), type-token ratio (vocabulary diversity), and tokens per doc.
     * Two aggregates — one over the token explode, one over the doc
     * relation — joined on the tiny (lang, source) grid. */
-  def tokenFertility(documents: DataFrame): DataFrame =
-    tokenFertilityFrom(documents, TextAnalysis.tokensRel(documents))
-
-  /** [[tokenFertility]] over a staged token relation. */
   def tokenFertilityFrom(documents: DataFrame, tokens: DataFrame): DataFrame = {
     val tok = tokens.groupBy("lang", "source")
       .agg(count(lit(1)).as("n_tokens"),
@@ -271,11 +259,6 @@ object Curation {
         col("alloc_tokens"), col("epochs_sched"), col("rem_tokens"),
         col("wasted_tokens"), col("effective_tokens"))
   }
-
-  /** [[repeatPlanFrom]] with an inline quality pass. */
-  def repeatPlan(documents: DataFrame): DataFrame =
-    repeatPlanFrom(documents,
-      TextAnalysis.gopherQuality(documents))
 
   // --- UniMax language-budget waterfill ------------------------------------
 

@@ -159,7 +159,7 @@ object Dedup {
       posexplode(array(bandKeys: _*)).as(Seq("band", "sig")))
   }
 
-  /** Band geometries swept by [[lshBandSweep]]: (bands, rowsPerBand)
+  /** Band geometries swept by [[lshBandSweepFrom]]: (bands, rowsPerBand)
     * cuts of the same 64-hash signature. More bands ⇒ a laxer S-curve
     * (more candidates, higher recall); fewer ⇒ stricter. */
   val BandSweep: Seq[(Int, Int)] = Seq((8, 8), (16, 4), (32, 2))
@@ -170,18 +170,10 @@ object Dedup {
     * (exact Jaccard ≥ threshold over the union of all geometries'
     * candidates) that geometry captures. This is the recall-vs-cost
     * dial for choosing Bands before a 100 TB run: candidates scale
-    * the verify stage; missed true dups are unrecoverable. */
-  def lshBandSweep(documents: DataFrame): DataFrame = {
-    val sh = shingleHashes(documents)
-    // lazy checkpoint: unlike ngramJaccard (where the single reuse made
-    // a checkpoint a net loss), the sweep consumes the 64-wide
-    // signature aggregate THREE times — materializing it once measured
-    // ~10% faster at sf0.1 and caps the recompute at any corpus size
-    lshBandSweepFrom(sh, signaturesFromHashes(sh).localCheckpoint(false))
-  }
-
-  /** [[lshBandSweep]] over already-staged shingle-hash and signature
-    * relations ([[graft.Staged]] feeds both). */
+    * the verify stage; missed true dups are unrecoverable.
+    *
+    * Runs over already-staged shingle-hash and signature relations
+    * ([[graft.Staged]] feeds both). */
   private[graft] def lshBandSweepFrom(sh: DataFrame,
                                       sigs: DataFrame): DataFrame = {
     // ONE pair-generation pass over all geometries: the geometry id
@@ -410,26 +402,17 @@ object Dedup {
           .otherwise("DISTINCT"))
   }
 
-  /** [[containmentFrom]] built standalone (shingle + signature chain
-    * computed inline). */
-  def ngramContainment(documents: DataFrame): DataFrame = {
-    val sh = shingleHashes(documents)
-    containmentFrom(sh, signaturesFromHashes(sh).localCheckpoint(false))
-  }
-
-  /** Thresholds swept by [[dedupSweep]] (milli-Jaccard). */
+  /** Thresholds swept by [[dedupSweepFrom]] (milli-Jaccard). */
   val SweepThresholds: Seq[Long] = Seq(400L, 500L, 600L, 700L, 800L, 900L)
 
   /** Dedup threshold sweep — how many verified duplicate pairs each
     * candidate Jaccard threshold would confirm, in one pass: the
     * expensive candidate+verify chain runs ONCE, then each pair row
     * fans out over the (tiny, literal) threshold list. The tuning
-    * view that picks JaccardMilli for a corpus. */
-  def dedupSweep(documents: DataFrame): DataFrame =
-    dedupSweepFrom(ngramJaccard(documents))
-
-  /** [[dedupSweep]] over an already-verified pair relation (the
-    * [[ngramJaccard]] output shape) — staged-reuse entry point. */
+    * view that picks JaccardMilli for a corpus.
+    *
+    * Runs over an already-verified pair relation (the [[ngramJaccard]]
+    * output shape) — staged-reuse entry point. */
   private[graft] def dedupSweepFrom(verified: DataFrame): DataFrame =
     verified
       .select(col("j_milli"),
@@ -453,12 +436,9 @@ object Dedup {
 
   /** End-to-end dedup materialization: the corpus minus confirmed
     * near-duplicates (anti-join on the dup ids — the incremental
-    * delete shape, same as retention cleanup). */
-  def dedupApply(documents: DataFrame): DataFrame =
-    dedupApply(documents, minhashDedup(documents))
-
-  /** [[dedupApply]] against an already-computed dup-pair relation (the
-    * [[minhashDedup]] output shape) — staged-reuse entry point. */
+    * delete shape, same as retention cleanup), against an
+    * already-computed dup-pair relation (the [[minhashDedup]] output
+    * shape) — staged-reuse entry point. */
   def dedupApply(documents: DataFrame, dups: DataFrame): DataFrame =
     documents
       .join(dups
@@ -479,16 +459,10 @@ object Dedup {
     * with more than MaxQuadraticBucket corpus members contributes only
     * its smallest doc (one witness suffices to flag duplication, so a
     * mass-duplicate bucket stays linear). Output: one row per verified
-    * (batch doc, corpus witness) pair with exact Jaccard. */
-  def incrementalDedup(documents: DataFrame): DataFrame = {
-    val sh = shingleHashes(documents)
-    // ONE signature pass over the whole table (checkpointed — the
-    // bucket profile, corpus side, and batch side all re-read it)
-    incrementalDedupFrom(sh, signaturesFromHashes(sh).localCheckpoint(false))
-  }
-
-  /** [[incrementalDedup]] over already-staged shingle-hash and
-    * signature relations ([[graft.Staged]]). */
+    * (batch doc, corpus witness) pair with exact Jaccard.
+    *
+    * Runs over already-staged shingle-hash and signature relations
+    * ([[graft.Staged]]). */
   private[graft] def incrementalDedupFrom(sh: DataFrame,
                                           sigs: DataFrame): DataFrame = {
     val isBatch = pmod(col("doc_id"), lit(IncrementalBatchMod)) === 0
@@ -630,14 +604,12 @@ object Dedup {
     * drop C's witness otherwise). Labels come from
     * [[connectedComponents]] (gated pointer-jumping propagation).
     *
-    * Output: (doc_id, cluster_id, n_members) per clustered doc. */
-  def dupClusters(documents: DataFrame): DataFrame =
-    dupClustersFrom(minhashDedup(documents))
-
-  /** [[dupClusters]] over an already-computed dup-pair relation (the
+    * Output: (doc_id, cluster_id, n_members) per clustered doc.
+    *
+    * Runs over an already-computed dup-pair relation (the
     * [[minhashDedup]] output shape) — staged-reuse entry point
-    * ([[graft.Staged]]). NOTE: executes the gated component loop at
-    * CALL time (see [[connectedComponents]]). */
+    * ([[graft.Staged]]). NOTE: executes the gated component loop at CALL
+    * time (see [[connectedComponents]]). */
   private[graft] def dupClustersFrom(dups: DataFrame): DataFrame = {
     val converged = connectedComponents(dups
       .select(col("keeper_doc_id").as("a"), col("dup_doc_id").as("b")))
@@ -693,13 +665,10 @@ object Dedup {
     * per-doc quality aggregate, then a single per-cluster aggregate —
     * the argmax is a struct max, so there is no window and no
     * per-cluster array; a mass-copied template cluster costs one
-    * combiner-friendly max, not a sort. */
-  def clusterRepresentatives(documents: DataFrame): DataFrame =
-    clusterRepresentativesFrom(dupClusters(documents),
-      TextAnalysis.gopherQuality(documents))
-
-  /** [[clusterRepresentatives]] over already-computed cluster + gopher
-    * relations — staged-reuse entry point ([[graft.Staged]]). */
+    * combiner-friendly max, not a sort.
+    *
+    * Runs over already-computed cluster + gopher relations — staged-reuse
+    * entry point ([[graft.Staged]]). */
   private[graft] def clusterRepresentativesFrom(clusters: DataFrame,
                                                 gopher: DataFrame): DataFrame =
     clusters
@@ -725,13 +694,11 @@ object Dedup {
   /** Duplicate-cluster size histogram — the skew profile of the dup
     * graph (is duplication a long tail of pairs or a few mass-copied
     * templates?), and the direct sizing input for MaxQuadraticBucket.
-    * Two tiny aggregates over [[dupClusters]]' output (clustered docs
-    * only — a vanishing fraction of the corpus). */
-  def clusterSizeHist(documents: DataFrame): DataFrame =
-    clusterSizeHistFrom(dupClusters(documents))
-
-  /** [[clusterSizeHist]] over an already-computed cluster relation (the
-    * [[dupClusters]] output shape) — staged-reuse entry point. */
+    * Two tiny aggregates over [[dupClustersFrom]]' output (clustered docs
+    * only — a vanishing fraction of the corpus).
+    *
+    * Runs over an already-computed cluster relation (the [[dupClustersFrom]]
+    * output shape) — staged-reuse entry point. */
   private[graft] def clusterSizeHistFrom(clusters: DataFrame): DataFrame =
     clusters
       .groupBy("cluster_id").agg(max("n_members").as("n_members"))
@@ -742,12 +709,10 @@ object Dedup {
     * source pair. The provenance view that decides which feeds to
     * de-prioritize at crawl time. Two narrow (doc_id, source) joins
     * against the (small) verified pair set; least/greatest
-    * canonicalizes the pair on both engines. */
-  def crossSourceOverlap(documents: DataFrame): DataFrame =
-    crossSourceOverlapFrom(documents, minhashDedup(documents))
-
-  /** [[crossSourceOverlap]] against an already-computed dup-pair
-    * relation — staged-reuse entry point ([[graft.Staged]]). */
+    * canonicalizes the pair on both engines.
+    *
+    * Runs against an already-computed dup-pair relation — staged-reuse
+    * entry point ([[graft.Staged]]). */
   private[graft] def crossSourceOverlapFrom(documents: DataFrame,
                                             dups: DataFrame): DataFrame = {
     val src = documents.select(col("doc_id"), col("source"))
@@ -854,17 +819,10 @@ object Dedup {
     * the doc-keyed signature relation is joined to both pair sides —
     * at 100 TB signatures are a staged table of 65 longs per doc
     * (~1000× smaller than the text), so the two joins touch the narrow
-    * relation and the candidate pairs, never the corpus. */
-  def minhashEstError(documents: DataFrame): DataFrame = {
-    val sh = shingleHashes(documents)
-    // staged once: candidate generation and the sa/sb per-side joins
-    // all read the same copy — unstaged, the 64-wide aggregate would
-    // run three times
-    minhashEstErrorFrom(sh, signaturesFromHashes(sh).localCheckpoint(false))
-  }
-
-  /** [[minhashEstError]] over already-staged shingle-hash and
-    * signature relations ([[graft.Staged]]). */
+    * relation and the candidate pairs, never the corpus.
+    *
+    * Runs over already-staged shingle-hash and signature relations
+    * ([[graft.Staged]]). */
   private[graft] def minhashEstErrorFrom(sh: DataFrame,
                                          sigs: DataFrame): DataFrame = {
     val exact = pairJaccard(candidatesFromStaged(sigs), sh)
@@ -921,12 +879,6 @@ object Dedup {
           .as("mae1_milli"),
         max(abs(col("est1_milli") - col("j_milli")))
           .as("max_err1_milli"))
-  }
-
-  /** [[bbitMinhashFrom]] built standalone. */
-  def bbitMinhash(documents: DataFrame): DataFrame = {
-    val sh = shingleHashes(documents)
-    bbitMinhashFrom(sh, signaturesFromHashes(sh).localCheckpoint(false))
   }
 
   /** Signature widths swept by [[minhashWidthSweepFrom]]. */
@@ -1009,13 +961,11 @@ object Dedup {
     * vs SimHash pairs, as one full-outer overlap count — the eval a
     * pipeline owner reads before trusting either family alone. Both
     * pair sets are canonical (doc_a < doc_b by construction), so the
-    * overlap join is exact. */
-  def dedupMethodAgreement(documents: DataFrame): DataFrame =
-    dedupMethodAgreementFrom(minhashDedup(documents), simhashDedup(documents))
-
-  /** [[dedupMethodAgreement]] over already-computed MinHash dup pairs
-    * ([[minhashDedup]] shape) and SimHash pairs ([[simhashDedup]]
-    * shape) — staged-reuse entry point ([[graft.Staged]]). */
+    * overlap join is exact.
+    *
+    * Runs over already-computed MinHash dup pairs ([[minhashDedup]]
+    * shape) and SimHash pairs ([[simhashDedup]] shape) — staged-reuse
+    * entry point ([[graft.Staged]]). */
   private[graft] def dedupMethodAgreementFrom(mhPairs: DataFrame,
                                               simPairs: DataFrame): DataFrame = {
     val mh = mhPairs

@@ -578,9 +578,7 @@ object Ledger {
     * error-band VERDICT (|approx−exact|·20 ≤ exact ⟺ within 5%, well
     * outside rsd=0.02's range) — the DuckDB oracle recomputes the
     * exact count and pins the verdict to 'true', so a sketch drifting
-    * out of band fails the hash gate. OperatorsSpec's sketch-accuracy
-    * test still bounds the raw approx value directly (via
-    * approxDistinctRaw). */
+    * out of band fails the hash gate. */
   def approxDistinct(changelog: DataFrame): DataFrame =
     changelog
       .groupBy(dbCol.as("db"))
@@ -590,15 +588,6 @@ object Ledger {
       .select(col("db"), col("n_users_exact"),
         (abs(col("approx") - col("n_users_exact")) * 20L <=
           col("n_users_exact")).cast("string").as("approx_within_5pct"))
-
-  /** The raw sketch value beside the exact count (spec-tested form —
-    * the oracle-checked query wraps this in the error-band verdict). */
-  def approxDistinctRaw(changelog: DataFrame): DataFrame =
-    changelog
-      .groupBy(dbCol.as("db"))
-      .agg(
-        approx_count_distinct("user_id", rsd = 0.02).as("n_users_approx"),
-        countDistinct("user_id").as("n_users_exact"))
 
   /** Running-balance overdraft audit — the ledger-consistency check a
     * sync target's accounting layer runs after landing: per user, the

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * native-expression decoder ([[imageDecode]]) parse actual image
   * bytes with no media library, and the DuckDB oracle parses the very
   * same bytes in SQL. Image near-dup rides an 8×8 average-hash
-  * (aHash) fingerprint through banded-hamming LSH ([[imageDedup]]) —
+  * (aHash) fingerprint through banded-hamming LSH ([[imageDedupFrom]]) —
   * the simhash/minhash bucket discipline applied to pixels.
   */
 object Multimodal {
@@ -241,17 +241,6 @@ object Multimodal {
     * [[HammingTau]] — which banding makes recall-lossless by
     * pigeonhole (4 bands, ≤3 differing bits ⇒ one band matches).
     * 100 TB-shape: never all-pairs, bucket-keyed, linear output. */
-  def imageDedup(images: DataFrame): DataFrame =
-    // the fingerprint relation is STAGED before banding (the minhash
-    // "signature table is a staged table" rule): the banding self-join
-    // references it three times, and re-deriving the nested-HOF hash
-    // expression per reference both recomputes the raster work and
-    // drives the optimizer into fixed-point thrash on the duplicated
-    // lambda trees. At 100 TB you materialize signatures once anyway.
-    imageDedupFrom(imageFingerprints(images).localCheckpoint(eager = false))
-
-  /** [[imageDedup]] over an already-staged fingerprint relation
-    * (doc_id, bands) — the composed/staged consumers' entry point. */
   def imageDedupFrom(fps: DataFrame): DataFrame = {
     val banded = fps.select(col("doc_id"),
         posexplode(col("bands")).as(Seq("band", "sig")))

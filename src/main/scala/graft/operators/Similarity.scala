@@ -685,10 +685,6 @@ object Similarity {
         expr(s"(dim * 4000000L) div $PqM").as("pq_ratio_ppm"))
   }
 
-  /** [[annIndexCardFrom]] built standalone. */
-  def annIndexCard(embeddings: DataFrame): DataFrame =
-    annIndexCardFrom(ivfAssign(embeddings), embeddings)
-
   /** Int8 quantization summary per vector: clip to [-1,1], scale by
     * 127, round — the storage-compression step (4× smaller than f32)
     * a 100 TB vector corpus ships with. Surfaced as hash-stable
@@ -908,7 +904,24 @@ object Similarity {
     * size. cov_e12 = Σ(ca·cb) div n with e6-centered factors: |ca| ≤
     * 2e6 ⇒ the 63-bit sum holds to ~2M vectors per job at full |x|≈1
     * coordinate range — shard-and-merge (sums are associative) beyond. */
-  def embedCovariance(embeddings: DataFrame): DataFrame = {
+  def embedCovariance(embeddings: DataFrame): DataFrame =
+    centeredE6(embeddings)
+      .select(col("c6"), posexplode(col("c6")).as(Seq("da", "ca")))
+      .select(col("da"), col("ca"),
+        posexplode(slice(col("c6"), col("da") + 1, lit(Dim) - col("da")))
+          .as(Seq("j", "cb")))
+      .groupBy(col("da").cast("long").as("dim_a"),
+        (col("da") + col("j")).cast("long").as("dim_b"))
+      .agg(sum(col("ca") * col("cb")).as("sp"), count(lit(1)).as("n"))
+      .select(col("dim_a"), col("dim_b"),
+        expr("sp div n").as("cov_e12"))
+
+  /** (vec_id, c6): each vector's e6-rounded coordinates centered on the
+    * per-dim integer means (Σx6 div n, truncated). The means are a
+    * [[Dim]]-row aggregate whose result — 64 longs — is collected and
+    * inlined as a literal array. Shared by [[embedCovariance]] and the
+    * OPQ variance diagonal, so both center on the same means. */
+  private def centeredE6(embeddings: DataFrame): DataFrame = {
     val x6 = embeddings.select(col("vec_id"),
       transform(col("embedding"),
         x => round(x.cast("double") * 1000000L).cast("long")).as("v6"))
@@ -919,18 +932,8 @@ object Similarity {
       .select(col("dim"), expr("s div n").as("mean6"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val meanLit = array((0 until Dim).map(d => lit(means(d))): _*)
-    x6
-      .select(col("vec_id"),
-        zip_with(col("v6"), meanLit, (x, m) => x - m).as("c6"))
-      .select(col("c6"), posexplode(col("c6")).as(Seq("da", "ca")))
-      .select(col("da"), col("ca"),
-        posexplode(slice(col("c6"), col("da") + 1, lit(Dim) - col("da")))
-          .as(Seq("j", "cb")))
-      .groupBy(col("da").cast("long").as("dim_a"),
-        (col("da") + col("j")).cast("long").as("dim_b"))
-      .agg(sum(col("ca") * col("cb")).as("sp"), count(lit(1)).as("n"))
-      .select(col("dim_a"), col("dim_b"),
-        expr("sp div n").as("cov_e12"))
+    x6.select(col("vec_id"),
+      zip_with(col("v6"), meanLit, (x, m) => x - m).as("c6"))
   }
 
   /** Power-iteration rounds of [[anisotropyAudit]]. */
@@ -1206,31 +1209,27 @@ object Similarity {
     * which is precisely what a recall gate exists to catch. A
     * production index k-means-trains the codebook per subspace; the
     * plan shape here is identical either way. */
-  def pqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    pqRecallFrom(l2Truth(embeddings, k), embeddings, k)
-
-  /** [[pqRecall]] over a staged exact-L2 truth. */
   def pqRecallFrom(truth: DataFrame, embeddings: DataFrame,
                    k: Int = TopK): DataFrame =
     recallAtK(truth,
       pqSearch(embeddings, k).select(col("q_id"), col("cand_id")), k)
 
-  /** Exact L2 top-k ground truth per query — shared by [[pqRecall]]
-    * and [[pqRecallTrained]] so both gates measure against the same
-    * metric. */
-  private def l2Truth(embeddings: DataFrame, k: Int): DataFrame =
+  /** Exact L2 top-[[TopK]] ground truth (q_id, cand_id) per query —
+    * staged once ([[graft.Staged.ann]]) and shared by every PQ recall
+    * gate, so they all measure against the same metric. */
+  def annL2Truth(embeddings: DataFrame): DataFrame =
     candidates(embeddings)
       .join(broadcast(queries(embeddings)))
       .withColumn("d2_e9", l2DistE9(col("q_vec"), col("c_vec")))
       .withColumn("rank", row_number().over(Window.partitionBy("q_id")
         .orderBy(col("d2_e9"), col("cand_id"))))
-      .where(col("rank") <= k)
+      .where(col("rank") <= TopK)
       .select(col("q_id"), col("cand_id"))
 
   /** recall@k of an approximate result against a ground-truth top-k:
     * the k·|Q| truth rows semi-join the approximate rows, and every
     * query reports its hit count even at zero — the shared scaffold
-    * of [[ivfRecall]] and [[pqRecall]]. */
+    * of [[ivfRecallFrom]] and [[pqRecallFrom]]. */
   private def recallAtK(truth: DataFrame, approx: DataFrame,
                         k: Int): DataFrame = {
     val hits = truth
@@ -1274,10 +1273,6 @@ object Similarity {
       .select(col("q_id"), col("cand_id"))
     recallAtK(cosTruth, approx, k)
   }
-
-  /** [[sqRecallFrom]] built standalone. */
-  def sqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    sqRecallFrom(bruteTopK(embeddings, k), embeddings, k)
 
   /** Output dimensionality of the [[rpRecallFrom]] projection. */
   val RpDims = 16
@@ -1332,13 +1327,9 @@ object Similarity {
     recallAtK(cosTruth, approx, k)
   }
 
-  /** [[rpRecallFrom]] built standalone. */
-  def rpRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    rpRecallFrom(bruteTopK(embeddings, k), embeddings, k)
-
-  /** Prefix dimensionalities evaluated by [[mrlRecallCurve]]. The top
+  /** Prefix dimensionalities evaluated by [[mrlRecallCurveFrom]]. The top
     * entry is the full [[Dim]], so the curve's top end must reproduce
-    * [[sqRecall]]'s aggregate exactly — a built-in sanity check. */
+    * [[sqRecallFrom]]'s aggregate exactly — a built-in sanity check. */
   val MrlDims: Seq[Int] = Seq(8, 16, 32, 64)
 
   /** Matryoshka truncation recall curve — recall@k of int8
@@ -1351,7 +1342,7 @@ object Similarity {
     * measures what each truncation actually costs on THIS corpus
     * (i.i.d. test vectors spread information uniformly, so the
     * measured decay here is the worst case — an honest floor, the
-    * same posture as [[pqRecall]]'s untrained-codebook note).
+    * same posture as [[pqRecallFrom]]'s untrained-codebook note).
     *
     * Shape: ONE pass over the candidate set computes the coordinate
     * products per (query, candidate) and every prefix dot as a slice
@@ -1396,10 +1387,6 @@ object Similarity {
         expr(s"(hits * 1000) div (n_q * ${k}L)").as("mean_recall_milli"))
   }
 
-  /** [[mrlRecallCurveFrom]] built standalone. */
-  def mrlRecallCurve(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    mrlRecallCurveFrom(bruteTopK(embeddings, k), embeddings, k)
-
   /** Binary-quantization shortlist size: hamming ranks R candidates,
     * the int8 re-rank keeps k. */
   val BqShortlist: Int = 4 * TopK
@@ -1415,14 +1402,14 @@ object Similarity {
       "cast(0 as bigint), (s, t) -> s + t)"
 
   /** Recall gate for 1-bit binary quantization — the BOTTOM rung of
-    * the storage ladder (f32 → int8 [[sqRecall]] → PQ → 1 bit/dim,
+    * the storage ladder (f32 → int8 [[sqRecallFrom]] → PQ → 1 bit/dim,
     * 32× smaller than f32): vectors collapse to their sign pattern,
     * candidates rank by Hamming distance (popcount of XOR — the
     * cheapest distance a vector store can compute), and an int8
     * re-rank of the top-[[BqShortlist]] recovers what the 1-bit
     * ranking loses. Emits BOTH stages — `hamming` (raw 1-bit recall)
     * and `rerank` (shortlist + int8 re-rank) — so the datasheet prices
-    * the re-rank's contribution, mirroring [[pqRerankCurve]]'s
+    * the re-rank's contribution, mirroring [[pqRerankCurveFrom]]'s
     * shortlist-then-exact pattern at the coarsest quantization.
     *
     * Shape: one pass computes both sign words and the int8 array per
@@ -1466,18 +1453,6 @@ object Similarity {
       .select(col("variant"), col("sum_hits"),
         expr(s"(sum_hits * 1000) div (n_q * ${k}L)").as("mean_recall_milli"))
   }
-
-  /** [[bqRecallFrom]] built standalone. */
-  def bqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    bqRecallFrom(bruteTopK(embeddings, k), embeddings, k)
-
-  /** Recall gate for the IVF index: ann_ivf's probed top-k measured
-    * against the exact cosine brute-force truth (both rank by cosine,
-    * so this isolates the cost of probing NumProbes of NumCentroids
-    * lists — the recall/fan-out dial a production index tunes). */
-  def ivfRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    ivfRecallFrom(bruteTopK(embeddings, k), ivfAssign(embeddings),
-      embeddings, k)
 
   /** Tombstone cohort for [[annTombstones]]: every 8th candidate id
     * is deleted (the ivf_incremental 1-in-8 convention). */
@@ -1536,8 +1511,11 @@ object Similarity {
         expr(s"n_hits * 1000 div ${k}L").as("recall_milli"))
   }
 
-  /** [[ivfRecall]] over a staged cosine truth + staged list
-    * assignment. */
+  /** Recall gate for the IVF index: ann_ivf's probed top-k measured
+    * against the exact cosine brute-force truth (both rank by cosine,
+    * so this isolates the cost of probing NumProbes of NumCentroids
+    * lists — the recall/fan-out dial a production index tunes), over a
+    * staged cosine truth + staged list assignment. */
   def ivfRecallFrom(cosTruth: DataFrame, assign: DataFrame,
                     embeddings: DataFrame, k: Int = TopK): DataFrame =
     recallAtK(
@@ -1582,15 +1560,10 @@ object Similarity {
     recallAtK(cosTruth.select(col("q_id"), col("cand_id")), approx, k)
   }
 
-  /** [[ivfSqRecallFrom]] built standalone. */
-  def ivfSqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    ivfSqRecallFrom(bruteTopK(embeddings, k), ivfAssign(embeddings),
-      embeddings, k)
-
-  /** Probe counts evaluated by [[ivfRecallCurve]]. */
+  /** Probe counts evaluated by [[ivfRecallCurveFrom]]. */
   val IvfProbeCounts: Seq[Int] = Seq(1, 2, 4, 8, 16)
 
-  /** Recall-vs-probe-count curve for the IVF index — [[ivfRecall]]
+  /** Recall-vs-probe-count curve for the IVF index — [[ivfRecallFrom]]
     * evaluated at every probe setting in [[IvfProbeCounts]], so the
     * recall/fan-out dial has measured positions instead of a 10-60%
     * anecdote. The exact truth and the list assignment are staged once
@@ -1598,13 +1571,6 @@ object Similarity {
     * candidates. probes=NumCentroids would be exhaustive cosine search
     * — recall 1000 by construction — so the curve's top end sanity-
     * checks itself. */
-  def ivfRecallCurve(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    ivfRecallCurveFrom(
-      bruteTopK(embeddings, k).localCheckpoint(false),
-      ivfAssign(embeddings).localCheckpoint(false), embeddings, k)
-
-  /** [[ivfRecallCurve]] over a staged cosine truth + staged list
-    * assignment. */
   def ivfRecallCurveFrom(cosTruth: DataFrame, assign: DataFrame,
                          embeddings: DataFrame, k: Int = TopK): DataFrame = {
     val spark = cosTruth.sparkSession
@@ -1670,10 +1636,10 @@ object Similarity {
 
   // --- trained product quantization ----------------------------------------
 
-  /** Lloyd rounds for [[pqTrain]]. Fixed rounds (not
+  /** Lloyd rounds for [[pqTrainFrom]]. Fixed rounds (not
     * convergence-gated) so the DuckDB oracle can mirror the training
     * as straight-line CTEs — the cross-engine-verifiable form. Four
-    * rounds: the recall curve ([[pqRecallCurve]]) shows the lift has
+    * rounds: the recall curve ([[pqRecallCurveFrom]]) shows the lift has
     * flattened by then at this corpus, so more straight-line rounds
     * would pad the oracle chain without measurable index quality. */
   val PqTrainIters = 4
@@ -1745,12 +1711,6 @@ object Similarity {
   def annSubvectors(embeddings: DataFrame): DataFrame =
     subspaced(vecsE6(embeddings), "vec_id")
 
-  /** The full [[PqTrainIters]]-round Lloyd chain over a (staged)
-    * subvector relation, Forgy-seeded — element i is the codebook
-    * relation after i+1 rounds; `.last` is the trained codebook. */
-  def annLloydChain(sub: DataFrame): Seq[DataFrame] =
-    lloydChain(sub, pqSeedCb(sub))
-
   /** One Lloyd round over a (staged) subvector relation: from the
     * Forgy seed codebook when `prev` is None, else from the (staged)
     * previous round — [[graft.Staged]]'s chain entries stage each round
@@ -1758,29 +1718,10 @@ object Similarity {
   def annLloydRound(sub: DataFrame, prev: Option[DataFrame]): DataFrame =
     pqLloydStep(sub, prev.fold(pqSeedCb(sub))(cbArrays))
 
-  /** Exact L2 top-[[TopK]] ground truth (q_id, cand_id). */
-  def annL2Truth(embeddings: DataFrame): DataFrame =
-    l2Truth(embeddings, TopK)
-
-  /** Trained-codebook relation + the staged subvector relation it was
-    * trained on. The subvector staging is localCheckpoint'd lazily
-    * (each Lloyd round reads it twice; at 100 TB a production build
-    * trains on a staged SAMPLE — the iteration shape is the same). */
-  private def pqTrained(embeddings: DataFrame): (DataFrame, DataFrame) = {
-    val (rels, sub) = pqTrainedStages(embeddings)
-    (rels.last, sub)
-  }
-
-  /** Every Lloyd round's (m,k,dim,…) relation, in training order, plus
-    * the staged subvector relation — the recall-curve entry point. */
-  private def pqTrainedStages(embeddings: DataFrame): (Seq[DataFrame], DataFrame) = {
-    val sub = subspaced(vecsE6(embeddings), "vec_id").localCheckpoint(false)
-    (lloydChain(sub, pqSeedCb(sub)), sub)
-  }
-
   /** [[PqTrainIters]] Lloyd rounds from `seed` over any (vec_id, m,
-    * sv6) subvector relation — shared by the raw-vector trainer and the
-    * residual trainer. */
+    * sv6) subvector relation — the residual trainer's chain, each round
+    * checkpointed lazily (the raw-vector chains are [[graft.Staged]]
+    * registry entries). */
   private def lloydChain(sub: DataFrame, seed: DataFrame): Seq[DataFrame] = {
     val rels = Seq.newBuilder[DataFrame]
     var cb = seed
@@ -1804,25 +1745,15 @@ object Similarity {
     * relation form. The codegen'd instruction-stream path (PqCodes/
     * PqLut) remains the 100 TB scan shape, demonstrated by
     * pq_encode/pq_search with the frozen codebook. */
-  def pqTrain(embeddings: DataFrame): DataFrame = pqTrained(embeddings)._1
-
-  /** [[pqTrain]] over a staged Lloyd chain: the trained codebook IS
-    * the chain's last round. */
   def pqTrainFrom(chain: Seq[DataFrame]): DataFrame = chain.last
 
-  /** Recall gate for TRAINED PQ — [[pqRecall]]'s twin with the
-    * [[pqTrain]] codebook instead of the untrained literals, measured
+  /** Recall gate for TRAINED PQ — [[pqRecallFrom]]'s twin with the
+    * [[pqTrainFrom]] codebook instead of the untrained literals, measured
     * against the same exact-L2 truth. Encoding assigns each (vector,
     * subspace) row under the FINAL codebook (broadcast, 128 rows);
     * ADC distances are exact integer sums over subspaces, so the
     * whole query — training included — is oracle-checkable. Run next
     * to pq_recall, this IS the codebook-training recall lift. */
-  def pqRecallTrained(embeddings: DataFrame, k: Int = TopK): DataFrame = {
-    val (rels, sub) = pqTrainedStages(embeddings)
-    pqRecallTrainedFrom(rels, sub, l2Truth(embeddings, k), embeddings, k)
-  }
-
-  /** [[pqRecallTrained]] over staged chain/subvectors/truth. */
   def pqRecallTrainedFrom(chain: Seq[DataFrame], sub: DataFrame,
                           truth: DataFrame, embeddings: DataFrame,
                           k: Int = TopK): DataFrame =
@@ -1870,7 +1801,7 @@ object Similarity {
         .orderBy(col("dist_e12"), col("vec_id"))))
   }
 
-  /** Recall-vs-training-iterations curve: the [[pqRecallTrained]] gate
+  /** Recall-vs-training-iterations curve: the [[pqRecallTrainedFrom]] gate
     * evaluated under EVERY intermediate codebook — iters=0 is the raw
     * Forgy seed, iters=i the codebook after i Lloyd rounds — so the
     * marginal recall of each round is a committed, oracle-checked
@@ -1878,13 +1809,6 @@ object Similarity {
     * (total hits · 1000) div (n_queries · k). Each iteration's ADC
     * pass reuses the one staged subvector relation; the curve costs
     * PqTrainIters+1 broadcast joins over it, no extra corpus scans. */
-  def pqRecallCurve(embeddings: DataFrame, k: Int = TopK): DataFrame = {
-    val (rels, sub) = pqTrainedStages(embeddings)
-    pqRecallCurveFrom(rels, sub,
-      l2Truth(embeddings, k).localCheckpoint(false), embeddings, k)
-  }
-
-  /** [[pqRecallCurve]] over staged chain/subvectors/truth. */
   def pqRecallCurveFrom(rels: Seq[DataFrame], sub: DataFrame,
                         truth: DataFrame, embeddings: DataFrame,
                         k: Int = TopK): DataFrame = {
@@ -1943,24 +1867,12 @@ object Similarity {
     * coordinates, driver-inlined truncated means (the catalog-stats
     * convention for a Dim-long statistics literal), var = Σc² div n —
     * so the values equal [[pqSubspaceBalance]]'s diagonal exactly. */
-  private def dimVariance(embeddings: DataFrame): DataFrame = {
-    val x6 = embeddings.select(col("vec_id"),
-      transform(col("embedding"),
-        x => round(x.cast("double") * 1000000L).cast("long")).as("v6"))
-    val means = x6
-      .select(posexplode(col("v6")).as(Seq("dim", "x6")))
-      .groupBy("dim")
-      .agg(sum("x6").as("s"), count(lit(1)).as("n"))
-      .select(col("dim"), expr("s div n").as("mean6"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val meanLit = array((0 until Dim).map(d => lit(means(d))): _*)
-    x6
-      .select(posexplode(zip_with(col("v6"), meanLit, (x, m) => x - m))
-        .as(Seq("dim", "c6")))
+  private def dimVariance(embeddings: DataFrame): DataFrame =
+    centeredE6(embeddings)
+      .select(posexplode(col("c6")).as(Seq("dim", "c6")))
       .groupBy(col("dim").cast("long").as("dim"))
       .agg(sum(col("c6") * col("c6")).as("sp"), count(lit(1)).as("n"))
       .select(col("dim"), expr("sp div n").as("var_e12"))
-  }
 
   /** OPQ-style dimension permutation (olddim, newpos) — Ge et al.'s
     * eigenvalue-allocation idea in its oracle-replayable integer form:
@@ -2063,7 +1975,7 @@ object Similarity {
   def opqQSubFrom(embeddings: DataFrame, permArr: DataFrame): DataFrame =
     opqQSub(embeddings, permArr)
 
-  /** Recall gate for OPQ-permuted trained PQ — [[pqRecallTrained]]'s
+  /** Recall gate for OPQ-permuted trained PQ — [[pqRecallTrainedFrom]]'s
     * twin with the variance-snake permutation applied before the
     * subspace split: permute every vector (and query), train the same
     * [[PqTrainIters]] integer Lloyd rounds on the permuted subvectors,
@@ -2086,17 +1998,6 @@ object Similarity {
                       qsub: DataFrame, truth: DataFrame,
                       k: Int = TopK): DataFrame =
     recallAtK(truth, pqAdcTopK(cbArrays(chain.last), sub, qsub, k), k)
-
-  /** [[pqRecallOpqFrom]] building its own permutation, Lloyd chain and
-    * exact-L2 truth (the standalone form; the registry rides the
-    * [[graft.Staged.ann]] copies). */
-  def pqRecallOpq(embeddings: DataFrame, k: Int = TopK): DataFrame = {
-    val pa = opqPermArray(embeddings).localCheckpoint(false)
-    val sub = opqSubvectorsFrom(embeddings, pa).localCheckpoint(false)
-    val chain = lloydChain(sub, pqSeedCb(sub))
-    pqRecallOpqFrom(chain, sub, opqQSub(embeddings, pa),
-      l2Truth(embeddings, k), k)
-  }
 
   // --- residual IVF-PQ and ADC re-ranking ----------------------------------
 
@@ -2149,6 +2050,9 @@ object Similarity {
     * centroid before the table lookup, so the approximation error is
     * only the PQ quantization of the residual. All integer-e6
     * arithmetic end to end; oracle-checkable like the plain trainer.
+    * The exact-L2 truth is [[graft.Staged.ann]]'s staged copy, like
+    * every other recall gate's; the residual trainer itself is
+    * necessarily fresh.
     *
     * Honest finding on THIS corpus: the committed recall is BELOW the
     * plain trained codebook's (see pq_recall_trained) — the test
@@ -2159,20 +2063,13 @@ object Similarity {
     * list variance ≪ global variance); a gate that shows WHEN the
     * composition helps is the point of committing the measurement.
     * The recall lift that does transfer to isotropic corpora is the
-    * ADC shortlist + exact re-rank — [[pqRerankCurve]].
+    * ADC shortlist + exact re-rank — [[pqRerankCurveFrom]].
     *
     * Scale shape: centroid training is one broadcast argmin + one
     * (centroid, dim) aggregate per round; assignment/encoding stream
     * one row per (vector[, subspace]) through broadcast joins; the
     * query-side residual LUT is |Q|·NumCentroids·PqM rows (tiny,
     * broadcast). No stage reads more than the candidate relation. */
-  def pqRecallResidual(embeddings: DataFrame, k: Int = TopK): DataFrame =
-    pqRecallResidualFrom(embeddings, l2Truth(embeddings, k), k)
-
-  /** [[pqRecallResidual]] over a staged exact-L2 truth (the registry
-    * rides [[graft.Staged.ann]]'s copy like every other recall gate —
-    * the residual trainer itself is necessarily fresh, but the truth
-    * side need not be re-ranked per gate). */
   def pqRecallResidualFrom(embeddings: DataFrame, truth: DataFrame,
                            k: Int = TopK): DataFrame = {
     val vecs = vecsE6(embeddings)
@@ -2219,7 +2116,7 @@ object Similarity {
     recallAtK(truth, approx, k)
   }
 
-  /** Shortlist sizes evaluated by [[pqRerankCurve]]. R = TopK re-ranks
+  /** Shortlist sizes evaluated by [[pqRerankCurveFrom]]. R = TopK re-ranks
     * the ADC top-k itself — same SET as pq_recall_trained, so the
     * curve's bottom anchor must equal that gate's mean recall. */
   val RerankRs: Seq[Int] = Seq(10, 20, 40, 80)
@@ -2231,20 +2128,13 @@ object Similarity {
     * measured against the exact truth. This is the recall lift that
     * works regardless of corpus geometry (measured here: 325 → 612 →
     * 775 milli at R = 10 → 40 → 80), where residual encoding
-    * ([[pqRecallResidual]]) pays only on clustered data.
+    * ([[pqRecallResidualFrom]]) pays only on clustered data.
     *
     * Scale shape: ONE ADC ranking pass (staged localCheckpoint) feeds
     * every R; the exact re-rank reads full vectors for only R·|Q| ids
     * per setting — at 100 TB that is the difference between scanning
     * 32×-compressed codes plus R full-vector lookups and scanning raw
     * vectors at all. */
-  def pqRerankCurve(embeddings: DataFrame, k: Int = TopK): DataFrame = {
-    val (rels, sub) = pqTrainedStages(embeddings)
-    pqRerankCurveFrom(rels, sub,
-      l2Truth(embeddings, k).localCheckpoint(false), embeddings, k)
-  }
-
-  /** [[pqRerankCurve]] over staged chain/subvectors/truth. */
   def pqRerankCurveFrom(rels: Seq[DataFrame], sub: DataFrame,
                         truth: DataFrame, embeddings: DataFrame,
                         k: Int = TopK): DataFrame = {
@@ -2293,7 +2183,7 @@ object Similarity {
         expr(s"(sum_hits * 1000) div (n_q * ${k}L)").as("mean_recall_milli"))
   }
 
-  /** Cosine threshold (e6) for [[semanticDedup]] — calibrated to the
+  /** Cosine threshold (e6) for [[semanticDedupFrom]] — calibrated to the
     * test corpus's cosine distribution (max pairwise ≈ 0.51): pairs
     * above it are the distribution's extreme tail. */
   val SemTauE6 = 350000L
@@ -2307,11 +2197,6 @@ object Similarity {
     * so per-list populations — and the within-list quadratic term —
     * stay bounded; here k is the fixed test-index size that ann_ivf
     * already uses. */
-  def semanticDedup(embeddings: DataFrame,
-                    tauE6: Long = SemTauE6): DataFrame =
-    semanticDedupFrom(ivfAssign(embeddings), embeddings, tauE6)
-
-  /** [[semanticDedup]] over a staged list assignment. */
   def semanticDedupFrom(assign: DataFrame, embeddings: DataFrame,
                         tauE6: Long = SemTauE6): DataFrame = {
     val listed = assign
@@ -2369,12 +2254,6 @@ object Similarity {
         "top_token", "top_token_n", "id_sum")
   }
 
-  /** [[topicClustersFrom]] built standalone (assignment + tokenization
-    * computed inline). */
-  def topicClusters(embeddings: DataFrame, documents: DataFrame): DataFrame =
-    topicClustersFrom(ivfAssign(embeddings), documents,
-      TextAnalysis.tokensRel(documents))
-
   /** In-context-pretraining document ordering (Shi et al. 2023):
     * pretraining on SEMANTICALLY ADJACENT documents in the same
     * context window beats random order, so the corpus is clustered
@@ -2407,10 +2286,6 @@ object Similarity {
       .select(col("centroid_id"), col("position"),
         col("vec_id").as("doc_id"), col("sim_e6"))
 
-  /** [[incontextOrderFrom]] built standalone. */
-  def incontextOrder(embeddings: DataFrame): DataFrame =
-    incontextOrderFrom(ivfAssign(embeddings), embeddings)
-
   /** Load (milli of the ideal even share) above which [[ivfBalanceFrom]]
     * flags a list — 2000 = twice its fair share, FAISS's usual
     * imbalance red line. */
@@ -2438,10 +2313,6 @@ object Similarity {
       .withColumn("overloaded",
         (col("load_milli") > BalanceOverloadMilli).cast("string"))
   }
-
-  /** [[ivfBalanceFrom]] over a freshly built assignment. */
-  def ivfBalance(embeddings: DataFrame): DataFrame =
-    ivfBalanceFrom(ivfAssign(embeddings))
 
   /** Embedding-distribution drift per label — the monitor that decides
     * when [[ivfIncremental]]'s fast path (assign new vectors to stale

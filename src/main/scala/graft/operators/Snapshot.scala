@@ -132,21 +132,7 @@ object Snapshot {
         col("key_lo"), col("key_hi"))
   }
 
-  /** Referential-integrity audit over the synced star schema — the
-    * post-sync consistency check (did every child row's parent arrive?):
-    * per relation, child rows, orphan child rows (parent key absent),
-    * distinct parents, and childless parents. Child keys are
-    * pre-aggregated per key BEFORE the anti-join, so the join moves
-    * |distinct keys| rows, not |child rows|. */
-  def fkIntegrity(customer: DataFrame, orders: DataFrame,
-                  lineitem: DataFrame, nation: DataFrame): DataFrame =
-    fkIntegrityFrom(catalogHistogram(Seq(
-      "orders" -> orders.select(col("o_custkey"), col("o_orderkey")),
-      "customer" -> customer.select(col("c_custkey"), col("c_nationkey")),
-      "lineitem" -> lineitem.select(col("l_orderkey")),
-      "nation" -> nation.select(col("n_nationkey")))))
-
-  /** The audited FK edges of [[fkIntegrity]]:
+  /** The audited FK edges of [[fkIntegrityFrom]]:
     * (relation label, child table, child key, parent table, parent key). */
   val FkEdges: Seq[(String, String, String, String, String)] = Seq(
     ("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
@@ -154,13 +140,20 @@ object Snapshot {
     ("customer->nation", "customer", "c_nationkey", "nation",
       "n_nationkey"))
 
-  /** [[fkIntegrity]] over an already-staged ANALYZE histogram: the
-    * per-child-key count profile and the distinct-parent-key set ARE
-    * the histogram restricted to the two key columns, so the audit's
-    * anti-joins move |distinct keys| rows read from the published
-    * stats — no fact table is rescanned per relation. Null-key
-    * semantics are unchanged (null histogram values never match an
-    * equi/anti join, exactly like the native-key form). */
+  /** Referential-integrity audit over the synced star schema — the
+    * post-sync consistency check (did every child row's parent arrive?):
+    * per relation, child rows, orphan child rows (parent key absent),
+    * distinct parents, and childless parents. Child keys are
+    * pre-aggregated per key BEFORE the anti-join, so the join moves
+    * |distinct keys| rows, not |child rows|.
+    *
+    * Runs over an already-staged ANALYZE histogram: the per-child-key
+    * count profile and the distinct-parent-key set ARE the histogram
+    * restricted to the two key columns, so the audit's anti-joins move
+    * |distinct keys| rows read from the published stats — no fact table
+    * is rescanned per relation. Null-key semantics are unchanged (null
+    * histogram values never match an equi/anti join, exactly like the
+    * native-key form). */
   def fkIntegrityFrom(hist: DataFrame): DataFrame = {
     // per-edge form, NOT the joinSizeEstimateFrom single-pass shape:
     // measured 0.8 s vs 1.4 s for the relation-tagged variant — with
@@ -261,7 +254,7 @@ object Snapshot {
 
   /** The audited (table, columns) grid of the catalog passes — ONE
     * shared constant feeding both the Spark aggregations
-    * ([[catalogStats]] / [[catalogStatsSketchGate]] registry entries)
+    * ([[catalogStatsFrom]] / [[catalogStatsSketchGateFrom]] registry entries)
     * and the DuckDB oracle generator, so a testdata schema evolution
     * cannot silently desynchronize the two sides. */
   val CatalogColumns: Seq[(String, Seq[String])] = Seq(
@@ -278,28 +271,6 @@ object Snapshot {
     "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey",
       "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
       "l_tax", "l_returnflag", "l_linestatus", "l_shipdate"))
-
-  /** ANALYZE-style catalog statistics over the star schema — the
-    * per-column numbers a cost-based optimizer's cardinality estimates
-    * feed on (and the profile a sync target publishes next to its data):
-    * one row per (table, column) with row count, EXACT distinct count,
-    * and null count. Exact NDV (not a sketch) keeps the report
-    * hash-verifiable cross-engine. Each column is a column-pruned
-    * branch of ONE union job, and each branch does the distinct
-    * count MANUALLY in two phases — groupBy(value).count (partial
-    * aggregation collapses every map partition to the column's
-    * distinct values before the exchange) then one global roll-up of
-    * (Σcnt, #values, Σnull-cnt) — so the shuffle carries Σ per-column
-    * NDV native-typed values and NO branch plans the Expand operator
-    * Spark inserts for mixed distinct+non-distinct aggregates — the
-    * row-duplicating scan-side shape that died first in the 100x plan
-    * audit (at sf0.1 the two forms measure within noise because job
-    * overhead dominates; the Expand CPU multiplier only shows on a
-    * wide fact scan). For the sketch-NDV pass a 100 TB catalog crawl
-    * should actually run on, see [[catalogStatsSketch]]. */
-  def catalogStats(tables: Seq[(String, DataFrame)]): DataFrame =
-    catalogStatsFrom(catalogHistogram(tables),
-      tables.map { case (n, df) => n -> df.columns.toSeq })
 
   /** The per-(table, column, value) count histogram — the relation an
     * ANALYZE pass actually persists (per-column value histograms), and
@@ -332,7 +303,15 @@ object Snapshot {
           col("value"), col("cnt"))
     }.reduce(_ unionByName _)
 
-  /** ANALYZE rollup over [[catalogHistogram]] — grid-sized: per
+  /** ANALYZE-style catalog statistics over the star schema — the
+    * per-column numbers a cost-based optimizer's cardinality estimates
+    * feed on (and the profile a sync target publishes next to its data):
+    * one row per (table, column) with row count, EXACT distinct count,
+    * and null count. Exact NDV (not a sketch) keeps the report
+    * hash-verifiable cross-engine. For the sketch-NDV pass a 100 TB
+    * catalog crawl should actually run on, see [[catalogStatsSketch]].
+    *
+    * The rollup over [[catalogHistogram]] is grid-sized: per
     * (table, column), Σcnt = n_rows, #non-null values = exact NDV,
     * Σnull-group counts = n_null. The literal (table, column) grid
     * left-joins the rollup so an empty table still reports every
@@ -372,7 +351,7 @@ object Snapshot {
     * aggregate, so the multi-column pass needs no Expand and no
     * per-column rescans: one map-side-combined scan per table, merge
     * buffers of a few KB per column. This is the pass a 100 TB catalog
-    * crawl runs; [[catalogStats]] (exact) is the oracle-gate twin. */
+    * crawl runs; [[catalogStatsFrom]] (exact) is the oracle-gate twin. */
   def catalogStatsSketch(tables: Seq[(String, DataFrame)]): DataFrame = {
     def one(name: String, df: DataFrame): DataFrame = {
       val cols = df.columns
@@ -398,20 +377,16 @@ object Snapshot {
     * (|approx−exact|·20 ≤ exact, well outside rsd=0.02's range); the
     * DuckDB oracle recomputes the exact side and pins the verdict to
     * 'true'. The gate verifies [[catalogStatsSketch]]'s ACTUAL output
-    * (one HLL pass per table) joined to [[catalogStats]]'s exact rows
+    * (one HLL pass per table) joined to [[catalogStatsFrom]]'s exact rows
     * on the tiny (table, column) grid — the two Expand-free passes
     * plus a broadcast join, never the mixed distinct+HLL aggregate
     * (Spark rewrites that through Expand, the exact shuffle shape the
-    * sketch pass exists to avoid). */
-  def catalogStatsSketchGate(tables: Seq[(String, DataFrame)]): DataFrame =
-    catalogStatsSketchGateFrom(catalogHistogram(tables),
-      tables.map { case (n, df) => n -> df.columns.toSeq }, tables)
-
-  /** [[catalogStatsSketchGate]] over an already-staged histogram — the
-    * staged-consumer entry point: the exact side is the grid-sized
-    * [[catalogStatsFrom]] rollup, the sketch side recomputes from RAW
-    * rows (bit-identical HLL to the standalone form; only the exact
-    * side rides the histogram). */
+    * sketch pass exists to avoid).
+    *
+    * Runs over an already-staged histogram — the staged-consumer entry
+    * point: the exact side is the grid-sized [[catalogStatsFrom]] rollup,
+    * the sketch side recomputes from RAW rows (bit-identical HLL to the
+    * standalone form; only the exact side rides the histogram). */
   def catalogStatsSketchGateFrom(hist: DataFrame,
                                  grid: Seq[(String, Seq[String])],
                                  tables: Seq[(String, DataFrame)])
@@ -440,7 +415,7 @@ object Snapshot {
     ("supplier", "s_nationkey", "nation", "n_nationkey"))
 
   /** Join-cardinality estimation audit — the CBO arithmetic
-    * [[catalogStats]] exists to feed, closed into a measurable check:
+    * [[catalogStatsFrom]] exists to feed, closed into a measurable check:
     * per audited FK→PK edge, the textbook uniform-key estimate
     * |A⋈B| ≈ |A|·|B| / max(ndv_A, ndv_B) next to the TRUE join size,
     * and the estimate's accuracy in ppm of truth. The exact size is
@@ -452,27 +427,14 @@ object Snapshot {
     * the join cardinality. Estimate arithmetic goes through
     * decimal(38,0) (Spark) / HUGEINT (DuckDB) with integral division,
     * so |A|·|B| stays exact far past the int64 envelope a 100 TB fact
-    * table breaks (6e11 · 1.5e11 ≈ 9e22 needs 77 bits). */
-  def joinSizeEstimate(tables: Map[String, DataFrame]): DataFrame =
-    joinSizeEstimateFrom(edgeKeyHistogram(tables))
-
-  /** The minimal ANALYZE histogram the join-edge family needs when no
-    * staged copy is supplied: the [[JoinEdges]] key columns only. */
-  private def edgeKeyHistogram(tables: Map[String, DataFrame]): DataFrame = {
-    val keyCols = JoinEdges
-      .flatMap { case (lt, lk, rt, rk) => Seq(lt -> lk, rt -> rk) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (t, kvs) => t -> kvs.map(_._2).distinct }
-    catalogHistogram(keyCols.map { case (t, cs) =>
-      t -> tables(t).select(cs.map(col): _*) })
-  }
-
-  /** [[joinSizeEstimate]] over an already-staged ANALYZE histogram —
-    * how a CBO actually consumes statistics at 100 TB: the per-key
-    * count profiles ARE the published histogram restricted to the key
-    * columns (never a fact-table rescan per edge), the side totals and
-    * NDVs are grid-sized rollups of the same profiles, and the exact
-    * join size is Σ cnt_l·cnt_r over the profile equi-join. */
+    * table breaks (6e11 · 1.5e11 ≈ 9e22 needs 77 bits).
+    *
+    * Runs over an already-staged ANALYZE histogram — how a CBO actually
+    * consumes statistics at 100 TB: the per-key count profiles ARE the
+    * published histogram restricted to the key columns (never a
+    * fact-table rescan per edge), the side totals and NDVs are grid-sized
+    * rollups of the same profiles, and the exact join size is Σ
+    * cnt_l·cnt_r over the profile equi-join. */
   def joinSizeEstimateFrom(hist: DataFrame): DataFrame = {
     val spark = hist.sparkSession
     import spark.implicits._
@@ -524,28 +486,26 @@ object Snapshot {
           .stripMargin).as("est_ppm_of_exact"))
   }
 
-  /** [[joinAdvisor]] thresholds: a dim side at most this many rows is
+  /** [[joinAdvisorFrom]] thresholds: a dim side at most this many rows is
     * broadcast-able; a left key owning more than this share (ppm) of
     * its table wants salting. */
   val BroadcastRowLimit = 100000L
   val SkewSharePpm = 100000L
 
-  /** Join-strategy advisor — the decision [[catalogStats]] and
-    * [[joinSizeEstimate]] exist to inform, emitted as a per-edge plan:
+  /** Join-strategy advisor — the decision [[catalogStatsFrom]] and
+    * [[joinSizeEstimateFrom]] exist to inform, emitted as a per-edge plan:
     * BROADCAST when the dim side fits the row budget, else
     * SORT_MERGE; plus a SALT flag when the fact side's hottest key
     * owns more than [[SkewSharePpm]] of the table (the AQE-skew /
     * manual-salting trigger). Everything derives from the same
     * per-key count profiles as the estimator — the hottest-key share
     * is a max over the profile, never a second fact scan; output is
-    * edge-count-sized. */
-  def joinAdvisor(tables: Map[String, DataFrame]): DataFrame =
-    joinAdvisorFrom(edgeKeyHistogram(tables))
-
-  /** [[joinAdvisor]] over an already-staged ANALYZE histogram (the
-    * [[joinSizeEstimateFrom]] convention): the hottest-key share is a
-    * max over the published per-key counts, the dim-side row count a
-    * Σcnt over its key column — no table is rescanned per edge. */
+    * edge-count-sized.
+    *
+    * Runs over an already-staged ANALYZE histogram (the
+    * [[joinSizeEstimateFrom]] convention): the hottest-key share is a max
+    * over the published per-key counts, the dim-side row count a Σcnt
+    * over its key column — no table is rescanned per edge. */
   def joinAdvisorFrom(hist: DataFrame): DataFrame = {
     val spark = hist.sparkSession
     import spark.implicits._

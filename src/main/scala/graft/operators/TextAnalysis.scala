@@ -162,10 +162,6 @@ object TextAnalysis {
   /** Corpus token frequency: explode → count → top-k (ties broken by
     * token). One shuffle with map-side combine; the top-k is a
     * TakeOrdered, not a full sort. */
-  def tokenTopK(documents: DataFrame, k: Int = 20): DataFrame =
-    tokenTopKFrom(tokenFreqFrom(tokensRel(documents)), k)
-
-  /** [[tokenTopK]] over a staged (token, tf) frequency relation. */
   def tokenTopKFrom(freq: DataFrame, k: Int = 20): DataFrame =
     freq
       .select(col("token"), col("tf").as("n"))
@@ -209,18 +205,10 @@ object TextAnalysis {
     * the classic guarantee that any shared run of ≥ w+k-1 tokens
     * yields at least one shared fingerprint. The window-min is a
     * catalyst Window over the exploded positions (codegen'd), not a
-    * per-row lambda. */
-  /** One (doc_id, fp) row per DISTINCT selected winnow fingerprint —
-    * the exploded relation winnowFingerprints aggregates and the
-    * contamination check joins on. */
-  def winnowSelected(documents: DataFrame): DataFrame =
-    // source is functionally determined by doc_id, so projecting it
-    // away off the staged relation introduces no duplicates
-    winnowSelectedSrc(documents).select("doc_id", "fp")
-
-  /** [[winnowSelected]] carrying the source column — the staged form
-    * (graft.Staged), so one winnowing pass can feed both the
-    * fingerprint stats and the train/eval contamination split. */
+    * per-row lambda. One (doc_id[, source], fp) row per DISTINCT
+    * selected fingerprint, with the source column when present — the
+    * staged form (graft.Staged), so one winnowing pass can feed both
+    * the fingerprint stats and the train/eval contamination split. */
   def winnowSelectedSrc(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
     // source rides along when present (the staged/contamination form);
@@ -249,10 +237,6 @@ object TextAnalysis {
       .distinct()
   }
 
-  def winnowFingerprints(documents: DataFrame): DataFrame =
-    winnowFingerprintsFrom(winnowSelectedSrc(documents))
-
-  /** [[winnowFingerprints]] over a staged winnow relation. */
   def winnowFingerprintsFrom(winnow: DataFrame): DataFrame =
     winnow
       .groupBy("doc_id")
@@ -270,14 +254,11 @@ object TextAnalysis {
     * guarantee makes that ≈ a shared run of ≥ w+k−1 tokens). The join
     * key is the fingerprint — eval-side fingerprints are the small
     * relation at scale (broadcastable for real benchmark suites); no
-    * doc×doc comparison anywhere. */
-  def contaminationCheck(documents: DataFrame,
-                         evalSource: String = EvalSource): DataFrame =
-    contaminationCheckFrom(winnowSelectedSrc(documents), evalSource)
-
-  /** [[contaminationCheck]] over a staged winnow relation — winnowing
-    * is per-document, so filtering by source AFTER the staged pass is
-    * exactly the standalone filter-then-winnow form. */
+    * doc×doc comparison anywhere.
+    *
+    * Runs over a staged winnow relation: winnowing is per-document, so
+    * filtering by source after the staged pass is exactly the
+    * filter-then-winnow form. */
   def contaminationCheckFrom(winnow: DataFrame,
                              evalSource: String = EvalSource): DataFrame = {
     val trainFps = winnow.where(col("source") =!= evalSource)
@@ -293,10 +274,6 @@ object TextAnalysis {
 
   /** Query-shaped winnowing summary (fingerprint arrays are not
     * hash-stable across engines, so expose scalar stats). */
-  def winnowStats(documents: DataFrame): DataFrame =
-    winnowStatsFrom(winnowSelectedSrc(documents))
-
-  /** [[winnowStats]] over a staged winnow relation. */
   def winnowStatsFrom(winnow: DataFrame): DataFrame =
     winnowFingerprintsFrom(winnow).select(
       col("doc_id"), col("n_fps"),
@@ -501,12 +478,10 @@ object TextAnalysis {
     * stats; 2-gram top mass) and one join, all partial-aggregated
     * map-side — no operator here sees more than the per-doc token
     * explode, so the shape holds at corpus scale. Ratios are integer
-    * milli (hash-stable across engines). */
-  def gopherQuality(documents: DataFrame): DataFrame =
-    gopherQualityFrom(documents, tokensRel(documents))
-
-  /** [[gopherQuality]] with the per-token stats read from a staged
-    * token relation (the 2-gram pass still needs the token arrays). */
+    * milli (hash-stable across engines).
+    *
+    * The per-token stats are read from a staged token relation (the
+    * 2-gram pass still needs the token arrays). */
   def gopherQualityFrom(documents: DataFrame, tokens: DataFrame): DataFrame = {
     val toks = documents.select(col("doc_id"), tokensCol.as("tk"))
     val tokStats = tokens
@@ -553,12 +528,6 @@ object TextAnalysis {
     * turns into a broadcast when the vocabulary fits (it always does —
     * vocab grows sublinearly in corpus size), so the only full shuffle
     * is the doc_id re-aggregation. */
-  def docRarity(documents: DataFrame): DataFrame = {
-    val t = tokensRel(documents)
-    docRarityFrom(t, tokenFreqFrom(t))
-  }
-
-  /** [[docRarity]] over staged token + frequency relations. */
   def docRarityFrom(tokens: DataFrame, freq: DataFrame): DataFrame =
     tokens
       .select(col("doc_id"), col("token"))
@@ -705,7 +674,7 @@ object TextAnalysis {
 
   // --- train/eval distribution drift ---------------------------------------
 
-  /** Top-k drifted tokens reported by [[distDrift]]. */
+  /** Top-k drifted tokens reported by [[distDriftFrom]]. */
   val DriftTopK = 50
 
   /** Token-distribution drift between the training corpus and the
@@ -716,11 +685,6 @@ object TextAnalysis {
     * Two vocabulary-sized aggregates from one token explode, a
     * full-outer align, 1-row broadcast totals, TakeOrdered top-k —
     * nothing here scales with corpus size except the explode. */
-  def distDrift(documents: DataFrame,
-                evalSource: String = EvalSource): DataFrame =
-    distDriftFrom(tokensRel(documents), evalSource)
-
-  /** [[distDrift]] over a staged token relation. */
   def distDriftFrom(tokens: DataFrame,
                     evalSource: String = EvalSource): DataFrame = {
     val toks = tokens.select(col("source"), col("token"))
@@ -746,10 +710,6 @@ object TextAnalysis {
     * survive the repetition gate, and the mean quality metrics.
     * Integer means (sum div count); one join of two doc_id-keyed
     * relations and one source-keyed aggregate. */
-  def sourceRollup(documents: DataFrame): DataFrame =
-    sourceRollupFrom(documents, gopherQuality(documents))
-
-  /** [[sourceRollup]] over a staged gopher-quality relation. */
   def sourceRollupFrom(documents: DataFrame, gopher: DataFrame): DataFrame =
     gopher
       .join(documents.select(col("doc_id"), col("source")), "doc_id")
@@ -824,10 +784,6 @@ object TextAnalysis {
     * nested transform — shuffle-free), so the only movement is the
     * map-side-combined pair count; the token table is never self-
     * joined. Top-K is TakeOrdered, never a global sort. */
-  def cooccurTopK(documents: DataFrame, k: Int = CooccurTopK): DataFrame =
-    cooccurTopKFrom(skipgramsRel(documents), k)
-
-  /** [[cooccurTopK]] over a staged skip-gram relation. */
   def cooccurTopKFrom(skipgrams: DataFrame, k: Int = CooccurTopK): DataFrame =
     skipgrams
       .select(col("w1").as("w_a"), col("w2").as("w_b"))
@@ -930,7 +886,7 @@ object TextAnalysis {
 
   // --- BPE merge step ------------------------------------------------------
 
-  /** Number of top pairs reported by [[bpeMergeStep]]. */
+  /** Number of top pairs reported by [[bpeMergeStepFrom]]. */
   val BpeTopK = 20
 
   /** One BPE-style merge iteration: the corpus-wide frequency of every
@@ -940,10 +896,6 @@ object TextAnalysis {
     * over the DISTINCT-token vocabulary (sublinear in corpus size)
     * weighted by token counts, never over the raw token stream. Top-k
     * via TakeOrdered (orderBy+limit), ties broken by pair. */
-  def bpeMergeStep(documents: DataFrame): DataFrame =
-    bpeMergeStepFrom(tokenFreqFrom(tokensRel(documents)))
-
-  /** [[bpeMergeStep]] over a staged (token, tf) frequency relation. */
   def bpeMergeStepFrom(freq: DataFrame): DataFrame =
     freq
       .select(col("token").as("t"), col("tf"))
@@ -958,7 +910,7 @@ object TextAnalysis {
 
   // --- token-budget curriculum selection -----------------------------------
 
-  /** Per-language token budget for [[tokenBudget]]. */
+  /** Per-language token budget for [[tokenBudgetFrom]]. */
   val TokenBudget = 8000L
 
   /** Quality-ordered selection under a per-language token budget — the
@@ -973,10 +925,6 @@ object TextAnalysis {
     * language) and only the within-bucket residual ordering windows
     * over docs — partitioned by (lang, quality), thousands of
     * independent partitions. */
-  def tokenBudget(documents: DataFrame): DataFrame =
-    tokenBudgetFrom(documents, gopherQuality(documents))
-
-  /** [[tokenBudget]] over a staged gopher-quality relation. */
   def tokenBudgetFrom(documents: DataFrame, gopher: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
     val docs = gopher
@@ -1032,12 +980,12 @@ object TextAnalysis {
   }
 
   /** Quality band width (milli) and resulting phase count for
-    * [[curriculumOrder]]: phase = (999 − quality) div band, so phase 0
+    * [[curriculumOrderFrom]]: phase = (999 − quality) div band, so phase 0
     * is the cleanest quarter and trains first. */
   val CurriculumBand = 250L
 
   /** Curriculum training schedule — the quality-ORDERED counterpart of
-    * [[epochShuffle]]'s uniform shuffle and [[tokenBudget]]'s
+    * [[epochShuffle]]'s uniform shuffle and [[tokenBudgetFrom]]'s
     * selection: documents are banded into curriculum phases by gopher
     * quality (cleanest band = phase 0, consumed first; the classic
     * easy-to-hard curriculum), deterministically shuffled WITHIN a
@@ -1046,10 +994,6 @@ object TextAnalysis {
     * (phase, shard) exactly as training jobs consume data. Position
     * windows partition by (phase, shard) — NumPhases×NumShards
     * independent partitions, never one global sequence. */
-  def curriculumOrder(documents: DataFrame): DataFrame =
-    curriculumOrderFrom(gopherQuality(documents))
-
-  /** [[curriculumOrder]] over a staged gopher-quality relation. */
   def curriculumOrderFrom(gopher: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
     val ord = graft.functions.PortableHash.phash(
@@ -1068,7 +1012,7 @@ object TextAnalysis {
 
   // --- vocabulary coverage -------------------------------------------------
 
-  /** Vocabulary size for [[vocabCoverage]]. */
+  /** Vocabulary size for [[vocabCoverageFrom]]. */
   val VocabK = 25
 
   /** Out-of-vocabulary rate per language against the corpus top-VocabK
@@ -1078,12 +1022,6 @@ object TextAnalysis {
     * TakeOrdered top-k (broadcast — a vocabulary is always tiny
     * relative to the corpus); coverage is one left join + one per-lang
     * aggregate over the token explode. */
-  def vocabCoverage(documents: DataFrame): DataFrame = {
-    val t = tokensRel(documents)
-    vocabCoverageFrom(t, tokenFreqFrom(t))
-  }
-
-  /** [[vocabCoverage]] over staged token + frequency relations. */
   def vocabCoverageFrom(tokens: DataFrame, freq: DataFrame): DataFrame = {
     val toks = tokens.select(col("lang"), col("token").as("t"))
     val vocab = freq
@@ -1099,7 +1037,7 @@ object TextAnalysis {
         expr("(n_oov * 1000000) div n_tokens").as("oov_ppm"))
   }
 
-  /** Candidate vocabulary sizes swept by [[vocabCoverageCurve]]; the
+  /** Candidate vocabulary sizes swept by [[vocabCoverageCurveFrom]]; the
     * production [[VocabK]] rides the grid so its row is directly
     * comparable. */
   val VocabLadder: Seq[Int] = Seq(5, 10, VocabK, 50)
@@ -1114,12 +1052,6 @@ object TextAnalysis {
     * shape: the tokens relation pays one per-lang aggregate shuffle;
     * the ladder is ≤ ΣK rows — index-sized at any corpus; no windows,
     * no per-K corpus passes. */
-  def vocabCoverageCurve(documents: DataFrame): DataFrame = {
-    val t = tokensRel(documents)
-    vocabCoverageCurveFrom(t, tokenFreqFrom(t))
-  }
-
-  /** [[vocabCoverageCurve]] over staged token + frequency relations. */
   def vocabCoverageCurveFrom(tokens: DataFrame,
                              freq: DataFrame): DataFrame = {
     val ladder = VocabLadder.map { kk =>
@@ -1154,12 +1086,10 @@ object TextAnalysis {
     * predictability). Scale shape: the count relations are
     * vocabulary²-sized (sublinear in corpus), AQE broadcasts them back
     * onto the bigram explode, and the only corpus-sized shuffle is the
-    * final doc_id aggregate. */
-  def ngramLmScore(documents: DataFrame): DataFrame =
-    ngramLmScoreFrom(skipgramsRel(documents))
-
-  /** [[ngramLmScore]] over a staged skip-gram relation (the d=1 rows
-    * are exactly the adjacent-bigram relation). */
+    * final doc_id aggregate.
+    *
+    * Runs over a staged skip-gram relation: its d=1 rows are exactly the
+    * adjacent-bigram relation. */
   def ngramLmScoreFrom(skipgrams: DataFrame): DataFrame = {
     val bigrams = skipgrams.where(col("d") === 1)
       .select(col("doc_id"), col("w1"), col("w2"))
@@ -1177,7 +1107,7 @@ object TextAnalysis {
 
   // --- collocation mining --------------------------------------------------
 
-  /** Minimum pair count and report size for [[pmiPairs]]. */
+  /** Minimum pair count and report size for [[pmiPairsFrom]]. */
   val PmiMinCount = 5L
   val PmiTopK = 20
 
@@ -1188,12 +1118,6 @@ object TextAnalysis {
     * so intermediates stay inside int64 at any corpus size; both
     * engines compute the identical truncation order. Count relations
     * are vocabulary-sized; top-k is a TakeOrdered. */
-  def pmiPairs(documents: DataFrame): DataFrame = {
-    val t = tokensRel(documents)
-    pmiPairsFrom(skipgramsRel(documents), tokenFreqFrom(t))
-  }
-
-  /** [[pmiPairs]] over staged skip-gram + frequency relations. */
   def pmiPairsFrom(skipgrams: DataFrame, freq: DataFrame): DataFrame = {
     val uni = freq.select(col("token").as("t"), col("tf").as("c"))
     val tot = uni.agg(sum("c").cast("long").as("n_tok"))
@@ -1213,16 +1137,12 @@ object TextAnalysis {
   // --- BPE merge application -----------------------------------------------
 
   /** One full BPE trainer iteration: find the most frequent adjacent
-    * character pair ([[bpeMergeStep]]'s head) and APPLY the merge to
+    * character pair ([[bpeMergeStepFrom]]'s head) and APPLY the merge to
     * the vocabulary, reporting the corpus-level compression it buys
     * (the number the trainer uses to decide when merges stop paying).
     * The merge target arrives as a broadcast 1-row relation — never a
     * collected driver value — so the whole iteration is one plan.
     * Replacement is left-to-right non-overlapping in both engines. */
-  def bpeApplyStep(documents: DataFrame): DataFrame =
-    bpeApplyStepFrom(tokenFreqFrom(tokensRel(documents)))
-
-  /** [[bpeApplyStep]] over a staged (token, tf) frequency relation. */
   def bpeApplyStepFrom(freq: DataFrame): DataFrame = {
     val top = bpeMergeStepFrom(freq).limit(1)
       .select(col("pair"), col("n").as("pair_n"))
@@ -1241,7 +1161,7 @@ object TextAnalysis {
         sum(col("tf") * col("len_after")).cast("long").as("chars_after"))
   }
 
-  /** Merge rounds for [[bpeTrainCurve]] — fixed (not convergence-gated)
+  /** Merge rounds for [[bpeTrainCurveFrom]] — fixed (not convergence-gated)
     * for the same reason as PqTrainIters: straight-line rounds are what
     * a DuckDB oracle can replay as staged TEMP tables. */
   val BpeTrainRounds = 8
@@ -1254,7 +1174,7 @@ object TextAnalysis {
     * real BPE composition, not eight independent single merges. */
   private def bpeSym(r: Int): String = (0xE000 + r - 1).toChar.toString
 
-  /** Multi-round BPE trainer — the iterated form of [[bpeApplyStep]]'s
+  /** Multi-round BPE trainer — the iterated form of [[bpeApplyStepFrom]]'s
     * single pick+apply: [[BpeTrainRounds]] rounds of (most frequent
     * adjacent symbol pair → merge into a fresh 1-char symbol), each
     * reported with the merged pair, its corpus frequency, and the
@@ -1271,10 +1191,6 @@ object TextAnalysis {
     * of re-deriving r rounds of plans. Merged symbols are single
     * chars, so the same substr(t, i, 2) pair enumeration stays valid
     * at every round. */
-  def bpeTrainCurve(documents: DataFrame): DataFrame =
-    bpeTrainCurveFrom(tokenFreqFrom(tokensRel(documents)))
-
-  /** [[bpeTrainCurve]] over a staged (token, tf) frequency relation. */
   def bpeTrainCurveFrom(freq: DataFrame): DataFrame = {
     var vocab = freq
       .select(col("token").as("t"), col("tf").cast("long").as("tf"))
@@ -1305,7 +1221,7 @@ object TextAnalysis {
 
   // --- linear quality classifier -------------------------------------------
 
-  /** Bag-of-words weights (milli) for [[qualityClassify]] — the
+  /** Bag-of-words weights (milli) for [[qualityClassifyFrom]] — the
     * stand-in for a trained fastText/logistic quality classifier's
     * coefficient table (big corpora ship one; the ARCHITECTURE —
     * broadcast weight table · token explode · per-doc mean — is what
@@ -1327,10 +1243,6 @@ object TextAnalysis {
     * of every production quality classifier (fastText, logistic
     * regression on bag-of-words). One token explode, one broadcast
     * join against the (tiny) weight table, one doc aggregate. */
-  def qualityClassify(documents: DataFrame): DataFrame =
-    qualityClassifyFrom(tokensRel(documents))
-
-  /** [[qualityClassify]] over a staged token relation. */
   def qualityClassifyFrom(tokens: DataFrame): DataFrame = {
     val weights = ClassifierWeights.foldLeft(lit(0L)) {
       case (acc, (w, v)) => when(col("t") === w, lit(v)).otherwise(acc)
@@ -1363,11 +1275,6 @@ object TextAnalysis {
     * once; fixed-width buckets instead of ntile() because a global
     * ntile is an unpartitioned window (the single-reducer trap) while
     * this stays a narrow projection. */
-  def qualityCalibration(documents: DataFrame): DataFrame =
-    qualityCalibrationFrom(qualityClassify(documents),
-      gopherQuality(documents))
-
-  /** [[qualityCalibration]] over staged classifier + gopher relations. */
   def qualityCalibrationFrom(classified: DataFrame,
                              gopher: DataFrame): DataFrame =
     classified
@@ -1388,25 +1295,6 @@ object TextAnalysis {
     * the agreement matrix is populated, not degenerate. */
   val LmKeepPpm = 34500L
   val RareMaxMilli = 905000L
-
-  /** Quality-signal ensemble — the agreement matrix across the four
-    * independent gates this engine computes (Gopher repetition rules,
-    * the linear fastText-style classifier, bigram-LM fluency, corpus
-    * rarity), plus the majority-vote verdict. This is the analysis
-    * that decides WHICH single gate a pipeline can trust alone and
-    * where they disagree; emitting one row per signal COMBINATION
-    * (16 max) with an id-sum checksum pins every per-doc decision
-    * cross-engine without a corpus-sized output.
-    *
-    * Shape: four doc_id-keyed aggregates, three doc_id equi-joins
-    * (co-partitioned after the first shuffle), then a 16-group
-    * aggregate — nothing here outgrows the corpus scan. */
-  def qualityEnsemble(documents: DataFrame): DataFrame = {
-    val t = tokensRel(documents)
-    qualityEnsembleFrom(gopherQualityFrom(documents, t),
-      qualityClassifyFrom(t), ngramLmScoreFrom(skipgramsRel(documents)),
-      docRarityFrom(t, tokenFreqFrom(t)))
-  }
 
   /** Per-doc boolean gate signals (doc_id, keep_gopher, keep_clf,
     * keep_lm, keep_rare) — the shared first stage of
@@ -1434,8 +1322,20 @@ object TextAnalysis {
     Seq("keep_gopher", "keep_clf", "keep_lm", "keep_rare")
       .map(n => col(n).cast("long")).reduce(_ + _)
 
-  /** [[qualityEnsemble]] over staged signal relations
-    * ([[graft.Staged]]). */
+  /** Quality-signal ensemble — the agreement matrix across the four
+    * independent gates this engine computes (Gopher repetition rules,
+    * the linear fastText-style classifier, bigram-LM fluency, corpus
+    * rarity), plus the majority-vote verdict. This is the analysis
+    * that decides WHICH single gate a pipeline can trust alone and
+    * where they disagree; emitting one row per signal COMBINATION
+    * (16 max) with an id-sum checksum pins every per-doc decision
+    * cross-engine without a corpus-sized output.
+    *
+    * Shape: four doc_id-keyed aggregates, three doc_id equi-joins
+    * (co-partitioned after the first shuffle), then a 16-group
+    * aggregate — nothing here outgrows the corpus scan.
+    *
+    * Runs over staged signal relations ([[graft.Staged]]). */
   def qualityEnsembleFrom(gopher: DataFrame, classified: DataFrame,
                           lm: DataFrame, rarity: DataFrame): DataFrame =
     qualitySignalsFrom(gopher, classified, lm, rarity)
@@ -1615,10 +1515,6 @@ object TextAnalysis {
       .withColumn("ttr_ppm", expr("vocab_cum * 1000000 div tokens_cum"))
   }
 
-  /** [[vocabGrowthFrom]] over a fresh token relation. */
-  def vocabGrowth(documents: DataFrame): DataFrame =
-    vocabGrowthFrom(tokensRel(documents))
-
   /** Corpus lexical diversity per source — the distinct-1/distinct-2
     * type-token ratios (Li et al. 2016) a curation pass reads to spot
     * template-generated or boilerplate-heavy sources before they skew
@@ -1658,10 +1554,6 @@ object TextAnalysis {
     * eval scores will not transfer (the split-balance twin of
     * dist_drift). Shape: one doc_id equi-join onto the per-doc quality
     * aggregate, two 3-group aggregates. */
-  def splitAudit(documents: DataFrame): DataFrame =
-    splitAuditFrom(documents, gopherQuality(documents))
-
-  /** [[splitAudit]] over a staged gopher relation. */
   def splitAuditFrom(documents: DataFrame, gopher: DataFrame): DataFrame = {
     val d = documents.select(col("doc_id"), col("lang"),
       splitCol.as("split"))
@@ -1685,7 +1577,7 @@ object TextAnalysis {
 
   // --- TF-IDF keywords -----------------------------------------------------
 
-  /** Keywords per document reported by [[tfidfTopK]]. */
+  /** Keywords per document reported by [[tfidfTopKFrom]]. */
   val TfidfTopN = 3
 
   /** Per-document keyword extraction by integer TF-IDF (tf·1e6 //
@@ -1695,10 +1587,6 @@ object TextAnalysis {
     * document-frequency relation is vocabulary-sized (AQE broadcasts
     * it onto the per-doc term counts); ranking windows partition by
     * doc_id — corpus-parallel. */
-  def tfidfTopK(documents: DataFrame): DataFrame =
-    tfidfTopKFrom(tokensRel(documents))
-
-  /** [[tfidfTopK]] over a staged token relation. */
   def tfidfTopKFrom(tokens: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
     val tf = tokens
@@ -1982,11 +1870,6 @@ object TextAnalysis {
     * window partitioned, the giant tf=1 tier subdivided ~|alphabet|-way.
     * The decomposed cumulative is bit-identical to the global one
     * (integer addition re-associated over a partition of the prefix). */
-  def negativeSampling(documents: DataFrame): DataFrame =
-    negativeSamplingFrom(tokenFreqFrom(tokensRel(documents)))
-
-  /** [[negativeSampling]] over a staged (token, tf) frequency
-    * relation. */
   def negativeSamplingFrom(freq: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
     val weighted = freq

@@ -2,26 +2,23 @@ package graft.sources
 
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.config.{DbConfig, SyncConfig}
-import graft.operators.Snapshot
 
-/** JDBC source/sink wiring for the sync pipeline — the Spark-native
-  * form of the reference's datasource abstraction
-  * (`dbopt/DbOperation.scala`, `DatasourcePools.scala`): partitioned
-  * parallel reads with predicate/column pushdown, and the generated
-  * upsert/delete statements a JDBC sink executes per partition.
+/** JDBC sink wiring for the sync pipeline — the Spark-native form of
+  * the reference's datasource abstraction (`dbopt/DbOperation.scala`,
+  * `DatasourcePools.scala`): the generated upsert/delete statements a
+  * JDBC sink executes per partition, and the executor that runs them.
   *
   * The EXECUTION path (partition-parallel connections, batched
   * prepared statements, per-batch commits) runs live against an
-  * embedded in-JVM database through the ANSI MERGE dialect
-  * (JdbcApplySpec: upsert → re-upsert → delete → JDBC read-back).
-  * No NETWORKED database exists in this environment (zero egress), so
-  * the pg/mysql/greenplum dialect TEXT is exercised only up to SQL
-  * generation — the planning halves (`Snapshot.sourcePartitionPlan`,
-  * `config.SyncConfigs`) plus the live embedded round-trip are the
-  * tested surface (SURVEY.md §6).
+  * embedded in-JVM database through the portable update-then-insert
+  * pair (JdbcApplySpec: upsert → re-upsert → delete → JDBC read-back).
+  * The pg/mysql/greenplum dialect TEXT is generated and checked as
+  * text only: no networked database is part of the test setup. Reads
+  * are planned by `Snapshot.sourcePartitionPlan` and
+  * `config.SyncConfigs`; Spark's own `jdbc` source runs them.
   */
 object JdbcSync {
   private val IdentRe = "[A-Za-z_][A-Za-z0-9_]*".r
@@ -48,25 +45,6 @@ object JdbcSync {
       case other => throw new IllegalArgumentException(s"unsupported db type: $other")
     }
 
-  /** Configure a partitioned JDBC read for one sync table: N parallel
-    * range scans on the first sync key (Spark pushes the per-partition
-    * predicates + column pruning + filters into the remote SQL). */
-  def partitionedReader(spark: SparkSession, db: DbConfig, sync: SyncConfig,
-                        lower: Long, upper: Long,
-                        numPartitions: Int = Snapshot.ReadPartitions.toInt):
-      DataFrameReader = {
-    val key = sync.sourceKeys.split(",").map(_.trim).head
-    spark.read
-      .option("url", url(db))
-      .option("dbtable", s"${sync.sourceSchema}.${sync.sourceTable}")
-      .option("partitionColumn", key)
-      .option("lowerBound", lower)
-      .option("upperBound", upper)
-      .option("numPartitions", numPartitions)
-      .option("fetchsize", 10000)
-      .format("jdbc")
-  }
-
   /** The poll query a JDBC changelog source issues — the reference's
     * pollBatch SQL shape (`dbopt/PgOperation.scala:27-46`): unpolled
     * rows, id-ordered, bounded. */
@@ -80,8 +58,7 @@ object JdbcSync {
     * `dbopt/PgOperation.scala:49-82`), INSERT..ON DUPLICATE KEY
     * (mysql, `dbopt/MysqlOperation.scala`), or routes through the
     * installed update-then-insert `gp_upsert` helper (greenplum has no
-    * ON CONFLICT — `dbopt/GpOperation.scala:47-94`). Executed per
-    * partition by a JDBC sink. */
+    * ON CONFLICT — `dbopt/GpOperation.scala:47-94`). */
   def upsertSql(sync: SyncConfig, columns: Seq[String],
                 dialect: String = "postgresql"): String = {
     val keys = sync.sourceKeys.split(",").map(_.trim).map(ident).toSeq
@@ -170,17 +147,6 @@ object JdbcSync {
   /** Batch size per executeBatch round-trip. */
   val UpsertBatchSize = 500
 
-  /** Write a merged changelog to a JDBC sink partition-parallel: each
-    * partition opens one connection and executes the batched UPSERT
-    * statement (not a plain INSERT — re-synced keys must update, which
-    * is the whole point of the merge). The DataFrame side is exactly
-    * `CdcMerge.merge` output, already hash-partitioned by key.
-    * (Requires a live database; see SURVEY.md §6.) */
-  def writeUpsert(df: DataFrame, db: DbConfig, sync: SyncConfig,
-                  props: Properties = new Properties()): Unit =
-    executeBatched(df, url(db), upsertSql(sync, df.columns.toSeq, db.`type`),
-      gpJson = db.`type` == "greenplum", props)
-
   /** Upsert a merged changelog through the portable update-then-insert
     * pair — the path the embedded round-trip lane (JdbcApplySpec,
     * in-memory Derby) executes against a LIVE database. Partition-
@@ -239,7 +205,7 @@ object JdbcSync {
                   props: Properties = new Properties()): Unit = {
     val keyCols = sync.sourceKeys.split(",").map(_.trim).toSeq
     executeBatched(keys.selectExpr(keyCols: _*), jdbcUrl, deleteSql(sync),
-      gpJson = false, props)
+      props)
   }
 
   /** The shared batched executor: each partition opens one connection
@@ -247,24 +213,16 @@ object JdbcSync {
     * with per-batch commits — the reference's apply loop shape
     * (`dbopt/PgOperation.scala:49-101`), distributed per partition. */
   private def executeBatched(df: DataFrame, jdbcUrl: String, sql: String,
-                             gpJson: Boolean, props: Properties): Unit = {
+                             props: Properties): Unit = {
     val columns = df.columns.toSeq
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       val conn = java.sql.DriverManager.getConnection(jdbcUrl, props)
-      lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       try {
         conn.setAutoCommit(false)
         val stmt = conn.prepareStatement(sql)
         var pending = 0
         rows.foreach { row =>
-          if (gpJson) {
-            val m = new java.util.LinkedHashMap[String, AnyRef]()
-            columns.indices.foreach(i =>
-              m.put(columns(i), row.get(i).asInstanceOf[AnyRef]))
-            stmt.setString(1, mapper.writeValueAsString(m))
-          } else {
-            columns.indices.foreach(i => stmt.setObject(i + 1, row.get(i)))
-          }
+          columns.indices.foreach(i => stmt.setObject(i + 1, row.get(i)))
           stmt.addBatch()
           pending += 1
           if (pending >= UpsertBatchSize) {

@@ -39,19 +39,19 @@ class ConstructJobsSpec extends AnyFunSuite {
     * equals the kept one and shares its children instances (a hit
     * copies only the root). */
   private def overKept(name: String, df: DataFrame): Boolean =
-    Staged.kept(spark, Sf, name).flatMap(_.toOption).exists { p =>
+    Staged.kept(Corpus(spark, Sf), name).flatMap(_.toOption).exists { p =>
       val a = df.queryExecution.analyzed
       a == p && a.children.corresponds(p.children)(_ eq _)
     }
 
   test("with Staged forced, building each suite query launches no Spark job") {
     assert(suiteQueries.size === 17)
-    Staged.names.foreach(n => Staged.rounds(spark, Sf, n).foreach(_.count()))
+    Staged.names.foreach(n => Staged.rounds(Corpus(spark, Sf), n).foreach(_.count()))
     // the first build resolves each table once per session (a listing
     // and schema job); the gate is on the builds every miss pays
-    suiteQueries.foreach(q => SparkEntry.builds(q)(spark, Sf))
+    suiteQueries.foreach(q => SparkEntry.builds(q)(Corpus(spark, Sf)))
     val launched = suiteQueries
-      .map(q => q -> jobsDuring(SparkEntry.builds(q)(spark, Sf)))
+      .map(q => q -> jobsDuring(SparkEntry.builds(q)(Corpus(spark, Sf))))
       .filter(_._2 > 0)
     assert(launched.isEmpty, s"jobs launched while building: $launched")
   }
@@ -65,7 +65,7 @@ class ConstructJobsSpec extends AnyFunSuite {
       val hit = query(q)
       assert(overKept(q, first) && overKept(q, hit), s"$q: not a hit")
       assert(hit.queryExecution ne first.queryExecution, q)
-      val fresh = SparkEntry.builds(q)(spark, Sf)
+      val fresh = SparkEntry.builds(q)(Corpus(spark, Sf))
       assert(hit.exceptAll(fresh).isEmpty && fresh.exceptAll(hit).isEmpty,
         s"$q: a hit's rows differ from a fresh build's")
     }
@@ -81,7 +81,7 @@ class ConstructJobsSpec extends AnyFunSuite {
     val tz = spark.conf.get(key)
     spark.conf.set(key, "America/Los_Angeles")
     try {
-      assert(Staged.kept(spark, Sf, q).isEmpty, "kept across a conf change")
+      assert(Staged.kept(Corpus(spark, Sf), q).isEmpty, "kept across a conf change")
       val changed = query(q)
       assert(overKept(q, changed))
       assert(changed.queryExecution.analyzed !=
@@ -99,19 +99,19 @@ class ConstructJobsSpec extends AnyFunSuite {
     Seq("handoff_audit", "stream_dedup_parity").foreach { q =>
       query(q)
       assert(jobsDuring(query(q)) > 0, s"$q: not built again")
-      assert(Staged.kept(spark, Sf, q) === Some(Left("job during build")), q)
+      assert(Staged.kept(Corpus(spark, Sf), q) === Some(Left("job during build")), q)
     }
     // every registry query that holds an in-query checkpoint also
     // launches jobs while it is built, so this build isolates the rule
     def rdds(df: DataFrame): Seq[Int] = df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
     }
-    def checkpointed = Staged.query(spark, Sf, "checkpointed_customer")(
+    def checkpointed = Staged.query(Corpus(spark, Sf), "checkpointed_customer")(
       Tables.customer(spark, Sf).localCheckpoint(eager = false))
     val a = checkpointed
     val b = checkpointed
     assert(rdds(a).nonEmpty && rdds(a) != rdds(b), "checkpoint plan shared")
-    assert(Staged.kept(spark, Sf, "checkpointed_customer") ===
+    assert(Staged.kept(Corpus(spark, Sf), "checkpointed_customer") ===
       Some(Left("non-staged checkpoint")))
   }
 }

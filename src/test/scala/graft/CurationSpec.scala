@@ -14,6 +14,8 @@ class CurationSpec extends AnyFunSuite {
   private lazy val docs = Tables.documents(spark, TestSpark.Sf).cache()
   private lazy val cl =
     ChangeLog.normalize(Tables.events(spark, TestSpark.Sf)).cache()
+  private def query(name: String) =
+    SparkEntry.queries(name)(spark, TestSpark.Sf)
 
   test("domain_caps: kept <= cap per source, kept+dropped = docs, " +
     "checksum matches an independent recount") {
@@ -37,8 +39,8 @@ class CurationSpec extends AnyFunSuite {
 
   test("ccnet_buckets: buckets partition each language's scored docs " +
     "and score ranges are ordered tail < middle <= head") {
-    val b = Curation.ccnetBuckets(docs).collect()
-    val scored = TextAnalysis.ngramLmScore(docs).count()
+    val b = query("ccnet_buckets").collect()
+    val scored = query("ngram_lm_score").count()
     assert(b.map(_.getAs[Long]("n_docs")).sum === scored)
     b.groupBy(_.getAs[String]("lang")).foreach { case (_, rows) =>
       val m = rows.map(r => r.getAs[String]("bucket") ->
@@ -55,7 +57,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("dsir_weights: the target source scores higher than the rest " +
     "(importance weights point at the target domain)") {
-    val w = Curation.dsirWeights(docs)
+    val w = query("dsir_weights")
       .join(docs.select("doc_id", "source"), "doc_id")
       .select(col("source") === TextAnalysis.EvalSource as "is_target",
         col("net_ppm"))
@@ -68,7 +70,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("token_fertility: ttr <= 1000 milli and token arithmetic is " +
     "consistent with the corpus") {
-    val f = Curation.tokenFertility(docs).collect()
+    val f = query("token_fertility").collect()
     assert(f.nonEmpty)
     f.foreach { r =>
       assert(r.getAs[Long]("ttr_milli") <= 1000L)
@@ -106,16 +108,12 @@ class CurationSpec extends AnyFunSuite {
 
   test("curation_pipeline: per-source funnel is monotone, cap binds, " +
     "quality stage equals the standalone ensemble verdicts") {
-    import graft.operators.Dedup
-    val docs = Tables.documents(spark, TestSpark.Sf)
-    val t = TextAnalysis.tokensRel(docs)
-    val signals = TextAnalysis.qualitySignalsFrom(
-      TextAnalysis.gopherQualityFrom(docs, t),
-      TextAnalysis.qualityClassifyFrom(t),
-      TextAnalysis.ngramLmScoreFrom(TextAnalysis.skipgramsRel(docs)),
-      TextAnalysis.docRarityFrom(t, TextAnalysis.tokenFreqFrom(t)))
-    val rows = Curation.curationPipelineFrom(docs, signals,
-      Dedup.dupClusters(docs), TextAnalysis.gopherQuality(docs)).collect()
+    val st = Staged.tokens(spark, TestSpark.Sf)
+    val signals = TextAnalysis.qualitySignalsFrom(st.gopher,
+      TextAnalysis.qualityClassifyFrom(st.tokens),
+      TextAnalysis.ngramLmScoreFrom(st.skipgrams),
+      TextAnalysis.docRarityFrom(st.tokens, st.freq))
+    val rows = query("curation_pipeline").collect()
     assert(rows.map(_.getAs[Long]("n_input")).sum === docs.count())
     rows.foreach { r =>
       val (i, q, d, f) = (r.getAs[Long]("n_input"),
@@ -139,7 +137,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("repeat_plan: budget conserved up to per-source integer floors, " +
     "repetition value decays, waste only past the epoch cap") {
-    val plan = Curation.repeatPlan(docs).collect()
+    val plan = query("repeat_plan").collect()
     assert(plan.nonEmpty)
     val totalMass = plan.map(_.getAs[Long]("n_tokens")).sum
     val totalAlloc = plan.map(_.getAs[Long]("alloc_tokens")).sum

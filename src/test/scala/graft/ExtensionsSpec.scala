@@ -157,7 +157,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.Sf)
     val dups = graft.operators.Dedup.minhashDedup(docs)
       .select("dup_doc_id").collect().map(_.getLong(0)).toSet
-    val kept = graft.operators.Dedup.dedupApply(docs)
+    val kept = SparkEntry.queries("dedup_apply")(spark, TestSpark.Sf)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === all.diff(dups))

@@ -11,8 +11,7 @@ import graft.operators.Multimodal
   * here and against DuckDB in the parity gate. */
 class ImageSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private lazy val docs = Tables.documents(spark, TestSpark.Sf)
-  private lazy val images = Multimodal.imageTable(docs).localCheckpoint()
+  private lazy val images = Staged.images(spark, TestSpark.Sf).imgs
 
   test("imageTable emits parseable P6 payloads with header-consistent dims") {
     val t0 = System.nanoTime()
@@ -61,9 +60,9 @@ class ImageSpec extends AnyFunSuite {
       h = ham(ba, bb) if h <= Multimodal.HammingTau
     } yield (ida, idb) -> h).toMap
     val t1 = System.nanoTime()
-    val got = Multimodal.imageDedup(images).collect()
+    val got = SparkEntry.queries("image_dedup")(spark, TestSpark.Sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    info(s"imageDedup collect: ${(System.nanoTime() - t1) / 1e9} s")
+    info(s"image_dedup collect: ${(System.nanoTime() - t1) / 1e9} s")
     assert(got === truth)
     assert(truth.nonEmpty, "fixture produced no near-dup pairs")
     assert(truth.valuesIterator.exists(_ > 0L),

@@ -8,7 +8,7 @@ import graft.operators.{ChangeLog, Joins}
 class JoinsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val cl = ChangeLog.normalize(Tables.events(spark, TestSpark.Sf)).cache()
-  private lazy val orders = Tables.orders(spark, TestSpark.Sf)
+  private lazy val orders = Corpus(spark, TestSpark.Sf).orders
 
   test("asofEnrich picks the latest order at-or-before each event, per key") {
     val points = Joins.orderPoints(orders).collect()

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +14,14 @@ class LlmOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val docs = Tables.documents(spark, TestSpark.Sf).cache()
   private lazy val embs = Tables.embeddings(spark, TestSpark.Sf).cache()
+
+  /** Registry query `name` as shipped, over the sf0.001 corpus. */
+  private def query(name: String): DataFrame =
+    SparkEntry.queries(name)(spark, TestSpark.Sf)
+
+  /** Registry query `name` as shipped, over an in-memory corpus. */
+  private def query(name: String, c: Corpus): DataFrame =
+    SparkEntry.builds(name)(c)
 
   // --- similarity ---
 
@@ -88,7 +97,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("vocab_coverage_curve: every (lang, K) row matches a driver-side " +
     "rank replay; the production-K rows equal vocab_coverage") {
-    val got = TextAnalysis.vocabCoverageCurve(docs).collect()
+    val got = query("vocab_coverage_curve").collect()
       .map(r => (r.getAs[String]("lang"), r.getAs[Long]("k_vocab")) ->
         (r.getAs[Long]("n_tokens"), r.getAs[Long]("n_oov"),
           r.getAs[Long]("oov_ppm"))).toMap
@@ -110,7 +119,7 @@ class LlmOpsSpec extends AnyFunSuite {
       assert(ppm === oov.toLong * 1000000L / mine.size, s"($l, $k)")
     }
     // the K = VocabK rows ARE vocab_coverage's rows
-    val prod = TextAnalysis.vocabCoverage(docs).collect()
+    val prod = query("vocab_coverage").collect()
       .map(r => r.getAs[String]("lang") ->
         (r.getAs[Long]("n_tokens"), r.getAs[Long]("n_oov"))).toMap
     prod.foreach { case (l, (n, o)) =>
@@ -272,7 +281,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("pq_recall_opq: one row per query, recall in range, consistent " +
     "with its hit counts") {
-    val got = Similarity.pqRecallOpq(embs).collect()
+    val got = query("pq_recall_opq").collect()
     assert(got.length === Similarity.QueryCount)
     got.foreach { r =>
       val hits = r.getAs[Long]("n_hits")
@@ -338,8 +347,9 @@ class LlmOpsSpec extends AnyFunSuite {
       .localCheckpoint()
     def sumHits(df: org.apache.spark.sql.DataFrame): Long =
       df.agg(sum("n_hits")).collect()(0).getLong(0)
-    val plain = sumHits(Similarity.pqRecallTrained(emb))
-    val opq = sumHits(Similarity.pqRecallOpq(emb))
+    val c = Corpus("embeddings" -> emb)
+    val plain = sumHits(query("pq_recall_trained", c))
+    val opq = sumHits(query("pq_recall_opq", c))
     info(s"anisotropic corpus: plain trained-PQ hits=$plain, OPQ hits=$opq" +
       s" (of ${Similarity.QueryCount * Similarity.TopK})")
     assert(opq > plain,
@@ -543,8 +553,8 @@ class LlmOpsSpec extends AnyFunSuite {
     // 100 identical docs > MaxQuadraticBucket ⇒ star: exactly 99 pairs
     assert(pairs.count() === 99)
     assert(pairs.where(col("doc_a") =!= 1L).count() === 0)
-    val kept = Dedup.dedupApply(docs.withColumn("lang", lit("en"))
-      .withColumn("source", lit("s")))
+    val kept = query("dedup_apply", Corpus("documents" ->
+      docs.withColumn("lang", lit("en")).withColumn("source", lit("s"))))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(1L, 200L))
   }
@@ -567,7 +577,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (7L, "unrelated corpus content entirely distinct from everything " +
         "eleven twelve thirteen fourteen fifteen sixteen seventeen")
     ).toDF("doc_id", "text")
-    val out = Dedup.incrementalDedup(df).collect()
+    val out = query("dedup_incremental", Corpus("documents" -> df)).collect()
     // batch doc 10 matches corpus doc 3; nothing pairs batch 20,
     // and no corpus×corpus or batch×batch rows exist
     assert(out.forall(r => r.getAs[Long]("batch_doc_id") % 10 == 0))
@@ -582,7 +592,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val corpus = (1L to 100L).filterNot(_ % 10 == 0).map(i => (i, text))
     val batch = Seq((10L, text))
     val df = (corpus ++ batch).toDF("doc_id", "text")
-    val out = Dedup.incrementalDedup(df).collect()
+    val out = query("dedup_incremental", Corpus("documents" -> df)).collect()
     // 90 identical corpus docs exceed MaxQuadraticBucket: the batch doc
     // pairs with exactly the smallest corpus witness, not all 90
     assert(out.length === 1)
@@ -646,7 +656,8 @@ class LlmOpsSpec extends AnyFunSuite {
       (2L, s"$shared six seven eight nine ten"),
       (3L, "completely unrelated words without any common run at all yes")
     ).toDF("doc_id", "text")
-    val fps = TextAnalysis.winnowFingerprints(df).collect()
+    val fps = TextAnalysis.winnowFingerprintsFrom(
+      Staged.tokens(Corpus("documents" -> df)).winnow).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     // shared run of 10 tokens >= w+k-1 = 8 ⇒ guaranteed common fingerprint
     assert(fps(1L).intersect(fps(2L)).nonEmpty)
@@ -670,7 +681,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (2L, s"prefix words $run suffix words", "src1"), // contaminated: shared 10-token run ≥ w+k−1
       (3L, "totally different content with no common run at all here now", "src2")
     ).toDF("doc_id", "text", "source")
-    val out = TextAnalysis.contaminationCheck(df).collect()
+    val out = query("contamination_check", Corpus("documents" -> df)).collect()
     assert(out.map(_.getLong(0)).toSet === Set(2L))
     assert(out.head.getAs[Long]("n_eval_docs") === 1L)
     assert(out.head.getAs[Long]("n_shared_fps") >= 1L)
@@ -693,7 +704,8 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("tokenTopK returns k most frequent tokens in order") {
-    val top = TextAnalysis.tokenTopK(docs, k = 5).collect()
+    val top = TextAnalysis.tokenTopKFrom(
+      Staged.tokens(spark, TestSpark.Sf).freq, k = 5).collect()
     assert(top.length === 5)
     val counts = top.map(_.getAs[Long]("n"))
     assert(counts.sameElements(counts.sortBy(-_)))
@@ -788,7 +800,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val pairs = Dedup.minhashDedup(df).collect()
       .map(r => (r.getAs[Long]("keeper_doc_id"), r.getAs[Long]("dup_doc_id"))).toSet
     assert(pairs === Set((1L, 2L), (2L, 3L), (50L, 51L)), s"pairs were $pairs")
-    val got = Dedup.dupClusters(df).collect()
+    val got = query("dup_cluster", Corpus("documents" -> df)).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("cluster_id"), r.getAs[Long]("n_members"))).toMap
     assert(got === Map(
@@ -869,7 +881,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val df = Seq(
       (1L, "spam spam spam spam spam spam"),
       (2L, diverse)).toDF("doc_id", "text")
-    val rows = TextAnalysis.gopherQuality(df).collect()
+    val rows = query("quality_gopher", Corpus("documents" -> df)).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     val rep = rows(1L)
     assert(rep.getAs[Long]("n_tokens") === 6L)
@@ -886,7 +898,7 @@ class LlmOpsSpec extends AnyFunSuite {
   test("docRarity: boilerplate scores common, outliers score rare") {
     import spark.implicits._
     val df = Seq((1L, "c c c"), (2L, "c r")).toDF("doc_id", "text")
-    val got = TextAnalysis.docRarity(df).collect()
+    val got = query("doc_rarity", Corpus("documents" -> df)).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("mean_tf_milli"), r.getAs[Long]("min_tf"))).toMap
     assert(got(1L) === (4000L, 4L)) // 'c' appears 4× corpus-wide
@@ -936,16 +948,16 @@ class LlmOpsSpec extends AnyFunSuite {
       (99L, TextAnalysis.EvalSource, "zeta zeta zeta zeta"))
       .map { case (id, src, text) => (id, text, src) }
       .toDF("doc_id", "text", "source")
-    val top = TextAnalysis.distDrift(df).collect()
+    val top = query("dist_drift", Corpus("documents" -> df)).collect()
     assert(top.head.getAs[String]("token") === "zeta")
     assert(top.head.getAs[Long]("eval_ppm") === 1000000L)
     assert(top.head.getAs[Long]("train_ppm") === 0L)
   }
 
   test("sourceRollup reconciles with per-doc gopherQuality") {
-    val roll = TextAnalysis.sourceRollup(docs).collect()
+    val roll = query("source_rollup").collect()
       .map(r => r.getAs[String]("source") -> r).toMap
-    val perDoc = TextAnalysis.gopherQuality(docs)
+    val perDoc = query("quality_gopher")
       .join(docs.select("doc_id", "source"), "doc_id")
       .collect().groupBy(_.getAs[String]("source"))
     assert(roll.keySet === perDoc.keySet)
@@ -984,7 +996,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // "ab" appears in 'abc' (20 docs) and 'ab' (1 doc) → 21
     val df = ((1 to 20).map(i => (i.toLong, "abc xy")) :+ (21L, "ab xy"))
       .toDF("doc_id", "text")
-    val got = TextAnalysis.bpeMergeStep(df).collect()
+    val got = query("bpe_merge", Corpus("documents" -> df)).collect()
       .map(r => r.getAs[String]("pair") -> r.getAs[Long]("n")).toMap
     assert(got("ab") === 21L)
     assert(got("bc") === 20L)
@@ -992,7 +1004,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("tokenBudget: selection is quality-descending and budget-bounded") {
-    val sel = TextAnalysis.tokenBudget(docs).collect()
+    val sel = query("token_budget").collect()
     val byLang = sel.groupBy(_.getAs[String]("lang"))
     byLang.foreach { case (lang, rows) =>
       val selected = rows.filter(_.getAs[String]("selected") == "true")
@@ -1030,7 +1042,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val common = (1 to 25).map(i => s"w$i").mkString(" ")
     val df = ((1 to 5).map(i => (i.toLong, "en", common)) :+
       (9L, "de", s"$common z9")).toDF("doc_id", "lang", "text")
-    val got = TextAnalysis.vocabCoverage(df).collect()
+    val got = query("vocab_coverage", Corpus("documents" -> df)).collect()
       .map(r => r.getAs[String]("lang") -> r).toMap
     assert(got("en").getAs[Long]("n_oov") === 0L)
     assert(got("de").getAs[Long]("n_oov") === 1L)
@@ -1038,7 +1050,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("semanticDedup pairs stay within one centroid list and match cosine") {
-    val pairs = Similarity.semanticDedup(embs).collect()
+    val pairs = query("semantic_dedup").collect()
     assert(pairs.nonEmpty)
     val assign = Similarity.ivfAssign(embs).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("centroid_id")).toMap
@@ -1057,7 +1069,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // p(z|x) = 1/11 of the x-prefix mass
     val df = ((1 to 10).map(i => (i.toLong, "x y")) :+ (11L, "x z"))
       .toDF("doc_id", "text")
-    val got = TextAnalysis.ngramLmScore(df).collect()
+    val got = query("ngram_lm_score", Corpus("documents" -> df)).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(got(1L).getAs[Long]("mean_p_ppm") === 10000000L / 11)
     assert(got(11L).getAs[Long]("mean_p_ppm") === 1000000L / 11)
@@ -1067,7 +1079,7 @@ class LlmOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, "spark fast"), (2L, "dup dup dup"), (3L, "zzz zzz"))
       .toDF("doc_id", "text")
-    val got = TextAnalysis.qualityClassify(df).collect()
+    val got = query("quality_classify", Corpus("documents" -> df)).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(got(1L).getAs[Long]("score_milli") ===
       TextAnalysis.ClassifierBias + (300L + 250L) / 2)
@@ -1152,7 +1164,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val df = ((1L, "rare common common") +:
       (2 to 10).map(i => (i.toLong, "common common filler")))
       .toDF("doc_id", "text")
-    val top = TextAnalysis.tfidfTopK(df)
+    val top = query("tfidf_topk", Corpus("documents" -> df))
       .where(col("doc_id") === 1L).collect()
       .sortBy(_.getAs[Long]("rank"))
     assert(top.head.getAs[String]("token") === "rare")
@@ -1161,7 +1173,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("pqRecall: hits are the intersection of ADC and exact-L2 top-k") {
-    val got = Similarity.pqRecall(embs).collect()
+    val got = query("pq_recall").collect()
     assert(got.length === Similarity.QueryCount)
     got.foreach { r =>
       val h = r.getAs[Long]("n_hits")
@@ -1173,9 +1185,9 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("ivfRecall beats pqRecall on this corpus (probing loses less than " +
     "an untrained codebook)") {
-    val ivf = Similarity.ivfRecall(embs).collect()
+    val ivf = query("ivf_recall").collect()
       .map(_.getAs[Long]("n_hits")).sum
-    val pq = Similarity.pqRecall(embs).collect()
+    val pq = query("pq_recall").collect()
       .map(_.getAs[Long]("n_hits")).sum
     assert(ivf >= pq)
     assert(ivf > 0L)
@@ -1183,7 +1195,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("pqTrain: full codebook grid, members reconcile to the corpus, " +
     "training lifts recall materially over the untrained literals") {
-    val rel = Similarity.pqTrain(embs).collect()
+    val rel = query("pq_train").collect()
     assert(rel.length ===
       Similarity.PqM * Similarity.PqK * Similarity.PqSubDim)
     // per (m, dim): every candidate vector sits in exactly one codeword
@@ -1192,9 +1204,9 @@ class LlmOpsSpec extends AnyFunSuite {
       .foreach { case (_, rows) =>
         assert(rows.map(_.getAs[Long]("n_members")).sum === nCand)
       }
-    val untrained = Similarity.pqRecall(embs).collect()
+    val untrained = query("pq_recall").collect()
       .map(_.getAs[Long]("recall_milli"))
-    val trained = Similarity.pqRecallTrained(embs).collect()
+    val trained = query("pq_recall_trained").collect()
       .map(_.getAs[Long]("recall_milli"))
     assert(trained.length === Similarity.QueryCount)
     // measured at sf0.001: 25 untrained vs 237 trained mean milli
@@ -1207,11 +1219,11 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("pqRecallCurve: one row per codebook stage, final row equals the " +
     "trained gate, training lifts over the Forgy seed") {
-    val curve = Similarity.pqRecallCurve(embs).collect()
+    val curve = query("pq_recall_curve").collect()
       .sortBy(_.getAs[Long]("iters"))
     assert(curve.map(_.getAs[Long]("iters")).toSeq ===
       (0L to Similarity.PqTrainIters.toLong))
-    val trained = Similarity.pqRecallTrained(embs).collect()
+    val trained = query("pq_recall_trained").collect()
       .map(_.getAs[Long]("n_hits")).sum
     assert(curve.last.getAs[Long]("sum_hits") === trained,
       "curve's final stage disagrees with pq_recall_trained")
@@ -1225,11 +1237,11 @@ class LlmOpsSpec extends AnyFunSuite {
   test("pqRerankCurve: R=TopK row equals the trained gate (re-ranking " +
     "the ADC top-k reorders, never changes, the set) and recall is " +
     "monotone in R") {
-    val curve = Similarity.pqRerankCurve(embs).collect()
+    val curve = query("pq_rerank_curve").collect()
       .sortBy(_.getAs[Long]("rerank_r"))
     assert(curve.map(_.getAs[Long]("rerank_r")).toSeq ===
       Similarity.RerankRs.map(_.toLong))
-    val trained = Similarity.pqRecallTrained(embs).collect()
+    val trained = query("pq_recall_trained").collect()
       .map(_.getAs[Long]("n_hits")).sum
     assert(curve.head.getAs[Long]("sum_hits") === trained,
       "R=TopK anchor disagrees with pq_recall_trained")
@@ -1240,7 +1252,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("pqRecallResidual: per-query recall shape, hits bounded by k") {
-    val got = Similarity.pqRecallResidual(embs).collect()
+    val got = query("pq_recall_residual").collect()
     assert(got.length === Similarity.QueryCount)
     got.foreach { r =>
       val h = r.getAs[Long]("n_hits")
@@ -1262,7 +1274,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // 'aa bb' always co-occur (exclusively); 'xx yy zz' mix freely
     val df = ((1 to 10).map(i => (i.toLong, "aa bb xx yy")) ++
       (11 to 20).map(i => (i.toLong, "xx zz yy xx"))).toDF("doc_id", "text")
-    val top = TextAnalysis.pmiPairs(df).collect()
+    val top = query("pmi_pairs", Corpus("documents" -> df)).collect()
     val head = top.head
     assert((head.getAs[String]("w1"), head.getAs[String]("w2")) ===
       ("aa", "bb"))
@@ -1271,7 +1283,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("bpeApplyStep: compression reconciles with the top pair's mass") {
-    val r = TextAnalysis.bpeApplyStep(docs).collect()
+    val r = query("bpe_apply").collect()
     assert(r.length === 1)
     val row = r.head
     assert(row.getAs[Long]("tokens_affected") > 0L)
@@ -1285,12 +1297,12 @@ class LlmOpsSpec extends AnyFunSuite {
   test("bpe_train_curve: 8 composing rounds — round 1 agrees with the " +
     "single-step trainer, compression is monotone, pair mass bounds " +
     "each round's saving") {
-    val curve = TextAnalysis.bpeTrainCurve(docs).collect()
+    val curve = query("bpe_train_curve").collect()
       .sortBy(_.getAs[Long]("iter"))
     assert(curve.map(_.getAs[Long]("iter")).toSeq ===
       (1L to TextAnalysis.BpeTrainRounds.toLong))
     // round 1 IS bpeApplyStep's pick
-    val one = TextAnalysis.bpeApplyStep(docs).collect().head
+    val one = query("bpe_apply").collect().head
     assert(curve.head.getAs[String]("pair") === one.getAs[String]("pair"))
     assert(curve.head.getAs[Long]("pair_n") === one.getAs[Long]("pair_n"))
     assert(curve.head.getAs[Long]("chars_after") ===
@@ -1366,7 +1378,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val other = "q r s t u v w x y z"
     val df = Seq((1L, same), (2L, same), (3L, other), (4L, other))
       .toDF("doc_id", "text")
-    val rows = Dedup.minhashEstError(df).collect()
+    val rows = query("minhash_est_error", Corpus("documents" -> df)).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       // identical shingle sets agree on every permutation min — and the
@@ -1379,8 +1391,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("dedup_agreement: union = minhash + simhash - both") {
-    val docs = Tables.documents(spark, TestSpark.Sf)
-    val r = Dedup.dedupMethodAgreement(docs).collect().head
+    val r = query("dedup_agreement").collect().head
     assert(r.getAs[Long]("n_union") ===
       r.getAs[Long]("n_minhash") + r.getAs[Long]("n_simhash")
         - r.getAs[Long]("n_both"))
@@ -1426,7 +1437,8 @@ class LlmOpsSpec extends AnyFunSuite {
   test("cooccur_topk counts adjacent and distance-2 pairs per doc") {
     import spark.implicits._
     val df = Seq((1L, "a b c"), (2L, "a b")).toDF("doc_id", "text")
-    val got = TextAnalysis.cooccurTopK(df, k = 10).collect()
+    val got = TextAnalysis.cooccurTopKFrom(
+      Staged.tokens(Corpus("documents" -> df)).skipgrams, k = 10).collect()
       .map(r => (r.getAs[String]("w_a"), r.getAs[String]("w_b"))
         -> r.getAs[Long]("n")).toMap
     // doc1 pairs: (a,b) (a,c) (b,c); doc2: (a,b)
@@ -1435,7 +1447,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("quality_calibration conserves docs and bounds keep_ppm") {
     val docs = Tables.documents(spark, TestSpark.Sf)
-    val cal = TextAnalysis.qualityCalibration(docs).collect()
+    val cal = query("quality_calibration").collect()
     assert(cal.map(_.getAs[Long]("n_docs")).sum === docs.count())
     cal.foreach { r =>
       assert(r.getAs[Long]("score_bucket") >= 0L)
@@ -1446,18 +1458,17 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("cluster_size_hist: all clusters have >= 2 members and cover " +
     "every clustered doc") {
-    val docs = Tables.documents(spark, TestSpark.Sf)
-    val hist = Dedup.clusterSizeHist(docs).collect()
+    val hist = query("cluster_size_hist").collect()
     hist.foreach(r => assert(r.getAs[Long]("n_members") >= 2L))
     val docsCovered = hist
       .map(r => r.getAs[Long]("n_members") * r.getAs[Long]("n_clusters")).sum
-    assert(docsCovered === Dedup.dupClusters(docs).count())
+    assert(docsCovered === query("dup_cluster").count())
   }
 
   test("dedup_sweep is monotone decreasing in the threshold and agrees " +
     "with minhashDedup at the operating point") {
     val docs = Tables.documents(spark, TestSpark.Sf)
-    val sweep = Dedup.dedupSweep(docs).collect()
+    val sweep = query("dedup_sweep").collect()
       .map(r => r.getAs[Long]("tau_milli") -> r.getAs[Long]("n_dup_pairs"))
       .sortBy(_._1)
     sweep.sliding(2).foreach { case Array((_, a), (_, b)) =>
@@ -1469,7 +1480,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("cross_source_overlap conserves the verified dup-pair count") {
     val docs = Tables.documents(spark, TestSpark.Sf)
-    val overlap = Dedup.crossSourceOverlap(docs).collect()
+    val overlap = query("cross_source_overlap").collect()
     assert(overlap.map(_.getAs[Long]("n_dup_pairs")).sum
       === Dedup.minhashDedup(docs).count())
     overlap.foreach(r => assert(
@@ -1478,7 +1489,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("lsh_band_sweep: more bands never loses candidates or captures") {
     val docs = Tables.documents(spark, TestSpark.Sf)
-    val sweep = Dedup.lshBandSweep(docs).collect()
+    val sweep = query("lsh_band_sweep").collect()
       .map(r => r.getAs[Long]("bands") ->
         (r.getAs[Long]("n_candidates"), r.getAs[Long]("n_dups_captured")))
       .sortBy(_._1)
@@ -1500,9 +1511,9 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("cluster_representative: one rep per cluster, rep maximizes " +
     "quality, dropped checksum = cluster total minus rep") {
-    val clusters = Dedup.dupClusters(docs)
-    val gopher = TextAnalysis.gopherQuality(docs)
-    val reps = Dedup.clusterRepresentativesFrom(clusters, gopher)
+    val clusters = query("dup_cluster")
+    val gopher = query("quality_gopher")
+    val reps = query("cluster_representative")
     assert(reps.count() ===
       clusters.select("cluster_id").distinct().count())
     val byDoc = clusters.join(gopher.select("doc_id", "distinct_milli",
@@ -1525,9 +1536,8 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("topic_clusters: populations cover the assignment, top counts " +
     "bounded by population") {
-    val assign = Similarity.ivfAssign(embs)
-    val tc = Similarity.topicClustersFrom(assign, docs,
-      TextAnalysis.tokensRel(docs)).collect()
+    val assign = query("ivf_assign")
+    val tc = query("topic_clusters").collect()
     // every doc in the assignment that exists in documents is counted
     val assigned = assign.join(
       docs.select(col("doc_id").as("vec_id")), "vec_id").count()
@@ -1542,7 +1552,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("quality_ensemble: 16-way matrix conserves docs, ensemble_keep " +
     "is the majority vote of the row's flags") {
-    val rows = TextAnalysis.qualityEnsemble(docs).collect()
+    val rows = query("quality_ensemble").collect()
     assert(rows.map(_.getAs[Long]("n_docs")).sum === docs.count())
     assert(rows.length <= 16)
     rows.foreach { r =>
@@ -1760,7 +1770,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("split_audit: shards cover the corpus, shares bounded, splits " +
     "named") {
-    val rows = TextAnalysis.splitAudit(docs).collect()
+    val rows = query("split_audit").collect()
     assert(rows.map(_.getAs[Long]("n_docs")).sum === docs.count())
     assert(rows.map(_.getAs[String]("split")).toSet
       .subsetOf(Set("train", "val", "test")))
@@ -1799,7 +1809,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("sq_recall: every query reports, recall bounded, int8 beats the " +
     "trained-PQ gate (finer codes, better recall)") {
-    val r = Similarity.sqRecall(embs).collect()
+    val r = query("sq_recall").collect()
     assert(r.length === 8)
     r.foreach { x =>
       assert(x.getAs[Long]("recall_milli") >= 0L &&
@@ -1813,7 +1823,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("mrl_recall: one row per prefix dim, bounded, and the full-dim " +
     "arm reproduces sq_recall exactly") {
-    val rows = Similarity.mrlRecallCurve(embs).collect()
+    val rows = query("mrl_recall").collect()
       .sortBy(_.getAs[Long]("dims"))
     assert(rows.map(_.getAs[Long]("dims")) ===
       Similarity.MrlDims.map(_.toLong).toArray)
@@ -1823,7 +1833,7 @@ class LlmOpsSpec extends AnyFunSuite {
     }
     // dims = Dim is exactly the sq_recall ranking — the curve's top
     // end must agree with the standalone gate's aggregate
-    val sqHits = Similarity.sqRecall(embs).collect()
+    val sqHits = query("sq_recall").collect()
       .map(_.getAs[Long]("n_hits")).sum
     assert(rows.last.getAs[Long]("sum_hits") === sqHits)
     // more prefix can't help LESS than the 8x-truncated floor here
@@ -1833,7 +1843,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("bq_recall: both stages report, the int8 re-rank of the hamming " +
     "shortlist does not lose to the raw 1-bit ranking") {
-    val rows = Similarity.bqRecall(embs).collect()
+    val rows = query("bq_recall").collect()
       .map(r => r.getAs[String]("variant") ->
         r.getAs[Long]("mean_recall_milli")).toMap
     assert(rows.keySet === Set("hamming", "rerank"))
@@ -1891,7 +1901,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("incontext_order: positions are dense per cluster, similarity " +
     "non-increasing along each cluster's order, corpus covered") {
-    val rows = Similarity.incontextOrder(embs).collect()
+    val rows = query("incontext_order").collect()
     val nCand = embs.where(col("vec_id") >= Similarity.QueryCount).count()
     assert(rows.length.toLong === nCand)
     assert(rows.map(_.getAs[Long]("doc_id")).distinct.length === rows.length)
@@ -1922,7 +1932,7 @@ class LlmOpsSpec extends AnyFunSuite {
     "argmax (independent groupBy recompute)") {
     import org.apache.spark.sql.functions._
     val dups = graft.operators.Dedup.minhashDedup(docs)
-    val got = Similarity.contrastiveTriplets(dups, embs).collect()
+    val got = query("contrastive_triplets").collect()
     assert(got.nonEmpty, "no triplets at test scale — vacuous")
 
     val buckets = embs
@@ -2003,9 +2013,9 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("ivf_sq_recall: the composed gate is bounded above by a full " +
     "int8 scan and reports one row per query") {
-    val rows = Similarity.ivfSqRecall(embs).collect()
+    val rows = query("ivf_sq_recall").collect()
     assert(rows.length === Similarity.QueryCount)
-    val sq = Similarity.sqRecall(embs).collect()
+    val sq = query("sq_recall").collect()
       .map(r => r.getAs[Long]("q_id") -> r.getAs[Long]("n_hits")).toMap
     rows.foreach { r =>
       val hits = r.getAs[Long]("n_hits")
@@ -2039,7 +2049,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("rp_recall: one row per query, recall bounded, and the projected " +
     "ranking is a genuine subset selection (not the exact ranking)") {
-    val rows = Similarity.rpRecall(embs).collect()
+    val rows = query("rp_recall").collect()
     assert(rows.length === Similarity.QueryCount)
     rows.foreach { r =>
       val hits = r.getAs[Long]("n_hits")
@@ -2057,7 +2067,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("ivf_balance: shares sum to ~1e6, loads average 1000, flags are " +
     "exactly the >2x-fair-share lists") {
-    val rows = Similarity.ivfBalance(embs).collect()
+    val rows = query("ivf_balance").collect()
     assert(rows.length === Similarity.NumCentroids)
     val total = rows.map(_.getAs[Long]("n_vecs")).sum
     assert(total === Similarity.ivfAssign(embs).count())
@@ -2154,7 +2164,7 @@ class LlmOpsSpec extends AnyFunSuite {
   test("ngram_containment: containment bounds Jaccard from above, " +
     "NEAR_DUP agrees with the verified pairs, and a wrapped copy " +
     "reads CONTAINED where Jaccard alone would pass it") {
-    val rows = Dedup.ngramContainment(docs).collect()
+    val rows = query("ngram_containment").collect()
     rows.foreach { r =>
       val j = r.getAs[Long]("j_milli")
       val c = r.getAs[Long]("cont_milli")
@@ -2175,7 +2185,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val filler = (1 to 7).map(i => s"pad0_$i").mkString(" ")
     val wrapped = Seq((1L, small), (2L, s"$small $filler"))
       .toDF("doc_id", "text")
-    val w = Dedup.ngramContainment(wrapped).collect()
+    val w = query("ngram_containment", Corpus("documents" -> wrapped)).collect()
       .find(r => r.getAs[Long]("doc_a") === 1L &&
         r.getAs[Long]("doc_b") === 2L)
     assert(w.isDefined, "the pinned fixture must share an LSH band")
@@ -2270,9 +2280,9 @@ class LlmOpsSpec extends AnyFunSuite {
   test("bbit_minhash: per-bucket errors match a driver-side 1-bit " +
     "replay and the 1-bit rung is never better than the full width " +
     "on aggregate mass") {
-    val rows = Dedup.bbitMinhash(docs).collect()
+    val rows = query("bbit_minhash").collect()
     // driver-side replay from the per-pair relations
-    val per = Dedup.minhashEstError(docs).collect()
+    val per = query("minhash_est_error").collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Long]("j_milli"), r.getAs[Long]("est_milli")))
     val sh = Dedup.shingleHashes(docs)

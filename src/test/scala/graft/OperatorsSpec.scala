@@ -10,6 +10,8 @@ import graft.operators._
 class OperatorsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val cl = ChangeLog.normalize(Tables.events(spark, TestSpark.Sf)).cache()
+  private def query(name: String) =
+    SparkEntry.queries(name)(spark, TestSpark.Sf)
 
   test("the flagship entry returns rows (the driver's smoke check)") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -197,11 +199,12 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("approx_distinct sketch stays within 5% of the exact cardinality") {
-    Ledger.approxDistinctRaw(cl).collect().foreach { r =>
-      val approx = r.getAs[Long]("n_users_approx").toDouble
-      val exact = r.getAs[Long]("n_users_exact").toDouble
-      assert(math.abs(approx - exact) / exact <= 0.05,
-        s"db ${r.getString(0)}: approx $approx vs exact $exact")
+    val rows = query("approx_distinct").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_users_exact") > 0L)
+      assert(r.getAs[String]("approx_within_5pct") === "true",
+        s"db ${r.getString(0)}")
     }
   }
 
@@ -423,10 +426,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("fk_integrity: the generated star schema has no orphans") {
-    val fk = Snapshot.fkIntegrity(Tables.customer(spark, TestSpark.Sf),
-      Tables.orders(spark, TestSpark.Sf), Tables.lineitem(spark, TestSpark.Sf),
-      Tables.nation(spark, TestSpark.Sf))
-      .collect()
+    val fk = query("fk_integrity").collect()
     assert(fk.length === 3)
     fk.foreach { r =>
       assert(r.getAs[Long]("n_orphan_rows") === 0L)
@@ -436,8 +436,8 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("olap_order_priority: late orders are a subset of all orders") {
-    val op = Analytics.orderPriority(Tables.orders(spark, TestSpark.Sf),
-      Tables.lineitem(spark, TestSpark.Sf)).collect()
+    val op = Analytics.orderPriority(Corpus(spark, TestSpark.Sf).orders,
+      Corpus(spark, TestSpark.Sf).lineitem).collect()
     assert(op.length === 5)
     op.foreach(r =>
       assert(r.getAs[Long]("n_late") <= r.getAs[Long]("n_orders")))
@@ -446,10 +446,10 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("table_manifest covers every star-schema table with live counts") {
     val m = Snapshot.tableManifest(
-      Tables.region(spark, TestSpark.Sf), Tables.nation(spark, TestSpark.Sf),
+      Corpus(spark, TestSpark.Sf).region, Corpus(spark, TestSpark.Sf).nation,
       Tables.customer(spark, TestSpark.Sf),
-      Tables.supplier(spark, TestSpark.Sf), Tables.part(spark, TestSpark.Sf),
-      Tables.orders(spark, TestSpark.Sf), Tables.lineitem(spark, TestSpark.Sf))
+      Corpus(spark, TestSpark.Sf).supplier, Corpus(spark, TestSpark.Sf).part,
+      Corpus(spark, TestSpark.Sf).orders, Corpus(spark, TestSpark.Sf).lineitem)
       .collect().map(r => r.getAs[String]("table_name") -> r).toMap
     assert(m.keySet === Set("region", "nation", "customer", "supplier",
       "part", "orders", "lineitem"))
@@ -461,8 +461,8 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("olap_promo_revenue: promo share bounded, totals match lineitem") {
-    val pr = Analytics.promoRevenue(Tables.part(spark, TestSpark.Sf),
-      Tables.lineitem(spark, TestSpark.Sf)).collect()
+    val pr = Analytics.promoRevenue(Corpus(spark, TestSpark.Sf).part,
+      Corpus(spark, TestSpark.Sf).lineitem).collect()
     pr.foreach { r =>
       assert(r.getAs[Long]("promo_rev_c") <= r.getAs[Long]("total_rev_c"))
       assert(r.getAs[Long]("promo_ppm") <= 1000000L)
@@ -511,8 +511,8 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("forget_audit: cascade counts match direct filters") {
     val cust = Tables.customer(spark, TestSpark.Sf)
-    val ord = Tables.orders(spark, TestSpark.Sf)
-    val li = Tables.lineitem(spark, TestSpark.Sf)
+    val ord = Corpus(spark, TestSpark.Sf).orders
+    val li = Corpus(spark, TestSpark.Sf).lineitem
     val got = Snapshot.forgetAudit(cl, cust, ord, li).collect()
       .map(r => r.getAs[String]("relation")
         -> r.getAs[Long]("n_rows_to_purge")).toMap
@@ -551,7 +551,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(ce.length === 20)
     ce.foreach(r => assert(r.getAs[Long]("overcount") >= 0L,
       s"CMS undercounted ${r.getAs[String]("t")}"))
-    val exactTop = TextAnalysis.tokenTopK(docs).collect()
+    val exactTop = query("token_topk").collect()
       .map(r => r.getAs[String]("token") -> r.getAs[Long]("n")).toMap
     ce.foreach { r =>
       exactTop.get(r.getAs[String]("t"))
@@ -561,7 +561,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("olap_rollup: rollup grains reconcile (leaves sum to flag rows " +
     "sum to the grand total)") {
-    val li = Tables.lineitem(spark, TestSpark.Sf)
+    val li = Corpus(spark, TestSpark.Sf).lineitem
     val r = Analytics.pricingRollup(li).collect()
     val byGid = r.groupBy(_.getAs[Long]("gid"))
     val leaves = byGid(0L).map(_.getAs[Long]("rev_c")).sum
@@ -573,7 +573,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("olap_moving_revenue: the 7-day window sums exactly") {
-    val mv = Analytics.movingRevenue(Tables.lineitem(spark, TestSpark.Sf))
+    val mv = Analytics.movingRevenue(Corpus(spark, TestSpark.Sf).lineitem)
       .collect().map(r => r.getAs[Long]("ship_day") ->
         (r.getAs[Long]("rev_c"), r.getAs[Long]("mov7_rev_c"))).toMap
     mv.foreach { case (d, (_, mov)) =>
@@ -661,10 +661,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("catalog_stats: one row per column, NDV bounded by rows, a key " +
     "column has NDV == rows") {
-    val t = Seq("nation" -> Tables.nation(spark, TestSpark.Sf),
-      "customer" -> Tables.customer(spark, TestSpark.Sf))
-    val rows = graft.operators.Snapshot.catalogStats(t).collect()
-    assert(rows.length === 3 + 5) // nation + customer column counts
+    val rows = query("catalog_stats").collect()
+    // one row per audited column
+    assert(rows.length === Snapshot.CatalogColumns.map(_._2.length).sum)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_distinct") <= r.getAs[Long]("n_rows"))
       assert(r.getAs[Long]("n_null") >= 0L)
@@ -675,9 +674,8 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("catalog_stats_sketch: the scale-default HLL pass lands within 5% " +
     "of the exact NDV on every audited column, single pass per table") {
-    val t = Seq("nation" -> Tables.nation(spark, TestSpark.Sf),
-      "customer" -> Tables.customer(spark, TestSpark.Sf))
-    val exact = graft.operators.Snapshot.catalogStats(t).collect()
+    val t = Staged.catalogGrid(Corpus(spark, TestSpark.Sf))
+    val exact = query("catalog_stats").collect()
       .map(r => (r.getAs[String]("table_name"),
         r.getAs[String]("column_name")) -> r.getAs[Long]("n_distinct"))
       .toMap
@@ -728,11 +726,11 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("olap_market_share: ppm share bounded, nation rev <= total rev") {
-    val ms = Analytics.marketShare(Tables.part(spark, TestSpark.Sf),
-      Tables.supplier(spark, TestSpark.Sf),
-      Tables.customer(spark, TestSpark.Sf), Tables.nation(spark, TestSpark.Sf),
-      Tables.region(spark, TestSpark.Sf), Tables.orders(spark, TestSpark.Sf),
-      Tables.lineitem(spark, TestSpark.Sf)).collect()
+    val ms = Analytics.marketShare(Corpus(spark, TestSpark.Sf).part,
+      Corpus(spark, TestSpark.Sf).supplier,
+      Tables.customer(spark, TestSpark.Sf), Corpus(spark, TestSpark.Sf).nation,
+      Corpus(spark, TestSpark.Sf).region, Corpus(spark, TestSpark.Sf).orders,
+      Corpus(spark, TestSpark.Sf).lineitem).collect()
     assert(ms.nonEmpty)
     ms.foreach { r =>
       assert(r.getAs[Long]("nation_rev_c") <= r.getAs[Long]("total_rev_c"))
@@ -744,7 +742,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("olap_order_dist: distribution masses sum back to the customer and " +
     "order tables") {
     val cust = Tables.customer(spark, TestSpark.Sf)
-    val ord = Tables.orders(spark, TestSpark.Sf)
+    val ord = Corpus(spark, TestSpark.Sf).orders
     val d = Analytics.orderCountDist(cust, ord).collect()
     assert(d.map(_.getAs[Long]("custdist")).sum === cust.count())
     assert(d.map(r => r.getAs[Long]("c_count") * r.getAs[Long]("custdist"))
@@ -753,8 +751,8 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("olap_small_qty: the below-a-fifth-of-average filter keeps a strict " +
     "subset of the brand's lineitems") {
-    val part = Tables.part(spark, TestSpark.Sf)
-    val li = Tables.lineitem(spark, TestSpark.Sf)
+    val part = Corpus(spark, TestSpark.Sf).part
+    val li = Corpus(spark, TestSpark.Sf).lineitem
     val all = li.join(
       part.where(col("p_brand") === Analytics.SmallQtyBrand)
         .select("p_partkey"),
@@ -768,7 +766,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("olap_sales_opportunity: every counted customer is above the mean " +
     "positive balance and dormant past the cutoff") {
     val cust = Tables.customer(spark, TestSpark.Sf)
-    val ord = Tables.orders(spark, TestSpark.Sf)
+    val ord = Corpus(spark, TestSpark.Sf).orders
     val so = Analytics.salesOpportunity(cust, ord).collect()
     assert(so.nonEmpty)
     // per-segment counts are bounded by the above-mean cohort size
@@ -783,8 +781,8 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("olap_parts_suppliers: supplier counts are positive and the " +
     "excluded brand/type never appear") {
-    val ps = Analytics.partsSuppliers(Tables.part(spark, TestSpark.Sf),
-      Tables.lineitem(spark, TestSpark.Sf)).collect()
+    val ps = Analytics.partsSuppliers(Corpus(spark, TestSpark.Sf).part,
+      Corpus(spark, TestSpark.Sf).lineitem).collect()
     assert(ps.nonEmpty)
     ps.foreach { r =>
       assert(r.getAs[Long]("supplier_cnt") > 0L)
@@ -872,9 +870,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("olap_ship_delay: item mass conserved, shares sum to ~1e6 per " +
     "priority, buckets aligned") {
-    val li = Tables.lineitem(spark, TestSpark.Sf)
+    val li = Corpus(spark, TestSpark.Sf).lineitem
     val rows = Analytics.shipDelayProfile(
-      Tables.orders(spark, TestSpark.Sf), li).collect()
+      Corpus(spark, TestSpark.Sf).orders, li).collect()
     assert(rows.map(_.getAs[Long]("n_items")).sum === li.count())
     rows.foreach(r => assert(
       r.getAs[Long]("delay_lo_days") % Analytics.DelayBucketDays === 0L))
@@ -887,10 +885,10 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("olap_late_suppliers: every held order is finished, multi-supplier, " +
     "uniquely-latest") {
-    val li = Tables.lineitem(spark, TestSpark.Sf)
-    val ord = Tables.orders(spark, TestSpark.Sf)
+    val li = Corpus(spark, TestSpark.Sf).lineitem
+    val ord = Corpus(spark, TestSpark.Sf).orders
     val rows = Analytics.lateSuppliers(
-      Tables.supplier(spark, TestSpark.Sf), ord, li).collect()
+      Corpus(spark, TestSpark.Sf).supplier, ord, li).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getAs[Long]("n_held_orders") >= 1L))
     // held-order mass is bounded by finished orders with >= 2 suppliers
@@ -906,16 +904,16 @@ class OperatorsSpec extends AnyFunSuite {
   test("olap_min_cost_supplier: one winner per part, winners are EUROPE " +
     "suppliers, unit price is the true minimum") {
     val sf = TestSpark.Sf
-    val rows = Analytics.minCostSupplier(Tables.part(spark, sf),
-      Tables.supplier(spark, sf), Tables.nation(spark, sf),
-      Tables.region(spark, sf), Tables.lineitem(spark, sf)).collect()
+    val rows = Analytics.minCostSupplier(Corpus(spark, sf).part,
+      Corpus(spark, sf).supplier, Corpus(spark, sf).nation,
+      Corpus(spark, sf).region, Corpus(spark, sf).lineitem).collect()
     assert(rows.nonEmpty)
     val parts = rows.map(_.getAs[Long]("p_partkey"))
     assert(parts.distinct.length === parts.length) // one winner per part
-    val euro = Tables.supplier(spark, sf)
-      .join(Tables.nation(spark, sf),
+    val euro = Corpus(spark, sf).supplier
+      .join(Corpus(spark, sf).nation,
         col("s_nationkey") === col("n_nationkey"))
-      .join(Tables.region(spark, sf)
+      .join(Corpus(spark, sf).region
         .where(col("r_name") === Analytics.MinCostRegion),
         col("n_regionkey") === col("r_regionkey"))
       .select("s_suppkey").collect().map(_.getLong(0)).toSet
@@ -928,8 +926,8 @@ class OperatorsSpec extends AnyFunSuite {
   test("olap_important_stock: every kept part beats 2x the nation average " +
     "and value mass never exceeds the nation total") {
     val sf = TestSpark.Sf
-    val rows = Analytics.importantStock(Tables.supplier(spark, sf),
-      Tables.nation(spark, sf), Tables.lineitem(spark, sf)).collect()
+    val rows = Analytics.importantStock(Corpus(spark, sf).supplier,
+      Corpus(spark, sf).nation, Corpus(spark, sf).lineitem).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getAs[String]("n_name")).foreach { case (_, g) =>
       // kept shares are each > ~2x average => far fewer than all parts,
@@ -942,10 +940,10 @@ class OperatorsSpec extends AnyFunSuite {
   test("olap_dominant_shippers: a part has at most ONE >50% shipper, " +
     "so dominated-part counts sum to at most the cohort size") {
     val sf = TestSpark.Sf
-    val rows = Analytics.dominantShippers(Tables.part(spark, sf),
-      Tables.supplier(spark, sf), Tables.lineitem(spark, sf)).collect()
+    val rows = Analytics.dominantShippers(Corpus(spark, sf).part,
+      Corpus(spark, sf).supplier, Corpus(spark, sf).lineitem).collect()
     assert(rows.nonEmpty)
-    val cohort = Tables.part(spark, sf)
+    val cohort = Corpus(spark, sf).part
       .where(col("p_name").startsWith(Analytics.DominantNamePrefix))
       .count()
     assert(rows.map(_.getAs[Long]("n_dominated_parts")).sum <= cohort)
@@ -955,12 +953,11 @@ class OperatorsSpec extends AnyFunSuite {
   test("market_basket: pair supports match a driver-side basket replay, " +
     "confidence and lift are the declared integer formulas") {
     val sf = TestSpark.Sf
-    val rows = Analytics.marketBasket(Tables.part(spark, sf),
-      Tables.lineitem(spark, sf)).collect()
+    val rows = query("market_basket").collect()
     assert(rows.nonEmpty)
     // driver-side reference baskets: order -> distinct brand set
-    val baskets = Tables.lineitem(spark, sf)
-      .join(Tables.part(spark, sf),
+    val baskets = Corpus(spark, sf).lineitem
+      .join(Corpus(spark, sf).part,
         col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey"), col("p_brand")).distinct().collect()
       .groupBy(_.getAs[Long]("l_orderkey"))
@@ -991,7 +988,7 @@ class OperatorsSpec extends AnyFunSuite {
     val sf = TestSpark.Sf
     val tabs = (Snapshot.JoinEdges.map(_._1) ++ Snapshot.JoinEdges.map(_._3))
       .distinct.map(t => t -> Tables.table(spark, sf, t)).toMap
-    val got = graft.operators.Snapshot.joinSizeEstimate(tabs).collect()
+    val got = query("join_size_estimate").collect()
     assert(got.length === Snapshot.JoinEdges.length)
     Snapshot.JoinEdges.foreach { case (lt, lk, rt, rk) =>
       val r = got.find(_.getAs[String]("edge") == s"$lt.$lk=$rt.$rk").get
@@ -1070,12 +1067,9 @@ class OperatorsSpec extends AnyFunSuite {
   test("join_advisor: per-edge strategy and salt verdicts follow the " +
     "declared thresholds, sides agree with join_size_estimate") {
     import graft.operators.Snapshot
-    val sf = TestSpark.Sf
-    val tabs = (Snapshot.JoinEdges.map(_._1) ++ Snapshot.JoinEdges.map(_._3))
-      .distinct.map(t => t -> Tables.table(spark, sf, t)).toMap
-    val got = Snapshot.joinAdvisor(tabs).collect()
+    val got = query("join_advisor").collect()
     assert(got.length === Snapshot.JoinEdges.length)
-    val est = Snapshot.joinSizeEstimate(tabs).collect()
+    val est = query("join_size_estimate").collect()
       .map(r => r.getAs[String]("edge") ->
         (r.getAs[Long]("n_left"), r.getAs[Long]("n_right"))).toMap
     got.foreach { r =>
@@ -1165,9 +1159,9 @@ class OperatorsSpec extends AnyFunSuite {
     "side replay over the thresholded co-purchase graph") {
     import graft.operators.Analytics
     val sf = TestSpark.Sf
-    val part = Tables.part(spark, sf)
-    val li = Tables.lineitem(spark, sf)
-    val got = Analytics.brandTriangles(part, li).collect()
+    val part = Corpus(spark, sf).part
+    val li = Corpus(spark, sf).lineitem
+    val got = query("brand_triangles").collect()
       .map(r => r.getAs[String]("brand") -> r).toMap
     // replay: baskets -> support -> thresholded undirected edges
     val baskets = li.select("l_orderkey", "l_partkey")
@@ -1292,10 +1286,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("brand_pagerank: dense rank permutation, teleport floor holds, " +
     "and an independent integer replay reproduces every score") {
     import graft.operators.Analytics
-    val sf = TestSpark.Sf
-    val part = Tables.part(spark, sf)
-    val li = Tables.lineitem(spark, sf)
-    val got = Analytics.brandPagerank(part, li).collect()
+    val got = query("brand_pagerank").collect()
     assert(got.nonEmpty)
     assert(got.map(_.getAs[Long]("rank")).sorted.toSeq ===
       (1L to got.length.toLong))
@@ -1304,7 +1295,7 @@ class OperatorsSpec extends AnyFunSuite {
       assert(r.getAs[Long]("out_weight") > 0L)
     }
     // replay the damped rounds from the market-basket edges
-    val edges = Analytics.marketBasket(part, li)
+    val edges = query("market_basket")
       .select("brand_a", "brand_b", "support").collect()
       .flatMap { r =>
         val (a, b, s) = (r.getString(0), r.getString(1), r.getLong(2))
@@ -1576,9 +1567,9 @@ class OperatorsSpec extends AnyFunSuite {
   test("view_refresh_plan: every order's view row counted once, the " +
     "delta amplifies churn, affected bounded by view rows") {
     val sf = TestSpark.Sf
-    val orders = Tables.orders(spark, sf)
+    val orders = Corpus(spark, sf).orders
     val rows = CdcMerge.viewRefreshPlan(orders,
-      Tables.lineitem(spark, sf)).collect()
+      Corpus(spark, sf).lineitem).collect()
     assert(rows.map(_.getAs[Long]("n_view_rows")).sum === orders.count())
     rows.foreach { r =>
       assert(r.getAs[Long]("n_affected") <= r.getAs[Long]("n_view_rows"))
@@ -1607,7 +1598,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("data_skipping_audit: matched rows identical across layouts, the " +
     "date-ranged layout prunes most, hash layout prunes nothing") {
     val rows = Snapshot.dataSkippingAudit(
-      Tables.lineitem(spark, TestSpark.Sf)).collect()
+      Corpus(spark, TestSpark.Sf).lineitem).collect()
     assert(rows.length === 3)
     val byLayout = rows.map(r => r.getAs[String]("layout") -> r).toMap
     assert(rows.map(_.getAs[Long]("n_matched")).toSet.size === 1)
@@ -1741,7 +1732,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("benford_audit: digit histogram matches a driver-side replay, " +
     "expectations sum to exactly 1e6, tvd and verdict are consistent") {
-    val orders = Tables.orders(spark, TestSpark.Sf)
+    val orders = Corpus(spark, TestSpark.Sf).orders
     val rows = Snapshot.benfordAudit(orders).collect()
     assert(Snapshot.BenfordPpm.map(_._2).sum === 1000000L)
     val cents = orders.select(
@@ -1792,10 +1783,10 @@ class OperatorsSpec extends AnyFunSuite {
     "replay; a constant segment (MAD 0) flags every strictly-greater " +
     "value") {
     import spark.implicits._
-    val got = Snapshot.madOutliers(Tables.orders(spark, TestSpark.Sf),
+    val got = Snapshot.madOutliers(Corpus(spark, TestSpark.Sf).orders,
         Tables.customer(spark, TestSpark.Sf)).collect()
       .map(r => r.getAs[String]("segment") -> r).toMap
-    val oc = Tables.orders(spark, TestSpark.Sf)
+    val oc = Corpus(spark, TestSpark.Sf).orders
       .join(Tables.customer(spark, TestSpark.Sf),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment"),
@@ -1877,8 +1868,8 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("order_reconcile: bucket census matches a driver-side replay " +
     "and every order lands in exactly one bucket") {
-    val orders = Tables.orders(spark, TestSpark.Sf)
-    val lineitem = Tables.lineitem(spark, TestSpark.Sf)
+    val orders = Corpus(spark, TestSpark.Sf).orders
+    val lineitem = Corpus(spark, TestSpark.Sf).lineitem
     val rows = Snapshot.orderReconcile(orders, lineitem).collect()
     assert(rows.map(_.getAs[Long]("n_orders")).sum === orders.count())
     val lines = lineitem.select(col("l_orderkey"),
@@ -1979,7 +1970,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("access_export: one bundle per cohort member, counts reconcile " +
     "with direct per-user counts, the body is the rendered JSON") {
     val customer = Tables.customer(spark, TestSpark.Sf)
-    val orders = Tables.orders(spark, TestSpark.Sf)
+    val orders = Corpus(spark, TestSpark.Sf).orders
     val rows = Snapshot.accessExport(cl, customer, orders).collect()
       .map(r => r.getAs[Long]("user_id") -> r).toMap
     val cohort = customer
@@ -2223,9 +2214,7 @@ class OperatorsSpec extends AnyFunSuite {
     // 500000 + 500000 + 333333 + 1e6 + 1e6
     assert(r.getAs[Long]("effective_docs_ppm") === 3333333L)
     assert(r.getAs[Long]("dedup_ratio_ppm") === 666666L)
-    val corpus = Dedup.softDedupWeights(
-      Tables.documents(spark, TestSpark.Sf),
-      Staged.dedup(spark, TestSpark.Sf).dups).collect()
+    val corpus = query("soft_dedup_weights").collect()
     corpus.foreach { c =>
       assert(c.getAs[Long]("effective_docs_ppm") <=
         c.getAs[Long]("n_docs") * 1000000L)
@@ -2282,8 +2271,7 @@ class OperatorsSpec extends AnyFunSuite {
       while (s * s > x) s -= 1
       s
     }
-    val rows = TextAnalysis
-      .negativeSampling(Tables.documents(spark, TestSpark.Sf)).collect()
+    val rows = query("negative_sampling").collect()
     rows.foreach { r =>
       val tf = r.getAs[Long]("tf")
       assert(r.getAs[Long]("w75") === isq(tf) * isq(isq(tf)))
@@ -2297,8 +2285,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("curriculum_order: positions are contiguous per (phase, shard), " +
     "the corpus is preserved, and phase 0 is the cleanest band") {
-    val out = TextAnalysis.curriculumOrder(
-      Tables.documents(spark, TestSpark.Sf)).collect()
+    val out = query("curriculum_order").collect()
     assert(out.length ===
       Tables.documents(spark, TestSpark.Sf).count().toInt)
     out.groupBy(r => (r.getAs[Long]("phase"), r.getAs[Long]("shard")))

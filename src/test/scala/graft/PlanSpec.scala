@@ -351,29 +351,32 @@ class PlanSpec extends AnyFunSuite {
 
   test("dedup candidate generation: every bucket collect_list is gated by " +
     "the (count,min) bucket-profile join — no unguarded bucket arrays") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectList}
-    // the registry routes these through graft.Staged, whose checkpoint
-    // boundary hides the candidate build from the query's own plan —
-    // audit the standalone operator constructions, which are the same
-    // chains the staged relations materialize
-    val docs = Tables.documents(spark, Sf)
-    val standalone = Map(
-      "dedup_minhash" -> (() => graft.operators.Dedup.minhashDedup(docs)),
-      "dedup_simhash" -> (() => graft.operators.Dedup.simhashDedup(docs)),
-      "lsh_band_sweep" -> (() => graft.operators.Dedup.lshBandSweep(docs)),
-      "dedup_incremental" -> (() => graft.operators.Dedup.incrementalDedup(docs)))
+    // the plans that run: every registry query and every staged build
+    // (the candidate chains of the buckets/overfull/verified/simPairs
+    // relations sit behind the staged checkpoint boundary, so only
+    // their build plans show them). A bucket array is a collect_list
+    // grouped by the LSH/SimHash `band` key.
+    val plans = SparkEntry.queries.keys.toSeq.sorted
+      .map(n => n -> qe(n).optimizedPlan) ++
+      stagedBuilds.map { case (n, _, df) => n -> df.queryExecution.optimizedPlan }
     var sawCollect = false
-    for ((q, build) <- standalone) {
-      val opt = build().queryExecution.optimizedPlan
-      val collectAggs = opt.collect {
-        case a: Aggregate if a.aggregateExpressions.exists(_.exists {
-          case ae: AggregateExpression =>
-            ae.aggregateFunction.isInstanceOf[CollectList]
-          case _ => false
-        }) => a
+    val withArrays = Set.newBuilder[String]
+    for ((q, opt) <- plans) {
+      val collectAggs = opt.collectWithSubqueries {
+        case a: Aggregate if a.groupingExpressions.exists {
+            case at: Attribute => at.name == "band"
+            case _ => false
+          } && a.aggregateExpressions.exists(_.exists {
+            case ae: AggregateExpression =>
+              ae.aggregateFunction.isInstanceOf[CollectList]
+            case _ => false
+          }) => a
       }
       sawCollect ||= collectAggs.nonEmpty
+      if (collectAggs.nonEmpty) withArrays += q
       // a collect_list whose subtree has no join would be the old
       // single-pass shape: every bucket materialized as one array on
       // one reducer before the pair cap — the 100 TB OOM
@@ -383,13 +386,18 @@ class PlanSpec extends AnyFunSuite {
       }
     }
     assert(sawCollect, "vacuous: no collect_list aggregate found at all")
+    // the corpus-wide bucket arrays are built by the staged verified
+    // (MinHash LSH) and simPairs (SimHash) relations
+    assert(Set("staged:verified", "staged:simPairs")
+      .subsetOf(withArrays.result()),
+      s"bucket arrays found only in: ${withArrays.result()}")
   }
 
   // the Staged BUILD plans — the plans that execute at materialization,
   // which the checkpoint boundary hides from every consumer query's
   // plan. ONE registry (Staged.auditPlans) feeds this gate, the PlanAudit
   // dump and PLANS.md's STAGED-PLANS table.
-  private lazy val stagedBuilds = Staged.auditPlans(spark, Sf)
+  private lazy val stagedBuilds = Staged.auditPlans(Corpus(spark, Sf))
 
   test("staged build chains: no cartesians, no unpartitioned windows — " +
     "these are the plans that actually execute at materialization") {

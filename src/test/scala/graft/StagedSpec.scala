@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Dedup
 
 import graft.TestSpark.jobsDuring
 
@@ -23,14 +27,14 @@ class StagedSpec extends AnyFunSuite {
 
   /** Every registered relation's staged copies under `dir`. */
   private def all(dir: String): Map[String, Seq[DataFrame]] =
-    Staged.names.map(n => n -> Staged.rounds(spark, dir, n)).toMap
+    Staged.names.map(n => n -> Staged.rounds(Corpus(spark, dir), n)).toMap
 
   /** Builds registry query `name` over `dir` twice and returns whether
     * its plan is kept. */
   private def keptAfterTwoCalls(dir: String, name: String): Boolean = {
     SparkEntry.queries(name)(spark, dir)
     SparkEntry.queries(name)(spark, dir)
-    Staged.kept(spark, dir, name).exists(_.isRight)
+    Staged.kept(Corpus(spark, dir), name).exists(_.isRight)
   }
 
   /** The relations `after` still serves as the same instances as `before`. */
@@ -53,7 +57,7 @@ class StagedSpec extends AnyFunSuite {
 
     // in-place rewrite of the SAME dir at a larger k
     AmplifyCorpus.amplify(spark, base, out, 3)
-    assert(Staged.kept(spark, out, "token_topk").isEmpty,
+    assert(Staged.kept(Corpus(spark, out), "token_topk").isEmpty,
       "query plan kept across the rewrite's invalidate()")
     assert(reused(k2, all(out)).isEmpty,
       "relations served across the rewrite's invalidate()")
@@ -65,6 +69,22 @@ class StagedSpec extends AnyFunSuite {
       s"staged tokens served stale corpus: k=2 docs=$docs2, k=3 docs=$docs3")
     assert(sh3 > sh2,
       s"staged shingle relation served stale corpus: k=2 sh=$sh2, k=3 sh=$sh3")
+  }
+
+  test("the (session, dir) views and the query registry share one " +
+    "staged copy: dedup_minhash reads the RDDs Staged.dedup staged, and " +
+    "launches no job while it is built") {
+    def rdds(df: DataFrame): Set[Int] = df.queryExecution.analyzed
+      .collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val verified = Staged.dedup(spark, TestSpark.Sf).verified
+    val n = verified.where(col("j_milli") >= Dedup.JaccardMilli).count()
+    var q: DataFrame = null
+    assert(jobsDuring {
+      q = SparkEntry.queries("dedup_minhash")(spark, TestSpark.Sf)
+    } === 0, "jobs while dedup_minhash was built")
+    assert(rdds(verified).nonEmpty)
+    assert(rdds(q) === rdds(verified), "dedup_minhash read another copy")
+    assert(q.count() === n)
   }
 
   test("reliable staging (spark.graft.staged.reliable) writes to the " +
@@ -90,9 +110,9 @@ class StagedSpec extends AnyFunSuite {
 
   test("rows counts a staged relation once: a second request launches " +
     "no job, and invalidate() and application end each drop the count") {
-    def rows = Staged.rows(spark, TestSpark.Sf, "buckets")
+    def rows = Staged.rows(Corpus(spark, TestSpark.Sf), "buckets")
     val n = rows
-    assert(n === Staged.rounds(spark, TestSpark.Sf, "buckets").last.count())
+    assert(n === Staged.rounds(Corpus(spark, TestSpark.Sf), "buckets").last.count())
     assert(jobsDuring(assert(rows === n)) === 0, "counted twice")
     Staged.invalidate()
     assert(jobsDuring(assert(rows === n)) > 0, "count survived invalidate()")
@@ -122,7 +142,7 @@ class StagedSpec extends AnyFunSuite {
     org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
     assert(tables.isEmpty,
       s"resolved tables survived application end: $tables")
-    assert(Staged.kept(spark, TestSpark.Sf, "token_topk").isEmpty,
+    assert(Staged.kept(Corpus(spark, TestSpark.Sf), "token_topk").isEmpty,
       "query plan survived application end")
     val kept = reused(first, all(TestSpark.Sf))
     assert(kept.isEmpty,

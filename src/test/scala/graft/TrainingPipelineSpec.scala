@@ -121,10 +121,10 @@ class TrainingPipelineSpec extends AnyFunSuite {
     "staged sh nor overfull") {
     val sf = TestSpark.Sf
     val read = Seq("sh", "overfull", "verified").map { n =>
-      Staged.rows(spark, sf, n) // forces the relation and its inputs
-      n -> rdds(Staged.rounds(spark, sf, n).last)
+      Staged.rows(Corpus(spark, sf), n) // forces the relation and its inputs
+      n -> rdds(Staged.rounds(Corpus(spark, sf), n).last)
     }.toMap
-    assert(Staged.rows(spark, sf, "overfull") === 0)
+    assert(Staged.rows(Corpus(spark, sf), "overfull") === 0)
     val plan = rdds(SparkEntry.queries("training_pipeline")(spark, sf))
     assert(read("verified").subsetOf(plan), "staged verified not read?")
     assert(plan.intersect(read("sh") ++ read("overfull")).isEmpty,
