@@ -9,9 +9,14 @@ import graft.operators._
   * ledger → sync state/alerts. (For bounded incremental batches, feed
   * `ChangeLog.pollBatch` output in instead of the full changelog —
   * `state.pending` then reflects what the poll has not yet picked up.)
-  * Each stage is the library operator; composing them adds no extra
-  * shuffles beyond the stages themselves (one on the sync key, one on
-  * the base key).
+  * Each stage is the library operator over the staged change log
+  * ([[Staged.changelog]]), which is already hash-partitioned on the
+  * sync key and ordered by (ems, event_id) within each key. So the pass
+  * shuffles the log once, on the sync key, when it is staged, and the
+  * base table once, on the base key, where the apply exchanges the
+  * customer side of its join. The merge adds no shuffle; the ledger and
+  * state stages shuffle only their partial aggregates (by `part` or
+  * target db), a few rows per task.
   */
 object Pipeline {
   final case class Result(applied: DataFrame, state: DataFrame,
@@ -21,7 +26,7 @@ object Pipeline {
     run(Corpus(spark, sfDir))
 
   def run(c: Corpus): Result = {
-    val cl = ChangeLog.normalize(c.events)
+    val cl = Staged.changelog(c)
     Result(
       applied = CdcMerge.upsertApply(cl, c.customer),
       state = Ledger.syncState(cl),

@@ -11,8 +11,8 @@ import graft.operators._
   */
 object SparkEntry {
 
-  /** The corpus's normalized changelog. */
-  private def cl(c: Corpus): DataFrame = ChangeLog.normalize(c.events)
+  /** The corpus's normalized changelog, as staged ([[Staged.changelog]]). */
+  private def cl(c: Corpus): DataFrame = Staged.changelog(c)
   private def cl(s: SparkSession, dir: String): DataFrame = cl(Corpus(s, dir))
 
   /** The catalog passes' (table, columns) inputs — driven by the SAME

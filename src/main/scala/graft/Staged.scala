@@ -5,9 +5,10 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 
-import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
-  Spread, TextAnalysis}
+import graft.operators.{Analytics, ChangeLog, Dedup, Multimodal, Similarity,
+  Snapshot, Spread, TextAnalysis}
 
 /** Session-scoped staged relations — the production shape of "the
   * signature table is a staged table" (Dedup scaladoc): the expensive
@@ -47,6 +48,25 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   * consumers are unchanged, executor loss costs a re-read instead of
   * the session.
   *
+  * A relation whose build ends in `repartition(n, keys)
+  * .sortWithinPartitions(order)` is staged KEYED: its copy
+  * declares `HashPartitioning(keys, n)` and the sort's ordering, so a
+  * consumer that groups, windows or joins on those keys plans no
+  * exchange and no sort of its own ([[GraftBridge.withLayout]]). A
+  * plain checkpoint loses the layout: it declares what the executed
+  * plan reports, and under AQE that is `UnknownPartitioning(0)` and no
+  * ordering. The copy keeps the build's size estimate, so the planner
+  * still broadcasts small consumers' joins. `changelog` is the keyed
+  * relation — one hash shuffle on the sync key for all change-log
+  * consumers, as the paper's partition stage has it. Its trade-offs:
+  *  - the partition count is fixed at staging (the session's
+  *    `spark.sql.shuffle.partitions`), so AQE can neither coalesce nor
+  *    skew-split the staged partitions in a consumer;
+  *  - a consumer can run more, smaller jobs: with no shuffle of its
+  *    own for AQE to coalesce, its stages keep the n staged partitions,
+  *    and a `limit` over them probes partition by partition in several
+  *    jobs.
+  *
   * [[rows]] is a relation's exact row count, taken once per corpus
   * and kept beside the staged copy: a build may choose its plan by
   * it (training_pipeline drops its over-full re-pairing when the staged
@@ -63,7 +83,9 @@ import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Snapshot,
   * Re-writing parquet UNDER an already-staged dir
   * within one session serves stale data (same contract as any staged
   * table — call [[invalidate]] after in-place rewrites; AmplifyCorpus
-  * does so in its write path). The same contract covers the tables
+  * does so in its write path). That includes the change log: events
+  * rewritten in place are not seen by any sync consumer until
+  * [[invalidate]]. The same contract covers the tables
   * [[Tables]] resolves once per session and the query plans:
   * [[invalidate]] and the application-end eviction drop them with the
   * staged relations.
@@ -98,6 +120,13 @@ object Staged {
     * permutation cross — same allowance as ann_topk/ivf_assign); all
     * others must be nested-loop-free (PlanSpec). */
   private val registry: Seq[Rel] = Seq(
+    // the change log: normalized once, one hash shuffle on the sync key
+    // into a fixed partition count, ordered by (ts, event_id) per key
+    Rel("changelog", false, in =>
+      ChangeLog.normalize(in.corpus.events)
+        .repartition(in.corpus.spark.conf.get("spark.sql.shuffle.partitions")
+          .toInt, col("user_id"))
+        .sortWithinPartitions("user_id", "ems", "event_id")),
     // dedup: shingles, 64-wide minhash, the LSH bucket profile and its
     // over-full buckets' members (both read by the verify build; the
     // members also by training_pipeline), LSH candidates+verify, SimHash
@@ -183,9 +212,10 @@ object Staged {
     * `localCheckpoint()` (executor storage — fastest, single-tenant).
     * Both lazy: first action materializes. */
   private def stage(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption(ReliableKey).contains("true"))
-      df.checkpoint(eager = false)
-    else df.localCheckpoint(eager = false)
+    GraftBridge.withLayout(df,
+      if (df.sparkSession.conf.getOption(ReliableKey).contains("true"))
+        df.checkpoint(eager = false)
+      else df.localCheckpoint(eager = false))
 
   private[graft] def hookEviction(spark: SparkSession): Unit =
     hooked.getOrElseUpdate(spark, {
@@ -390,6 +420,13 @@ object Staged {
   def catalog(spark: SparkSession, sfDir: String): DataFrame =
     catalog(Corpus(spark, sfDir))
 
+  /** The staged change log: [[ChangeLog.normalize]] over the corpus
+    * events, hash-partitioned on `user_id` and ordered by (user_id,
+    * ems, event_id) within each partition — the one change log that
+    * every sync consumer ([[SparkEntry]]'s change-log queries,
+    * [[Pipeline.run]]) reads. */
+  def changelog(c: Corpus): DataFrame = inputs(c)("changelog")
+
   /** The staged per-order brand-basket relation (okey, sorted brand
     * array) — the one corpus-sized pass of the brand-graph family
     * (market_basket, brand_pagerank, brand_triangles). */
@@ -401,6 +438,6 @@ object Staged {
     * — shared by the staged histogram and the sketch side of the gate. */
   def catalogGrid(c: Corpus): Seq[(String, DataFrame)] =
     Snapshot.CatalogColumns.map { case (t, cols) =>
-      t -> c.table(t).select(cols.map(org.apache.spark.sql.functions.col): _*)
+      t -> c.table(t).select(cols.map(col): _*)
     }
 }

@@ -1,9 +1,12 @@
 package org.apache.spark.sql
 
 import org.apache.spark.scheduler.SparkListenerEvent
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+  RepartitionByExpression, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Minimal bridge into `private[sql]` API: convert between the public
   * Column and a Catalyst Expression (Spark 4 removed the public
@@ -31,6 +34,37 @@ object GraftBridge {
     root.setAnalyzed()
     ofRows(spark, root)
   }
+
+  /** `checkpoint`, a checkpoint of `built`, declaring the layout
+    * `built` ends in. A checkpoint is one `LogicalRDD` leaf that
+    * declares what the executed plan it was taken from reports; under
+    * AQE that is `UnknownPartitioning(0)` and no ordering, so every
+    * consumer would shuffle and sort the relation again. When `built`'s
+    * analyzed plan is `repartition(n, keys).sortWithinPartitions(order)`
+    * and the checkpoint's RDD has those n partitions (AQE can replace an
+    * empty result with fewer), the leaf is made again declaring
+    * `HashPartitioning(keys, n)` and `order`. `makeCopy` passes the
+    * leaf's second parameter list on, so the copy keeps the origin
+    * statistics and constraints that the planner sizes joins by. Any
+    * other checkpoint is returned as it is. */
+  def withLayout(built: DataFrame, checkpoint: DataFrame): DataFrame =
+    (built.queryExecution.analyzed, checkpoint.queryExecution.analyzed) match {
+      case (Sort(order, false, r: RepartitionByExpression, _), leaf: LogicalRDD)
+          if r.optNumPartitions.contains(leaf.rdd.getNumPartitions) =>
+        val byId = leaf.output.map(a => a.exprId -> a).toMap
+        def onLeaf[E <: Expression](e: E): E =
+          e.transform { case a: Attribute => byId.getOrElse(a.exprId, a) }
+            .asInstanceOf[E]
+        (r.partitioning, order.map(onLeaf)) match {
+          case (p: HashPartitioning, o) if (onLeaf(p) +: o)
+              .forall(_.references.subsetOf(leaf.outputSet)) =>
+            ofRows(checkpoint.sparkSession, leaf.makeCopy(Array(leaf.output,
+              leaf.rdd, onLeaf(p), o, Boolean.box(leaf.isStreaming),
+              leaf.stream)))
+          case _ => checkpoint
+        }
+      case _ => checkpoint
+    }
 
   /** Blocks until every queued listener event has been delivered. */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =

@@ -1,11 +1,16 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD,
+  RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{ChangeLog, Dedup}
 
 import graft.TestSpark.jobsDuring
 
@@ -20,7 +25,10 @@ import graft.TestSpark.jobsDuring
   * eviction tests run over every registered relation and also pin that
   * the query plans [[Staged.query]] keeps are dropped with them; the
   * row-count test pins that [[Staged.rows]] counts once and is dropped
-  * with its relation.
+  * with its relation. The change-log tests pin, by plan-node counts,
+  * that the staged `changelog` keeps the layout and the size estimate
+  * of its build, so its consumers plan no shuffle or sort of their own,
+  * and that staging it writes no session conf.
   */
 class StagedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -42,6 +50,84 @@ class StagedSpec extends AnyFunSuite {
                      after: Map[String, Seq[DataFrame]]): Seq[String] =
     Staged.names.filter(n =>
       before(n).zip(after(n)).exists { case (a, b) => a eq b })
+
+  /** The plan AQE starts `df` from, with its exchanges and sorts in. */
+  private def initialPlan(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  private def exchanges(p: SparkPlan): Seq[Exchange] =
+    p.collectWithSubqueries { case e: Exchange => e }
+
+  private def stagedChangelog: DataFrame = {
+    Staged.rows(Corpus(spark, TestSpark.Sf), "changelog")
+    Staged.changelog(Corpus(spark, TestSpark.Sf))
+  }
+
+  test("the staged changelog declares its build's hash partitioning on " +
+    "user_id and its (user_id, ems, event_id) order, and keeps the " +
+    "unstaged size estimate") {
+    // other suites cache the unstaged change log, and a materialized
+    // cache is estimated at its stored size: stage afresh, so the staged
+    // copy and the unstaged plan are estimated over the same cache
+    Staged.invalidate()
+    val staged = stagedChangelog
+    val leaf = staged.queryExecution.analyzed match {
+      case r: LogicalRDD => r
+      case p => fail(s"not one staged leaf:\n$p")
+    }
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    leaf.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), `n`) =>
+        assert(a.name === "user_id")
+      case p => fail(s"staged changelog declares $p")
+    }
+    assert(leaf.outputOrdering.map(o => (o.child, o.direction)).collect {
+      case (a: Attribute, Ascending) => a.name
+    } === Seq("user_id", "ems", "event_id"))
+    val unstaged = ChangeLog.normalize(Corpus(spark, TestSpark.Sf).events)
+    assert(staged.queryExecution.optimizedPlan.stats.sizeInBytes ===
+      unstaged.queryExecution.optimizedPlan.stats.sizeInBytes)
+  }
+
+  test("change-log consumers keyed on user_id plan no exchange and no " +
+    "sort, and cdc_upsert_apply exchanges only the customer side") {
+    stagedChangelog
+    for (q <- Seq("cdc_merge", "scd2_history", "sessionize", "event_gaps",
+        "blocked_chain")) {
+      val p = initialPlan(SparkEntry.queries(q)(spark, TestSpark.Sf))
+      assert(exchanges(p).isEmpty, s"$q exchanges:\n$p")
+      assert(p.collectWithSubqueries { case s: SortExec => s }.isEmpty,
+        s"$q sorts:\n$p")
+    }
+    val p = initialPlan(SparkEntry.queries("cdc_upsert_apply")(
+      spark, TestSpark.Sf))
+    assert(exchanges(p).nonEmpty, s"no exchange:\n$p")
+    for (e <- exchanges(p)) {
+      assert(e.collect { case s: RDDScanExec => s }.isEmpty,
+        s"an exchange reads the staged changelog:\n$p")
+      assert(e.collect { case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.getName) }.flatten ===
+        Seq("customer.parquet"), s"an exchange reads no customer scan:\n$p")
+    }
+  }
+
+  test("staging the changelog and building its consumers writes no " +
+    "session conf, apart from the nanosAsLong that reading events sets") {
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    def conf = spark.conf.getAll - nanos
+    Staged.invalidate()
+    val before = conf
+    val c = Corpus(spark, TestSpark.Sf)
+    Staged.rows(c, "changelog")
+    for (q <- Seq("cdc_merge", "cdc_upsert_apply", "scd2_history",
+        "sessionize", "event_gaps", "blocked_chain", "sync_state"))
+      SparkEntry.queries(q)(spark, TestSpark.Sf)
+    Pipeline.run(c)
+    assert(conf === before)
+  }
 
   test("in-place re-amplify invalidates staged relations (no fresh JVM)") {
     val out = java.nio.file.Files.createTempDirectory("graft-amp").toString
